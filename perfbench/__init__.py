@@ -1,0 +1,5 @@
+"""Benchmark of the engine's catalog and YAML-pipeline surfaces.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``run.py``.
+"""
