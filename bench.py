@@ -104,6 +104,17 @@ def read_steal_jiffies() -> int | None:
         return None
 
 
+def read_stat_cpu_lines() -> int | None:
+    """Number of ``cpuN`` lines in /proc/stat: the CPUs whose jiffies
+    the aggregate ``cpu`` line (and so its steal field) sums over."""
+    try:
+        with open("/proc/stat") as fh:
+            return sum(1 for ln in fh
+                       if ln.startswith("cpu") and ln[3].isdigit())
+    except OSError:
+        return None
+
+
 def read_loadavg_1min() -> float | None:
     try:
         with open("/proc/loadavg") as fh:
@@ -161,10 +172,10 @@ def main() -> None:
     # samples when the existing ones are provably contaminated.
     STEAL_RETRY_FRAC = float(os.environ.get("SPARK_GRAFT_STEAL_FRAC", "0.015"))
     STEAL_RETRY_MAX = int(os.environ.get("SPARK_GRAFT_STEAL_RETRIES", "3"))
-    # /proc/stat's cpu line aggregates over every host-visible CPU, so
-    # the jiffy capacity basis is the machine's CPU count, not the
+    # /proc/stat's cpu line aggregates over its cpuN lines, so the
+    # jiffy capacity basis is the number of those lines, not the
     # (possibly lower) Spark core count.
-    ncpu = os.cpu_count() or int(cpus)
+    ncpu = read_stat_cpu_lines() or int(cpus)
 
     def steal_frac(elapsed: float, steal: int) -> float:
         cap = max(elapsed, 1e-9) * ncpu * 100.0

@@ -37,6 +37,14 @@ _SLOW_FILES = {
     "test_casts_property.py",
 }
 
+# ...except one single-pass commit/recover smoke test per state-store
+# file, so the default tier still runs every store's write path
+_DEFAULT_TIER_SMOKE = {
+    "test_dedup_state.py::test_replayed_commit_is_harmless_and_compactable",
+    "test_s3_state.py::test_agg_state_crash_before_cas_then_replay_converges",
+    "test_store_lease.py::test_posix_stale_dead_pid_artifacts_are_broken",
+}
+
 _SLOW_NAME_PARTS = (
     "crash_fuzz",              # crash-recovery fuzz vs model (state stores)
     "differential_fuzz",       # oracle differential fuzz waves
@@ -61,8 +69,9 @@ _SLOW_NAME_PARTS = (
 def pytest_collection_modifyitems(config, items):
     for item in items:
         fname = os.path.basename(str(item.fspath))
-        if fname in _SLOW_FILES or any(p in item.name
-                                       for p in _SLOW_NAME_PARTS):
+        slow_file = (fname in _SLOW_FILES
+                     and f"{fname}::{item.name}" not in _DEFAULT_TIER_SMOKE)
+        if slow_file or any(p in item.name for p in _SLOW_NAME_PARTS):
             item.add_marker(pytest.mark.slow)
 
 

@@ -22,11 +22,12 @@ sys.path.insert(0, REPO)
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    reps = 4
-    for a in sys.argv[1:]:
-        if a.startswith("--reps"):
-            reps = int(a.split("=", 1)[1])
+    import argparse
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("keys", nargs="*")
+    ap.add_argument("--reps", type=int, default=4)
+    opts = ap.parse_intermixed_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -52,10 +53,10 @@ def main() -> int:
     spark.range(0, 32, 1, 32).select(_warm("id")).write \
         .format("noop").mode("overwrite").save()
 
-    for name in args:
+    for name in opts.keys:
         s0 = read_steal_jiffies()
         ts = []
-        for _ in range(reps):
+        for _ in range(opts.reps):
             spark.sparkContext.setJobDescription(f"time_keys: {name}")
             t0 = time.perf_counter()
             QUERIES[name](spark, sf_dir).write.format("noop") \

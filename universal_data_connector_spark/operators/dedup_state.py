@@ -53,6 +53,8 @@ import uuid
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from universal_data_connector_spark.streaming.windows import by_bucket
+
 log = logging.getLogger(__name__)
 
 _KB = "udc_kb"
@@ -235,28 +237,8 @@ def seen_filter(df: DataFrame, state_dir: str, cols: list[str],
             posix_writer_mark,
         )
         with posix_writer_mark(state_dir):
-            nonce = uuid.uuid4().hex[:8]
-            staged = os.path.join(state_dir,
-                                  f"{_SEEN_STAGED_PREFIX}{nonce}")
-            new_keys = keyed.select(_KEY, _KB)
-            (new_keys.repartition(max(len(touched), 1), F.col(_KB))
-                     .write.mode("overwrite").partitionBy(_KB)
-                     .parquet(staged))
-            moved = 0
-            for b in touched:
-                part_dir = os.path.join(staged, f"{_KB}={b}")
-                if not os.path.isdir(part_dir):
-                    continue
-                live_dir = os.path.join(state_dir, f"{_KB}={b}")
-                os.makedirs(live_dir, exist_ok=True)
-                for i, name in enumerate(sorted(
-                        f for f in os.listdir(part_dir)
-                        if f.endswith(".parquet"))):
-                    os.rename(os.path.join(part_dir, name),
-                              os.path.join(live_dir,
-                                           f"seen-{nonce}-{i}.parquet"))
-                    moved += 1
-            shutil.rmtree(staged, ignore_errors=True)
+            moved = _append_buckets(keyed.select(_KEY, _KB), state_dir,
+                                    touched)
         log.info("dedup_state: appended %d file(s) across %d touched "
                  "bucket(s) in %s", moved, len(touched), state_dir)
 
@@ -425,8 +407,8 @@ def _append_buckets(frame: DataFrame, root: str,
     part file into its live bucket dir. Returns files appended."""
     nonce = uuid.uuid4().hex[:8]
     staged = os.path.join(root, f"{_SEEN_STAGED_PREFIX}{nonce}")
-    (frame.repartition(max(len(touched), 1), F.col(_KB))
-          .write.mode("overwrite").partitionBy(_KB).parquet(staged))
+    (by_bucket(frame).write.mode("overwrite")
+     .partitionBy(_KB).parquet(staged))
     moved = 0
     for b in touched:
         part_dir = os.path.join(staged, f"{_KB}={b}")
@@ -1064,7 +1046,7 @@ def _compact_root(spark, root: str, distinct_cols: list[str],
     bucket_dirs = [os.path.join(root, f"{_KB}={b}") for b in buckets]
     (spark.read.option("basePath", root).parquet(*bucket_dirs)
      .select(*distinct_cols, _KB).distinct()
-     .repartition(len(buckets), F.col(_KB))
+     .transform(by_bucket)
      .write.mode("overwrite").partitionBy(_KB).parquet(staged))
     for b in buckets:
         staged_dir = os.path.join(staged, f"{_KB}={b}")
@@ -1185,7 +1167,7 @@ def compact_seen_store_s3(spark, target) -> int:
                         .distinct())
             parts = ([sub] if sub else []) + [
                 "kb={b}", "seen-compact-{nonce}-{i}.parquet"]
-            # one task per touched bucket -> one rewrite object per
+            # one task owns each bucket -> one rewrite object per
             # bucket (plus rollovers past the buffer cap)
             write_objects(distinct, target, sorted(listed),
                           key_format(target, *parts))

@@ -68,6 +68,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from universal_data_connector_spark.streaming.windows import by_bucket
+
 _KB = "udc_kb"                      # same bucket column as the POSIX twin
 _META_KEY = "_udc_buckets"
 _INTENT_KEY = "_udc_batch_intent"
@@ -356,13 +358,15 @@ def write_objects(frame: DataFrame, target: S3StateTarget,
                   ) -> dict[int, list[str]]:
     """Distributed write of a ``udc_kb``-carrying frame as immutable
     parquet objects: the frame is hash-repartitioned on the bucket
-    column (so one task owns each bucket) and each task serializes its
-    buckets' rows to parquet in memory and PUTs them with its own
-    boto3 client — the ``sinks/files.py`` ``_s3_put_objects_boto3``
-    posture, so no byte crosses the driver and no local staging
-    directory exists. Returns the per-bucket object-key lists for the
-    caller's pointer commits; buckets that produced no rows still get
-    an (empty) entry so their pointer can record an applied id.
+    column (``windows.by_bucket``: one task owns each bucket, and AQE
+    packs a small batch's buckets into few tasks) and each task
+    serializes its buckets' rows to parquet in memory and PUTs them
+    with its own boto3 client — the ``sinks/files.py``
+    ``_s3_put_objects_boto3`` posture, so no byte crosses the driver
+    and no local staging directory exists. Returns the per-bucket
+    object-key lists for the caller's pointer commits; buckets that
+    produced no rows still get an (empty) entry so their pointer can
+    record an applied id.
 
     ``key_fmt`` carries ``{b}`` (bucket id), ``{nonce}`` (per-task
     uuid) and ``{i}`` (per-bucket object counter) placeholders — e.g.
@@ -377,7 +381,7 @@ def write_objects(frame: DataFrame, target: S3StateTarget,
     total buffer crosses ``max_buffer_bytes``."""
     bucket = target.bucket
     client_kwargs = dict(target.client_kwargs)
-    parted = frame.repartition(max(len(touched), 1), F.col(_KB))
+    parted = by_bucket(frame)
 
     def upload(batches):
         import io

@@ -270,6 +270,31 @@ def _read_touched(spark, path: str, buckets: list[int]) -> DataFrame:
             .filter(F.col(_UPSERT_BUCKET_COL).isin(list(buckets))))
 
 
+def by_bucket(frame: DataFrame) -> DataFrame:
+    """Hash-repartition a ``udc_kb``-carrying frame on the bucket
+    column so a bucketed state store's staged write leaves ONE file
+    per touched bucket — the layout rule every POSIX and S3 store
+    (upsert, agg_state, seen stores and their compaction) writes by.
+
+    Invariant: one bucket, one shuffle partition. Every row of a
+    bucket hashes to the same shuffle partition, and AQE's partition
+    coalescing only MERGES adjacent partitions of this exchange (it
+    never splits a ``REPARTITION_BY_COL`` shuffle; skew splitting is
+    for joins and rebalances), so the writing task sees each bucket
+    whole and emits one file per bucket dir.
+
+    Why no partition count: ``repartition(len(touched), col)`` would
+    be a ``REPARTITION_BY_NUM`` shuffle, which AQE may not coalesce,
+    so a batch of a few hundred rows would still run one task per
+    touched bucket (32 tasks for 32 buckets) — most of a small
+    micro-batch's cost. With no count the exchange is
+    ``REPARTITION_BY_COL``: it starts at ``spark.sql.shuffle.partitions``
+    and AQE sizes it by bytes, so a tiny batch writes from one task
+    and a large one keeps up to min(touched buckets, shuffle
+    partitions) writers."""
+    return frame.repartition(F.col(_UPSERT_BUCKET_COL))
+
+
 def upsert_merge(batch_df: DataFrame, batch_id: int, *, path: str,
                  keys: list[str], order_col: str,
                  num_buckets: int = 32) -> None:
@@ -317,9 +342,8 @@ def upsert_merge(batch_df: DataFrame, batch_id: int, *, path: str,
         merged = latest
 
     staged = os.path.join(path, _UPSERT_STAGED_DIR)
-    (merged.repartition(len(touched), F.col(_UPSERT_BUCKET_COL))
-           .write.mode("overwrite")
-           .partitionBy(_UPSERT_BUCKET_COL).parquet(staged))
+    (by_bucket(merged).write.mode("overwrite")
+     .partitionBy(_UPSERT_BUCKET_COL).parquet(staged))
     for b in touched:
         live = os.path.join(path, f"{_UPSERT_BUCKET_COL}={b}")
         new = os.path.join(staged, f"{_UPSERT_BUCKET_COL}={b}")
@@ -660,9 +684,8 @@ def agg_state_merge(batch_df: DataFrame, batch_id: int, *, path: str,
         merged = part
 
     staged = os.path.join(path, _UPSERT_STAGED_DIR)
-    (merged.repartition(len(pending), F.col(_UPSERT_BUCKET_COL))
-           .write.mode("overwrite")
-           .partitionBy(_UPSERT_BUCKET_COL).parquet(staged))
+    (by_bucket(merged).write.mode("overwrite")
+     .partitionBy(_UPSERT_BUCKET_COL).parquet(staged))
     for b in pending:
         new = os.path.join(staged, f"{_UPSERT_BUCKET_COL}={b}")
         if not os.path.isdir(new):
