@@ -1,5 +1,8 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark runner: catalog keys at $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 tables, ``SF_DIR``) on the session ``session.get_spark`` builds
+(local[$SPARK_GRAFT_CPUS], default: the cores this process may run on).
+
+Usage: python bench.py [KEY ...]   (default: the 56 HEADLINE keys)
 
 Prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
@@ -8,6 +11,12 @@ Prints ONE JSON line:
 Each query is fully materialized via the noop sink (measures the whole
 plan — scan, shuffle, aggregation — without driver-collect overhead).
 One warm-up execution amortizes JVM/codegen startup out of the numbers.
+
+The module is also the timing harness of ``tools/profile_keys.py`` and
+``tools/scale_probe.py``: ``warm_up``, ``run`` and ``run_best`` time a
+key, and ``profile`` times keys in a session that writes Spark's event
+log, then reads each rep's jobs, stages, tasks and operator timers
+back from that log.
 """
 
 from __future__ import annotations
@@ -15,6 +24,8 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
+import sys
 import time
 
 import pandas as pd
@@ -123,121 +134,186 @@ def read_loadavg_1min() -> float | None:
         return None
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    m = re.search(r"sf([\d.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else -1.0
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "4"))
 
-    from universal_data_connector_spark.plans.catalog import QUERIES
-    from universal_data_connector_spark.session import get_spark
+# multi-job queries (iterative convergence loops, foreachBatch
+# stream sinks, eager rank-selection) launch many short Spark jobs
+# per rep — each job boundary is a fresh chance for a host
+# CPU-starvation spike to land, so their MEDIANS are far noisier
+# than single-plan queries (r8: dedup_cluster_cc driver median
+# 1.9x its min from one starved rep). Two extra reps so one spike
+# cannot move the median (VERDICT r8 item 6).
+MULTI_JOB = {"dedup_cluster_cc", "stream_upsert_latest",
+             "stream_agg_state_totals", "ts_outlier_iqr",
+             "events_rfm_segments"}
 
-    spark = get_spark("udc-bench", cpus=cpus)
+# Steal-aware retry (r21 verdict "Next round #1"): the r21 driver
+# bench ran in a ~19%-steal window and recorded 9 phantom
+# "regressions" on untouched code (events_sessionize_gap 2.6 s vs
+# 0.42 s minutes later). A rep whose steal fraction exceeds
+# STEAL_RETRY_FRAC was measurably contended, so the key earns up to
+# STEAL_RETRY_MAX extra reps hunting for one clean sample. min-of-reps
+# reduction is unchanged; this only adds samples when the existing
+# ones are provably contaminated.
+STEAL_RETRY_FRAC = 0.015
+STEAL_RETRY_MAX = 3
 
-    def run(name: str) -> tuple[float, int]:
-        s0 = read_steal_jiffies()
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        s1 = read_steal_jiffies()
-        # Drop every persisted dataset before the next rep: Spark's
-        # CacheManager substitutes cached plans by logical-plan
-        # equality, so without this a repeat execution of the same
-        # query reads the previous rep's DISK_ONLY blocks and min-of-N
-        # times cached disk reads instead of recomputation. Outside the
-        # timer — cache teardown isn't part of the query.
-        spark.catalog.clearCache()
-        steal = (s1 - s0) if s0 is not None and s1 is not None else 0
-        return elapsed, steal
+def steal_frac(elapsed: float, steal: int) -> float:
+    """Steal jiffies during a rep over the machine's total jiffy
+    capacity for its duration (CPUs * 100/s). /proc/stat's cpu line
+    aggregates over its cpuN lines, so the capacity basis is the number
+    of those lines, not the (possibly lower) Spark core count."""
+    cap = max(elapsed, 1e-9) * (read_stat_cpu_lines() or 1) * 100.0
+    return steal / cap
 
-    # multi-job queries (iterative convergence loops, foreachBatch
-    # stream sinks, eager rank-selection) launch many short Spark jobs
-    # per rep — each job boundary is a fresh chance for a host
-    # CPU-starvation spike to land, so their MEDIANS are far noisier
-    # than single-plan queries (r8: dedup_cluster_cc driver median
-    # 1.9x its min from one starved rep). Two extra reps so one spike
-    # cannot move the median (VERDICT r8 item 6).
-    MULTI_JOB = {"dedup_cluster_cc", "stream_upsert_latest",
-                 "stream_agg_state_totals", "ts_outlier_iqr",
-                 "events_rfm_segments"}
 
-    # Steal-aware retry (r21 verdict "Next round #1"): the r21 driver
-    # bench ran in a ~19%-steal window and recorded 9 phantom
-    # "regressions" on untouched code (events_sessionize_gap 2.6 s vs
-    # 0.42 s minutes later). A rep whose steal fraction — steal jiffies
-    # during the rep over the machine's total jiffy capacity for its
-    # duration (cpus * 100/s) — exceeds this threshold was measurably
-    # contended, so the key earns extra reps (bounded) hunting for one
-    # clean sample. min-of-reps reduction is unchanged; this only adds
-    # samples when the existing ones are provably contaminated.
-    STEAL_RETRY_FRAC = float(os.environ.get("SPARK_GRAFT_STEAL_FRAC", "0.015"))
-    STEAL_RETRY_MAX = int(os.environ.get("SPARK_GRAFT_STEAL_RETRIES", "3"))
-    # /proc/stat's cpu line aggregates over its cpuN lines, so the
-    # jiffy capacity basis is the number of those lines, not the
-    # (possibly lower) Spark core count.
-    ncpu = read_stat_cpu_lines() or int(cpus)
+def run(spark, query, sf_dir: str) -> tuple[float, int]:
+    """One rep of ``query(spark, sf_dir)`` into the noop sink: (wall
+    seconds, steal jiffies during the rep)."""
+    s0 = read_steal_jiffies()
+    t0 = time.perf_counter()
+    query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    elapsed = time.perf_counter() - t0
+    s1 = read_steal_jiffies()
+    # Drop every persisted dataset before the next rep: Spark's
+    # CacheManager substitutes cached plans by logical-plan
+    # equality, so without this a repeat execution of the same
+    # query reads the previous rep's DISK_ONLY blocks and min-of-N
+    # times cached disk reads instead of recomputation. Outside the
+    # timer — cache teardown isn't part of the query.
+    spark.catalog.clearCache()
+    steal = (s1 - s0) if s0 is not None and s1 is not None else 0
+    return elapsed, steal
 
-    def steal_frac(elapsed: float, steal: int) -> float:
-        cap = max(elapsed, 1e-9) * ncpu * 100.0
-        return steal / cap
 
-    def run_best(name: str, reps: int = 4) -> tuple[float, float, float, int]:
-        """(min, median, min-rep steal fraction, extra reps) over reps.
-        The host VM shows transient multi-second CPU starvation spikes
-        that land on random queries; min-of-N measures the engine, not
-        the neighbor, and the median rides along in the artifact so
-        noise is diagnosable from the JSON alone (median >> min across
-        queries = noisy run). Four reps so operators whose first
-        execution materializes an eager checkpoint still get three
-        clean samples; multi-job keys get two more so a single starved
-        rep can't be the median. If even the BEST rep landed in a steal
-        burst, up to STEAL_RETRY_MAX extra reps run until one clean
-        sample exists — the r21 contended-window adjudication, done by
-        the bench itself instead of a human reading canary files."""
-        import statistics
-        if name in MULTI_JOB:
-            reps += 2
-        samples = [run(name) for _ in range(reps)]
-        extra = 0
-        while (extra < STEAL_RETRY_MAX
-               and steal_frac(*min(samples)) > STEAL_RETRY_FRAC):
-            samples.append(run(name))
-            extra += 1
-        best = min(samples)
-        ts = sorted(t for t, _ in samples)
-        return best[0], statistics.median(ts), steal_frac(*best), extra
-
-    run("agg_hash_sum_avg")  # warm-up: JVM, codegen, parquet footer cache
-
-    # warm the Python worker pool (fork + numpy/pandas import happens
-    # once per session; Arrow-batched operators shouldn't bill for it)
+def warm_up(spark, sf_dir: str) -> None:
+    """JVM, codegen and parquet footer cache, then the Python worker
+    pool (fork + numpy/pandas import happens once per session;
+    Arrow-batched operators shouldn't bill for it)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
+
+    from universal_data_connector_spark.plans.catalog import QUERIES
+
+    run(spark, QUERIES["agg_hash_sum_avg"], sf_dir)
 
     @F.pandas_udf(T.LongType())
     def _warm(s: pd.Series) -> pd.Series:
         import numpy as np
         return s + int(np.int64(0))
 
-    spark.range(0, int(cpus) * 4, 1, int(cpus)).select(_warm("id")) \
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, n * 4, 1, n).select(_warm("id")) \
          .write.format("noop").mode("overwrite").save()
 
-    def noise_probe(n: int = 5) -> list[float]:
-        """Fixed CPU-bound task timed n times: a machine-noise canary.
-        The work never changes, so spread across its samples measures
-        the HOST (CPU starvation on the shared VM), not the engine —
-        lets a reader separate real regressions from noisy runs."""
-        import numpy as np
-        a = np.arange(1_000_000, dtype=np.float64)
-        ts = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            for _ in range(10):
-                (a * 1.0001 + 1.0).sum()
-            ts.append(time.perf_counter() - t0)
-        return ts
 
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "4"))
+def run_best(spark, name: str, sf_dir: str,
+             reps: int = REPS) -> tuple[float, float, float, int]:
+    """(min, median, min-rep steal fraction, extra reps) over reps.
+    The host VM shows transient multi-second CPU starvation spikes
+    that land on random queries; min-of-N measures the engine, not
+    the neighbor, and the median rides along in the artifact so
+    noise is diagnosable from the JSON alone (median >> min across
+    queries = noisy run). Four reps so operators whose first
+    execution materializes an eager checkpoint still get three
+    clean samples; multi-job keys get two more so a single starved
+    rep can't be the median. If even the BEST rep landed in a steal
+    burst, up to STEAL_RETRY_MAX extra reps run until one clean
+    sample exists — the r21 contended-window adjudication, done by
+    the bench itself instead of a human reading canary files."""
+    from universal_data_connector_spark.plans.catalog import QUERIES
+
+    query = QUERIES[name]
+    if name in MULTI_JOB:
+        reps += 2
+    samples = [run(spark, query, sf_dir) for _ in range(reps)]
+    extra = 0
+    while (extra < STEAL_RETRY_MAX
+           and steal_frac(*min(samples)) > STEAL_RETRY_FRAC):
+        samples.append(run(spark, query, sf_dir))
+        extra += 1
+    best = min(samples)
+    ts = sorted(t for t, _ in samples)
+    return best[0], statistics.median(ts), steal_frac(*best), extra
+
+
+def profile(cases: dict, reps: int, app_name: str) -> dict:
+    """Time each ``label: (query, sf_dir)`` case ``reps`` times with
+    ``run``, in a ``get_spark`` session that also writes Spark's event
+    log, and return per label one dict per rep: ``wall_s`` plus
+    ``perfbench.eventlog.EventLog.window`` over that rep's wall-clock
+    window. The log is read after ``spark.stop()``, when every event
+    of the last rep has been written. Must run before this process
+    starts its JVM: the event-log confs go in through
+    ``PYSPARK_SUBMIT_ARGS``."""
+    import tempfile
+
+    from perfbench.eventlog import EventLog
+    from universal_data_connector_spark.session import get_spark
+
+    with tempfile.TemporaryDirectory(prefix="udc-eventlog-") as log_dir:
+        # the confs perfbench/run.py gives a traced run: one
+        # uncompressed, non-rolling file named after the application id
+        confs = " ".join(f"--conf {k}={v}" for k, v in (
+            ("spark.eventLog.enabled", "true"),
+            ("spark.eventLog.dir", f"file://{log_dir}"),
+            ("spark.eventLog.compress", "false"),
+            ("spark.eventLog.rolling.enabled", "false")))
+        os.environ["PYSPARK_SUBMIT_ARGS"] = (
+            f"{confs} {os.environ.get('PYSPARK_SUBMIT_ARGS') or 'pyspark-shell'}")
+        spark = get_spark(app_name)
+        try:
+            warm_up(spark, next(iter(cases.values()))[1])
+            windows: dict = {label: [] for label in cases}
+            for label, (query, sf_dir) in cases.items():
+                for _ in range(reps):
+                    t0 = time.time()
+                    wall, _ = run(spark, query, sf_dir)
+                    windows[label].append((wall, t0 * 1e3, time.time() * 1e3))
+                    print(f"{label}: {wall:.3f}s", file=sys.stderr, flush=True)
+            app_id = spark.sparkContext.applicationId
+            cores = spark.sparkContext.defaultParallelism
+        finally:
+            spark.stop()
+        log = EventLog.read(os.path.join(log_dir, app_id))
+    return {label: [{"wall_s": round(wall, 3),
+                     **{k: round(v, 4)
+                        for k, v in log.window(lo, hi, cores).items()}}
+                    for wall, lo, hi in ws]
+            for label, ws in windows.items()}
+
+
+def noise_probe(n: int = 5) -> list[float]:
+    """Fixed CPU-bound task timed n times: a machine-noise canary.
+    The work never changes, so spread across its samples measures
+    the HOST (CPU starvation on the shared VM), not the engine —
+    lets a reader separate real regressions from noisy runs."""
+    import numpy as np
+    a = np.arange(1_000_000, dtype=np.float64)
+    ts = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        for _ in range(10):
+            (a * 1.0001 + 1.0).sum()
+        ts.append(time.perf_counter() - t0)
+    return ts
+
+
+def main(keys: list[str]) -> None:
+    from universal_data_connector_spark.plans.catalog import QUERIES
+    from universal_data_connector_spark.session import DEFAULT_CPUS, get_spark
+
+    keys = keys or HEADLINE
+    unknown = [k for k in keys if k not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown catalog keys: {', '.join(unknown)}")
+    m = re.search(r"sf([\d.]+)", SF_DIR)
+    sf = float(m.group(1).rstrip(".")) if m else -1.0
+
+    spark = get_spark("udc-bench")
+    warm_up(spark, SF_DIR)
+
     steal_before = read_steal_jiffies()
     loadavg_before = read_loadavg_1min()
     wall_t0 = time.perf_counter()
@@ -247,8 +323,8 @@ def main() -> None:
     noise_by_key: dict[str, float] = {}
     rep_steal: dict[str, float] = {}
     rep_extra: dict[str, int] = {}
-    for name in HEADLINE:
-        best, med, bsteal, extra = run_best(name, reps)
+    for name in keys:
+        best, med, bsteal, extra = run_best(spark, name, SF_DIR)
         times[name] = round(best, 3)
         medians[name] = round(med, 3)
         rep_steal[name] = round(bsteal, 4)
@@ -268,8 +344,6 @@ def main() -> None:
                    if steal_before is not None and steal_after is not None
                    else None)
 
-    import statistics
-    import sys
     noise = noise_before + noise_after
     total = round(sum(times.values()), 3)
     full = {
@@ -284,10 +358,10 @@ def main() -> None:
         "noise_by_key": noise_by_key,
         "best_rep_steal_frac": rep_steal,
         "steal_retry_extra_reps": rep_extra,
-        "reps": reps,
+        "reps": REPS,
         "sf": sf,
         "spark_version": spark.version,
-        "cpus": int(cpus),
+        "cpus": DEFAULT_CPUS,
         "steal_jiffies_before": steal_before,
         "steal_jiffies_after": steal_after,
         "steal_jiffies_delta": steal_delta,
@@ -317,7 +391,7 @@ def main() -> None:
         "queries": times,
         "sf": sf,
         "noise_floor": full["noise_floor"]["median"],
-        "reps": reps,
+        "reps": REPS,
         "steal_jiffies_delta": steal_delta,
         "loadavg_1min": loadavg_after,
         "timed_wall_sec": wall_sec,
@@ -335,4 +409,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

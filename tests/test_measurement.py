@@ -1,0 +1,55 @@
+"""The measurement harness: one host-sized core count, bench.py timing
+any key set, and the profiler reading Spark's event log."""
+
+import json
+import os
+import subprocess
+import sys
+
+from tests.conftest import SF_DIR
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _run(args, **env):
+    proc = subprocess.run([sys.executable, *args], capture_output=True,
+                          text=True, cwd=REPO, timeout=900,
+                          env=dict(os.environ, **env))
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return proc.stdout
+
+
+def test_default_cpus_is_the_usable_core_count():
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "from universal_data_connector_spark.session import DEFAULT_CPUS;"
+         "print(repr(DEFAULT_CPUS))"],
+        capture_output=True, text=True, cwd=REPO, env=env, timeout=120)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip() == repr(len(os.sched_getaffinity(0)))
+
+
+def test_bench_times_only_the_named_keys(tmp_path):
+    keys = ["scan_parquet", "agg_hash_sum_avg"]
+    sidecar = tmp_path / "bench_full.json"
+    out = _run(["bench.py", *keys], SPARK_GRAFT_SF_DIR=SF_DIR,
+               SPARK_GRAFT_BENCH_REPS="1", SPARK_GRAFT_BENCH_OUT=str(sidecar))
+    data = json.loads(out.strip().splitlines()[-1])
+    for key in ("metric", "value", "unit", "queries", "sf",
+                "steal_jiffies_delta", "timed_wall_sec"):
+        assert key in data, key
+    assert sorted(data["queries"]) == sorted(keys)
+    assert data["unit"] == "sec"
+    assert sorted(json.loads(sidecar.read_text())["queries"]) == sorted(keys)
+
+
+def test_profile_keys_reads_jobs_from_the_event_log():
+    out = _run([os.path.join("tools", "profile_keys.py"), "agg_hash_sum_avg"],
+               SPARK_GRAFT_SF_DIR=SF_DIR, SPARK_GRAFT_BENCH_REPS="1")
+    lines = [json.loads(ln) for ln in out.splitlines() if ln.startswith("{")]
+    prof = {p["key"]: p["reps"] for p in lines}
+    reps = prof["agg_hash_sum_avg"]
+    assert len(reps) == 1
+    assert reps[0]["spark.jobs"] >= 1 and reps[0]["spark.tasks"] >= 1
+    assert reps[0]["wall_s"] > 0

@@ -231,16 +231,13 @@ def bench_jdbc_filter_jdbc(spark, texts: list[str],
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
+    from universal_data_connector_spark.session import get_spark
 
     n_files = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
     n_records = int(sys.argv[2]) if len(sys.argv) > 2 else 50_000
     n_objects = int(sys.argv[3]) if len(sys.argv) > 3 else 2_000
     n_rows = int(sys.argv[4]) if len(sys.argv) > 4 else 20_000
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.driver.memory", "48g")
-             .config("spark.sql.shuffle.partitions", "32")
-             .getOrCreate())
+    spark = get_spark("udc-connbench")
     spark.sparkContext.setLogLevel("ERROR")
 
     results = []

@@ -11,21 +11,17 @@ sys.path.insert(0, REPO)
 
 def main():
     tag = sys.argv[1]
-    keys = sys.argv[2:]
+    import bench
     from universal_data_connector_spark.plans.catalog import QUERIES
     from universal_data_connector_spark.session import get_spark
-    if not keys:
-        sys.path.insert(0, REPO)
-        import bench
-        keys = bench.HEADLINE
-    spark = get_spark("udc-plans", cpus="8")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    keys = sys.argv[2:] or bench.HEADLINE
+    spark = get_spark("udc-plans")
     out_dir = os.path.join(REPO, "plans",
                            os.environ.get("UDC_PLANS_DIR", "r22"))
     os.makedirs(out_dir, exist_ok=True)
     for name in keys:
         try:
-            df = QUERIES[name](spark, sf_dir)
+            df = QUERIES[name](spark, bench.SF_DIR)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
         except Exception as exc:

@@ -1,14 +1,19 @@
-"""Per-key stage-level profiler for the bench headline keys.
+"""Per-key layer profiler for the bench headline keys, read from Spark's
+event log.
 
-Runs each named catalog key exactly as bench.py does (noop sink,
-local[$SPARK_GRAFT_CPUS], sf0.1 by default) with the Spark UI enabled,
-then pulls the per-job / per-stage metrics for that key's run window
-from the UI REST API — so "where does the time go" (scan vs shuffle vs
-Python eval vs job-count overhead) is answered from Spark's own
-accounting instead of wall-clock guesswork.
+Times each named catalog key through bench.py's runner (``bench.run``:
+noop sink, clearCache between reps) in the session bench.py uses
+(``session.get_spark``: local[$SPARK_GRAFT_CPUS], default the host's
+usable cores), after the same warm-up, at $SPARK_GRAFT_SF_DIR (default
+sf0.1), $SPARK_GRAFT_BENCH_REPS times (default 4). The session also
+writes Spark's event log; after ``spark.stop()`` each rep's wall-clock
+window is read back with ``perfbench.eventlog.EventLog.window``, so
+"where does the time go" (jobs, stages, tasks, scan, shuffle, Python
+workers, GC, driver residual) is answered from Spark's own accounting.
 
 Usage: python tools/profile_keys.py [key ...]   (default: a hot-key set)
-Writes JSON to plans/$UDC_PLANS_DIR (default r22) profile_<key>.json and a summary to stdout.
+Prints one JSON line per key: {"key": ..., "reps": [{"wall_s": ...,
+"spark.jobs": ..., ...}, ...]}.
 """
 
 from __future__ import annotations
@@ -16,8 +21,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -32,101 +35,15 @@ HOT = [
 ]
 
 
-def api(path: str):
-    with urllib.request.urlopen(f"http://localhost:4040/api/v1/{path}") as r:
-        return json.load(r)
-
-
 def main() -> None:
-    keys = sys.argv[1:] or HOT
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
-
+    import bench
     from universal_data_connector_spark.plans.catalog import QUERIES
 
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .appName("udc-profile")
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
-             .config("spark.ui.enabled", "true")
-             .config("spark.ui.retainedJobs", "5000")
-             .config("spark.ui.retainedStages", "5000")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
-    app_id = spark.sparkContext.applicationId
-
-    def run(name: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        el = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        return el
-
-    # warm-up (JVM, codegen, python workers)
-    run("agg_hash_sum_avg")
-    run(keys[0])
-
-    os.makedirs(os.path.join(REPO, "plans", os.environ.get("UDC_PLANS_DIR", "r22")), exist_ok=True)
-    for name in keys:
-        before_jobs = {j["jobId"] for j in api(f"applications/{app_id}/jobs")}
-        wall = run(name)
-        jobs = [j for j in api(f"applications/{app_id}/jobs")
-                if j["jobId"] not in before_jobs]
-        stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-        stages = []
-        for sid in stage_ids:
-            try:
-                for att in api(f"applications/{app_id}/stages/{sid}"):
-                    if att["status"] == "SKIPPED":
-                        continue
-                    stages.append({
-                        "stageId": sid,
-                        "name": att["name"].split("\n")[0][:140],
-                        "status": att["status"],
-                        "numTasks": att["numTasks"],
-                        "executorRunTime_ms": att["executorRunTime"],
-                        "executorCpuTime_ms": att.get("executorCpuTime", 0) // 1_000_000,
-                        "shuffleReadBytes": att["shuffleReadBytes"],
-                        "shuffleWriteBytes": att["shuffleWriteBytes"],
-                        "inputBytes": att["inputBytes"],
-                        "durationWall_ms": (
-                            att.get("completionTime") is not None and
-                            att.get("firstTaskLaunchedTime") is not None and
-                            _ms(att["completionTime"], att["firstTaskLaunchedTime"]) or None),
-                    })
-            except Exception as exc:  # stage may have no attempts
-                stages.append({"stageId": sid, "error": str(exc)})
-        prof = {"key": name, "wall_sec": round(wall, 3),
-                "n_jobs": len(jobs), "n_stages": len(stages),
-                "stages": stages}
-        out = os.path.join(REPO, "plans", os.environ.get("UDC_PLANS_DIR", "r22"), f"profile_{name}.json")
-        with open(out, "w") as fh:
-            json.dump(prof, fh, indent=1)
-        top = sorted((s for s in stages if "error" not in s),
-                     key=lambda s: -(s["durationWall_ms"] or 0))[:4]
-        tops = "; ".join(
-            f"{s['name'][:60]} wall={s['durationWall_ms']}ms "
-            f"run={s['executorRunTime_ms']}ms tasks={s['numTasks']}"
-            for s in top)
-        print(f"{name:32s} wall={wall:6.3f}s jobs={len(jobs):3d} "
-              f"stages={len(stages):3d} | {tops}", flush=True)
-    spark.stop()
-
-
-def _ms(end_iso: str, start_iso: str) -> int:
-    from datetime import datetime
-    fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-    try:
-        e = datetime.strptime(end_iso.replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
-        s = datetime.strptime(start_iso.replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
-        return int((e - s).total_seconds() * 1000)
-    except Exception:
-        return 0
+    keys = sys.argv[1:] or HOT
+    profiled = bench.profile({k: (QUERIES[k], bench.SF_DIR) for k in keys},
+                             bench.REPS, "udc-profile")
+    for key, layers in profiled.items():
+        print(json.dumps({"key": key, "reps": layers}), flush=True)
 
 
 if __name__ == "__main__":

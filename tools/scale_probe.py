@@ -8,9 +8,12 @@ the sf1/sf0.1 wall-clock ratio is an apples-to-apples scaling factor:
 extra shuffle-wave constant) flags a superlinear operator; spill bytes
 flag partitions outgrowing memory.
 
-Shuffle/spill come from the Spark status REST API (the probe session
-enables the UI; `session.get_spark` keeps it off for bench runs), as
-per-stage deltas between queries.
+Every rep is timed through bench.py's runner (``bench.run``) in the
+session bench.py uses (``session.get_spark``: local[$SPARK_GRAFT_CPUS],
+default the host's usable cores). Shuffle, spill, input and job counts
+come from Spark's event log: after ``spark.stop()`` each rep's
+wall-clock window is read back with ``perfbench.eventlog.EventLog.window``
+(``bench.profile``), and the first rep's numbers are kept per key and sf.
 
 Usage: python tools/scale_probe.py [reps] [sf ...]
 (defaults: 2 reps over sf0.1 and sf1 — pass e.g. `2 0.1 1 10` for a
@@ -23,8 +26,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -81,58 +82,6 @@ def _embedding_cosine_cap64(spark, sf_dir):
 CUSTOM_CHAINS = {"dedup_embedding_cosine_cap64": _embedding_cosine_cap64}
 
 
-def stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    # generous timeout + retry: the first status-API hit after session
-    # start can exceed 10s while Jersey + the status store warm up
-    # (observed under local-cluster, where it killed the whole probe)
-    last_err = None
-    for attempt in range(3):
-        try:
-            with urllib.request.urlopen(url, timeout=60) as fh:
-                stages = json.load(fh)
-            break
-        except Exception as e:   # noqa: BLE001 - retried, then re-raised
-            last_err = e
-            time.sleep(2 * (attempt + 1))
-    else:
-        raise last_err
-    # dedupe to the LAST attempt per stage: summing every attempt
-    # double-counts retried stages (ADVICE r11)
-    latest: dict[int, tuple[int, dict]] = {}
-    for s in stages:
-        sid, att = s["stageId"], s.get("attemptId", 0)
-        if sid not in latest or att > latest[sid][0]:
-            latest[sid] = (att, s)
-    kept = [s for _, s in latest.values()]
-    return {
-        "n_stages": len(kept),
-        "shuffle_write": sum(s.get("shuffleWriteBytes", 0) for s in kept),
-        "spill_disk": sum(s.get("diskBytesSpilled", 0) for s in kept),
-        "spill_mem": sum(s.get("memoryBytesSpilled", 0) for s in kept),
-        "input": sum(s.get("inputBytes", 0) for s in kept),
-    }
-
-
-def settled_stage_totals(spark, timeout: float = 6.0) -> dict:
-    """Stage-completion events reach the status store through the
-    async listener bus, so a snapshot taken the instant an action
-    returns can miss that action's last stages (they would then be
-    mis-attributed to the NEXT query's delta — ADVICE r11). Poll until
-    two consecutive reads agree, bounded by `timeout`."""
-    prev = stage_totals(spark)
-    deadline = time.perf_counter() + timeout
-    while time.perf_counter() < deadline:
-        time.sleep(0.25)
-        cur = stage_totals(spark)
-        if cur == prev:
-            return cur
-        prev = cur
-    return prev
-
-
 def main() -> None:
     # env knobs for driving long multi-sf curves in bounded slices:
     # SPARK_GRAFT_PROBE_KEYS=k1,k2 subsets PROBE_KEYS;
@@ -153,73 +102,21 @@ def main() -> None:
         if not os.path.isdir(d):
             raise SystemExit(f"{d} missing - run gen_scale_probe_data.py")
 
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # SPARK_GRAFT_MASTER overrides the master URL (VERDICT r11 item 3:
-    # e.g. `local-cluster[4,8,28672]` = 4 worker JVMs x 8 cores x
-    # 28 GiB — real executor processes, so the big shuffles pay actual
-    # serialization + loopback network transfer instead of local[32]'s
-    # in-process block handoff). Executor python workers need the repo
-    # importable, hence the PYTHONPATH propagation.
-    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    builder = (SparkSession.builder.master(master)
-               .appName("udc-scale-probe")
-               .config("spark.sql.shuffle.partitions", cpus)
-               .config("spark.sql.session.timeZone", "UTC")
-               .config("spark.driver.memory",
-                       os.environ.get("SPARK_DRIVER_MEM", "48g"))
-               .config("spark.executorEnv.PYTHONPATH", repo)
-               .config("spark.ui.enabled", "true")
-               .config("spark.ui.port", "4097")
-               # the probe's before/after stage deltas are only truthful
-               # while NO completed stage is evicted mid-measurement; the
-               # default retainedStages=1000 can evict during the
-               # multi-job sf1.0 chains (review finding r11)
-               .config("spark.ui.retainedStages", "100000"))
-    if master.startswith("local-cluster"):
-        # worker mem spec is the third bracket field (MiB); size the
-        # executors to it so the cluster actually schedules
-        mem_mb = master.rstrip("]").split(",")[-1]
-        builder = builder.config("spark.executor.memory", f"{mem_mb}m")
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+    import bench
     from universal_data_connector_spark.plans.catalog import QUERIES
+    from universal_data_connector_spark.session import DEFAULT_CPUS
 
-    # warm-up: JVM, codegen, python worker pool
-    QUERIES["agg_hash_sum_avg"](spark, dirs[base_label]) \
-        .write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-
+    cases = {(key, sf_label): (CUSTOM_CHAINS.get(key) or QUERIES[key], sf_dir)
+             for key in keys for sf_label, sf_dir in dirs.items()}
+    profiled = bench.profile(cases, reps, "udc-scale-probe")
     results: dict[str, dict] = {}
-    for key in keys:
-        results[key] = {}
-        for sf_label, sf_dir in dirs.items():
-            samples, met0 = [], None
-            for _ in range(reps):
-                fn = CUSTOM_CHAINS.get(key) or QUERIES[key]
-                before = settled_stage_totals(spark)
-                t0 = time.perf_counter()
-                fn(spark, sf_dir) \
-                    .write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                after = settled_stage_totals(spark)
-                spark.catalog.clearCache()
-                samples.append(dt)
-                if met0 is None:
-                    met0 = {k: after[k] - before[k] for k in after
-                            if k != "n_stages"}
-            results[key][sf_label] = {
-                "sec_min": round(min(samples), 3),
-                "sec_all": [round(s, 3) for s in samples],
-                **{k: met0[k] for k in
-                   ("shuffle_write", "spill_disk", "spill_mem", "input")},
-            }
-            print(f"{key:32s} {sf_label}: {min(samples):7.2f}s "
-                  f"shuffle={met0['shuffle_write']/1e6:9.1f}MB "
-                  f"spill={met0['spill_disk']/1e6:6.1f}MB", flush=True)
+    for (key, sf_label), layers in profiled.items():
+        secs = [rep["wall_s"] for rep in layers]
+        results.setdefault(key, {})[sf_label] = {
+            "sec_min": min(secs), "sec_all": secs, "layers": layers[0]}
+        print(f"{key:32s} {sf_label}: {min(secs):7.2f}s "
+              f"shuffle={layers[0]['spark.shuffle_write_bytes']/1e6:9.1f}MB "
+              f"spill={layers[0]['spark.spill_bytes']/1e6:6.1f}MB", flush=True)
 
     for key, r in results.items():
         a, b = r[base_label]["sec_min"], r[top_label]["sec_min"]
@@ -227,15 +124,14 @@ def main() -> None:
     out = os.environ.get("SPARK_GRAFT_PROBE_OUT",
                          os.path.join(root, "probe_results.json"))
     with open(out, "w") as fh:
-        json.dump({"reps": reps, "cpus": int(cpus),
-                   "spark": spark.version, "results": results}, fh, indent=1)
+        json.dump({"reps": reps, "cpus": DEFAULT_CPUS,
+                   "results": results}, fh, indent=1)
     hdr = " ".join(f"{lbl:>8s}" for lbl in dirs)
     print(f"\n{'key':32s} {hdr} {'ratio':>6s}")
     for key, r in results.items():
         row = " ".join(f"{r[lbl]['sec_min']:8.2f}" for lbl in dirs)
         print(f"{key:32s} {row} {r['scaling_x']:6.2f}")
     print(f"\nwrote {out}")
-    spark.stop()
 
 
 if __name__ == "__main__":

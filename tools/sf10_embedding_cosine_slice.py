@@ -35,6 +35,7 @@ def main() -> int:
     import pyarrow.parquet as pq
     from pyspark.sql import SparkSession
 
+    from universal_data_connector_spark.session import DEFAULT_CPUS
     from universal_data_connector_spark.tables import TABLES
 
     mod = int(sys.argv[1]) if len(sys.argv) > 1 else 10
@@ -51,9 +52,9 @@ def main() -> int:
             os.symlink(os.path.join(sf10, f"{t}.parquet"),
                        os.path.join(tmp, f"{t}.parquet"))
 
-    spark = (SparkSession.builder.master("local[32]")
+    spark = (SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
              .config("spark.driver.memory", "48g")
-             .config("spark.sql.shuffle.partitions", "32")
+             .config("spark.sql.shuffle.partitions", str(DEFAULT_CPUS))
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -54,13 +54,15 @@ DEFAULT_KEYS = [
 def main() -> int:
     from pyspark.sql import SparkSession
 
+    from universal_data_connector_spark.session import DEFAULT_CPUS
+
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else \
         os.path.join(REPO, "scale_probe", "sf1")
     keys = sys.argv[2:] or DEFAULT_KEYS
 
-    spark = (SparkSession.builder.master("local[32]")
+    spark = (SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
              .config("spark.driver.memory", "48g")
-             .config("spark.sql.shuffle.partitions", "32")
+             .config("spark.sql.shuffle.partitions", str(DEFAULT_CPUS))
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 

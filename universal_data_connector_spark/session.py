@@ -16,7 +16,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# local[N] parallelism: $SPARK_GRAFT_CPUS, else the cores this process
+# may run on (its CPU affinity, which a container's cpuset narrows)
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
+                   or len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "universal_data_connector_spark",
