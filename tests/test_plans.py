@@ -502,12 +502,17 @@ def test_upsert_sink_never_reads_full_target():
     assert "_UPSERT_BUCKET_COL).isin(" in helper, (
         "_read_touched lost its bucket partition filter — that "
         "reintroduces the O(target) per-batch rewrite")
-    for body in (windows.upsert_merge, windows.agg_state_merge):
+    # the POSIX storage read is that helper over the touched buckets
+    posix_read = inspect.getsource(windows.PosixStateTarget.read)
+    assert "read.parquet" not in posix_read
+    assert "_read_touched(spark, self.path, list(snap))" in posix_read
+    # and both merge bodies read state only through the target
+    for body in (windows.keep_latest_merge, windows.additive_merge):
         src = inspect.getsource(body)
-        assert "read.parquet" not in src, (
+        assert "read.parquet" not in src and ".read." not in src, (
             f"{body.__name__} must read the target only through "
-            "_read_touched (partition-pruned)")
-        assert "_read_touched(" in src
+            "target.read (partition-pruned)")
+        assert src.count("target.read(") == 1
     # and nothing else in the module reads parquet directly: full
     # reads are confined to the two helpers whose CONTRACT is a full
     # read — _read_touched (pruned by its isin filter) and read_state

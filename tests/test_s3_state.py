@@ -488,14 +488,52 @@ def test_constant_id_upsert_rerun_crash_cannot_tear_state(
 # commit protocol itself)
 # ---------------------------------------------------------------------------
 
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_agg_state_crash_fuzz_against_model(spark, target, monkeypatch,
-                                            seed):
+@pytest.mark.parametrize("backend,seed", [
+    (backend, seed) for backend in ("s3", "posix") for seed in (0, 1, 2)])
+def test_agg_state_crash_fuzz_against_model(spark, request, tmp_path,
+                                            monkeypatch, backend, seed):
+    """Both storage targets run the same additive merge; the crash is
+    injected at each one's per-bucket commit (the S3 pointer CAS, the
+    POSIX two-rename swap)."""
     import random
+
+    from universal_data_connector_spark.streaming.windows import (
+        PosixStateTarget,
+        additive_merge,
+        read_state,
+    )
+
+    if backend == "s3":
+        tgt = request.getfixturevalue("target")
+        cls, method = S3StateTarget, "commit_pointer"
+
+        def totals():
+            return _totals(spark, tgt)
+    else:
+        tgt = PosixStateTarget(str(tmp_path / "state"), num_buckets=4)
+        cls, method = PosixStateTarget, "commit_bucket"
+
+        def totals():
+            out = read_state(spark, tgt.path, AGG_SCHEMA)
+            return {r.user_id: (r.n, float(r.total)) for r in out.collect()}
+
+    def merge(batch, batch_id):
+        additive_merge(batch, batch_id, target=tgt, keys=["user_id"],
+                       value_col="value")
 
     rng = random.Random(seed)
     model: dict[int, tuple[int, float]] = {}
-    real_commit = S3StateTarget.commit_pointer
+    real_commit = getattr(cls, method)
+
+    def crash_after(n, message):
+        calls = {"n": 0}
+
+        def crashing(self, *args):
+            if calls["n"] >= n:
+                raise RuntimeError(message)
+            calls["n"] += 1
+            return real_commit(self, *args)
+        return crashing
 
     for batch_id in range(1, 7):
         rows = [(rng.randint(1, 12), 0, float(rng.randint(1, 9)))
@@ -506,58 +544,35 @@ def test_agg_state_crash_fuzz_against_model(spark, target, monkeypatch,
         batch = _frame(spark, rows) if rows else _frame(
             spark, []).limit(0)
 
-        # crash after a random number of pointer commits (possibly 0 =
-        # crash before any CAS, possibly >= touched = no crash at all)
-        crash_after = rng.randint(0, 4)
-        calls = {"n": 0}
-
-        def crashing(self, bucket_id, applied, objects, etag,
-                     _ca=crash_after, _calls=calls):
-            if _calls["n"] >= _ca:
-                raise RuntimeError("fuzz crash")
-            _calls["n"] += 1
-            return real_commit(self, bucket_id, applied, objects, etag)
-
-        monkeypatch.setattr(S3StateTarget, "commit_pointer", crashing)
+        # crash after a random number of bucket commits (possibly 0 =
+        # crash before any commit, possibly >= touched = no crash)
+        monkeypatch.setattr(cls, method,
+                            crash_after(rng.randint(0, 4), "fuzz crash"))
         try:
-            agg_state_merge_s3(batch, batch_id, target=target,
-                               keys=["user_id"], value_col="value")
+            merge(batch, batch_id)
             crashed = False
         except RuntimeError:
             crashed = True
-        monkeypatch.setattr(S3StateTarget, "commit_pointer", real_commit)
+        monkeypatch.setattr(cls, method, real_commit)
         if crashed:
             # the checkpoint replays the batch (possibly after a
             # second crash at a different point)
             if rng.random() < 0.3:
-                calls2 = {"n": 0}
-                ca2 = rng.randint(0, 2)
-
-                def crashing2(self, bucket_id, applied, objects, etag,
-                              _ca=ca2, _calls=calls2):
-                    if _calls["n"] >= _ca:
-                        raise RuntimeError("fuzz crash 2")
-                    _calls["n"] += 1
-                    return real_commit(self, bucket_id, applied,
-                                       objects, etag)
-
-                monkeypatch.setattr(S3StateTarget, "commit_pointer",
-                                    crashing2)
+                monkeypatch.setattr(
+                    cls, method,
+                    crash_after(rng.randint(0, 2), "fuzz crash 2"))
                 try:
-                    agg_state_merge_s3(batch, batch_id, target=target,
-                                       keys=["user_id"],
-                                       value_col="value")
+                    merge(batch, batch_id)
                 except RuntimeError:
                     pass
-                monkeypatch.setattr(S3StateTarget, "commit_pointer",
-                                    real_commit)
-            agg_state_merge_s3(batch, batch_id, target=target,
-                               keys=["user_id"], value_col="value")
+                monkeypatch.setattr(cls, method, real_commit)
+            merge(batch, batch_id)
 
-    assert _totals(spark, target) == model
-    # every committed pointer survives a vacuum of the crash garbage
-    vacuum_target(target)
-    assert _totals(spark, target) == model
+    assert totals() == model
+    if backend == "s3":
+        # every committed pointer survives a vacuum of the crash garbage
+        vacuum_target(tgt)
+        assert totals() == model
 
 
 # ---------------------------------------------------------------------------

@@ -925,19 +925,8 @@ def finalize_batch_sink(spark: SparkSession, cfg: PipelineConfig,
     if kafka_commit is not None and not cancelled():
         kafka_commit()
     if defer_state and not cancelled():
-        if cfg.sink.properties.get("bucketName"):
-            from universal_data_connector_spark.sinks.upsert import (
-                s3_state_target,
-            )
-            from universal_data_connector_spark.streaming.object_state import (
-                end_batch_run_s3,
-            )
-            end_batch_run_s3(s3_state_target(cfg.sink.properties))
-        else:
-            from universal_data_connector_spark.streaming.windows import (
-                end_batch_run,
-            )
-            end_batch_run(cfg.sink.properties["path"])
+        from universal_data_connector_spark.sinks.upsert import state_target
+        state_target(cfg.sink.properties).intent_clear()
 
 
 def batch_input_fingerprint(source_df: DataFrame) -> str | None:

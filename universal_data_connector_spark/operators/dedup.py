@@ -392,19 +392,17 @@ def jaccard_verify_grams(grams: DataFrame, pairs: DataFrame,
     """Verify stage over precomputed (and already materialized)
     shingle-hash arrays.
 
-    Join posture (r22, guide §3.1): broadcast the CANDIDATE PAIRS —
-    the side bounded by LSH band selectivity — never the gram table.
-    The static planner's previous choice was two BroadcastExchanges
-    over the corpus-sized gram arrays (unboundedly wrong at 100 TB,
-    and two MB-scale broadcast builds at sf0.1). Only the bare id
-    pairs carry an explicit hint; the second join's build side (pairs
-    + one gram array each) is left to the planner, which broadcasts
-    it while small and falls back to a keyed shuffle when not."""
+    Join posture: no broadcast hint on either side. The candidate
+    pair set is data-dependent and unbounded (a dup-heavy corpus makes
+    it quadratic in a band bucket), so the planner and AQE pick each
+    join from size estimates and runtime stats. A hint on the pairs
+    won 1.07x on dedup_near_minhash at sf0.1 on 4 cores, under the
+    1.1x a special case must earn."""
     g1 = grams.select(F.col(id_col).alias("id_1"), F.col("__g").alias("__g1"))
     g2 = grams.select(F.col(id_col).alias("id_2"), F.col("__g").alias("__g2"))
     inter = F.size(F.array_intersect("__g1", "__g2")).cast("double")
     union = (F.size("__g1") + F.size("__g2")).cast("double") - inter
-    return (g1.join(F.broadcast(pairs), "id_1").join(g2, "id_2")
+    return (g1.join(pairs, "id_1").join(g2, "id_2")
                  .withColumn("jaccard", F.when(union > 0, inter / union).otherwise(F.lit(0.0)))
                  .filter(F.col("jaccard") >= threshold)
                  .select("id_1", "id_2", "jaccard"))

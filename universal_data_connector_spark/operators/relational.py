@@ -12,6 +12,7 @@ double sum is order-dependent and shuffles reorder partitions).
 from __future__ import annotations
 
 import logging
+import os
 import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -71,7 +72,6 @@ def _scaled_guard(c: Column) -> Column:
     noise but still round to the same 6-dp decimal on both routes.
     Violations raise (assert_true) instead of silently changing sums.
     Off by default: production plans carry zero extra expressions."""
-    import os
     if not os.environ.get("UDC_SCALED_ASSERT"):
         return c
     dec6 = c.cast("decimal(38,6)")  # the exact path's per-value decimal
@@ -134,6 +134,11 @@ def exact_avg_scaled(col: Column | str) -> Column:
     return exact_sum_scaled(c) / F.count(c)
 
 
+# materialize_reliable persists frames whose optimizer size estimate is
+# at most this many bytes MEMORY_AND_DISK instead of DISK_ONLY
+_MAT_MEMORY_MAX_BYTES = 256 << 20
+
+
 def materialize_reliable(df: DataFrame) -> DataFrame:
     """Eagerly materialize a corpus-scale intermediate, recoverably.
 
@@ -167,8 +172,6 @@ def materialize_reliable(df: DataFrame) -> DataFrame:
     on one thread can never unpersist frames a concurrently-running
     job (PipelineManager worker threads) still depends on.
     """
-    import os
-
     from pyspark import StorageLevel
 
     # Storage level by estimated input size (same conservative switch
@@ -181,17 +184,15 @@ def materialize_reliable(df: DataFrame) -> DataFrame:
     # behavior) the frame is MEMORY_AND_DISK: small frames live in the
     # bounded storage pool, anything unexpected spills via LRU. The
     # estimate grows with the data, so the 100 TB regime always takes
-    # DISK_ONLY. Tune via UDC_MAT_MEMORY_MAX_BYTES (0 disables).
-    mem_max = int(os.environ.get("UDC_MAT_MEMORY_MAX_BYTES", 256 << 20))
+    # DISK_ONLY.
     level = StorageLevel.DISK_ONLY
-    if mem_max > 0:
-        try:
-            est = int(df._jdf.queryExecution().optimizedPlan()
-                      .stats().sizeInBytes())
-        except Exception:
-            est = None
-        if est is not None and est <= mem_max:
-            level = StorageLevel.MEMORY_AND_DISK
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan()
+                  .stats().sizeInBytes())
+    except Exception:
+        est = None
+    if est is not None and est <= _MAT_MEMORY_MAX_BYTES:
+        level = StorageLevel.MEMORY_AND_DISK
     df = df.persist(level)
     df.count()  # force: populate every partition before consumers run
     _pin_sink().append(df)
@@ -350,6 +351,34 @@ def _max_partition_bytes(spark) -> int:
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
 
 
+def _split_estimate(df: DataFrame, stop_at: int | None = None) -> int:
+    """Scan-task estimate of ``df`` from its file listing and the
+    maxPartitionBytes split arithmetic — metadata only, never a
+    plan->RDD conversion (``df.rdd.getNumPartitions()`` materializes an
+    RDD plan per call, defeating lazy reuse and loading the driver when
+    operators compose). 0 for non-scan inputs (no files). Stops
+    counting once it reaches ``stop_at``."""
+    from urllib.parse import unquote, urlparse
+
+    max_bytes = _max_partition_bytes(df.sparkSession)
+    est = 0
+    for f in df.inputFiles():
+        if f.startswith("file:"):
+            try:
+                size = os.path.getsize(unquote(urlparse(f).path))
+                # bytes-based splits are an upper bound on real tasks
+                # (single-row-group files never split), so count a file
+                # as extra splits only beyond the first
+                est += max(1, -(-size // max_bytes))
+            except OSError:
+                est += 1
+        else:
+            est += 1
+        if stop_at is not None and est >= stop_at:
+            break
+    return est
+
+
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     """Raise scan parallelism before a compute-heavy projection.
 
@@ -362,37 +391,14 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     is already wide (the 100 TB case: thousands of files/row groups)
     this is a no-op.
 
-    The width estimate comes from the scan's file listing + the
-    maxPartitionBytes split arithmetic — metadata only, never a
-    plan->RDD conversion (``df.rdd.getNumPartitions()`` materializes an
-    RDD plan per call, defeating lazy reuse and loading the driver when
-    operators compose). Non-scan inputs (no files: in-memory or
-    post-shuffle plans) are returned unchanged: they already carry
-    defaultParallelism or shuffle.partitions width.
+    The width comes from ``_split_estimate``. Non-scan inputs (no
+    files: in-memory or post-shuffle plans) are returned unchanged:
+    they already carry defaultParallelism or shuffle.partitions width.
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    if not files:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    est = _split_estimate(df, stop_at=target)
+    if est == 0 or est >= target:
         return df
-    max_bytes = _max_partition_bytes(spark)
-    est = 0
-    for f in files:
-        if f.startswith("file:"):
-            try:
-                import os
-                from urllib.parse import unquote, urlparse
-                size = os.path.getsize(unquote(urlparse(f).path))
-                # bytes-based splits are an upper bound on real tasks
-                # (single-row-group files never split), so count a file
-                # as extra splits only beyond the first
-                est += max(1, -(-size // max_bytes))
-            except OSError:
-                est += 1
-        else:
-            est += 1
-        if est >= target:
-            return df
     return df.repartition(target, *key_cols) if key_cols else df.repartition(target)
 
 
@@ -411,30 +417,15 @@ def grouped_spread(df: DataFrame, *key_cols: str) -> DataFrame:
     exempt from AQE coalescing and satisfies the grouped operator's
     ClusteredDistribution requirement, so no second exchange appears.
 
-    Scale posture: the count grows with the input (file-split estimate,
-    same metadata arithmetic as ``spread``) and never drops below
-    cluster parallelism — at 100 TB the estimate dominates and the
-    exchange carries exactly the bytes the groupBy shuffle already
-    moved; only the pathological small-bytes/many-groups corner
-    changes. Non-scan inputs fall back to defaultParallelism: callers
-    should apply this directly to the scan-side projection."""
-    spark = df.sparkSession
-    import os as _os
-    from urllib.parse import unquote, urlparse
-
-    target = spark.sparkContext.defaultParallelism
-    max_bytes = _max_partition_bytes(spark)
-    est = 0
-    for f in df.inputFiles():
-        if f.startswith("file:"):
-            try:
-                size = _os.path.getsize(unquote(urlparse(f).path))
-                est += max(1, -(-size // max_bytes))
-            except OSError:
-                est += 1
-        else:
-            est += 1
-    return df.repartition(max(target, est), *key_cols)
+    Scale posture: the count grows with the input (``_split_estimate``,
+    the same arithmetic as ``spread``) and never drops below cluster
+    parallelism — at 100 TB the estimate dominates and the exchange
+    carries exactly the bytes the groupBy shuffle already moved; only
+    the pathological small-bytes/many-groups corner changes. Non-scan
+    inputs fall back to defaultParallelism: callers should apply this
+    directly to the scan-side projection."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(max(target, _split_estimate(df)), *key_cols)
 
 
 def broadcast_dim(df: DataFrame) -> DataFrame:

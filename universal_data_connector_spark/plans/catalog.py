@@ -2148,7 +2148,7 @@ def multimodal_binary_meta(spark, sf_dir):
     type; operators/multimodal.py). Text bytes sniff to octet-stream;
     real image/audio magic bytes are unit-tested in
     tests/test_multimodal.py."""
-    d = orel.spread(load(spark, sf_dir, "documents")).select(
+    d = load(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("content"))
     meta = om.binary_metadata(d)
     return meta.select("doc_id", "byte_length", "content_sha256", "media_type")
@@ -2194,7 +2194,7 @@ def multimodal_resize(spark, sf_dir):
     mapInPandas, deterministic fake in place of the codec (not in this
     container). Emits the resized sha256 so the rows-only check still
     pins deterministic content."""
-    d = orel.spread(load(spark, sf_dir, "documents")).select(
+    d = load(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("content"))
     out = om.resize_media_batch(d, target_bytes=64, fake=True)
     return out.select("doc_id", "resized_length",

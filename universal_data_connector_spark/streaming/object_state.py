@@ -64,16 +64,23 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from universal_data_connector_spark.streaming.windows import by_bucket
+from universal_data_connector_spark.streaming.windows import (
+    Committed,
+    additive_merge,
+    by_bucket,
+    claim_batch_run,
+    foreachbatch_merge,
+    keep_latest_merge,
+    record_touched,
+)
 
 _KB = "udc_kb"                      # same bucket column as the POSIX twin
 _META_KEY = "_udc_buckets"
 _INTENT_KEY = "_udc_batch_intent"
-_DEC = "decimal(27,6)"
 
 
 class CasConflict(ValueError):
@@ -185,6 +192,7 @@ class S3StateTarget:
         self.client_kwargs = client_kwargs
         self.bucket = bucket
         self.prefix = prefix.strip("/")
+        self.intent = self._key(_INTENT_KEY)
         self.num_buckets = self._ensure_meta(num_buckets)
 
     # -- key helpers -----------------------------------------------------
@@ -275,6 +283,61 @@ class S3StateTarget:
             self.client.delete_objects(
                 Bucket=self.bucket,
                 Delete={"Objects": [{"Key": k} for k in keys[i:i + 1000]]})
+
+    # -- keyed-state storage (the commit protocol in streaming/windows) --
+    def open(self) -> int:
+        """The bucket count (the layout marker was ensured at
+        construction)."""
+        return self.num_buckets
+
+    def snapshot(self, buckets) -> dict[int, Committed]:
+        snap = {}
+        for b in buckets:
+            ptr, etag = self.read_pointer(b)
+            snap[b] = Committed(ptr["applied"] if ptr else -1, (ptr, etag))
+        return snap
+
+    def read(self, spark, snap: dict, schema) -> DataFrame | None:
+        """The committed objects of ``snap``'s buckets as a frame of
+        ``schema`` (the batch's own schema: state and batch share one
+        by the unionByName contract), None when none is committed."""
+        keyed_objects = _pointer_objects(
+            {b: c.ref for b, c in snap.items()})
+        if not keyed_objects:
+            return None
+        return read_objects(spark, self, keyed_objects, schema)
+
+    def commit(self, frame: DataFrame, snap: dict, batch_id: int,
+               marker: bool) -> None:
+        """Upload ``frame`` as a new generation, then CAS each bucket's
+        pointer against the ETag read at merge entry. The pointer always
+        records ``batch_id``, so ``marker`` needs no handling here."""
+        objects = write_objects(frame, self, list(snap),
+                                _gen_key_fmt(self, batch_id))
+        for b, c in snap.items():
+            self.commit_pointer(b, batch_id, objects[b], c.ref[1])
+
+    def writer_mark(self):
+        """Store-carried writer mark (store_lease, r16): a vacuum from
+        ANY config/process would otherwise list this merge's fresh,
+        not-yet-pointer-referenced generation objects as garbage and
+        delete them out from under the pointer commit."""
+        from universal_data_connector_spark.store_lease import (
+            s3_writer_mark,
+        )
+        return s3_writer_mark(self)
+
+    def intent_get(self):
+        return self._get_json(self.intent)
+
+    def intent_claim(self, payload: dict) -> None:
+        self._put_cas(self.intent, payload, None)
+
+    def intent_update(self, payload: dict, etag: str | None) -> None:
+        self._put_cas(self.intent, payload, etag)
+
+    def intent_clear(self) -> None:
+        self.delete_keys([self.intent])
 
 
 def read_objects(spark, target: S3StateTarget,
@@ -478,115 +541,19 @@ def _gen_key_fmt(target: S3StateTarget, gen_id: int) -> str:
 def upsert_merge_s3(batch_df: DataFrame, batch_id: int, *,
                     target: S3StateTarget, keys: list[str],
                     order_col: str) -> None:
-    """One keep-latest merge into the object-store target — the
-    CAS-committed twin of ``windows.upsert_merge``. Idempotent: a
-    replay recomputes the same winners (content-hash tiebreak in
-    ``_latest_rank``) from the same committed pointers, and buckets
-    whose pointer already reached ``batch_id`` are skipped outright."""
-    from universal_data_connector_spark.streaming.windows import (
-        _latest_rank,
-    )
-
-    spark = batch_df.sparkSession
-    kb = F.pmod(F.xxhash64(*keys), F.lit(target.num_buckets)).cast("int")
-    rank = _latest_rank(batch_df.schema, keys, order_col)
-    latest = (batch_df.withColumn("__rn", rank)
-                      .filter(F.col("__rn") == 1).drop("__rn")
-                      .withColumn(_KB, kb))
-    # bounded by num_buckets -> driver-safe at any scale
-    touched = sorted(r[0] for r in latest.select(_KB).distinct().collect())
-    if not touched:
-        return
-    from universal_data_connector_spark.store_lease import s3_writer_mark
-
-    # store-carried writer mark (store_lease, r16): a vacuum from ANY
-    # config/process would otherwise list this merge's fresh, not-yet-
-    # pointer-referenced generation objects as garbage and delete them
-    # out from under the pointer commit
-    with s3_writer_mark(target):
-        # NO applied-id gate here, matching the POSIX twin: keep-latest
-        # is idempotent, so a replay (or a direct batch call with a
-        # constant id) simply re-merges against the committed pointers
-        # and converges; the recorded id is informational
-        pointers = {b: target.read_pointer(b) for b in touched}
-        pending = touched
-
-        keyed_objects = _pointer_objects({b: pointers[b] for b in pending})
-        if keyed_objects:
-            # read only the pending buckets' committed objects, with
-            # the batch's own schema as the read contract (state and
-            # batch share one schema by the unionByName contract)
-            current = read_objects(spark, target, keyed_objects,
-                                   latest.schema)
-            merged = current.unionByName(latest)
-            rank2 = _latest_rank(merged.schema, keys, order_col)
-            merged = (merged.withColumn("__rn", rank2)
-                            .filter(F.col("__rn") == 1).drop("__rn"))
-        else:
-            merged = latest
-        objects = write_objects(merged, target, pending,
-                                _gen_key_fmt(target, batch_id))
-        for b in pending:
-            target.commit_pointer(b, batch_id, objects[b],
-                                  pointers[b][1])
+    """``keep_latest_merge`` into the object-store target."""
+    keep_latest_merge(batch_df, batch_id, target=target, keys=keys,
+                      order_col=order_col)
 
 
 def agg_state_merge_s3(batch_df: DataFrame, batch_id: int, *,
                        target: S3StateTarget, keys: list[str],
                        value_col: str) -> None:
-    """One additive (count, exact-decimal sum) merge — the
-    CAS-committed twin of ``windows.agg_state_merge``. NOT idempotent
-    by nature, so exactly-once comes from the applied id inside the
-    pointer: a replayed batch skips buckets whose pointer reached
-    ``batch_id`` and re-derives the rest from their old (still
-    committed) pointers, exactly like the POSIX marker-in-renamed-dir
-    argument with CAS standing in for the rename."""
-    spark = batch_df.sparkSession
-    kb = F.pmod(F.xxhash64(*keys), F.lit(target.num_buckets)).cast("int")
-    part = (batch_df
-            .groupBy(*keys)
-            .agg(F.count("*").cast("bigint").alias("n"),
-                 F.sum(F.col(value_col).cast(_DEC)).cast(_DEC)
-                  .alias("total"))
-            .withColumn(_KB, kb))
-    touched = sorted(r[0] for r in part.select(_KB).distinct().collect())
-    if not touched:
-        return
-    from universal_data_connector_spark.store_lease import s3_writer_mark
-
-    # same vacuum-vs-fresh-generation fence as upsert_merge_s3
-    with s3_writer_mark(target):
-        pointers = {b: target.read_pointer(b) for b in touched}
-        pending = [b for b in touched
-                   if pointers[b][0] is None
-                   or pointers[b][0]["applied"] < batch_id]
-        # record BEFORE the early return and the first commit (same
-        # role as the POSIX _intent_record_touched: an empty pending
-        # set recorded = "this run's merge is complete"; no-op when no
-        # intent exists — the streaming path carries none)
-        record_touched_s3(target, batch_id, pending)
-        if not pending:
-            return
-        part = part.filter(F.col(_KB).isin(pending))
-
-        keyed_objects = _pointer_objects({b: pointers[b] for b in pending})
-        if keyed_objects:
-            state = (read_objects(spark, target, keyed_objects,
-                                  part.schema)
-                     .select(*keys, F.col("n"),
-                             F.col("total").cast(_DEC).alias("total"),
-                             F.col(_KB)))
-            merged = (state.unionByName(part)
-                      .groupBy(*keys, _KB)
-                      .agg(F.sum("n").cast("bigint").alias("n"),
-                           F.sum("total").cast(_DEC).alias("total")))
-        else:
-            merged = part
-        objects = write_objects(merged, target, pending,
-                                _gen_key_fmt(target, batch_id))
-        for b in pending:
-            target.commit_pointer(b, batch_id, objects[b],
-                                  pointers[b][1])
+    """``additive_merge`` into the object-store target: the applied id
+    inside the pointer, committed by CAS, stands in for the POSIX
+    marker-in-renamed-dir."""
+    additive_merge(batch_df, batch_id, target=target, keys=keys,
+                   value_col=value_col)
 
 
 def read_state_s3(spark, target: S3StateTarget, schema: str,
@@ -679,21 +646,10 @@ def foreachbatch_upsert_s3(stream: DataFrame, target: S3StateTarget,
     checkpoint numbers batches, the pointer CAS makes each bucket's
     swap atomic, and the applied id in the pointer makes replays
     converge — exactly-once end to end."""
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        from universal_data_connector_spark.store_lease import (
-            lease_owner,
-        )
-        # checkpoint-scoped owner: a restarted query may break its
-        # dead predecessor's stale writer mark (store_lease docstring)
-        with lease_owner(f"stream:{checkpoint}"):
-            upsert_merge_s3(batch_df, batch_id, target=target,
-                            keys=keys, order_col=order_col)
-
-    writer = (stream.writeStream.foreachBatch(merge)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreachbatch_merge(
+        stream, partial(keep_latest_merge, target=target, keys=keys,
+                        order_col=order_col),
+        checkpoint, trigger_available_now)
 
 
 def foreachbatch_agg_state_s3(stream: DataFrame, target: S3StateTarget,
@@ -703,96 +659,26 @@ def foreachbatch_agg_state_s3(stream: DataFrame, target: S3StateTarget,
     """Streaming additive aggregate state on an object store:
     at-least-once foreachBatch delivery + applied-id-in-pointer CAS
     commits = exactly-once additive state, no rename required."""
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        from universal_data_connector_spark.store_lease import (
-            lease_owner,
-        )
-        with lease_owner(f"stream:{checkpoint}"):
-            agg_state_merge_s3(batch_df, batch_id, target=target,
-                               keys=keys, value_col=value_col)
-
-    writer = (stream.writeStream.foreachBatch(merge)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreachbatch_merge(
+        stream, partial(additive_merge, target=target, keys=keys,
+                        value_col=value_col),
+        checkpoint, trigger_available_now)
 
 
 def begin_batch_run_s3(target: S3StateTarget,
                        fingerprint: str | None = None) -> int:
-    """Claim a run id for one BATCH merge — the object-store twin of
-    ``windows.begin_batch_run`` with the intent object claimed via
-    ``If-None-Match:*`` (the CAS equivalent of ``O_CREAT|O_EXCL``).
-
-    The id is 1 + the highest applied id across all bucket pointers
-    (monotonic across runs). Resume semantics mirror the POSIX twin:
-    a pre-existing intent resumes its id when the fingerprint matches
-    (or either side has none); on a fingerprint MISMATCH the intent is
-    reclaimed fresh only when the prior run provably completed (every
-    recorded touched bucket's pointer reached the run id) or provably
-    never committed (no recorded bucket's pointer reached it) —
-    a genuine partial apply raises for operator reconciliation."""
-    intent_key = target._key(_INTENT_KEY)
-
-    def next_id() -> int:
-        applied = (target.read_pointer(b)[0]
-                   for b in range(target.num_buckets))
-        return 1 + max((p["applied"] for p in applied if p is not None),
-                       default=-1)
-
-    stored, etag = target._get_json(intent_key)
-    if stored is not None:
-        stored_fp = stored.get("fingerprint")
-        if (fingerprint is None or stored_fp is None
-                or stored_fp == fingerprint):
-            return int(stored["run_id"])
-        touched = stored.get("touched")
-        run_id = int(stored["run_id"])
-        applied = [] if touched is None else [
-            (target.read_pointer(b)[0] or {"applied": -1})["applied"]
-            >= run_id for b in touched]
-        if touched is None or all(applied) or not any(applied):
-            target.delete_keys([intent_key])
-        else:
-            raise ValueError(
-                f"batch intent {intent_key!r} (run {run_id}) was "
-                "claimed for a DIFFERENT input batch, and that run "
-                f"partially applied ({sum(applied)} of {len(applied)} "
-                "recorded buckets committed): resuming would misapply, "
-                "reclaiming would double-apply. Rerun the original "
-                "input to completion first.")
-    run_id = next_id()
-    target._put_cas(intent_key,
-                    {"run_id": run_id, "fingerprint": fingerprint,
-                     "touched": None}, None)
-    return run_id
+    """``claim_batch_run`` on the object-store target; the intent
+    object is claimed with ``If-None-Match:*``, the CAS equivalent of
+    ``O_CREAT|O_EXCL``."""
+    return claim_batch_run(target, fingerprint)
 
 
 def record_touched_s3(target: S3StateTarget, run_id: int,
                       touched: list[int]) -> None:
-    """Persist the planned bucket set into the run's intent BEFORE the
-    first pointer commit (same role as the POSIX
-    ``_intent_record_touched``: it makes 'never committed' provable
-    for a later changed-input resume).
-
-    The recorded set is the UNION of what the intent already carries
-    and this attempt's pending buckets (ADVICE r14): a replay after a
-    partial apply sees a smaller pending set (the committed buckets
-    dropped out), and OVERWRITING would erase the very buckets whose
-    markers prove the partial apply — a later changed-input resume
-    would then see 'no recorded bucket applied', reclaim as provably
-    never committed, and silently abandon the partial apply."""
-    intent_key = target._key(_INTENT_KEY)
-    stored, etag = target._get_json(intent_key)
-    if stored is None or int(stored["run_id"]) != run_id:
-        return
-    prior = stored.get("touched") or []
-    target._put_cas(intent_key,
-                    {"run_id": run_id,
-                     "fingerprint": stored.get("fingerprint"),
-                     "touched": sorted(set(prior) | set(touched))}, etag)
+    """``record_touched`` on the object-store target."""
+    record_touched(target, run_id, touched)
 
 
 def end_batch_run_s3(target: S3StateTarget) -> None:
     """Clear the intent after a successful batch merge."""
-    target.delete_keys([target._key(_INTENT_KEY)])
+    target.intent_clear()

@@ -1,4 +1,4 @@
-"""Event-time windowed aggregation and streaming dedup.
+"""Event-time windows, streaming dedup and keyed-state commits.
 
 These operators are mode-agnostic: ``F.window`` / ``session_window`` /
 ``dropDuplicates`` build identical logical plans in batch and
@@ -14,6 +14,14 @@ evicted each micro-batch, and rows later than that are dropped.
 """
 
 from __future__ import annotations
+
+import contextlib
+import json
+import os
+import re
+import shutil
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -120,6 +128,9 @@ _UPSERT_BUCKET_COL = "udc_kb"
 _UPSERT_META_FILE = "_udc_buckets"       # leading "_" => hidden to Spark
 _UPSERT_STAGED_DIR = "_udc_staged"
 _UPSERT_OLD_PREFIX = "_udc_old_"
+_APPLIED_PREFIX = "_applied_"
+_BATCH_INTENT = "_udc_batch_intent"
+_DEC = "decimal(27,6)"
 
 
 def _upsert_recover(path: str) -> None:
@@ -127,9 +138,6 @@ def _upsert_recover(path: str) -> None:
     live dir went missing mid-swap, drop completed-swap leftovers and
     partial staging. Idempotent; runs on every merge() entry so a
     restarted stream always sees a complete target before re-merging."""
-    import os
-    import shutil
-
     if not os.path.isdir(path):
         return
     shutil.rmtree(os.path.join(path, _UPSERT_STAGED_DIR),
@@ -156,8 +164,6 @@ def _reject_remote_target(path: str) -> None:
     would otherwise be ``os.makedirs``-ed as a literal local ``s3a:``
     directory and state silently maintained in the wrong place, so
     any scheme is rejected up front with the lakehouse pointer."""
-    import re
-
     m = re.match(r"^([A-Za-z][A-Za-z0-9+.\-]*)://", str(path))
     if m:
         raise ValueError(
@@ -174,8 +180,6 @@ def _upsert_ensure_meta(path: str, num_buckets: int) -> int:
     count persisted at target creation (fixed for the target's life —
     a changed bucket count would scatter existing keys). A pre-existing
     non-bucketed directory is rejected rather than silently merged."""
-    import os
-
     _reject_remote_target(path)
     meta = os.path.join(path, _UPSERT_META_FILE)
     if os.path.isdir(path):
@@ -295,122 +299,8 @@ def by_bucket(frame: DataFrame) -> DataFrame:
     return frame.repartition(F.col(_UPSERT_BUCKET_COL))
 
 
-def upsert_merge(batch_df: DataFrame, batch_id: int, *, path: str,
-                 keys: list[str], order_col: str,
-                 num_buckets: int = 32) -> None:
-    """One keep-latest merge of ``batch_df`` into the bucketed target
-    — the audited body behind ``foreachbatch_upsert``, callable
-    directly for batch mode (no scratch-stream round-trip; the merge
-    is idempotent, so ``batch_id`` is unused and re-runs converge)."""
-    import os
-    import shutil
-
-    spark = batch_df.sparkSession
-    _upsert_recover(path)
-    n_buckets = _upsert_ensure_meta(path, num_buckets)
-
-    kb = F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
-    # touched-bucket set: bounded by n_buckets (small by
-    # construction), so the collect is driver-safe at any scale.
-    # Derived from the RAW batch keys, not the keep-latest frame —
-    # the rank filter keeps >=1 row per key, so the bucket sets are
-    # identical, and the raw form is a partial-aggregated distinct
-    # over one projection where the latest form re-ran the whole
-    # rank window+shuffle a second time just to list buckets.
-    touched = sorted(r[0] for r in
-                     batch_df.select(kb.alias(_UPSERT_BUCKET_COL))
-                             .distinct().collect())
-    if not touched:
-        return
-    rank = _latest_rank(batch_df.schema, keys, order_col)
-    latest = (batch_df.withColumn("__rn", rank)
-                      .filter(F.col("__rn") == 1).drop("__rn")
-                      .withColumn(_UPSERT_BUCKET_COL, kb))
-
-    any_live = any(
-        os.path.isdir(os.path.join(path, f"{_UPSERT_BUCKET_COL}={b}"))
-        for b in touched)
-    if any_live:
-        # read the full touched set — nonexistent partitions prune to
-        # nothing, and the union with `latest` needs every touched key
-        current = _read_touched(spark, path, touched)
-        merged = current.unionByName(latest)
-        rank2 = _latest_rank(merged.schema, keys, order_col)
-        merged = (merged.withColumn("__rn", rank2)
-                        .filter(F.col("__rn") == 1).drop("__rn"))
-    else:
-        merged = latest
-
-    staged = os.path.join(path, _UPSERT_STAGED_DIR)
-    (by_bucket(merged).write.mode("overwrite")
-     .partitionBy(_UPSERT_BUCKET_COL).parquet(staged))
-    for b in touched:
-        live = os.path.join(path, f"{_UPSERT_BUCKET_COL}={b}")
-        new = os.path.join(staged, f"{_UPSERT_BUCKET_COL}={b}")
-        if not os.path.isdir(new):
-            continue
-        old = os.path.join(path, f"{_UPSERT_OLD_PREFIX}{b}")
-        if os.path.isdir(live):
-            os.rename(live, old)
-        os.rename(new, live)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(staged, ignore_errors=True)
-
-
-def foreachbatch_upsert(stream: DataFrame, path: str, keys: list[str],
-                        order_col: str, checkpoint: str,
-                        trigger_available_now: bool = True,
-                        num_buckets: int = 32):
-    """Streaming upsert (merge-on-key) into a key-bucketed parquet
-    target via ``foreachBatch`` — the keep-latest-row-per-key sink
-    every CDC / state-snapshot pipeline needs.
-
-    Scale posture: the target is laid out as ``num_buckets`` hash
-    partitions (``udc_kb=pmod(xxhash64(keys), N)`` directories). Each
-    micro-batch is reduced to its newest row per key, the set of
-    TOUCHED buckets is derived from the batch's keys, and only those
-    partitions are read, merged, and rewritten — per-batch cost is
-    O(touched data), not O(target). Untouched bucket directories are
-    never opened (partition pruning on the ``udc_kb`` filter) and
-    never rewritten (pinned by test).
-
-    Crash safety: each touched bucket is staged under the hidden
-    ``_udc_staged`` dir, then swapped live with two renames through a
-    hidden ``_udc_old_<n>`` side dir. ``_upsert_recover`` runs on
-    every batch entry and repairs any interrupted swap (old copy
-    restored if the live dir vanished; superseded copy dropped
-    otherwise), so previously merged keys survive a crash at ANY
-    point and the checkpointed batch replays into a complete target.
-    The merge is idempotent (re-applying a batch picks the same
-    winners), so the target converges to exactly-once semantics.
-
-    Restrictions: the swap uses ``os.rename`` — the target must be a
-    local/POSIX filesystem path (NFS included); URI-scheme targets
-    are rejected up front (``_reject_remote_target``). On an object
-    store, use a lakehouse table format (Delta/Iceberg ``MERGE INTO``)
-    instead; this sink is the dependency-free plain-parquet
-    equivalent with identical semantics. ``num_buckets`` is fixed at
-    target creation (persisted in ``_udc_buckets``); a pre-existing
-    non-bucketed directory is rejected rather than silently merged.
-    """
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_merge(batch_df, batch_id, path=path, keys=keys,
-                     order_col=order_col, num_buckets=num_buckets)
-
-    writer = (stream.writeStream.foreachBatch(merge)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-_APPLIED_PREFIX = "_applied_"
-
-
 def _bucket_applied_id(bucket_dir: str) -> int:
     """Highest batch id recorded in a live bucket dir (-1 if none)."""
-    import os
-
     if not os.path.isdir(bucket_dir):
         return -1
     ids = [int(n[len(_APPLIED_PREFIX):]) for n in os.listdir(bucket_dir)
@@ -418,15 +308,10 @@ def _bucket_applied_id(bucket_dir: str) -> int:
     return max(ids, default=-1)
 
 
-_BATCH_INTENT = "_udc_batch_intent"
-
-
 def _intent_load(intent: str) -> dict | None:
     """Parse the intent file. JSON form is current; a bare integer is
     the pre-fingerprint legacy format (run id only). Returns None for
     an empty (torn-claim) file."""
-    import json
-
     with open(intent) as fh:
         content = fh.read().strip()
     if not content:
@@ -436,66 +321,257 @@ def _intent_load(intent: str) -> dict | None:
     return {"run_id": int(content), "fingerprint": None, "touched": None}
 
 
-def _intent_write(intent: str, run_id: int, fingerprint: str | None,
-                  touched: list[int] | None) -> None:
-    """Atomically (re)write the intent payload (tmp + rename)."""
-    import json
-    import os
-
-    tmp = intent + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(json.dumps({"run_id": run_id, "fingerprint": fingerprint,
-                             "touched": touched}))
-    os.rename(tmp, intent)
+class Committed(NamedTuple):
+    """One bucket's committed state as read at merge entry: the highest
+    batch id applied to it (-1 for none) and the storage's own handle
+    on it — for S3 the pointer and its ETag, the CAS base of this
+    merge's commit; None on POSIX, whose rename needs no base."""
+    applied: int
+    ref: tuple | None = None
 
 
-def _intent_record_touched(path: str, run_id: int,
-                           touched: list[int]) -> None:
-    """Record the bucket set a batch merge is ABOUT to swap into the
-    run's intent file (no-op when no intent exists — the streaming
-    path numbers batches from its checkpoint and carries no intent).
-    Written before the first swap, so a later ``begin_batch_run`` can
-    tell a COMPLETED merge (every recorded bucket's marker reached the
-    run id) from a crashed-partway one — the distinction that makes a
-    changed-input resume safe to reclaim fresh (see
-    ``begin_batch_run``)."""
-    import os
+class PosixStateTarget:
+    """Keyed-state storage on a local/POSIX path (NFS included).
 
-    intent = os.path.join(path, _BATCH_INTENT)
-    if not os.path.isfile(intent):
+    Each bucket is a ``udc_kb=<n>`` directory. A commit writes the
+    merged buckets under the hidden ``_udc_staged`` dir, then swaps
+    each one live with two renames through a hidden ``_udc_old_<n>``
+    side dir; ``_upsert_recover`` repairs an interrupted swap at every
+    merge and claim entry. An additive commit drops an
+    ``_applied_<batch_id>`` marker into the staged bucket, so the
+    marker travels atomically with the rename; keep-latest buckets
+    carry none. The batch-run intent is the ``_udc_batch_intent``
+    file, claimed with ``O_CREAT|O_EXCL``. URI-scheme paths are
+    rejected (``_reject_remote_target``): the swap is ``os.rename``."""
+
+    def __init__(self, path: str, num_buckets: int = 32):
+        self.path = path
+        self.num_buckets = num_buckets
+        self.intent = os.path.join(path, _BATCH_INTENT)
+
+    def _dir(self, b: int) -> str:
+        return os.path.join(self.path, f"{_UPSERT_BUCKET_COL}={b}")
+
+    def open(self) -> int:
+        """Repair any interrupted swap, then return the bucket count
+        persisted at target creation. Recovery runs BEFORE any marker
+        is read: a crash between a bucket's two renames leaves its live
+        dir missing, which would hide that bucket's markers from the
+        applied ids and let a claim hand out an id at or below an
+        already-applied one (round-10 review finding)."""
+        _reject_remote_target(self.path)
+        _upsert_recover(self.path)
+        return _upsert_ensure_meta(self.path, self.num_buckets)
+
+    def snapshot(self, buckets) -> dict[int, Committed]:
+        return {b: Committed(_bucket_applied_id(self._dir(b)))
+                for b in buckets}
+
+    def read(self, spark, snap: dict, schema) -> DataFrame | None:
+        """The committed rows of ``snap``'s buckets, None when none is
+        live. Parquet carries its own schema, so ``schema`` is unused."""
+        if not any(os.path.isdir(self._dir(b)) for b in snap):
+            return None
+        return _read_touched(spark, self.path, list(snap))
+
+    def commit(self, frame: DataFrame, snap: dict, batch_id: int,
+               marker: bool) -> None:
+        staged = os.path.join(self.path, _UPSERT_STAGED_DIR)
+        (by_bucket(frame).write.mode("overwrite")
+         .partitionBy(_UPSERT_BUCKET_COL).parquet(staged))
+        for b in snap:
+            self.commit_bucket(b, staged, batch_id, marker)
+        shutil.rmtree(staged, ignore_errors=True)
+
+    def commit_bucket(self, b: int, staged: str, batch_id: int,
+                      marker: bool) -> None:
+        """Swap one staged bucket live: the per-bucket commit."""
+        new = os.path.join(staged, f"{_UPSERT_BUCKET_COL}={b}")
+        if marker:
+            os.makedirs(new, exist_ok=True)  # empty-state bucket
+            # the marker travels with the directory rename
+            open(os.path.join(new, f"{_APPLIED_PREFIX}{batch_id}"),
+                 "w").close()
+        elif not os.path.isdir(new):
+            return
+        live = self._dir(b)
+        old = os.path.join(self.path, f"{_UPSERT_OLD_PREFIX}{b}")
+        if os.path.isdir(live):
+            os.rename(live, old)
+        os.rename(new, live)
+        shutil.rmtree(old, ignore_errors=True)
+
+    def writer_mark(self):
+        """No-op: a POSIX target has no vacuum to fence off."""
+        return contextlib.nullcontext()
+
+    def intent_get(self) -> tuple[dict | None, None]:
+        """(payload, None): None when no intent exists, ``{}`` for a
+        torn claim (a claim that crashed before writing its id)."""
+        if not os.path.isfile(self.intent):
+            return None, None
+        stored = _intent_load(self.intent)
+        return ({} if stored is None else stored), None
+
+    def intent_claim(self, payload: dict) -> None:
+        try:
+            fd = os.open(self.intent, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            raise ValueError(
+                f"another batch run holds {self.intent!r}: concurrent "
+                "batch agg_state runs on one target are unsupported (if "
+                "a prior run crashed, rerun after it has fully stopped "
+                "— it will resume its claimed id)") from None
+        with os.fdopen(fd, "w") as fh:
+            fh.write(json.dumps(payload))
+
+    def intent_update(self, payload: dict, etag=None) -> None:
+        """Atomically rewrite the intent payload (tmp + rename)."""
+        tmp = self.intent + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(json.dumps(payload))
+        os.rename(tmp, self.intent)
+
+    def intent_clear(self) -> None:
+        end_batch_run(self.path)
+
+
+# The keyed-state commit protocol, written once over a storage target:
+# ``PosixStateTarget`` above or ``object_state.S3StateTarget``.
+
+def _intent(run_id: int, fingerprint: str | None,
+            touched: list[int] | None) -> dict:
+    return {"run_id": run_id, "fingerprint": fingerprint,
+            "touched": touched}
+
+
+def _touched(batch_df: DataFrame, kb) -> list[int]:
+    """The sorted bucket ids a batch's keys hash to. Bounded by the
+    bucket count, so the collect is driver-safe at any scale. Taken
+    from the RAW batch keys: the keep-latest rank and the additive
+    aggregate both keep >= 1 row per key, so the bucket sets are
+    identical, and the raw form is one partial-aggregated distinct
+    where listing the reduced frame would re-run its rank window or
+    group-by shuffle just to list buckets."""
+    return sorted(r[0] for r in
+                  batch_df.select(kb.alias(_UPSERT_BUCKET_COL))
+                          .distinct().collect())
+
+
+def keep_latest_merge(batch_df: DataFrame, batch_id: int, *, target,
+                      keys: list[str], order_col: str) -> None:
+    """One keep-latest merge of ``batch_df`` into a state target: the
+    batch is reduced to its newest row per key, the touched buckets'
+    committed rows are read, re-ranked against it and committed.
+
+    Idempotent, so there is no applied-id gate: a replay (or a batch
+    call with a constant id) re-ranks against the committed state and
+    picks byte-identical winners (content-hash tiebreak in
+    ``_latest_rank``). The id is recorded only where the storage keeps
+    it in the commit itself (the S3 pointer), as information."""
+    spark = batch_df.sparkSession
+    kb = F.pmod(F.xxhash64(*keys), F.lit(target.open())).cast("int")
+    touched = _touched(batch_df, kb)
+    if not touched:
         return
-    stored = _intent_load(intent)
-    if stored is None or stored["run_id"] != run_id:
+    rank = _latest_rank(batch_df.schema, keys, order_col)
+    latest = (batch_df.withColumn("__rn", rank)
+                      .filter(F.col("__rn") == 1).drop("__rn")
+                      .withColumn(_UPSERT_BUCKET_COL, kb))
+    snap = target.snapshot(touched)
+    with target.writer_mark():
+        merged = latest
+        current = target.read(spark, snap, latest.schema)
+        if current is not None:
+            merged = current.unionByName(latest)
+            rank2 = _latest_rank(merged.schema, keys, order_col)
+            merged = (merged.withColumn("__rn", rank2)
+                            .filter(F.col("__rn") == 1).drop("__rn"))
+        target.commit(merged, snap, batch_id, marker=False)
+
+
+def additive_merge(batch_df: DataFrame, batch_id: int, *, target,
+                   keys: list[str], value_col: str) -> None:
+    """One additive (count, exact-decimal sum) merge of ``batch_df``
+    into a state target. NOT idempotent, so exactly-once comes from the
+    applied id each bucket's commit records atomically with its data:
+    a bucket whose applied id reached ``batch_id`` is skipped, so a
+    replay after a crash anywhere in the commit loop applies the batch
+    to exactly the buckets that had not committed it. The batch is
+    partial-aggregated per key BEFORE touching state, and sums
+    accumulate in DECIMAL(27,6) so merge order never changes them."""
+    spark = batch_df.sparkSession
+    kb = F.pmod(F.xxhash64(*keys), F.lit(target.open())).cast("int")
+    part = (batch_df
+            .groupBy(*keys)
+            .agg(F.count("*").cast("bigint").alias("n"),
+                 F.sum(F.col(value_col).cast(_DEC)).cast(_DEC)
+                  .alias("total"))
+            .withColumn(_UPSERT_BUCKET_COL, kb))
+    touched = _touched(batch_df, kb)
+    pending = {b: c for b, c in target.snapshot(touched).items()
+               if c.applied < batch_id}
+    # record BEFORE the early return and the first commit: an empty
+    # pending set recorded = "this run's merge is complete", so a
+    # later changed-input claim can reclaim fresh instead of raising
+    record_touched(target, batch_id, list(pending))
+    if not pending:
         return
-    # UNION with what the intent already carries (ADVICE r14): a
-    # replay after a partial apply plans only the still-pending subset,
-    # and overwriting would erase the committed buckets whose markers
-    # prove the partial apply — a later changed-input resume would
-    # then misread the run as provably-never-committed.
+    part = part.filter(F.col(_UPSERT_BUCKET_COL).isin(list(pending)))
+    with target.writer_mark():
+        merged = part
+        state = target.read(spark, pending, part.schema)
+        if state is not None:
+            merged = (state.select(*keys, F.col("n"),
+                                   F.col("total").cast(_DEC).alias("total"),
+                                   F.col(_UPSERT_BUCKET_COL))
+                      .unionByName(part)
+                      .groupBy(*keys, _UPSERT_BUCKET_COL)
+                      .agg(F.sum("n").cast("bigint").alias("n"),
+                           F.sum("total").cast(_DEC).alias("total")))
+        target.commit(merged, pending, batch_id, marker=True)
+
+
+def record_touched(target, run_id: int, touched: list[int]) -> None:
+    """Record the bucket set a batch merge is ABOUT to commit into the
+    run's intent (no-op when no intent for ``run_id`` exists — the
+    streaming path numbers batches from its checkpoint and carries no
+    intent). Written before the first commit, so a later
+    ``claim_batch_run`` can tell a COMPLETED merge (every recorded
+    bucket reached the run id) from a crashed-partway one.
+
+    The recorded set is the UNION of what the intent already carries
+    and this attempt's buckets (ADVICE r14): a replay after a partial
+    apply plans only the still-pending subset, and overwriting would
+    erase the committed buckets that prove the partial apply — a later
+    changed-input claim would then misread the run as never
+    committed and silently abandon it."""
+    stored, etag = target.intent_get()
+    if not stored or int(stored["run_id"]) != run_id:
+        return
     prior = stored.get("touched") or []
-    _intent_write(intent, run_id, stored.get("fingerprint"),
-                  sorted(set(prior) | set(touched)))
+    target.intent_update(_intent(run_id, stored.get("fingerprint"),
+                                 sorted(set(prior) | set(touched))), etag)
 
 
-def begin_batch_run(path: str, num_buckets: int = 32,
-                    fingerprint: str | None = None) -> int:
-    """Claim a run id for one BATCH agg-state merge.
+def claim_batch_run(target, fingerprint: str | None = None) -> int:
+    """Claim a run id for one BATCH additive merge.
 
     Batch runs have no streaming checkpoint to number their batches, so
     a fresh-checkpoint wrapper would replay every run as batch 0 and
-    the applied-marker gate would silently DROP increments for any
+    the applied-id gate would silently DROP increments for any
     previously-touched bucket (each run's data is NEW — it must add).
-    Instead the run id is 1 + the highest ``_applied_`` marker across
-    the target's live buckets — monotonic across runs, so every batch
-    run applies exactly once.
+    Instead the run id is 1 + the highest applied id across the
+    target's buckets — monotonic across runs, so every batch run
+    applies exactly once.
 
-    Crash safety: the claimed id is persisted in ``_udc_batch_intent``
-    (atomic write) BEFORE the merge and cleared by ``end_batch_run``
-    after it. A rerun after a mid-swap crash finds the intent and
-    RESUMES the same id — buckets already swapped (marker == id) skip,
-    unswapped buckets apply — converging exactly like a checkpointed
-    stream replaying its batch. The rerun must present the same input
-    batch, the same contract a stream replay has.
+    Crash safety: the claimed id is persisted in the target's intent
+    BEFORE the merge and cleared by ``end_batch_run`` after it. A rerun
+    after a mid-commit crash finds the intent and RESUMES the same id —
+    buckets already committed (applied id == run id) skip, the rest
+    apply — converging exactly like a checkpointed stream replaying its
+    batch. The rerun must present the same input batch, the same
+    contract a stream replay has.
 
     Input-identity guard (ADVICE r8): a resume is only valid for the
     SAME input batch, but the engine's bookkeeping runs AFTER the
@@ -511,195 +587,163 @@ def begin_batch_run(path: str, num_buckets: int = 32,
       stream replay would;
     * fingerprints differ and the prior run provably left the target
       consistent — its merge COMPLETED (every bucket in the recorded
-      ``touched`` set carries a marker at or past the run id) or it
-      NEVER SWAPPED (``touched`` still null: the merge records its
-      planned set atomically before the first swap) -> the intent is
-      cleared and a FRESH id claimed so the new input applies;
+      ``touched`` set reached the run id), it NEVER COMMITTED
+      (``touched`` still null: ``record_touched`` runs before the
+      first commit), or it recorded the set but NO bucket reached the
+      run id (each bucket's commit records the id atomically with its
+      data, so none reached = nothing committed; ADVICE r9) -> the
+      intent is cleared and a FRESH id claimed so the new input
+      applies;
     * fingerprints differ and the recorded set is only partially
       applied -> raise: resuming would replay the OLD id onto
       DIFFERENT input and a fresh id would double-apply whatever the
-      crashed run already swapped — no automatic choice is safe, the
-      operator must reconcile (rerun the old input to completion
+      crashed run already committed — no automatic choice is safe,
+      the operator must reconcile (rerun the old input to completion
       first).
 
-    Single-writer contract: the intent is claimed with O_CREAT|O_EXCL,
-    so of two runs that start CONCURRENTLY one wins and the other
-    fails loudly — without the exclusive claim both would compute the
-    same id and the loser's increments would be silently skipped on
-    every bucket the winner touched. A pre-existing intent at entry is
-    treated as a crashed prior run and resumed (liveness cannot be
-    probed from a marker file); do not start a new batch while a prior
-    one may still be running. Do not mix a live checkpointed stream
-    and ad-hoc batch runs on one target either: a batch run advances
-    markers past the stream's next batch id, which the markers would
-    then skip (the standard dual-writer hazard; one writer per
-    target)."""
-    import os
+    Single-writer contract: the intent is claimed exclusively (POSIX
+    ``O_CREAT|O_EXCL``, S3 ``If-None-Match:*``), so of two runs that
+    start CONCURRENTLY one wins and the other fails loudly — without
+    the exclusive claim both would compute the same id and the loser's
+    increments would be silently skipped on every bucket the winner
+    touched. A pre-existing intent at entry is treated as a crashed
+    prior run and resumed (liveness cannot be probed from a marker);
+    do not start a new batch while a prior one may still be running.
+    Do not mix a live checkpointed stream and ad-hoc batch runs on one
+    target either: a batch run advances applied ids past the stream's
+    next batch id, which the gate would then skip (the standard
+    dual-writer hazard; one writer per target)."""
+    n_buckets = target.open()
 
-    _reject_remote_target(path)
-    # Recover BEFORE reading any marker state: a crash between a
-    # bucket's two swap renames (live -> old done, staged -> live not)
-    # leaves the live dir missing, which would make both next_id() and
-    # the zero-swaps reclaim proof below blind to that bucket's
-    # markers — next_id could then hand out an id at or below an
-    # already-applied one and the merge would silently skip the
-    # bucket's increments (round-10 review finding). After recovery
-    # every marker is back in a live dir and "zero markers at the run
-    # id = zero swaps" is actually provable.
-    _upsert_recover(path)
-    _upsert_ensure_meta(path, num_buckets)
-    intent = os.path.join(path, _BATCH_INTENT)
+    def applied(buckets) -> list[int]:
+        return [c.applied for c in target.snapshot(buckets).values()]
 
     def next_id() -> int:
-        return 1 + max(
-            (_bucket_applied_id(os.path.join(path, name))
-             for name in os.listdir(path)
-             if name.startswith(f"{_UPSERT_BUCKET_COL}=")), default=-1)
+        return 1 + max(applied(range(n_buckets)), default=-1)
 
-    if os.path.isfile(intent):
-        stored = _intent_load(intent)
-        if stored is None:
-            # torn claim: a prior run crashed between creating the
-            # intent and writing the id — its merge never ran, so the
-            # markers are unchanged and recomputing yields the id it
-            # would have used
-            run_id = next_id()
-            _intent_write(intent, run_id, fingerprint, None)
-            return run_id
+    stored, etag = target.intent_get()
+    if stored == {}:
+        # torn claim: a prior run crashed between creating the intent
+        # and writing the id — its merge never ran, so the applied ids
+        # are unchanged and recomputing yields the id it would have used
+        run_id = next_id()
+        target.intent_update(_intent(run_id, fingerprint, None), etag)
+        return run_id
+    if stored is not None:
         stored_fp = stored.get("fingerprint")
         if (fingerprint is None or stored_fp is None
                 or stored_fp == fingerprint):
             return int(stored["run_id"])
-        # fingerprints present and DIFFERENT: the input changed since
-        # the intent was claimed. Safe to reclaim fresh in exactly
-        # three provable states: the prior merge COMPLETED (all
-        # recorded buckets reached the run id), it NEVER SWAPPED
-        # (touched is still None — _intent_record_touched persists the
-        # planned set atomically before the first swap, so no record =
-        # no swaps), or it recorded the set but NO bucket carries the
-        # run's marker (the crash landed between recording and the
-        # first swap — each swap stamps its marker atomically with the
-        # bucket rename, so zero markers = zero swaps = state
-        # untouched; ADVICE r9). The remaining state — SOME but not
-        # all recorded buckets applied — is a genuine partial apply of
-        # the old input; fail loudly.
         touched = stored.get("touched")
         run_id = int(stored["run_id"])
-        applied = [] if touched is None else [
-            _bucket_applied_id(os.path.join(
-                path, f"{_UPSERT_BUCKET_COL}={b}")) >= run_id
-            for b in touched]
-        if touched is None or all(applied) or not any(applied):
-            os.remove(intent)
+        done = [a >= run_id for a in applied(touched or [])]
+        if touched is None or all(done) or not any(done):
+            target.intent_clear()
         else:
             raise ValueError(
-                f"batch intent {intent!r} (run {run_id}) was claimed "
-                "for a DIFFERENT input batch than the one presented "
-                "now, and that run partially applied its merge "
-                f"({sum(applied)} of {len(applied)} recorded buckets "
-                "swapped): resuming would misapply, reclaiming would "
+                f"batch intent {target.intent!r} (run {run_id}) was "
+                "claimed for a DIFFERENT input batch than the one "
+                "presented now, and that run partially applied its "
+                f"merge ({sum(done)} of {len(done)} recorded buckets "
+                "committed): resuming would misapply, reclaiming would "
                 "double-apply. Rerun the original input to completion "
                 "first (or remove the intent after manual "
                 "reconciliation).")
     run_id = next_id()
-    try:
-        fd = os.open(intent, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise ValueError(
-            f"another batch run holds {intent!r}: concurrent batch "
-            "agg_state runs on one target are unsupported (if a prior "
-            "run crashed, rerun after it has fully stopped — it will "
-            "resume its claimed id)") from None
-    import json
-    with os.fdopen(fd, "w") as fh:
-        fh.write(json.dumps({"run_id": run_id, "fingerprint": fingerprint,
-                             "touched": None}))
+    target.intent_claim(_intent(run_id, fingerprint, None))
     return run_id
 
 
 def end_batch_run(path: str) -> None:
-    """Clear the batch-run intent marker after a successful merge."""
-    import contextlib
-    import os
-
+    """Clear the batch-run intent on the POSIX target at ``path`` after
+    a successful merge; ``PosixStateTarget.intent_clear`` is this."""
     with contextlib.suppress(FileNotFoundError):
         os.remove(os.path.join(path, _BATCH_INTENT))
+
+
+def foreachbatch_merge(stream: DataFrame, merge, checkpoint: str,
+                       trigger_available_now: bool = True):
+    """Run ``merge(batch_df, batch_id)`` on every micro-batch of
+    ``stream`` via ``foreachBatch``: the checkpoint numbers the
+    batches, and the merge's idempotent or applied-id-gated commit
+    turns foreachBatch's at-least-once delivery into exactly-once
+    state. Each batch runs under the checkpoint-scoped lease owner, so
+    a restarted query may break its dead predecessor's stale writer
+    mark (``store_lease``)."""
+    from universal_data_connector_spark.store_lease import lease_owner
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        with lease_owner(f"stream:{checkpoint}"):
+            merge(batch_df, batch_id)
+
+    writer = (stream.writeStream.foreachBatch(run)
+              .option("checkpointLocation", checkpoint))
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+# POSIX entry points: the protocol above over a ``PosixStateTarget``.
+
+def upsert_merge(batch_df: DataFrame, batch_id: int, *, path: str,
+                 keys: list[str], order_col: str,
+                 num_buckets: int = 32) -> None:
+    """``keep_latest_merge`` into the bucketed target at ``path`` —
+    the body behind ``foreachbatch_upsert``, callable directly for
+    batch mode (``batch_id`` is unused: the merge is idempotent)."""
+    keep_latest_merge(batch_df, batch_id,
+                      target=PosixStateTarget(path, num_buckets),
+                      keys=keys, order_col=order_col)
+
+
+def foreachbatch_upsert(stream: DataFrame, path: str, keys: list[str],
+                        order_col: str, checkpoint: str,
+                        trigger_available_now: bool = True,
+                        num_buckets: int = 32):
+    """Streaming upsert (merge-on-key) into a key-bucketed parquet
+    target via ``foreachBatch`` — the keep-latest-row-per-key sink
+    every CDC / state-snapshot pipeline needs.
+
+    Scale posture: the target is ``num_buckets`` hash partitions
+    (``udc_kb=pmod(xxhash64(keys), N)`` directories); each micro-batch
+    reads, merges and rewrites only the buckets its keys touch, so
+    per-batch cost is O(touched data), not O(target) — untouched
+    bucket directories are never opened nor rewritten (pinned by
+    test). Crash safety is ``PosixStateTarget``'s staged two-rename
+    swap, repaired on every batch entry; the merge is idempotent, so a
+    replayed batch converges to exactly-once state. ``num_buckets`` is
+    fixed at target creation (``_udc_buckets``). Local/POSIX paths
+    only; on an object store use ``object_state.foreachbatch_upsert_s3``
+    or a lakehouse table format (Delta/Iceberg ``MERGE INTO``)."""
+    return foreachbatch_merge(
+        stream, partial(keep_latest_merge,
+                        target=PosixStateTarget(path, num_buckets),
+                        keys=keys, order_col=order_col),
+        checkpoint, trigger_available_now)
+
+
+def _intent_record_touched(path: str, run_id: int,
+                           touched: list[int]) -> None:
+    """``record_touched`` on the POSIX target at ``path``."""
+    record_touched(PosixStateTarget(path), run_id, touched)
+
+
+def begin_batch_run(path: str, num_buckets: int = 32,
+                    fingerprint: str | None = None) -> int:
+    """``claim_batch_run`` on the POSIX target at ``path``."""
+    return claim_batch_run(PosixStateTarget(path, num_buckets),
+                           fingerprint)
 
 
 def agg_state_merge(batch_df: DataFrame, batch_id: int, *, path: str,
                     keys: list[str], value_col: str,
                     num_buckets: int = 32) -> None:
-    """One additive (count, sum) merge of ``batch_df`` into the
-    bucketed state target — the audited body behind
-    ``foreachbatch_agg_state``, callable directly for batch mode with
-    a ``begin_batch_run`` id (no scratch-stream round-trip)."""
-    import os
-    import shutil
-
-    _DEC = "decimal(27,6)"
-    spark = batch_df.sparkSession
-    _upsert_recover(path)
-    n_buckets = _upsert_ensure_meta(path, num_buckets)
-
-    kb = F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
-    part = (batch_df
-            .groupBy(*keys)
-            .agg(F.count("*").cast("bigint").alias("n"),
-                 F.sum(F.col(value_col).cast(_DEC)).cast(_DEC)
-                  .alias("total"))
-            .withColumn(_UPSERT_BUCKET_COL, kb))
-    # bounded by n_buckets -> driver-safe at any scale. Derived from
-    # the RAW batch keys: the aggregate emits one row per key group,
-    # so its bucket set equals the raw keys' bucket set — and the raw
-    # form is a partial-aggregated distinct over one projection where
-    # the aggregate form re-ran the group-by shuffle a second time
-    # just to list buckets (same reasoning as upsert_merge).
-    touched = sorted(r[0] for r in
-                     batch_df.select(kb.alias(_UPSERT_BUCKET_COL))
-                             .distinct().collect())
-    pending = [b for b in touched
-               if _bucket_applied_id(os.path.join(
-                   path, f"{_UPSERT_BUCKET_COL}={b}")) < batch_id]
-    # record BEFORE the early return and the first swap: an empty
-    # pending set recorded = "this run's merge is complete", so a
-    # later changed-input resume can reclaim fresh instead of raising
-    _intent_record_touched(path, batch_id, pending)
-    if not pending:
-        return
-    part = part.filter(F.col(_UPSERT_BUCKET_COL).isin(pending))
-
-    live = [b for b in pending
-            if os.path.isdir(os.path.join(
-                path, f"{_UPSERT_BUCKET_COL}={b}"))]
-    if live:
-        state = (_read_touched(spark, path, pending)
-                 .select(*keys, F.col("n"),
-                         F.col("total").cast(_DEC).alias("total"),
-                         F.col(_UPSERT_BUCKET_COL)))
-        merged = (state.unionByName(part)
-                  .groupBy(*keys, _UPSERT_BUCKET_COL)
-                  .agg(F.sum("n").cast("bigint").alias("n"),
-                       F.sum("total").cast(_DEC).alias("total")))
-    else:
-        merged = part
-
-    staged = os.path.join(path, _UPSERT_STAGED_DIR)
-    (by_bucket(merged).write.mode("overwrite")
-     .partitionBy(_UPSERT_BUCKET_COL).parquet(staged))
-    for b in pending:
-        new = os.path.join(staged, f"{_UPSERT_BUCKET_COL}={b}")
-        if not os.path.isdir(new):
-            os.makedirs(new, exist_ok=True)  # empty-state bucket
-        # the marker travels with the directory rename
-        open(os.path.join(new, f"{_APPLIED_PREFIX}{batch_id}"),
-             "w").close()
-        live_dir = os.path.join(path, f"{_UPSERT_BUCKET_COL}={b}")
-        old = os.path.join(path, f"{_UPSERT_OLD_PREFIX}{b}")
-        if os.path.isdir(live_dir):
-            os.rename(live_dir, old)
-        os.rename(new, live_dir)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(staged, ignore_errors=True)
+    """``additive_merge`` into the bucketed target at ``path`` — the
+    body behind ``foreachbatch_agg_state``, callable directly for
+    batch mode with a ``begin_batch_run`` id."""
+    additive_merge(batch_df, batch_id,
+                   target=PosixStateTarget(path, num_buckets),
+                   keys=keys, value_col=value_col)
 
 
 def foreachbatch_agg_state(stream: DataFrame, path: str, keys: list[str],
@@ -709,31 +753,13 @@ def foreachbatch_agg_state(stream: DataFrame, path: str, keys: list[str],
     """Streaming ADDITIVE aggregate state (per-key count + exact sum)
     maintained in the same key-bucketed parquet layout as
     ``foreachbatch_upsert`` — incremental aggregation maintenance
-    without a lakehouse dependency.
-
-    Keep-latest merges are naturally idempotent; additive merges are
-    NOT (replaying a batch would double-count), so each bucket swap
-    carries an ``_applied_<batch_id>`` marker file INSIDE the bucket
-    directory — it travels atomically with the rename. On entry, a
-    bucket whose live marker is >= the incoming batch id is skipped:
-    after a crash anywhere in the swap loop, the checkpoint replays
-    the batch and exactly the unswapped buckets apply it. foreachBatch
-    at-least-once delivery + per-bucket applied markers = exactly-once
-    additive state.
-
-    Scale posture matches the upsert sink: the batch partial-aggregates
-    per key BEFORE touching state, only touched buckets are read
-    (partition pruning) and rewritten, and sums accumulate in
-    DECIMAL(27,6) so merge order can never change the result.
-    Local-filesystem targets only (os.rename swaps; URI-scheme
-    targets rejected up front) — on an object store use a lakehouse
-    MERGE instead."""
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        agg_state_merge(batch_df, batch_id, path=path, keys=keys,
-                        value_col=value_col, num_buckets=num_buckets)
-
-    writer = (stream.writeStream.foreachBatch(merge)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    without a lakehouse dependency. Each bucket swap carries an
+    ``_applied_<batch_id>`` marker that travels with the rename, so a
+    replayed batch applies to exactly the unswapped buckets
+    (``additive_merge``). Local-filesystem targets only; on an object
+    store use ``object_state.foreachbatch_agg_state_s3``."""
+    return foreachbatch_merge(
+        stream, partial(additive_merge,
+                        target=PosixStateTarget(path, num_buckets),
+                        keys=keys, value_col=value_col),
+        checkpoint, trigger_available_now)
