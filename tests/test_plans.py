@@ -441,9 +441,9 @@ def test_driver_materialization_discipline():
     #   operators/similarity.py  ANN query set, small by contract
     #   sinks/files.py        boto3-free S3 fallback, partition-streamed
     allowed = {
-        # two touched-bucket sets (upsert + additive agg state), each
-        # <= num_buckets rows
-        "streaming/windows.py": 2,
+        # _touched's bucket-id set, shared by the keep-latest and
+        # additive merges on both storage targets; <= num_buckets rows
+        "streaming/windows.py": 1,
         # CC convergence signature + the size-guarded local
         # union-find's edge collect (bounded by the edge count the
         # signature action just measured, <= UDC_CC_LOCAL_MAX_EDGES)
@@ -459,13 +459,11 @@ def test_driver_materialization_discipline():
         # (<= 2 * |ps| * |groups| rows), and the small-input fast
         # path's per-group percentile rows (limit(max_meta_rows + 1))
         "operators/quantiles.py": 3,
-        # object-store state backend: the two touched-bucket sets
-        # (upsert + agg_state merge), bounded by num_buckets — the
-        # same contract as the POSIX twins in windows.py — plus
-        # write_objects' uploaded-key manifest (one row per PUT
-        # object, bounded by touched buckets x rolled parts; metadata
-        # the pointer CAS needs on the driver anyway)
-        "streaming/object_state.py": 3,
+        # object-store state backend: write_objects' uploaded-key
+        # manifest (one row per PUT object, bounded by touched buckets
+        # x rolled parts; metadata the pointer CAS needs on the driver
+        # anyway)
+        "streaming/object_state.py": 1,
         # cross-run dedup: touched-bucket sets (POSIX + S3 exact
         # stores; the near and embedding filters' band/candidate
         # buckets and their commits' band/sig/vec buckets), each
@@ -484,6 +482,107 @@ def test_driver_materialization_discipline():
             bad.append(f"{rel}: {n} materializing calls "
                        f"(allowed {allowed.get(rel, 0)})")
     assert not bad, "\n".join(bad)
+
+
+def test_frames_from_rows_go_through_local_frame():
+    """Source lint: a frame built from driver-side rows goes through
+    ``session.local_frame`` (an Arrow table read by the JVM as a
+    LocalRelation). The list form of ``createDataFrame`` plans a
+    pickled Python RDD that runs one Python-worker task per core; it
+    stays only at the sites below, each with its reason."""
+    import ast
+    import pathlib
+
+    import universal_data_connector_spark as pkg
+
+    allowed = {
+        # the helper itself: Arrow table -> LocalRelation
+        ("session.py", "local_frame"): 1,
+        # the small-input, endpoint and result rows: group keys of any
+        # type, timestamps included, whose naive-datetime Arrow
+        # conversion depends on the process time zone
+        ("operators/quantiles.py", "exact_group_percentiles"): 3,
+    }
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self):
+            self.scope, self.found = [""], {}
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            if getattr(node.func, "attr", None) == "createDataFrame":
+                self.found[self.scope[-1]] = \
+                    self.found.get(self.scope[-1], 0) + 1
+            self.generic_visit(node)
+
+    root = pathlib.Path(pkg.__file__).parent
+    found = {}
+    for py in root.rglob("*.py"):
+        calls = Calls()
+        calls.visit(ast.parse(py.read_text()))
+        rel = str(py.relative_to(root))
+        found.update({(rel, fn): n for fn, n in calls.found.items()})
+    assert found == allowed
+
+
+def _plan_chain(plan) -> list[str]:
+    """Node names from ``plan`` down its first-child spine."""
+    names = []
+    while True:
+        names.append(plan.nodeName())
+        if plan.children().isEmpty():
+            return names
+        plan = plan.children().head()
+
+
+def test_kafka_loopback_slices_feed_fetch_without_exchange(spark, tmp_path):
+    """The loopback Kafka source's slice metadata is a LocalRelation
+    read straight by the fetch: its scan already splits into one
+    partition per slice (up to defaultParallelism), so no Repartition
+    or Exchange sits between it and MapInPandas."""
+    from universal_data_connector_spark import kafka_loopback as KL
+    from universal_data_connector_spark.sources.kafka import kafka_source
+
+    d = str(tmp_path)
+    KL.ensure_topic(d, "in", 3)
+    KL.append_records(d, "in", [(None, f"m{i}".encode())
+                                for i in range(6)], 3)
+    df = kafka_source(spark, {"bootstrapServers": f"loopback://{d}",
+                              "topic": "in"}, streaming=False)
+    chain = _plan_chain(df._jdf.queryExecution().optimizedPlan())
+    assert chain[chain.index("MapInPandas"):] == \
+        ["MapInPandas", "LocalRelation"], chain
+    assert "Exchange" not in plan_str(df, "simple")
+    assert sorted(r.content for r in df.collect()) == \
+        [f"m{i}" for i in range(6)]
+
+
+def test_manifest_record_uri_frame_is_local_relation(spark, tmp_path,
+                                                     monkeypatch):
+    """manifest_record's frame of this run's URIs (the left side of
+    its anti-join against the log) is a LocalRelation, so the
+    dedup runs no Python-worker task."""
+    from universal_data_connector_spark.sources.files import manifest_record
+
+    frame_cls = type(spark.range(1))
+    left_sides = []
+    join = frame_cls.join
+
+    def spy(self, *args, **kwargs):
+        left_sides.append(self)
+        return join(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "join", spy)
+    files = [str(tmp_path / f"in{i}.txt") for i in range(3)]
+    assert manifest_record(files, str(tmp_path / "manifest"), spark) == 3
+    assert [_plan_chain(f._jdf.queryExecution().optimizedPlan())
+            for f in left_sides] == [["LocalRelation"]]
 
 
 def test_upsert_sink_never_reads_full_target():

@@ -125,8 +125,9 @@ def test_by_bucket_is_the_only_state_store_repartition(spark):
     """The sizing rule lives in one place: ``by_bucket`` plans a
     ``REPARTITION_BY_COL`` exchange (which AQE may coalesce, unlike
     ``REPARTITION_BY_NUM``), and the state-store modules repartition
-    nowhere else — apart from object_state's read fan-out of pointed-to
-    objects, which writes nothing."""
+    nowhere else. object_state's read fan-out of pointed-to objects
+    needs none: its key frame's local scan already splits into
+    ``min(objects, defaultParallelism)`` partitions."""
     df = spark.range(100).withColumn("udc_kb", F.col("id") % N_BUCKETS)
     plan = windows.by_bucket(df)._jdf.queryExecution() \
         .executedPlan().toString()
@@ -140,5 +141,4 @@ def test_by_bucket_is_the_only_state_store_repartition(spark):
     assert repartitions(inspect.getsource(windows)) == 1
     assert repartitions(inspect.getsource(windows.by_bucket)) == 1
     assert repartitions(inspect.getsource(dedup_state)) == 0
-    assert repartitions(inspect.getsource(object_state)) == 1
-    assert repartitions(inspect.getsource(object_state.read_objects)) == 1
+    assert repartitions(inspect.getsource(object_state)) == 0

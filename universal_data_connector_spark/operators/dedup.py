@@ -54,6 +54,7 @@ from universal_data_connector_spark.operators.relational import (
     materialize_reliable,
     spread,
 )
+from universal_data_connector_spark.session import local_frame
 
 # Mersenne prime 2^31-1; with a,b < p and shingle hashes reduced mod p
 # first, a*h+b stays < 2^62 — no 64-bit overflow, fully portable.
@@ -858,8 +859,8 @@ def connected_components(edges: DataFrame, src: str = "id_1",
                 else:
                     parent[ra] = rb
         rows = [(x, find(x)) for x in parent]
-        return e.sparkSession.createDataFrame(
-            rows, "node bigint, component bigint")
+        return local_frame(e.sparkSession, rows,
+                           "node bigint, component bigint")
 
     converged = False
     for _ in range(max_iterations):

@@ -64,6 +64,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from universal_data_connector_spark.session import local_frame
+
 _LOW_BITS = (1 << 33) - 1  # monotonically_increasing_id layout
 
 _CACHED_PART_CONF = \
@@ -324,7 +326,7 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
         if not wanted:
             out_fields = g_fields + [
                 T.StructField(c, T.DoubleType()) for c in out_cols]
-            empty = spark.createDataFrame([], T.StructType(out_fields))
+            empty = local_frame(spark, [], T.StructType(out_fields))
             return empty.drop("__g") if const else empty
 
         loc_schema = T.StructType(g_fields + [

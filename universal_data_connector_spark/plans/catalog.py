@@ -2590,7 +2590,8 @@ def sample_weighted_mix(spark, sf_dir):
     reproducible content-hash predicate as sample_deterministic:
     identical rows selected on every engine, run, and partitioning."""
     d = load(spark, sf_dir, "documents")
-    weights = spark.createDataFrame(
+    weights = udc_session.local_frame(
+        spark,
         [(f"src{i}", "ff" if i < 5 else "80" if i < 10 else "20")
          for i in range(20)],
         "source string, __thr string")

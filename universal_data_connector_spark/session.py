@@ -97,3 +97,41 @@ def temp_view(df, base: str):
         yield name
     finally:
         df.sparkSession.catalog.dropTempView(name)
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """A DataFrame of driver-side ``rows`` (tuples in ``schema``'s
+    column order; ``schema`` a DDL string or StructType), built as an
+    Arrow table.
+
+    Use it for every frame the driver builds from a Python list: slice
+    and key lists, manifests, small dims, centroids, empty frames. The
+    list form of ``spark.createDataFrame`` plans a pickled Python RDD
+    and runs one Python-worker task per core when consumed, each paying
+    the worker's fixed start-up (~0.3 s CPU on a 4-vCPU host, however
+    few rows it sees). An Arrow table becomes a ``LocalRelation`` that
+    the JVM reads, so no Python worker starts and no job runs until
+    something consumes the frame; its scan splits into
+    ``min(max(len(rows), 1), defaultParallelism)`` partitions (an
+    empty frame scans no partition), so a ``mapInPandas`` or
+    ``mapInArrow`` directly over it needs no repartition.
+
+    Not for rows whose values Arrow converts differently from Spark:
+    a naive ``datetime`` in a timestamp column is read in the Python
+    process's local time zone by the list path and as UTC by Arrow, so
+    the two agree only where that process runs in UTC. That is why
+    ``exact_group_percentiles``' row sites, whose group keys can be of
+    any type, timestamps included, keep the list path."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(col), type=field.type)
+         for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

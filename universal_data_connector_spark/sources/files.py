@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from universal_data_connector_spark.session import local_frame
+
 
 def sniff_file_type(path: Column, first_line: Column | None = None) -> Column:
     """CSV/TEXT for text-ish files (``FileSourceContext.java:58-67``:
@@ -173,8 +175,7 @@ def manifest_record(files: list[str], manifest_dir: str,
     os.makedirs(manifest_dir, exist_ok=True)
     this_run = sorted({canonical_file_uri(f) for f in files})
     if spark is not None:
-        new_df = spark.createDataFrame(
-            [(u,) for u in this_run], "uri string")
+        new_df = local_frame(spark, [(u,) for u in this_run], "uri string")
         # the dir exists (just ensured); an empty/logless dir is an
         # empty frame for the fixed-schema text format, not an error
         seen_df = (spark.read.format("text")
@@ -389,8 +390,8 @@ def _s3_source_boto3(spark: SparkSession, props: dict) -> DataFrame:
             keys.append(key)
     keys.sort()
 
-    kdf = spark.createDataFrame(
-        [(f"s3a://{bucket}/{k}",) for k in keys], "source_file string")
+    kdf = local_frame(spark, [(f"s3a://{bucket}/{k}",) for k in keys],
+                      "source_file string")
     if props.get("manifestDir"):
         # anti-join the KEY frame, before any fetch: already-consumed
         # objects must not be re-downloaded on every run just to be

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from universal_data_connector_spark.session import local_frame
+
 
 def kafka_reader_options(props: dict) -> dict:
     """Reference consumer-config mapping (``KafkaSourceContext.java:
@@ -95,11 +97,10 @@ def _kafka_source_loopback(spark: SparkSession, props: dict) -> DataFrame:
             start = end if reset == "latest" else 0
         slices.append((topic, p, start, end))
 
-    sdf = spark.createDataFrame(
-        slices, "topic string, partition int, start long, end long")
-    if slices:
-        sdf = sdf.repartition(min(
-            len(slices), spark.sparkContext.defaultParallelism))
+    # one scan partition per slice up to defaultParallelism: the fetch
+    # runs straight off the local scan, no repartition
+    sdf = local_frame(
+        spark, slices, "topic string, partition int, start long, end long")
 
     def fetch(batches):
         from universal_data_connector_spark import kafka_loopback as kl

@@ -68,6 +68,7 @@ from functools import partial
 
 from pyspark.sql import DataFrame
 
+from universal_data_connector_spark.session import local_frame
 from universal_data_connector_spark.streaming.windows import (
     Committed,
     additive_merge,
@@ -379,9 +380,9 @@ def read_objects(spark, target: S3StateTarget,
     bucket = target.bucket
     client_kwargs = dict(target.client_kwargs)
 
-    kdf = spark.createDataFrame(keyed_objects, "key string, udc_kb int")
-    kdf = kdf.repartition(min(max(len(keyed_objects), 1),
-                              spark.sparkContext.defaultParallelism))
+    # the local scan already splits into min(objects, defaultParallelism)
+    # partitions, so the fetch needs no repartition
+    kdf = local_frame(spark, keyed_objects, "key string, udc_kb int")
 
     def fetch(batches):
         import io
@@ -581,7 +582,7 @@ def read_state_s3(spark, target: S3StateTarget, schema: str,
                 for b in range(target.num_buckets)}
     keyed_objects = _pointer_objects(pointers)
     if not keyed_objects:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     frame = read_objects(spark, target, keyed_objects, schema)
     return frame.localCheckpoint(eager=True) if eager else frame
 

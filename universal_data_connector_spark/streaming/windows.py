@@ -26,6 +26,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from universal_data_connector_spark.session import local_frame
+
 
 def tumbling_agg(df: DataFrame, ts_col: str = "ts", width: str = "1 hour",
                  watermark: str | None = None, group_cols: tuple[str, ...] = (),
@@ -260,7 +262,7 @@ def read_state(spark, path: str, empty_schema: str) -> DataFrame:
     except AnalysisException as exc:
         if ("UNABLE_TO_INFER_SCHEMA" in str(exc)
                 or "PATH_NOT_FOUND" in str(exc)):
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         raise
 
 
