@@ -38,11 +38,13 @@ _SLOW_FILES = {
 }
 
 # ...except one smoke test per slow file (a single-pass commit/recover
-# test per state-store file, the smallest of the cast properties), so
-# the default tier still runs every store's write path and the casts
+# test per state-store file, the smallest of the cast properties) and
+# the object-store seen store's two-batch filter, so the default tier
+# still runs every store's write path on both backends and the casts
 _DEFAULT_TIER_SMOKE = {
     "test_dedup_state.py::test_replayed_commit_is_harmless_and_compactable",
     "test_s3_state.py::test_agg_state_crash_before_cas_then_replay_converges",
+    "test_s3_state.py::test_seen_filter_s3_across_batches",
     "test_store_lease.py::test_posix_stale_dead_pid_artifacts_are_broken",
     "test_casts_property.py::test_defaults_close_the_null_channel",
 }

@@ -7,6 +7,7 @@ the sink and strictly before archive/manifest."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -14,6 +15,56 @@ from universal_data_connector_spark.operators.dedup_state import (
     compact_seen_store,
     seen_filter,
 )
+
+BUCKET = "udc-dedup-state-loopback"
+
+
+@pytest.fixture(scope="module")
+def s3_client():
+    moto_server = pytest.importorskip("moto.server")
+    boto3 = pytest.importorskip("boto3")
+    server = moto_server.ThreadedMotoServer(port=0)
+    server.start()
+    port = server._server.socket.getsockname()[1]
+    client = boto3.client(
+        "s3", endpoint_url=f"http://127.0.0.1:{port}",
+        region_name="us-east-1",
+        aws_access_key_id="test-access",
+        aws_secret_access_key="test-secret")
+    client.create_bucket(Bucket=BUCKET)
+    yield client
+    server.stop()
+
+
+def _store(request, backend, tmp_path):
+    """A fresh 4-bucket seen-store argument on ``backend``: a POSIX
+    directory, or an S3 target on the loopback moto server."""
+    if backend == "posix":
+        return str(tmp_path / "store")
+    from universal_data_connector_spark.streaming.object_state import (
+        S3StateTarget,
+    )
+    return S3StateTarget(BUCKET, f"store-{uuid.uuid4().hex[:8]}",
+                         client=request.getfixturevalue("s3_client"),
+                         num_buckets=4)
+
+
+def _crash_append_at(monkeypatch, store, crash_sub):
+    """Make the store backend's ``append`` raise for sub-store
+    ``crash_sub`` (every other sub-store appends for real); returns
+    the undo callable."""
+    from universal_data_connector_spark.operators import dedup_state as ds
+
+    cls = type(ds.seen_store(store))
+    real_append = cls.append
+
+    def append(self, frame, sub, touched):
+        if sub == crash_sub:
+            raise RuntimeError("fuzz crash between appends")
+        return real_append(self, frame, sub, touched)
+
+    monkeypatch.setattr(cls, "append", append)
+    return lambda: monkeypatch.setattr(cls, "append", real_append)
 
 
 def _docs(spark, rows):
@@ -621,20 +672,27 @@ def test_compact_near_crash_between_renames_recovers(spark, tmp_path):
     assert os.path.isdir(live)
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_seen_near_filter_crash_fuzz_against_model(spark, tmp_path,
-                                                   seed, monkeypatch):
-    """Model-based crash fuzz for the NEAR store (the exact store's
-    twin, test_seen_filter_crash_fuzz_against_model): random batches
-    drawn from disjoint-vocabulary base texts (cross-base shingle
-    Jaccard exactly 0, copy similarity exactly 1 — no threshold
-    borderline, so a Python set IS the oracle), random commit outcomes
-    (committed / sink-failed / committed twice / CRASHED BETWEEN the
-    band and sig appends), and occasional mid-history compaction.
-    Invariant: a doc ships iff no committed run has shipped its base
-    text before; a between-appends crash counts as not-committed (band
-    rows without sigs cannot flag — the rerun-shaped convergence
-    argument in _near_filter_core.commit)."""
+@pytest.mark.parametrize(
+    "backend,seed,rounds,n_bases,max_picks",
+    [("posix", 0, 8, 6, 5), ("posix", 1, 8, 6, 5), ("posix", 2, 8, 6, 5),
+     ("s3", 7, 7, 5, 4)],
+    ids=["posix-0", "posix-1", "posix-2", "s3-7"])
+def test_seen_near_filter_crash_fuzz_against_model(
+        spark, tmp_path, request, monkeypatch, backend, seed, rounds,
+        n_bases, max_picks):
+    """Model-based crash fuzz for the NEAR store on both backends (the
+    exact store's twin, test_seen_filter_crash_fuzz_against_model):
+    random batches drawn from disjoint-vocabulary base texts
+    (cross-base shingle Jaccard exactly 0, copy similarity exactly 1 —
+    no threshold borderline, so a Python set IS the oracle), random
+    commit outcomes (committed / sink-failed / committed twice /
+    CRASHED BETWEEN the band and sig appends), and occasional
+    mid-history compaction. Invariant: a doc ships iff no committed
+    run has shipped its base text before; a between-appends crash
+    counts as not-committed (band rows without sigs cannot flag — the
+    rerun-shaped convergence argument in dedup_state._append_commit).
+    The s3 case runs a longer history per seed so the prefix-scoped
+    listings see accumulated multi-run buckets."""
     import random
 
     from universal_data_connector_spark.operators import (
@@ -642,21 +700,15 @@ def test_seen_near_filter_crash_fuzz_against_model(spark, tmp_path,
     )
 
     rng = random.Random(seed)
-    store = str(tmp_path / "near")
+    store = _store(request, backend, tmp_path)
     bases = [" ".join(f"b{i}tok{j}" for j in range(16))
-             for i in range(6)]
+             for i in range(n_bases)]
     committed: set[int] = set()
     next_id = 0
-    real_append = ds._append_buckets
 
-    def crash_on_sigs(frame, root, touched):
-        if root.endswith("sigs"):
-            raise RuntimeError("fuzz crash between appends")
-        return real_append(frame, root, touched)
-
-    for _ in range(8):
+    for _ in range(rounds):
         picks = [rng.randrange(len(bases))
-                 for _ in range(rng.randint(0, 5))]
+                 for _ in range(rng.randint(0, max_picks))]
         rows = [(next_id + k, bases[p]) for k, p in enumerate(picks)]
         batch = (_near_docs(spark, rows) if rows
                  else _near_docs(spark, []).limit(0))
@@ -676,10 +728,10 @@ def test_seen_near_filter_crash_fuzz_against_model(spark, tmp_path,
         if outcome < 0.35:
             if not got:
                 continue                  # nothing to append anyway
-            monkeypatch.setattr(ds, "_append_buckets", crash_on_sigs)
+            undo = _crash_append_at(monkeypatch, store, "sigs")
             with pytest.raises(RuntimeError, match="between appends"):
                 commit()
-            monkeypatch.setattr(ds, "_append_buckets", real_append)
+            undo()
             continue                      # bands-only: cannot flag
         commit()
         if outcome > 0.85:
@@ -813,15 +865,17 @@ def test_seen_embedding_zero_vector_always_ships(spark, tmp_path):
     assert _vids(b2) == [2]
 
 
+@pytest.mark.parametrize("backend", ["posix", "s3"])
 @pytest.mark.parametrize("seed", [0, 1])
-def test_seen_embedding_crash_fuzz_against_model(spark, tmp_path,
-                                                 seed, monkeypatch):
-    """Embedding twin of the near-store crash fuzz: batches drawn from
-    orthogonal one-hot vectors at random positive scales (cross-base
-    cosine exactly 0, same-base cosine exactly 1 — a set over base
-    indices is an exact oracle), with random commit outcomes including
-    a crash between the band and vec appends, and mid-history
-    compaction."""
+def test_seen_embedding_crash_fuzz_against_model(spark, tmp_path, request,
+                                                 seed, backend,
+                                                 monkeypatch):
+    """Embedding twin of the near-store crash fuzz, on both backends:
+    batches drawn from orthogonal one-hot vectors at random positive
+    scales (cross-base cosine exactly 0, same-base cosine exactly 1 —
+    a set over base indices is an exact oracle), with random commit
+    outcomes including a crash between the band and vec appends, and
+    mid-history compaction."""
     import random
 
     from universal_data_connector_spark.operators import (
@@ -829,15 +883,9 @@ def test_seen_embedding_crash_fuzz_against_model(spark, tmp_path,
     )
 
     rng = random.Random(seed)
-    store = str(tmp_path / "emb")
+    store = _store(request, backend, tmp_path)
     committed: set[int] = set()
     next_id = 0
-    real_append = ds._append_buckets
-
-    def crash_on_vecs(frame, root, touched):
-        if root.endswith("vecs"):
-            raise RuntimeError("fuzz crash between appends")
-        return real_append(frame, root, touched)
 
     for _ in range(7):
         picks = [rng.randrange(6) for _ in range(rng.randint(0, 4))]
@@ -861,10 +909,10 @@ def test_seen_embedding_crash_fuzz_against_model(spark, tmp_path,
         if outcome < 0.35:
             if not got:
                 continue
-            monkeypatch.setattr(ds, "_append_buckets", crash_on_vecs)
+            undo = _crash_append_at(monkeypatch, store, "vecs")
             with pytest.raises(RuntimeError, match="between appends"):
                 commit()
-            monkeypatch.setattr(ds, "_append_buckets", real_append)
+            undo()
             continue
         commit()
         if outcome > 0.85:

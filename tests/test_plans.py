@@ -464,11 +464,6 @@ def test_driver_materialization_discipline():
         # x rolled parts; metadata the pointer CAS needs on the driver
         # anyway)
         "streaming/object_state.py": 1,
-        # cross-run dedup: touched-bucket sets (POSIX + S3 exact
-        # stores; the near and embedding filters' band/candidate
-        # buckets and their commits' band/sig/vec buckets), each
-        # bounded by num_buckets
-        "operators/dedup_state.py": 10,
     }
     bad = []
     for py in root.rglob("*.py"):
@@ -529,6 +524,53 @@ def test_frames_from_rows_go_through_local_frame():
         rel = str(py.relative_to(root))
         found.update({(rel, fn): n for fn, n in calls.found.items()})
     assert found == allowed
+
+
+def test_seen_store_backend_is_picked_in_one_place():
+    """Source lint: the dedup_state seen store is written once over a
+    per-backend store object. ``operators/dedup_state.py`` defines no
+    ``*_s3``/``*_posix`` twin, takes store leases and writer marks only
+    inside the two backend classes, and names ``S3StateTarget`` only
+    in the resolver ``seen_store``. ``engine.py`` and
+    ``maintenance.py`` read the ``bucketName`` prop only in the
+    props-to-store resolver, the prop validation, and the state-sink
+    vacuum (which targets the sinks, not a seen store)."""
+    import ast
+    import pathlib
+
+    import universal_data_connector_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    tree = ast.parse((root / "operators/dedup_state.py").read_text())
+    twins = [n.name for n in ast.walk(tree)
+             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+             and n.name.endswith(("_s3", "_posix"))]
+    assert twins == []
+
+    def users(tree, names) -> set[str]:
+        """Top-level definitions that reference any of ``names``."""
+        found = set()
+        for top in tree.body:
+            for n in ast.walk(top):
+                ref = (n.id if isinstance(n, ast.Name) else
+                       n.attr if isinstance(n, ast.Attribute) else
+                       n.name if isinstance(n, ast.alias) else
+                       n.value if isinstance(n, ast.Constant) else None)
+                if ref in names:
+                    found.add(getattr(top, "name", type(top).__name__))
+        return found
+
+    assert users(tree, {"posix_writer_mark", "posix_maintenance_lease",
+                        "s3_writer_mark", "s3_maintenance_lease"}) == {
+        "PosixSeenStore", "S3SeenStore"}
+    assert users(tree, {"S3StateTarget"}) == {"seen_store"}
+    readers = {
+        (rel, fn) for rel in ("engine.py", "maintenance.py")
+        for fn in users(ast.parse((root / rel).read_text()),
+                        {"bucketName"})}
+    assert readers == {("engine.py", "dedup_state_store"),
+                       ("engine.py", "_check_dedup_state_props"),
+                       ("maintenance.py", "vacuum_stores")}
 
 
 def _plan_chain(plan) -> list[str]:

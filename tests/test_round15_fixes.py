@@ -28,11 +28,13 @@ moto_server = pytest.importorskip("moto.server")
 
 from universal_data_connector_spark.streaming.object_state import (  # noqa: E402
     S3StateTarget,
-    agg_state_merge_s3,
-    begin_batch_run_s3,
     read_state_s3,
-    record_touched_s3,
-    upsert_merge_s3,
+)
+from universal_data_connector_spark.streaming.windows import (  # noqa: E402
+    additive_merge,
+    claim_batch_run,
+    keep_latest_merge,
+    record_touched,
 )
 
 BUCKET = "udc-r15-tests"
@@ -80,7 +82,7 @@ def test_no_driver_scratch_on_any_s3_merge_path(spark, s3_setup,
     whole store family (state upsert/agg, exact seen filter+commit,
     read-back)."""
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_filter_s3,
+        seen_filter,
     )
 
     made: list[str] = []
@@ -95,9 +97,9 @@ def test_no_driver_scratch_on_any_s3_merge_path(spark, s3_setup,
     monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
 
     tgt = _target(s3_setup, "scratchless-upsert")
-    upsert_merge_s3(_frame(spark, [(1, 10, 1.0), (2, 10, 2.0)]), 1,
+    keep_latest_merge(_frame(spark, [(1, 10, 1.0), (2, 10, 2.0)]), 1,
                     target=tgt, keys=["user_id"], order_col="ord")
-    upsert_merge_s3(_frame(spark, [(1, 20, 9.0), (3, 5, 3.0)]), 2,
+    keep_latest_merge(_frame(spark, [(1, 20, 9.0), (3, 5, 3.0)]), 2,
                     target=tgt, keys=["user_id"], order_col="ord")
     got = {r.user_id: r.ord for r in read_state_s3(
         spark, tgt, "user_id bigint, ord bigint, value double")
@@ -105,10 +107,10 @@ def test_no_driver_scratch_on_any_s3_merge_path(spark, s3_setup,
     assert got == {1: 20, 2: 10, 3: 5}
 
     agg_tgt = _target(s3_setup, "scratchless-agg")
-    agg_state_merge_s3(_frame(spark, [(1, 0, 1.5), (2, 0, 2.5)]), 1,
+    additive_merge(_frame(spark, [(1, 0, 1.5), (2, 0, 2.5)]), 1,
                        target=agg_tgt, keys=["user_id"],
                        value_col="value")
-    agg_state_merge_s3(_frame(spark, [(1, 0, 1.0)]), 2,
+    additive_merge(_frame(spark, [(1, 0, 1.0)]), 2,
                        target=agg_tgt, keys=["user_id"],
                        value_col="value")
     totals = {r.user_id: float(r.total) for r in read_state_s3(
@@ -117,12 +119,12 @@ def test_no_driver_scratch_on_any_s3_merge_path(spark, s3_setup,
     assert totals == {1: 2.5, 2: 2.5}
 
     seen_tgt = _target(s3_setup, "scratchless-seen")
-    b1, c1 = seen_filter_s3(
+    b1, c1 = seen_filter(
         _doc_frame(spark, [(1, "alpha"), (2, "beta")]), seen_tgt,
         ["text"])
     assert b1.count() == 2
     c1()
-    b2, c2 = seen_filter_s3(
+    b2, c2 = seen_filter(
         _doc_frame(spark, [(3, "alpha"), (4, "gamma")]), seen_tgt,
         ["text"])
     assert sorted(r.doc_id for r in b2.collect()) == [4]
@@ -165,14 +167,14 @@ def test_driver_client_is_metadata_rate_only(spark, s3_setup):
                         num_buckets=4, endpoint_url=endpoint, **CREDS)
 
     rows = [(i, 0, float(i)) for i in range(400)]
-    agg_state_merge_s3(_frame(spark, rows), 1, target=tgt,
+    additive_merge(_frame(spark, rows), 1, target=tgt,
                        keys=["user_id"], value_col="value")
     k = sum(1 for b in range(tgt.num_buckets)
             if tgt.read_pointer(b)[0] is not None)
     assert k == 4
 
     counting.counts.clear()
-    agg_state_merge_s3(_frame(spark, rows), 2, target=tgt,
+    additive_merge(_frame(spark, rows), 2, target=tgt,
                        keys=["user_id"], value_col="value")
     assert counting.counts.get("get_object", 0) == k + 2
     assert counting.counts.get("put_object", 0) == k + 1
@@ -190,7 +192,7 @@ def test_read_state_s3_schema_is_exact_cold_and_warm(spark, s3_setup):
     cold = read_state_s3(spark, tgt, ddl)
     assert [f.name for f in cold.schema.fields] == [
         "user_id", "ord", "value"]
-    upsert_merge_s3(_frame(spark, [(1, 10, 1.0)]), 1, target=tgt,
+    keep_latest_merge(_frame(spark, [(1, 10, 1.0)]), 1, target=tgt,
                     keys=["user_id"], order_col="ord")
     warm = read_state_s3(spark, tgt, ddl)
     assert [f.name for f in warm.schema.fields] == [
@@ -285,18 +287,18 @@ def test_record_touched_s3_unions_across_replays(spark, s3_setup):
     resume RAISES (genuine partial apply) instead of misreading the
     run as provably-never-committed and abandoning it."""
     tgt = _target(s3_setup, "touched-union")
-    run = begin_batch_run_s3(tgt, fingerprint="input-A")
-    record_touched_s3(tgt, run, [0, 1])
+    run = claim_batch_run(tgt, fingerprint="input-A")
+    record_touched(tgt, run, [0, 1])
     # bucket 0 commits, then the run crashes
     tgt.commit_pointer(0, run, [], None)
     # replay of input-A: only bucket 1 is still pending
-    assert begin_batch_run_s3(tgt, fingerprint="input-A") == run
-    record_touched_s3(tgt, run, [1])
+    assert claim_batch_run(tgt, fingerprint="input-A") == run
+    record_touched(tgt, run, [1])
     stored, _ = tgt._get_json(tgt._key("_udc_batch_intent"))
     assert stored["touched"] == [0, 1]
     # the replay crashes again; a DIFFERENT input arrives
     with pytest.raises(ValueError, match="partially applied"):
-        begin_batch_run_s3(tgt, fingerprint="input-B")
+        claim_batch_run(tgt, fingerprint="input-B")
 
 
 def test_intent_record_touched_posix_unions(tmp_path):
@@ -421,7 +423,7 @@ def test_two_writer_interleaved_near_store_fuzz(spark, s3_setup, seed):
     import random
 
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_near_filter_s3,
+        seen_near_filter,
     )
 
     rng = random.Random(seed)
@@ -445,7 +447,7 @@ def test_two_writer_interleaved_near_store_fuzz(spark, s3_setup, seed):
         (rows_a, picks_a), (rows_b, picks_b) = batches
 
         def run_filter(rows, picks):
-            surv, commit = seen_near_filter_s3(
+            surv, commit = seen_near_filter(
                 _doc_frame(spark, rows), tgt)
             got = sorted(r.doc_id for r in surv.collect())
             expect = sorted(i for (i, _), p in zip(rows, picks)
@@ -473,7 +475,7 @@ def test_two_writer_interleaved_near_store_fuzz(spark, s3_setup, seed):
 
     # final probe: everything ever committed filters as seen
     rows = [(next_id + k, b) for k, b in enumerate(_BASES)]
-    surv, _ = seen_near_filter_s3(_doc_frame(spark, rows), tgt)
+    surv, _ = seen_near_filter(_doc_frame(spark, rows), tgt)
     got_bases = {r.text for r in surv.select("text").collect()}
     assert got_bases == {_BASES[i] for i in range(len(_BASES))
                          if i not in committed}
@@ -485,7 +487,7 @@ def test_two_writer_interleaved_embedding_store_fuzz(spark, s3_setup,
     import random
 
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_embedding_filter_s3,
+        seen_embedding_filter,
     )
 
     rng = random.Random(seed)
@@ -494,7 +496,7 @@ def test_two_writer_interleaved_embedding_store_fuzz(spark, s3_setup,
     next_id = 0
 
     def run_filter(rows, picks):
-        surv, commit = seen_embedding_filter_s3(
+        surv, commit = seen_embedding_filter(
             _vec_frame(spark, rows), tgt)
         got = sorted(r.vec_id for r in surv.collect())
         expect = sorted(i for (i, _), p in zip(rows, picks)
@@ -842,16 +844,16 @@ def test_seen_store_prefix_with_braces_round_trips(spark, s3_setup):
     over the key template must not read a user prefix like
     'corpus-{prod}' as a placeholder (r15 review)."""
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_filter_s3,
+        seen_filter,
     )
 
     tgt = _target(s3_setup, "corpus-{prod}/seen")
-    b1, c1 = seen_filter_s3(
+    b1, c1 = seen_filter(
         _doc_frame(spark, [(1, "brace one"), (2, "brace two")]),
         tgt, ["text"])
     assert b1.count() == 2
     c1()
-    b2, _ = seen_filter_s3(
+    b2, _ = seen_filter(
         _doc_frame(spark, [(3, "brace one"), (4, "brace three")]),
         tgt, ["text"])
     assert sorted(r.doc_id for r in b2.collect()) == [4]
@@ -1039,7 +1041,7 @@ def test_read_objects_schema_evolution_fails_descriptively(
     )
 
     tgt = _target(s3_setup, "schema-evo")
-    upsert_merge_s3(_frame(spark, [(1, 10, 1.0)]), 1, target=tgt,
+    keep_latest_merge(_frame(spark, [(1, 10, 1.0)]), 1, target=tgt,
                     keys=["user_id"], order_col="ord")
     ptr = next(tgt.read_pointer(b)[0]
                for b in range(tgt.num_buckets)

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import json
 import uuid
+from functools import partial
 
 import pytest
 
@@ -26,14 +27,15 @@ boto3 = pytest.importorskip("boto3")
 from universal_data_connector_spark.streaming.object_state import (  # noqa: E402
     CasConflict,
     S3StateTarget,
-    agg_state_merge_s3,
-    begin_batch_run_s3,
-    end_batch_run_s3,
-    foreachbatch_agg_state_s3,
     read_state_s3,
-    record_touched_s3,
-    upsert_merge_s3,
     vacuum_target,
+)
+from universal_data_connector_spark.streaming.windows import (  # noqa: E402
+    additive_merge,
+    claim_batch_run,
+    foreachbatch_merge,
+    keep_latest_merge,
+    record_touched,
 )
 
 BUCKET = "udc-state-loopback"
@@ -78,9 +80,9 @@ def _totals(spark, target):
 # ---------------------------------------------------------------------------
 
 def test_upsert_keep_latest_across_merges(spark, target):
-    upsert_merge_s3(_frame(spark, [(1, 10, 1.0), (2, 10, 2.0)]), 1,
+    keep_latest_merge(_frame(spark, [(1, 10, 1.0), (2, 10, 2.0)]), 1,
                     target=target, keys=["user_id"], order_col="ord")
-    upsert_merge_s3(_frame(spark, [(1, 20, 9.0), (3, 5, 3.0)]), 2,
+    keep_latest_merge(_frame(spark, [(1, 20, 9.0), (3, 5, 3.0)]), 2,
                     target=target, keys=["user_id"], order_col="ord")
     out = read_state_s3(
         spark, target, "user_id bigint, ord bigint, value double")
@@ -90,12 +92,12 @@ def test_upsert_keep_latest_across_merges(spark, target):
 
 def test_upsert_replay_is_idempotent(spark, target):
     batch = _frame(spark, [(1, 10, 1.0), (1, 10, 1.0), (2, 3, 2.0)])
-    upsert_merge_s3(batch, 1, target=target, keys=["user_id"],
+    keep_latest_merge(batch, 1, target=target, keys=["user_id"],
                     order_col="ord")
     first = {r.user_id: (r.ord, r.value) for r in read_state_s3(
         spark, target,
         "user_id bigint, ord bigint, value double").collect()}
-    upsert_merge_s3(batch, 1, target=target, keys=["user_id"],
+    keep_latest_merge(batch, 1, target=target, keys=["user_id"],
                     order_col="ord")
     again = {r.user_id: (r.ord, r.value) for r in read_state_s3(
         spark, target,
@@ -116,15 +118,15 @@ def test_cold_read_is_empty_not_an_error(spark, target):
 
 def test_agg_state_replay_does_not_double_count(spark, target):
     b1 = _frame(spark, [(1, 0, 1.5), (1, 0, 2.5), (2, 0, 10.0)])
-    agg_state_merge_s3(b1, 1, target=target, keys=["user_id"],
+    additive_merge(b1, 1, target=target, keys=["user_id"],
                        value_col="value")
     assert _totals(spark, target) == {1: (2, 4.0), 2: (1, 10.0)}
     # at-least-once delivery: the same batch id replays in full
-    agg_state_merge_s3(b1, 1, target=target, keys=["user_id"],
+    additive_merge(b1, 1, target=target, keys=["user_id"],
                        value_col="value")
     assert _totals(spark, target) == {1: (2, 4.0), 2: (1, 10.0)}
     # a NEW batch id adds
-    agg_state_merge_s3(_frame(spark, [(1, 0, 0.5)]), 2, target=target,
+    additive_merge(_frame(spark, [(1, 0, 0.5)]), 2, target=target,
                        keys=["user_id"], value_col="value")
     assert _totals(spark, target) == {1: (3, 4.5), 2: (1, 10.0)}
 
@@ -135,7 +137,7 @@ def test_agg_state_crash_before_cas_then_replay_converges(
     merge uploads its generation objects and commits SOME pointer CAS
     calls, then dies. Old state must remain readable and the replay
     must apply exactly the uncommitted buckets."""
-    agg_state_merge_s3(
+    additive_merge(
         _frame(spark, [(1, 0, 1.0), (2, 0, 2.0), (3, 0, 3.0),
                        (4, 0, 4.0), (5, 0, 5.0), (6, 0, 6.0)]),
         1, target=target, keys=["user_id"], value_col="value")
@@ -154,7 +156,7 @@ def test_agg_state_crash_before_cas_then_replay_converges(
                         (4, 0, 40.0), (5, 0, 50.0), (6, 0, 60.0)])
     monkeypatch.setattr(S3StateTarget, "commit_pointer", crashing_commit)
     with pytest.raises(RuntimeError, match="injected crash"):
-        agg_state_merge_s3(b2, 2, target=target, keys=["user_id"],
+        additive_merge(b2, 2, target=target, keys=["user_id"],
                            value_col="value")
     monkeypatch.setattr(S3StateTarget, "commit_pointer", real_commit)
 
@@ -167,7 +169,7 @@ def test_agg_state_crash_before_cas_then_replay_converges(
     assert mid != before  # one bucket DID commit before the crash
 
     # checkpoint replays batch 2: committed buckets skip, the rest apply
-    agg_state_merge_s3(b2, 2, target=target, keys=["user_id"],
+    additive_merge(b2, 2, target=target, keys=["user_id"],
                        value_col="value")
     assert _totals(spark, target) == {
         uid: (old[0] + 1, old[1] + uid * 10.0)
@@ -185,7 +187,7 @@ def test_ghost_objects_are_invisible_to_readers(spark, s3_client, target):
     """The pointer lists its objects explicitly, so junk under a
     committed generation prefix (a crashed attempt that partitioned
     differently, an abandoned multipart) can never be read as state."""
-    agg_state_merge_s3(_frame(spark, [(1, 0, 1.0)]), 1, target=target,
+    additive_merge(_frame(spark, [(1, 0, 1.0)]), 1, target=target,
                        keys=["user_id"], value_col="value")
     ptr_key = next(k for k in target.list_keys() if k.endswith("/_ptr"))
     gen_prefix = json.loads(
@@ -199,7 +201,7 @@ def test_ghost_objects_are_invisible_to_readers(spark, s3_client, target):
 
 
 def test_concurrent_writer_loses_cas_loudly(spark, target):
-    agg_state_merge_s3(_frame(spark, [(1, 0, 1.0)]), 1, target=target,
+    additive_merge(_frame(spark, [(1, 0, 1.0)]), 1, target=target,
                        keys=["user_id"], value_col="value")
     bucket_id = next(b for b in range(target.num_buckets)
                      if target.read_pointer(b)[0] is not None)
@@ -231,8 +233,9 @@ def test_streaming_agg_state_s3_end_to_end(spark, tmp_path, target):
         raw = (spark.readStream
                .schema("user_id bigint, value double")
                .option("maxFilesPerTrigger", "1").json(str(src)))
-        q = foreachbatch_agg_state_s3(
-            raw, target, keys=["user_id"], value_col="value",
+        q = foreachbatch_merge(
+            raw, partial(additive_merge, target=target, keys=["user_id"],
+                         value_col="value"),
             checkpoint=str(tmp_path / ckpt))
         q.awaitTermination()
 
@@ -253,47 +256,47 @@ def test_streaming_agg_state_s3_end_to_end(spark, tmp_path, target):
 # ---------------------------------------------------------------------------
 
 def test_batch_runs_claim_monotonic_ids(spark, target):
-    rid1 = begin_batch_run_s3(target, fingerprint="fp-a")
-    agg_state_merge_s3(_frame(spark, [(1, 0, 1.0)]), rid1, target=target,
+    rid1 = claim_batch_run(target, fingerprint="fp-a")
+    additive_merge(_frame(spark, [(1, 0, 1.0)]), rid1, target=target,
                        keys=["user_id"], value_col="value")
-    end_batch_run_s3(target)
-    rid2 = begin_batch_run_s3(target, fingerprint="fp-b")
+    target.intent_clear()
+    rid2 = claim_batch_run(target, fingerprint="fp-b")
     assert rid2 == rid1 + 1
-    agg_state_merge_s3(_frame(spark, [(1, 0, 1.0)]), rid2, target=target,
+    additive_merge(_frame(spark, [(1, 0, 1.0)]), rid2, target=target,
                        keys=["user_id"], value_col="value")
-    end_batch_run_s3(target)
+    target.intent_clear()
     assert _totals(spark, target) == {1: (2, 2.0)}
 
 
 def test_batch_run_same_fingerprint_resumes_same_id(spark, target):
-    rid = begin_batch_run_s3(target, fingerprint="fp-x")
+    rid = claim_batch_run(target, fingerprint="fp-x")
     # crash before the merge: rerun with the same input resumes the id
-    assert begin_batch_run_s3(target, fingerprint="fp-x") == rid
-    end_batch_run_s3(target)
+    assert claim_batch_run(target, fingerprint="fp-x") == rid
+    target.intent_clear()
 
 
 def test_batch_run_changed_input_after_complete_reclaims_fresh(
         spark, target):
-    rid = begin_batch_run_s3(target, fingerprint="fp-old")
-    agg_state_merge_s3(_frame(spark, [(1, 0, 1.0), (2, 0, 2.0)]), rid,
+    rid = claim_batch_run(target, fingerprint="fp-old")
+    additive_merge(_frame(spark, [(1, 0, 1.0), (2, 0, 2.0)]), rid,
                        target=target, keys=["user_id"], value_col="value")
     # crash between the merge and end_batch_run: the intent survives,
     # but every recorded bucket committed -> a changed input reclaims
-    rid2 = begin_batch_run_s3(target, fingerprint="fp-new")
+    rid2 = claim_batch_run(target, fingerprint="fp-new")
     assert rid2 == rid + 1
-    end_batch_run_s3(target)
+    target.intent_clear()
 
 
 def test_batch_run_changed_input_after_partial_apply_raises(
         spark, target, monkeypatch):
     # seed two keys in different buckets so batch 2 touches >= 2
-    agg_state_merge_s3(_frame(spark, [(1, 0, 1.0), (2, 0, 2.0),
+    additive_merge(_frame(spark, [(1, 0, 1.0), (2, 0, 2.0),
                                       (3, 0, 3.0), (4, 0, 4.0)]),
-                       begin_batch_run_s3(target, fingerprint="seed"),
+                       claim_batch_run(target, fingerprint="seed"),
                        target=target, keys=["user_id"], value_col="value")
-    end_batch_run_s3(target)
+    target.intent_clear()
 
-    rid = begin_batch_run_s3(target, fingerprint="fp-old")
+    rid = claim_batch_run(target, fingerprint="fp-old")
     real_commit = S3StateTarget.commit_pointer
     calls = {"n": 0}
 
@@ -305,7 +308,7 @@ def test_batch_run_changed_input_after_partial_apply_raises(
 
     monkeypatch.setattr(S3StateTarget, "commit_pointer", crashing_commit)
     with pytest.raises(RuntimeError):
-        agg_state_merge_s3(
+        additive_merge(
             _frame(spark, [(1, 0, 10.0), (2, 0, 20.0), (3, 0, 30.0),
                            (4, 0, 40.0)]),
             rid, target=target, keys=["user_id"], value_col="value")
@@ -313,22 +316,22 @@ def test_batch_run_changed_input_after_partial_apply_raises(
     # SOME recorded bucket committed, some did not: a different input
     # must be refused — no automatic choice is safe
     with pytest.raises(ValueError, match="partially applied"):
-        begin_batch_run_s3(target, fingerprint="fp-new")
+        claim_batch_run(target, fingerprint="fp-new")
     # the ORIGINAL input resumes and completes, then the new input runs
-    rid_resume = begin_batch_run_s3(target, fingerprint="fp-old")
+    rid_resume = claim_batch_run(target, fingerprint="fp-old")
     assert rid_resume == rid
-    agg_state_merge_s3(
+    additive_merge(
         _frame(spark, [(1, 0, 10.0), (2, 0, 20.0), (3, 0, 30.0),
                        (4, 0, 40.0)]),
         rid_resume, target=target, keys=["user_id"], value_col="value")
-    end_batch_run_s3(target)
+    target.intent_clear()
     assert _totals(spark, target) == {
         1: (2, 11.0), 2: (2, 22.0), 3: (2, 33.0), 4: (2, 44.0)}
 
 
 def test_record_touched_noop_without_matching_intent(target):
     # streaming merges carry no intent: recording must be a no-op
-    record_touched_s3(target, 99, [0, 1])
+    record_touched(target, 99, [0, 1])
     assert target._get_json(target._key("_udc_batch_intent"))[0] is None
 
 
@@ -337,9 +340,9 @@ def test_record_touched_noop_without_matching_intent(target):
 # ---------------------------------------------------------------------------
 
 def test_vacuum_reclaims_superseded_generations(spark, target):
-    agg_state_merge_s3(_frame(spark, [(1, 0, 1.0)]), 1, target=target,
+    additive_merge(_frame(spark, [(1, 0, 1.0)]), 1, target=target,
                        keys=["user_id"], value_col="value")
-    agg_state_merge_s3(_frame(spark, [(1, 0, 2.0)]), 2, target=target,
+    additive_merge(_frame(spark, [(1, 0, 2.0)]), 2, target=target,
                        keys=["user_id"], value_col="value")
     n_before = len([k for k in target.list_keys() if "gen-" in k])
     deleted = vacuum_target(target)
@@ -455,7 +458,7 @@ def test_constant_id_upsert_rerun_crash_cannot_tear_state(
     single live object. (Without the per-merge generation nonce the
     second upload overwrote the pointer-referenced objects in place,
     committing — or tearing — state with no commit.)"""
-    upsert_merge_s3(_frame(spark, [(1, 10, 1.0), (2, 10, 2.0)]), 0,
+    keep_latest_merge(_frame(spark, [(1, 10, 1.0), (2, 10, 2.0)]), 0,
                     target=target, keys=["user_id"], order_col="ord")
     expected = {1: (10, 1.0), 2: (10, 2.0)}
 
@@ -464,7 +467,7 @@ def test_constant_id_upsert_rerun_crash_cannot_tear_state(
 
     monkeypatch.setattr(S3StateTarget, "commit_pointer", refusing_commit)
     with pytest.raises(RuntimeError, match="before any CAS"):
-        upsert_merge_s3(_frame(spark, [(1, 99, 8.0), (2, 99, 9.0)]), 0,
+        keep_latest_merge(_frame(spark, [(1, 99, 8.0), (2, 99, 9.0)]), 0,
                         target=target, keys=["user_id"], order_col="ord")
     monkeypatch.undo()
 
@@ -473,7 +476,7 @@ def test_constant_id_upsert_rerun_crash_cannot_tear_state(
     assert {r.user_id: (r.ord, r.value) for r in out.collect()} \
         == expected
     # the rerun (same constant id) completes and supersedes
-    upsert_merge_s3(_frame(spark, [(1, 99, 8.0), (2, 99, 9.0)]), 0,
+    keep_latest_merge(_frame(spark, [(1, 99, 8.0), (2, 99, 9.0)]), 0,
                     target=target, keys=["user_id"], order_col="ord")
     out = read_state_s3(
         spark, target, "user_id bigint, ord bigint, value double")
@@ -585,22 +588,22 @@ def _doc_frame(spark, rows):
 
 def test_seen_filter_s3_across_batches(spark, target):
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_filter_s3,
+        seen_filter,
     )
 
-    b1, c1 = seen_filter_s3(_doc_frame(spark, [(1, "aa"), (2, "bb")]),
+    b1, c1 = seen_filter(_doc_frame(spark, [(1, "aa"), (2, "bb")]),
                             target, ["text"])
     assert sorted(r.doc_id for r in b1.collect()) == [1, 2]
     c1()
-    b2, c2 = seen_filter_s3(_doc_frame(spark, [(3, "aa"), (4, "cc")]),
+    b2, c2 = seen_filter(_doc_frame(spark, [(3, "aa"), (4, "cc")]),
                             target, ["text"])
     assert sorted(r.doc_id for r in b2.collect()) == [4]
     # uncommitted: rerun ships the same survivor (no data loss)
-    b2r, c2r = seen_filter_s3(_doc_frame(spark, [(4, "cc")]),
+    b2r, c2r = seen_filter(_doc_frame(spark, [(4, "cc")]),
                               target, ["text"])
     assert sorted(r.doc_id for r in b2r.collect()) == [4]
     c2r()
-    b3, _ = seen_filter_s3(
+    b3, _ = seen_filter(
         _doc_frame(spark, [(5, "aa"), (6, "bb"), (7, "cc")]),
         target, ["text"])
     assert b3.count() == 0
@@ -613,14 +616,14 @@ def test_seen_filter_s3_partial_commit_is_safe(spark, target,
     sink had already succeeded — and re-commit converges with no torn
     object ever visible (PUTs are atomic)."""
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_filter_s3,
+        seen_filter,
     )
     from universal_data_connector_spark.streaming.object_state import (
         S3StateTarget,
     )
 
     rows = [(i, f"doc-{i}") for i in range(32)]
-    b1, c1 = seen_filter_s3(_doc_frame(spark, rows), target, ["text"])
+    b1, c1 = seen_filter(_doc_frame(spark, rows), target, ["text"])
     assert b1.count() == 32
 
     # crash injection at the driver-side append seam (the per-object
@@ -630,26 +633,26 @@ def test_seen_filter_s3_partial_commit_is_safe(spark, target,
     import universal_data_connector_spark.operators.dedup_state as ds
     from pyspark.sql import functions as F
 
-    real_append = ds._s3_append_sub
+    real_append = ds.S3SeenStore.append
 
-    def crashing_append(frame, tgt, touched, sub=None):
+    def crashing_append(self, frame, sub, touched):
         part = list(touched)[:1]
-        real_append(frame.filter(F.col("udc_kb").isin(part)), tgt,
-                    part, sub=sub)
+        real_append(self, frame.filter(F.col("udc_kb").isin(part)), sub,
+                    part)
         raise RuntimeError("injected crash mid-append")
 
-    monkeypatch.setattr(ds, "_s3_append_sub", crashing_append)
+    monkeypatch.setattr(ds.S3SeenStore, "append", crashing_append)
     with pytest.raises(RuntimeError, match="mid-append"):
         c1()
     monkeypatch.undo()
 
     # rerun: the partially-appended keys filter as seen (they shipped
     # before the crash — finalize runs post-sink), the rest survive
-    b1r, c1r = seen_filter_s3(_doc_frame(spark, rows), target, ["text"])
+    b1r, c1r = seen_filter(_doc_frame(spark, rows), target, ["text"])
     survivors = sorted(r.doc_id for r in b1r.collect())
     assert 0 < len(survivors) < 32
     c1r()
-    b2, _ = seen_filter_s3(_doc_frame(spark, rows), target, ["text"])
+    b2, _ = seen_filter(_doc_frame(spark, rows), target, ["text"])
     assert b2.count() == 0
 
 
@@ -704,18 +707,18 @@ def test_compact_seen_store_s3_preserves_filtering(spark, target):
     """After several commits (plus a replay), compaction collapses
     each bucket to one object and changes no filtering decision."""
     from universal_data_connector_spark.operators.dedup_state import (
-        compact_seen_store_s3,
-        seen_filter_s3,
+        compact_seen_store,
+        seen_filter,
     )
 
     for batch in ([(1, "aa"), (2, "bb")], [(3, "cc"), (4, "dd")]):
-        out, commit = seen_filter_s3(_doc_frame(spark, batch),
+        out, commit = seen_filter(_doc_frame(spark, batch),
                                      target, ["text"])
         out.collect()
         commit()
         commit()  # replayed commit: duplicate appends
     before = _seen_object_count(target)
-    deleted = compact_seen_store_s3(spark, target)
+    deleted = compact_seen_store(spark, target)
     assert deleted == before  # every pre-compact object superseded
     after = _seen_object_count(target)
     assert after < before
@@ -724,12 +727,12 @@ def test_compact_seen_store_s3_preserves_filtering(spark, target):
         ks = [k for k in target.list_keys(under=f"kb={b}")
               if k.endswith(".parquet")]
         assert len(ks) <= 1
-    probe, _ = seen_filter_s3(
+    probe, _ = seen_filter(
         _doc_frame(spark, [(9, "aa"), (10, "dd"), (11, "zz")]),
         target, ["text"])
     assert sorted(r.doc_id for r in probe.collect()) == [11]
     # idempotent: a second compaction finds nothing to merge
-    assert compact_seen_store_s3(spark, target) == 0
+    assert compact_seen_store(spark, target) == 0
 
 
 def test_compact_seen_store_s3_never_deletes_racing_append(
@@ -738,14 +741,14 @@ def test_compact_seen_store_s3_never_deletes_racing_append(
     deletes must survive: only objects in the compactor's own listing
     are deleted, so the racer's keys still filter afterwards."""
     from universal_data_connector_spark.operators.dedup_state import (
-        compact_seen_store_s3,
-        seen_filter_s3,
+        compact_seen_store,
+        seen_filter,
     )
     from universal_data_connector_spark.streaming.object_state import (
         S3StateTarget,
     )
 
-    out, commit = seen_filter_s3(
+    out, commit = seen_filter(
         _doc_frame(spark, [(1, "aa"), (2, "bb"), (3, "cc")]),
         target, ["text"])
     out.collect()
@@ -758,17 +761,17 @@ def test_compact_seen_store_s3_never_deletes_racing_append(
     def racing_delete(self, keys):
         if not race["done"]:
             race["done"] = True
-            out2, c2 = seen_filter_s3(
+            out2, c2 = seen_filter(
                 _doc_frame(spark, [(4, "race-doc")]), target, ["text"])
             out2.collect()
             c2()
         return real_delete(self, keys)
 
     monkeypatch.setattr(S3StateTarget, "delete_keys", racing_delete)
-    compact_seen_store_s3(spark, target)
+    compact_seen_store(spark, target)
     monkeypatch.undo()
 
-    probe, _ = seen_filter_s3(
+    probe, _ = seen_filter(
         _doc_frame(spark, [(7, "aa"), (8, "race-doc"), (9, "new")]),
         target, ["text"])
     assert sorted(r.doc_id for r in probe.collect()) == [9]
@@ -780,14 +783,14 @@ def test_compact_seen_store_s3_crash_before_delete_is_safe(
     remain (harmless), filtering is unchanged, and a rerun of the
     compactor converges."""
     from universal_data_connector_spark.operators.dedup_state import (
-        compact_seen_store_s3,
-        seen_filter_s3,
+        compact_seen_store,
+        seen_filter,
     )
     from universal_data_connector_spark.streaming.object_state import (
         S3StateTarget,
     )
 
-    out, commit = seen_filter_s3(
+    out, commit = seen_filter(
         _doc_frame(spark, [(1, "aa"), (2, "bb")]), target, ["text"])
     out.collect()
     commit()
@@ -798,13 +801,13 @@ def test_compact_seen_store_s3_crash_before_delete_is_safe(
 
     monkeypatch.setattr(S3StateTarget, "delete_keys", crashing_delete)
     with pytest.raises(RuntimeError, match="before delete"):
-        compact_seen_store_s3(spark, target)
+        compact_seen_store(spark, target)
     monkeypatch.undo()
 
-    probe, _ = seen_filter_s3(
+    probe, _ = seen_filter(
         _doc_frame(spark, [(5, "aa"), (6, "zz")]), target, ["text"])
     assert sorted(r.doc_id for r in probe.collect()) == [6]
-    compact_seen_store_s3(spark, target)
+    compact_seen_store(spark, target)
     for b in range(target.num_buckets):
         ks = [k for k in target.list_keys(under=f"kb={b}")
               if k.endswith(".parquet")]
@@ -816,11 +819,11 @@ def test_compact_seen_store_s3_ignores_foreign_objects(spark, target):
     (e.g. a misrouted state-sink generation) is neither read as keys
     nor deleted by the compactor."""
     from universal_data_connector_spark.operators.dedup_state import (
-        compact_seen_store_s3,
-        seen_filter_s3,
+        compact_seen_store,
+        seen_filter,
     )
 
-    out, commit = seen_filter_s3(_doc_frame(spark, [(1, "aa")]),
+    out, commit = seen_filter(_doc_frame(spark, [(1, "aa")]),
                                  target, ["text"])
     out.collect()
     commit()
@@ -828,9 +831,9 @@ def test_compact_seen_store_s3_ignores_foreign_objects(spark, target):
     foreign = target._key("kb=0", "gen-1-deadbeef", "part-0.parquet")
     target.client.put_object(Bucket=target.bucket, Key=foreign,
                              Body=b"not really parquet")
-    compact_seen_store_s3(spark, target)
+    compact_seen_store(spark, target)
     assert foreign in target.list_keys(under="kb=0")
-    probe, _ = seen_filter_s3(
+    probe, _ = seen_filter(
         _doc_frame(spark, [(2, "aa"), (3, "bb")]), target, ["text"])
     assert sorted(r.doc_id for r in probe.collect()) == [3]
 
@@ -846,39 +849,39 @@ _NB = ("the quick brown fox jumps over the lazy dog while the stream "
 
 def test_seen_near_filter_s3_across_batches(spark, target):
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_near_filter_s3,
+        seen_near_filter,
     )
 
     distinct = ("completely different content about database engines "
                 "and the catalyst optimizer planning broadcast joins "
                 "for dimension tables at scale with adaptive execution")
-    b1, c1 = seen_near_filter_s3(
+    b1, c1 = seen_near_filter(
         _doc_frame(spark, [(1, _NB), (2, distinct)]), target)
     assert sorted(r.doc_id for r in b1.collect()) == [1, 2]
     c1()
     fresh = ("entirely novel words describing sensor calibration and "
              "oceanographic measurement campaigns across seasonal "
              "temperature gradients in the northern fjord systems")
-    b2, c2 = seen_near_filter_s3(
+    b2, c2 = seen_near_filter(
         _doc_frame(spark, [(3, _NB + " appended"),
                            (4, distinct), (5, fresh)]), target)
     assert sorted(r.doc_id for r in b2.collect()) == [5]
     c2()
-    b3, _ = seen_near_filter_s3(
+    b3, _ = seen_near_filter(
         _doc_frame(spark, [(6, fresh + " suffix")]), target)
     assert b3.count() == 0
 
 
 def test_seen_near_filter_s3_param_mismatch_raises(spark, target):
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_near_filter_s3,
+        seen_near_filter,
     )
 
-    b1, c1 = seen_near_filter_s3(_doc_frame(spark, [(1, _NB)]), target)
+    b1, c1 = seen_near_filter(_doc_frame(spark, [(1, _NB)]), target)
     b1.collect()
     c1()
     with pytest.raises(ValueError, match="not comparable"):
-        seen_near_filter_s3(_doc_frame(spark, [(2, _NB)]), target,
+        seen_near_filter(_doc_frame(spark, [(2, _NB)]), target,
                             num_hashes=64, bands=16)
 
 
@@ -889,57 +892,57 @@ def test_seen_near_filter_s3_crash_between_appends_converges(
     commit completes the sig store — the rerun-shaped convergence
     argument of the POSIX store, under atomic PUTs."""
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_near_filter_s3,
+        seen_near_filter,
     )
     from universal_data_connector_spark.streaming.object_state import (
         S3StateTarget,
     )
 
-    b1, c1 = seen_near_filter_s3(_doc_frame(spark, [(1, _NB)]), target)
+    b1, c1 = seen_near_filter(_doc_frame(spark, [(1, _NB)]), target)
     assert b1.count() == 1
 
     import universal_data_connector_spark.operators.dedup_state as ds
 
-    real_append = ds._s3_append_sub
+    real_append = ds.S3SeenStore.append
 
-    def crashing_append(frame, tgt, touched, sub=None):
+    def crashing_append(self, frame, sub, touched):
         if sub == "sigs":
             raise RuntimeError("injected crash before sig append")
-        return real_append(frame, tgt, touched, sub=sub)
+        return real_append(self, frame, sub, touched)
 
-    monkeypatch.setattr(ds, "_s3_append_sub", crashing_append)
+    monkeypatch.setattr(ds.S3SeenStore, "append", crashing_append)
     with pytest.raises(RuntimeError, match="before sig append"):
         c1()
     monkeypatch.undo()
 
     # rerun: bands exist but sigs are missing -> candidates cannot be
     # scored, the doc ships again (at-least-once), commit completes
-    b1r, c1r = seen_near_filter_s3(_doc_frame(spark, [(1, _NB)]),
+    b1r, c1r = seen_near_filter(_doc_frame(spark, [(1, _NB)]),
                                    target)
     assert b1r.count() == 1
     c1r()
-    b2, _ = seen_near_filter_s3(
+    b2, _ = seen_near_filter(
         _doc_frame(spark, [(2, _NB + " extra")]), target)
     assert b2.count() == 0
 
 
 def test_compact_seen_store_s3_handles_near_substores(spark, target):
     from universal_data_connector_spark.operators.dedup_state import (
-        compact_seen_store_s3,
-        seen_near_filter_s3,
+        compact_seen_store,
+        seen_near_filter,
     )
 
-    b1, c1 = seen_near_filter_s3(_doc_frame(spark, [(1, _NB)]), target)
+    b1, c1 = seen_near_filter(_doc_frame(spark, [(1, _NB)]), target)
     b1.collect()
     c1()
     c1()  # replayed commit: duplicate appends in bands/ and sigs/
-    assert compact_seen_store_s3(spark, target) > 0
+    assert compact_seen_store(spark, target) > 0
     for sub in ("bands", "sigs"):
         for b in range(target.num_buckets):
             ks = [k for k in target.list_keys(under=f"{sub}/kb={b}")
                   if k.endswith(".parquet")]
             assert len(ks) <= 1, (sub, b, ks)
-    probe, _ = seen_near_filter_s3(
+    probe, _ = seen_near_filter(
         _doc_frame(spark, [(2, _NB + " coda"),
                            (3, "wholly new material about harbor "
                                "dredging schedules and sediment "
@@ -991,69 +994,6 @@ def test_dedup_state_near_yaml_s3_two_runs(spark, tmp_path, s3_client,
     assert sorted(_os.listdir(out)) == ["a.txt", "c.txt"]
 
 
-def test_seen_near_filter_s3_crash_fuzz_against_model(spark, target,
-                                                      monkeypatch):
-    """Object-store twin of the POSIX near-store crash fuzz
-    (test_dedup_state.test_seen_near_filter_crash_fuzz_against_model):
-    same disjoint-vocabulary set model, same outcome mix (no-commit /
-    commit / double-commit / crash between the band and sig appends /
-    mid-history compaction), one seed over a longer history so the
-    prefix-scoped listings see accumulated multi-run buckets."""
-    import random
-
-    from universal_data_connector_spark.operators.dedup_state import (
-        compact_seen_store_s3,
-        seen_near_filter_s3,
-    )
-
-    rng = random.Random(7)
-    bases = [" ".join(f"s{i}tok{j}" for j in range(16))
-             for i in range(5)]
-    committed: set[int] = set()
-    next_id = 0
-    import universal_data_connector_spark.operators.dedup_state as ds
-
-    real_append = ds._s3_append_sub
-
-    def crash_on_sigs(frame, tgt, touched, sub=None):
-        if sub == "sigs":
-            raise RuntimeError("fuzz crash between appends")
-        return real_append(frame, tgt, touched, sub=sub)
-
-    for _ in range(7):
-        picks = [rng.randrange(len(bases))
-                 for _ in range(rng.randint(0, 4))]
-        rows = [(next_id + k, bases[p]) for k, p in enumerate(picks)]
-        batch = (_doc_frame(spark, rows) if rows
-                 else _doc_frame(spark, []).limit(0))
-        survivors, commit = seen_near_filter_s3(batch, target)
-        got = sorted(r.doc_id for r in survivors.collect())
-        expect = sorted(i for (i, _), p in zip(rows, picks)
-                        if p not in committed)
-        assert got == expect
-        surviving_bases = {p for (i, _), p in zip(rows, picks)
-                           if i in got}
-        next_id += len(picks)
-
-        outcome = rng.random()
-        if outcome < 0.20:
-            continue
-        if outcome < 0.35:
-            if not got:
-                continue
-            monkeypatch.setattr(ds, "_s3_append_sub", crash_on_sigs)
-            with pytest.raises(RuntimeError, match="between appends"):
-                commit()
-            monkeypatch.setattr(ds, "_s3_append_sub", real_append)
-            continue
-        commit()
-        if outcome > 0.85:
-            commit()
-        committed |= surviving_bases
-        if outcome > 0.92:
-            compact_seen_store_s3(spark, target)
-
-
 # ---------------------------------------------------------------------------
 # object-store EMBEDDING dedup store
 # ---------------------------------------------------------------------------
@@ -1071,14 +1011,14 @@ def _oh(i, dim=8, scale=1.0):
 
 def test_seen_embedding_filter_s3_across_batches(spark, target):
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_embedding_filter_s3,
+        seen_embedding_filter,
     )
 
-    b1, c1 = seen_embedding_filter_s3(
+    b1, c1 = seen_embedding_filter(
         _vec_frame(spark, [(1, _oh(0)), (2, _oh(1))]), target)
     assert sorted(r.vec_id for r in b1.collect()) == [1, 2]
     c1()
-    b2, c2 = seen_embedding_filter_s3(
+    b2, c2 = seen_embedding_filter(
         _vec_frame(spark, [(3, _oh(0, scale=2.0)), (4, _oh(2))]),
         target)
     assert sorted(r.vec_id for r in b2.collect()) == [4]
@@ -1087,18 +1027,18 @@ def test_seen_embedding_filter_s3_across_batches(spark, target):
 
 def test_seen_embedding_filter_s3_dim_and_param_guards(spark, target):
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_embedding_filter_s3,
+        seen_embedding_filter,
     )
 
-    b1, c1 = seen_embedding_filter_s3(
+    b1, c1 = seen_embedding_filter(
         _vec_frame(spark, [(1, _oh(0, dim=8))]), target)
     b1.collect()
     c1()
     with pytest.raises(ValueError, match="8-wide"):
-        seen_embedding_filter_s3(
+        seen_embedding_filter(
             _vec_frame(spark, [(2, _oh(0, dim=4))]), target)
     with pytest.raises(ValueError, match="not comparable"):
-        seen_embedding_filter_s3(
+        seen_embedding_filter(
             _vec_frame(spark, [(3, _oh(1))]), target,
             n_planes=64, bands=8)
 
@@ -1106,37 +1046,37 @@ def test_seen_embedding_filter_s3_dim_and_param_guards(spark, target):
 def test_seen_embedding_filter_s3_crash_between_appends_converges(
         spark, target, monkeypatch):
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_embedding_filter_s3,
+        seen_embedding_filter,
     )
     from universal_data_connector_spark.streaming.object_state import (
         S3StateTarget,
     )
 
-    b1, c1 = seen_embedding_filter_s3(
+    b1, c1 = seen_embedding_filter(
         _vec_frame(spark, [(1, _oh(0))]), target)
     assert b1.count() == 1
 
     import universal_data_connector_spark.operators.dedup_state as ds
 
-    real_append = ds._s3_append_sub
+    real_append = ds.S3SeenStore.append
 
-    def crashing_append(frame, tgt, touched, sub=None):
+    def crashing_append(self, frame, sub, touched):
         if sub == "vecs":
             raise RuntimeError("injected crash before vec append")
-        return real_append(frame, tgt, touched, sub=sub)
+        return real_append(self, frame, sub, touched)
 
-    monkeypatch.setattr(ds, "_s3_append_sub", crashing_append)
+    monkeypatch.setattr(ds.S3SeenStore, "append", crashing_append)
     with pytest.raises(RuntimeError, match="before vec append"):
         c1()
     monkeypatch.undo()
 
     # bands without vecs cannot flag: the doc ships again
     # (at-least-once) and the replayed commit completes the store
-    b1r, c1r = seen_embedding_filter_s3(
+    b1r, c1r = seen_embedding_filter(
         _vec_frame(spark, [(1, _oh(0))]), target)
     assert b1r.count() == 1
     c1r()
-    b2, _ = seen_embedding_filter_s3(
+    b2, _ = seen_embedding_filter(
         _vec_frame(spark, [(2, _oh(0, scale=3.0))]), target)
     assert b2.count() == 0
 
@@ -1144,22 +1084,22 @@ def test_seen_embedding_filter_s3_crash_between_appends_converges(
 def test_compact_seen_store_s3_handles_embedding_substores(
         spark, target):
     from universal_data_connector_spark.operators.dedup_state import (
-        compact_seen_store_s3,
-        seen_embedding_filter_s3,
+        compact_seen_store,
+        seen_embedding_filter,
     )
 
-    b1, c1 = seen_embedding_filter_s3(
+    b1, c1 = seen_embedding_filter(
         _vec_frame(spark, [(1, _oh(0))]), target)
     b1.collect()
     c1()
     c1()  # duplicate appends under bands/ and vecs/
-    assert compact_seen_store_s3(spark, target) > 0
+    assert compact_seen_store(spark, target) > 0
     for sub in ("bands", "vecs"):
         for b in range(target.num_buckets):
             ks = [k for k in target.list_keys(under=f"{sub}/kb={b}")
                   if k.endswith(".parquet")]
             assert len(ks) <= 1, (sub, b, ks)
-    probe, _ = seen_embedding_filter_s3(
+    probe, _ = seen_embedding_filter(
         _vec_frame(spark, [(2, _oh(0, scale=0.5)), (3, _oh(3))]),
         target)
     assert sorted(r.vec_id for r in probe.collect()) == [3]
@@ -1217,14 +1157,14 @@ def test_dedup_state_embedding_yaml_s3(spark, tmp_path, s3_client,
 
 def test_cli_compact_stores_s3_branch(spark, s3_client, target):
     """The CLI maintenance entry routes bucketName dedup_state stores
-    onto compact_seen_store_s3 and dedups shared stores."""
+    onto compact_seen_store and dedups shared stores."""
     from universal_data_connector_spark.cli import _compact_stores
     from universal_data_connector_spark.config import parse_config
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_filter_s3,
+        seen_filter,
     )
 
-    b, c = seen_filter_s3(_doc_frame(spark, [(1, "cli compact")]),
+    b, c = seen_filter(_doc_frame(spark, [(1, "cli compact")]),
                           target, ["text"])
     b.collect()
     c()
@@ -1245,7 +1185,7 @@ def test_cli_compact_stores_s3_branch(spark, s3_client, target):
         ks = [k for k in target.list_keys(under=f"kb={b_}")
               if k.endswith(".parquet")]
         assert len(ks) <= 1
-    probe, _ = seen_filter_s3(
+    probe, _ = seen_filter(
         _doc_frame(spark, [(2, "cli compact"), (3, "fresh")]),
         target, ["text"])
     assert sorted(r.doc_id for r in probe.collect()) == [3]
@@ -1259,22 +1199,22 @@ def test_cli_vacuum_stores_spares_colocated_seen_store(
     from universal_data_connector_spark.cli import _vacuum_stores
     from universal_data_connector_spark.config import parse_config
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_filter_s3,
-        seen_near_filter_s3,
+        seen_filter,
+        seen_near_filter,
     )
 
     # two merges -> first generation superseded; plus co-located stores
-    agg_state_merge_s3(_frame(spark, [(1, 1, 1.0)]), 1,
+    additive_merge(_frame(spark, [(1, 1, 1.0)]), 1,
                        target=target, keys=["user_id"],
                        value_col="value")
-    agg_state_merge_s3(_frame(spark, [(1, 2, 2.0)]), 2,
+    additive_merge(_frame(spark, [(1, 2, 2.0)]), 2,
                        target=target, keys=["user_id"],
                        value_col="value")
-    b, c = seen_filter_s3(_doc_frame(spark, [(1, "keep me")]), target,
+    b, c = seen_filter(_doc_frame(spark, [(1, "keep me")]), target,
                           ["text"])
     b.collect()
     c()
-    nb, nc = seen_near_filter_s3(_doc_frame(spark, [(2, _NB)]), target)
+    nb, nc = seen_near_filter(_doc_frame(spark, [(2, _NB)]), target)
     nb.collect()
     nc()
 
@@ -1301,10 +1241,10 @@ def test_cli_vacuum_stores_spares_colocated_seen_store(
                and "/sigs/" not in k for k in deleted), deleted
     # both stores still answer
     assert _totals(spark, target)[1][0] == 2
-    p1, _ = seen_filter_s3(_doc_frame(spark, [(3, "keep me")]), target,
+    p1, _ = seen_filter(_doc_frame(spark, [(3, "keep me")]), target,
                            ["text"])
     assert p1.count() == 0
-    p2, _ = seen_near_filter_s3(
+    p2, _ = seen_near_filter(
         _doc_frame(spark, [(4, _NB + " tweak")]), target)
     assert p2.count() == 0
 
@@ -1365,13 +1305,13 @@ def test_read_state_s3_eager_snapshot_survives_merge_and_vacuum(
     objects per action), so a caller interleaving reads with a merge
     commit plus vacuum would re-evaluate against deleted generations.
     ``eager=True`` restores the pinned-snapshot behavior."""
-    upsert_merge_s3(_frame(spark, [(1, 10, 1.0)]), 1, target=target,
+    keep_latest_merge(_frame(spark, [(1, 10, 1.0)]), 1, target=target,
                     keys=["user_id"], order_col="ord")
     snap = read_state_s3(
         spark, target, "user_id bigint, ord bigint, value double",
         eager=True)
     # supersede the generation the snapshot came from, then vacuum it
-    upsert_merge_s3(_frame(spark, [(1, 20, 9.0)]), 2, target=target,
+    keep_latest_merge(_frame(spark, [(1, 20, 9.0)]), 2, target=target,
                     keys=["user_id"], order_col="ord")
     vacuum_target(target)
     got = {r.user_id: (r.ord, r.value) for r in snap.collect()}

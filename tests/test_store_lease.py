@@ -354,7 +354,7 @@ def test_posix_interleaved_commits_and_compactions_lose_nothing(
     # every committed text must filter as SEEN
     probe, _ = seen_filter(
         _docs(spark, list(enumerate(committed))), store, ["text"],
-        num_buckets=4, persist=False)
+        num_buckets=4)
     assert probe.count() == 0
 
 
@@ -394,45 +394,45 @@ def target(s3_client):
 
 def _seed_s3(spark, target) -> None:
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_filter_s3,
+        seen_filter,
     )
-    _, c = seen_filter_s3(_docs(spark, [(1, "aa"), (2, "bb")]),
+    _, c = seen_filter(_docs(spark, [(1, "aa"), (2, "bb")]),
                           target, ["text"])
     c()
 
 
 def test_s3_compaction_refused_while_commit_in_flight(spark, target):
     from universal_data_connector_spark.operators.dedup_state import (
-        compact_seen_store_s3,
+        compact_seen_store,
     )
     from universal_data_connector_spark.store_lease import s3_writer_mark
     _seed_s3(spark, target)
     with s3_writer_mark(target):
         with pytest.raises(StoreLeaseHeld):
-            compact_seen_store_s3(spark, target)
-    compact_seen_store_s3(spark, target)
+            compact_seen_store(spark, target)
+    compact_seen_store(spark, target)
 
 
 def test_s3_seen_append_proceeds_during_maintenance(spark, target):
-    """Deliberate asymmetry vs POSIX (see ``_s3_append_sub``): the
+    """Deliberate asymmetry vs POSIX (see ``S3SeenStore.append``): the
     object-store seen append is provably safe against compaction
     (listing-scoped deletes) and vacuum (namespace-excluded), so it
     takes NO writer mark — at 100 TB a compaction pass is long and a
     refusal would stall every ingest commit for its duration. The
     append must succeed under a held lease and its keys must stick."""
     from universal_data_connector_spark.operators.dedup_state import (
-        seen_filter_s3,
+        seen_filter,
     )
     from universal_data_connector_spark.store_lease import (
         s3_maintenance_lease,
     )
     _seed_s3(spark, target)
-    survivors, commit = seen_filter_s3(
+    survivors, commit = seen_filter(
         _docs(spark, [(3, "cc")]), target, ["text"])
     assert _ids(survivors) == [3]
     with s3_maintenance_lease(target):
         commit()  # not refused, not lost
-    probe, _ = seen_filter_s3(_docs(spark, [(4, "cc")]),
+    probe, _ = seen_filter(_docs(spark, [(4, "cc")]),
                               target, ["text"])
     assert _ids(probe) == []
 
@@ -455,16 +455,16 @@ def test_s3_merge_refused_under_maintenance_lease(spark, target):
     from universal_data_connector_spark.store_lease import (
         s3_maintenance_lease,
     )
-    from universal_data_connector_spark.streaming.object_state import (
-        upsert_merge_s3,
+    from universal_data_connector_spark.streaming.windows import (
+        keep_latest_merge,
     )
     frame = spark.createDataFrame(
         [(1, 10, 1.0)], "user_id bigint, ord bigint, value double")
     with s3_maintenance_lease(target):
         with pytest.raises(StoreLeaseHeld):
-            upsert_merge_s3(frame, 1, target=target,
+            keep_latest_merge(frame, 1, target=target,
                             keys=["user_id"], order_col="ord")
-    upsert_merge_s3(frame, 1, target=target, keys=["user_id"],
+    keep_latest_merge(frame, 1, target=target, keys=["user_id"],
                     order_col="ord")
 
 
@@ -472,12 +472,14 @@ def test_s3_vacuum_never_deletes_lease_namespace(spark, target):
     """The control objects (lease while held, writer-mark namespace)
     are excluded from the vacuum's garbage listing."""
     from universal_data_connector_spark.streaming.object_state import (
-        upsert_merge_s3,
         vacuum_target,
+    )
+    from universal_data_connector_spark.streaming.windows import (
+        keep_latest_merge,
     )
     frame = spark.createDataFrame(
         [(1, 10, 1.0)], "user_id bigint, ord bigint, value double")
-    upsert_merge_s3(frame, 1, target=target, keys=["user_id"],
+    keep_latest_merge(frame, 1, target=target, keys=["user_id"],
                     order_col="ord")
     # a stale (ttl=0) mark: vacuum cleans it via the staleness rule,
     # but never lists the namespace as data garbage

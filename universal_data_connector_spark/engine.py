@@ -249,8 +249,8 @@ def _dedup_state_transform(df: DataFrame, props: dict) -> DataFrame:
     because the commit must observe sink success — which means
     dedup_state must be the LAST transformation of a streaming
     pipeline (enforced in ``apply_transformations``)."""
+    _check_dedup_state_props(df.columns, props)
     if df.isStreaming:
-        _check_dedup_state_props(df.columns, props)
         df._udc_stream_dedup_state = dict(props)
         return df
     if props.get("compactEveryBatches") is not None:
@@ -260,30 +260,18 @@ def _dedup_state_transform(df: DataFrame, props: dict) -> DataFrame:
         log.warning("dedup_state: compactEveryBatches applies to "
                     "streaming pipelines only; batch runs compact via "
                     "--compact-stores / POST /api/pipelines/maintenance")
-    # POSIX stores: the batch's writer mark spans the WHOLE
-    # read-filter-ship-commit, exactly like the streaming path's
-    # batch_span (ADVICE r17 medium): without it, a cross-process
-    # compaction's rename swap mid-READ makes a bucket dir silently
-    # vanish from seen_filter's listing, letting already-seen keys
-    # ship as new BEFORE the commit's own mark-guarded refusal could
-    # land. With the span, a batch building during maintenance refuses
-    # up front, and maintenance starting mid-batch sees the mark and
-    # refuses. The object-store twin deliberately keeps its no-mark
-    # read (r16 asymmetry): its compaction deletes only listed
-    # objects, so a racing read fails LOUDLY instead of silently
-    # missing a bucket. The span is closed by the wrapped commit
-    # post-sink, or by the runner's finally on any failure path
-    # (close_store_spans — ExitStack.close is idempotent).
+    # the store's span covers the WHOLE read-filter-ship-commit, like
+    # the streaming path's (``span`` in operators/dedup_state.py). It
+    # is closed by the wrapped commit post-sink, or by the runner's
+    # finally on any failure path (close_store_spans — ExitStack.close
+    # is idempotent).
     import contextlib
 
+    store = dedup_state_store(props)
     span = contextlib.ExitStack()
-    if props.get("stateDir") and not props.get("bucketName"):
-        from universal_data_connector_spark.store_lease import (
-            posix_writer_mark,
-        )
-        span.enter_context(posix_writer_mark(props["stateDir"]))
+    span.enter_context(store.span())
     try:
-        survivors, commit = _seen_filter_for(df, props)
+        survivors, commit = _seen_filter_for(df, props, store)
     except BaseException:
         span.close()
         raise
@@ -355,13 +343,36 @@ def _check_dedup_state_props(columns: list, props: dict) -> None:
             "'bucketName' (object store)")
 
 
-def _seen_filter_for(df: DataFrame, props: dict):
+def dedup_state_store(props: dict):
+    """The seen store a dedup_state's props name, None when they name
+    none: ``bucketName`` routes onto the object store (the state
+    sinks' S3 props: bucketName/prefix/endpoint/accessKey/secretKey),
+    else ``stateDir`` onto a POSIX directory of ``numBuckets``
+    buckets."""
+    from universal_data_connector_spark.operators.dedup_state import (
+        seen_store,
+    )
+
+    if props.get("bucketName"):
+        from universal_data_connector_spark.sinks.upsert import (
+            s3_state_target,
+        )
+        return seen_store(s3_state_target(props))
+    if props.get("stateDir"):
+        return seen_store(props["stateDir"],
+                          int(props.get("numBuckets", 32)))
+    return None
+
+
+def _seen_filter_for(df: DataFrame, props: dict, store=None):
     """(survivors, commit) for one BATCH frame per the dedup_state
-    props — the mode dispatch (exact/near/embedding), with
-    ``bucketName`` routing onto the object-store sub-stores and
-    ``stateDir`` onto the POSIX ones; every combination shares the
+    props — the mode dispatch (exact/near/embedding) over ``store``
+    (default: the one the props name); every mode shares the
     append-only crash contract."""
+    from universal_data_connector_spark.operators import dedup_state
+
     _check_dedup_state_props(df.columns, props)
+    store = store or dedup_state_store(props)
     mode = str(props.get("mode", "exact")).lower()
     if mode == "near":
         # MinHash-LSH against history: textColumn holds the document
@@ -377,25 +388,11 @@ def _seen_filter_for(df: DataFrame, props: dict):
                            ("shingleN", "shingle_n")):
             if props.get(prop) is not None:
                 kw[name] = int(props[prop])
-        if props.get("bucketName"):
-            from universal_data_connector_spark.operators.dedup_state \
-                import seen_near_filter_s3
-            from universal_data_connector_spark.sinks.upsert import (
-                s3_state_target,
-            )
-
-            return seen_near_filter_s3(df, s3_state_target(props), **kw)
-        from universal_data_connector_spark.operators.dedup_state import (
-            seen_near_filter,
-        )
-
-        return seen_near_filter(
-            df, props["stateDir"],
-            num_buckets=int(props.get("numBuckets", 32)), **kw)
+        return dedup_state.seen_near_filter(df, store, **kw)
     if mode == "embedding":
         # hyperplane-LSH + exact-cosine against history: vectorColumn
         # holds the embedding (array of float/double), idColumn a
-        # unique row id; same store routing as mode near.
+        # unique row id.
         kw = {"vec_col": props.get("vectorColumn", "embedding"),
               "id_col": props.get("idColumn", "vec_id"),
               "threshold": float(props.get("threshold", 0.95))}
@@ -403,41 +400,10 @@ def _seen_filter_for(df: DataFrame, props: dict):
                            ("seed", "seed")):
             if props.get(prop) is not None:
                 kw[name] = int(props[prop])
-        if props.get("bucketName"):
-            from universal_data_connector_spark.operators.dedup_state \
-                import seen_embedding_filter_s3
-            from universal_data_connector_spark.sinks.upsert import (
-                s3_state_target,
-            )
-
-            return seen_embedding_filter_s3(
-                df, s3_state_target(props), **kw)
-        from universal_data_connector_spark.operators.dedup_state import (
-            seen_embedding_filter,
-        )
-
-        return seen_embedding_filter(
-            df, props["stateDir"],
-            num_buckets=int(props.get("numBuckets", 32)), **kw)
+        return dedup_state.seen_embedding_filter(df, store, **kw)
     cols = [c.strip() for c in str(props.get("keys", "content")).split(",")
             if c.strip()]
-    if props.get("bucketName"):
-        # object-store seen store: same S3 props shape as the state
-        # sinks (bucketName/prefix/endpoint/accessKey/secretKey)
-        from universal_data_connector_spark.operators.dedup_state import (
-            seen_filter_s3,
-        )
-        from universal_data_connector_spark.sinks.upsert import (
-            s3_state_target,
-        )
-
-        return seen_filter_s3(df, s3_state_target(props), cols)
-    from universal_data_connector_spark.operators.dedup_state import (
-        seen_filter,
-    )
-
-    return seen_filter(df, props["stateDir"], cols,
-                       int(props.get("numBuckets", 32)))
+    return dedup_state.seen_filter(df, store, cols)
 
 
 TRANSFORMS = {
@@ -772,25 +738,15 @@ def start_streaming_sink(df: DataFrame, sink_cfg):
             "streaming dedup_state needs 'checkpointLocation' (no "
             "stateDir or sink path to derive one from)")
 
-    def compact_store(spark) -> None:
-        if props.get("bucketName"):
-            from universal_data_connector_spark.operators.dedup_state \
-                import compact_seen_store_s3
-            from universal_data_connector_spark.sinks.upsert import (
-                s3_state_target,
-            )
-            compact_seen_store_s3(spark, s3_state_target(props))
-        else:
-            from universal_data_connector_spark.operators.dedup_state \
-                import compact_seen_store
-            compact_seen_store(spark, props["stateDir"])
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        from universal_data_connector_spark.operators.dedup_state import (
+            compact_seen_store,
+        )
         from universal_data_connector_spark.operators.relational import (
             pin_scope, release_frames,
         )
         from universal_data_connector_spark.store_lease import (
-            lease_owner,
+            StoreLeaseHeld, lease_owner,
         )
 
         # checkpoint-scoped lease owner: the store_lease marks this
@@ -799,31 +755,14 @@ def start_streaming_sink(df: DataFrame, sink_cfg):
         # query (same checkpoint, single-writer by Spark's checkpoint
         # contract) may break its dead predecessor's stale artifacts
         # instead of wedging on them
-        # POSIX stores: the batch's writer mark spans the WHOLE
-        # read-filter-ship-commit (r17 review), not just the commit —
-        # a compaction's rename swap mid-READ makes a bucket dir
-        # silently vanish from the listing, letting already-seen keys
-        # ship as new BEFORE the commit's own refusal lands. With the
-        # span, a batch starting during maintenance refuses before
-        # reading anything, and maintenance starting mid-batch sees
-        # the mark and refuses. The object-store twin deliberately
-        # keeps its no-mark read (r16 asymmetry): its compaction
-        # deletes only listed objects, so a racing read fails LOUDLY
-        # on a missing object instead of silently missing a bucket.
-        import contextlib
-
-        def batch_span():
-            if props.get("stateDir"):
-                from universal_data_connector_spark.store_lease import (
-                    posix_writer_mark,
-                )
-                return posix_writer_mark(props["stateDir"])
-            return contextlib.nullcontext()
-
+        # the store's span covers the WHOLE read-filter-ship-commit
+        # (``span`` in operators/dedup_state.py)
         with lease_owner(f"stream:{checkpoint}"):
-            with batch_span(), pin_scope() as pins:
+            store = dedup_state_store(props)
+            with store.span(), pin_scope() as pins:
                 try:
-                    survivors, commit = _seen_filter_for(batch_df, props)
+                    survivors, commit = _seen_filter_for(batch_df, props,
+                                                         store)
                     create_sink(survivors, sink_cfg, streaming=False)
                     commit()
                 finally:
@@ -834,11 +773,9 @@ def start_streaming_sink(df: DataFrame, sink_cfg):
             # maintenance) must NOT kill the query: the batch already
             # committed and the next cadence catches up (ADVICE r16)
             if compact_every and (batch_id + 1) % compact_every == 0:
-                from universal_data_connector_spark.store_lease import (
-                    StoreLeaseHeld,
-                )
                 try:
-                    compact_store(batch_df.sparkSession)
+                    compact_seen_store(batch_df.sparkSession,
+                                       dedup_state_store(props))
                 except StoreLeaseHeld as exc:
                     log.warning(
                         "dedup_state cadence compaction skipped at "

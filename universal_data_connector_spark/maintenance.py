@@ -25,12 +25,9 @@ def compact_stores(spark, cfg, keep_going=None) -> list[dict]:
     boundary instead of running the remaining stores to completion —
     each store's own compaction stays atomic (lease-scoped), so an
     abort never leaves a store half-compacted."""
+    from universal_data_connector_spark.engine import dedup_state_store
     from universal_data_connector_spark.operators.dedup_state import (
         compact_seen_store,
-        compact_seen_store_s3,
-    )
-    from universal_data_connector_spark.sinks.upsert import (
-        s3_state_target,
     )
 
     done, seen = [], set()
@@ -40,24 +37,14 @@ def compact_stores(spark, cfg, keep_going=None) -> list[dict]:
                 return done
             if t.type != "dedup_state":
                 continue
-            props = t.properties
-            if props.get("bucketName"):
-                label = (f"s3://{props['bucketName']}/"
-                         f"{props.get('prefix') or ''}")
-                if label in seen:
-                    continue
-                seen.add(label)
-                deleted = compact_seen_store_s3(
-                    spark, s3_state_target(props))
-                done.append({"store": label,
-                             "superseded_deleted": deleted})
-            elif props.get("stateDir"):
-                store = props["stateDir"]
-                if store in seen:
-                    continue
-                seen.add(store)
-                compact_seen_store(spark, store)
-                done.append({"store": store})
+            store = dedup_state_store(t.properties)
+            if store is None or store.label in seen:
+                continue
+            seen.add(store.label)
+            deleted = compact_seen_store(spark, store)
+            done.append({"store": store.label} if deleted is None else
+                        {"store": store.label,
+                         "superseded_deleted": deleted})
     return done
 
 

@@ -4,7 +4,7 @@ The manager's ``maintenance_window`` can only exclude pipelines IT
 knows about: a second config (or a second process) writing the same
 store path is invisible to one manager's config-name view, and POSIX
 compaction's rename swap racing a concurrent append silently deletes
-freshly appended seen keys (``dedup_state._compact_root``). This
+freshly appended seen keys (``dedup_state.PosixSeenStore.compact``). This
 module moves the exclusion INTO the store, so it holds across
 configs, managers and processes:
 

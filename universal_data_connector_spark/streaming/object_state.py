@@ -63,20 +63,13 @@ PUTs; keyed state on S3 is an engine extension, recorded in SURVEY
 from __future__ import annotations
 
 import json
-import os
-from functools import partial
 
 from pyspark.sql import DataFrame
 
 from universal_data_connector_spark.session import local_frame
 from universal_data_connector_spark.streaming.windows import (
     Committed,
-    additive_merge,
     by_bucket,
-    claim_batch_run,
-    foreachbatch_merge,
-    keep_latest_merge,
-    record_touched,
 )
 
 _KB = "udc_kb"                      # same bucket column as the POSIX twin
@@ -539,24 +532,6 @@ def _gen_key_fmt(target: S3StateTarget, gen_id: int) -> str:
                       "part-{nonce}-{i}.parquet")
 
 
-def upsert_merge_s3(batch_df: DataFrame, batch_id: int, *,
-                    target: S3StateTarget, keys: list[str],
-                    order_col: str) -> None:
-    """``keep_latest_merge`` into the object-store target."""
-    keep_latest_merge(batch_df, batch_id, target=target, keys=keys,
-                      order_col=order_col)
-
-
-def agg_state_merge_s3(batch_df: DataFrame, batch_id: int, *,
-                       target: S3StateTarget, keys: list[str],
-                       value_col: str) -> None:
-    """``additive_merge`` into the object-store target: the applied id
-    inside the pointer, committed by CAS, stands in for the POSIX
-    marker-in-renamed-dir."""
-    additive_merge(batch_df, batch_id, target=target, keys=keys,
-                   value_col=value_col)
-
-
 def read_state_s3(spark, target: S3StateTarget, schema: str,
                   eager: bool = False) -> DataFrame:
     """Read the committed state of every bucket (pointer-listed objects
@@ -603,11 +578,13 @@ def vacuum_target(target: S3StateTarget) -> int:
     A dedup seen store co-located under the same bucket+prefix shares
     the ``kb=<K>/`` namespace but is APPEND-ONLY (no pointer ever
     references its objects) — vacuuming it would delete the whole
-    dedup history, so its namespaces are excluded: ``seen-*`` object
-    names, the ``bands/``/``sigs/``/``vecs/`` sub-prefixes, and the
-    near/embedding meta records. The lease/writer-mark control
+    dedup history, so its namespace is excluded
+    (``dedup_state.is_seen_object``). The lease/writer-mark control
     objects are likewise excluded (this vacuum holds the one lease
     that exists while it runs)."""
+    from universal_data_connector_spark.operators.dedup_state import (
+        is_seen_object,
+    )
     from universal_data_connector_spark.store_lease import (
         LEASE_NAME,
         WRITERS_DIR,
@@ -620,66 +597,13 @@ def vacuum_target(target: S3StateTarget) -> int:
             ptr, _ = target.read_pointer(b)
             if ptr:
                 live.update(ptr["objects"])
-        keep_suffixes = ("/_ptr",)
         keep_names = {target._key(_META_KEY), target._key(_INTENT_KEY),
-                      target._key("_udc_near_meta"),
-                      target._key("_udc_emb_dim"),
                       target._key(LEASE_NAME)}
-        prefix = f"{target.prefix}/" if target.prefix else ""
-        seen_subs = tuple(f"{prefix}{s}/"
-                          for s in ("bands", "sigs", "vecs",
-                                    WRITERS_DIR))
+        writers = target._key(WRITERS_DIR) + "/"
         garbage = [k for k in target.list_keys()
-                   if k not in live and not k.endswith(keep_suffixes)
-                   and k not in keep_names
-                   and not k.startswith(seen_subs)
-                   and not os.path.basename(k).startswith("seen-")]
+                   if k not in live and not k.endswith("/_ptr")
+                   and k not in keep_names and not k.startswith(writers)
+                   and not is_seen_object(target, k)]
         if garbage:
             target.delete_keys(garbage)
     return len(garbage)
-
-
-def foreachbatch_upsert_s3(stream: DataFrame, target: S3StateTarget,
-                           keys: list[str], order_col: str,
-                           checkpoint: str,
-                           trigger_available_now: bool = True):
-    """Streaming keep-latest upsert into an object-store target; the
-    checkpoint numbers batches, the pointer CAS makes each bucket's
-    swap atomic, and the applied id in the pointer makes replays
-    converge — exactly-once end to end."""
-    return foreachbatch_merge(
-        stream, partial(keep_latest_merge, target=target, keys=keys,
-                        order_col=order_col),
-        checkpoint, trigger_available_now)
-
-
-def foreachbatch_agg_state_s3(stream: DataFrame, target: S3StateTarget,
-                              keys: list[str], value_col: str,
-                              checkpoint: str,
-                              trigger_available_now: bool = True):
-    """Streaming additive aggregate state on an object store:
-    at-least-once foreachBatch delivery + applied-id-in-pointer CAS
-    commits = exactly-once additive state, no rename required."""
-    return foreachbatch_merge(
-        stream, partial(additive_merge, target=target, keys=keys,
-                        value_col=value_col),
-        checkpoint, trigger_available_now)
-
-
-def begin_batch_run_s3(target: S3StateTarget,
-                       fingerprint: str | None = None) -> int:
-    """``claim_batch_run`` on the object-store target; the intent
-    object is claimed with ``If-None-Match:*``, the CAS equivalent of
-    ``O_CREAT|O_EXCL``."""
-    return claim_batch_run(target, fingerprint)
-
-
-def record_touched_s3(target: S3StateTarget, run_id: int,
-                      touched: list[int]) -> None:
-    """``record_touched`` on the object-store target."""
-    record_touched(target, run_id, touched)
-
-
-def end_batch_run_s3(target: S3StateTarget) -> None:
-    """Clear the intent after a successful batch merge."""
-    target.intent_clear()

@@ -135,21 +135,30 @@ _BATCH_INTENT = "_udc_batch_intent"
 _DEC = "decimal(27,6)"
 
 
-def _upsert_recover(path: str) -> None:
-    """Crash recovery for the per-bucket swap: restore any bucket whose
-    live dir went missing mid-swap, drop completed-swap leftovers and
-    partial staging. Idempotent; runs on every merge() entry so a
-    restarted stream always sees a complete target before re-merging."""
-    if not os.path.isdir(path):
-        return
-    shutil.rmtree(os.path.join(path, _UPSERT_STAGED_DIR),
-                  ignore_errors=True)
-    for name in os.listdir(path):
+def swap_bucket(root: str, b, new: str) -> None:
+    """Swap the staged dir ``new`` live as bucket ``b`` under ``root``:
+    the live dir is parked as ``_udc_old_<b>``, the staged dir renamed
+    into its place, the parked copy removed. ``repair_swaps`` repairs
+    a crash between the two renames. The one bucket swap of the state
+    sinks and the seen-store compaction."""
+    live = os.path.join(root, f"{_UPSERT_BUCKET_COL}={b}")
+    old = os.path.join(root, f"{_UPSERT_OLD_PREFIX}{b}")
+    if os.path.isdir(live):
+        os.rename(live, old)
+    os.rename(new, live)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def repair_swaps(root: str) -> None:
+    """Repair interrupted ``swap_bucket`` calls under ``root``:
+    restore any bucket whose live dir went missing mid-swap and drop
+    completed-swap leftovers. Idempotent."""
+    for name in os.listdir(root):
         if not name.startswith(_UPSERT_OLD_PREFIX):
             continue
         bucket = name[len(_UPSERT_OLD_PREFIX):]
-        live = os.path.join(path, f"{_UPSERT_BUCKET_COL}={bucket}")
-        old = os.path.join(path, name)
+        live = os.path.join(root, f"{_UPSERT_BUCKET_COL}={bucket}")
+        old = os.path.join(root, name)
         if os.path.isdir(live):
             # crash happened after the new bucket went live but before
             # cleanup — the old copy is superseded
@@ -158,6 +167,17 @@ def _upsert_recover(path: str) -> None:
             # crash happened between "live -> old" and "staged -> live":
             # the old copy is still the current state — put it back
             os.rename(old, live)
+
+
+def _upsert_recover(path: str) -> None:
+    """Crash recovery for the per-bucket swap: drop partial staging and
+    repair interrupted swaps. Runs on every merge() entry so a
+    restarted stream always sees a complete target before re-merging."""
+    if not os.path.isdir(path):
+        return
+    shutil.rmtree(os.path.join(path, _UPSERT_STAGED_DIR),
+                  ignore_errors=True)
+    repair_swaps(path)
 
 
 def _reject_remote_target(path: str) -> None:
@@ -396,12 +416,7 @@ class PosixStateTarget:
                  "w").close()
         elif not os.path.isdir(new):
             return
-        live = self._dir(b)
-        old = os.path.join(self.path, f"{_UPSERT_OLD_PREFIX}{b}")
-        if os.path.isdir(live):
-            os.rename(live, old)
-        os.rename(new, live)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_bucket(self.path, b, new)
 
     def writer_mark(self):
         """No-op: a POSIX target has no vacuum to fence off."""
@@ -715,8 +730,9 @@ def foreachbatch_upsert(stream: DataFrame, path: str, keys: list[str],
     swap, repaired on every batch entry; the merge is idempotent, so a
     replayed batch converges to exactly-once state. ``num_buckets`` is
     fixed at target creation (``_udc_buckets``). Local/POSIX paths
-    only; on an object store use ``object_state.foreachbatch_upsert_s3``
-    or a lakehouse table format (Delta/Iceberg ``MERGE INTO``)."""
+    only; on an object store run ``foreachbatch_merge`` with
+    ``keep_latest_merge`` over an ``object_state.S3StateTarget``, or
+    use a lakehouse table format (Delta/Iceberg ``MERGE INTO``)."""
     return foreachbatch_merge(
         stream, partial(keep_latest_merge,
                         target=PosixStateTarget(path, num_buckets),
@@ -759,7 +775,8 @@ def foreachbatch_agg_state(stream: DataFrame, path: str, keys: list[str],
     ``_applied_<batch_id>`` marker that travels with the rename, so a
     replayed batch applies to exactly the unswapped buckets
     (``additive_merge``). Local-filesystem targets only; on an object
-    store use ``object_state.foreachbatch_agg_state_s3``."""
+    store run ``foreachbatch_merge`` with ``additive_merge`` over an
+    ``object_state.S3StateTarget``."""
     return foreachbatch_merge(
         stream, partial(additive_merge,
                         target=PosixStateTarget(path, num_buckets),
