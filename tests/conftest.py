@@ -38,14 +38,32 @@ _SLOW_FILES = {
 }
 
 # ...except one smoke test per slow file (a single-pass commit/recover
-# test per state-store file, the smallest of the cast properties) and
-# the object-store seen store's two-batch filter, so the default tier
-# still runs every store's write path on both backends and the casts
+# test per state-store file, the smallest of the cast properties), the
+# object-store seen store's two-batch filter, and the lease-internals
+# tests of test_store_lease.py (fence, self-fence, nonce registry,
+# staleness matrix, heartbeat pool; ~10 s together), so the default
+# tier still runs every store's write path on both backends, the
+# lease protocol's fences and the casts
 _DEFAULT_TIER_SMOKE = {
     "test_dedup_state.py::test_replayed_commit_is_harmless_and_compactable",
     "test_s3_state.py::test_agg_state_crash_before_cas_then_replay_converges",
     "test_s3_state.py::test_seen_filter_s3_across_batches",
     "test_store_lease.py::test_posix_stale_dead_pid_artifacts_are_broken",
+    *(f"test_store_lease.py::{name}" for name in (
+        "test_posix_renewer_never_overwrites_successor",
+        "test_posix_renewer_failure_releases_claim",
+        "test_wedged_nonce_ages_out_and_same_owner_supersedes",
+        "test_posix_paused_holder_untouched_artifact_still_released",
+        "test_posix_paused_holder_replaced_artifact_still_fenced",
+        "test_heartbeat_pool_many_holders_all_tick_and_stop_clean",
+        "test_is_stale_decision_matrix",
+        "test_hung_renewal_does_not_starve_other_heartbeats",
+        "test_posix_fenced_release_leaves_successor_file",
+        "test_posix_fenced_release_still_unwedges_untouched_artifact",
+        "test_posix_fenced_release_catches_same_inode_overwrite",
+        "test_nonce_exclusion_bound_scales_with_claim_schedule",
+        "test_heartbeat_pool_grows_past_static_cap_under_hung_renewals",
+    )),
     "test_casts_property.py::test_defaults_close_the_null_channel",
 }
 

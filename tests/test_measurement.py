@@ -53,3 +53,32 @@ def test_profile_keys_reads_jobs_from_the_event_log():
     assert len(reps) == 1
     assert reps[0]["spark.jobs"] >= 1 and reps[0]["spark.tasks"] >= 1
     assert reps[0]["wall_s"] > 0
+
+
+def test_trace_hooks_resolve_and_time_the_writer_mark(tmp_path, monkeypatch):
+    """Every attribute the traced benchmark run wraps resolves on the
+    package, and entering a POSIX seen store's batch span records
+    exactly one ``store_lease.writer_mark_s`` span. A renamed
+    attribute, or a caller binding the name at import time, would
+    otherwise zero a reported layer without any error."""
+    import importlib
+
+    from perfbench import tracing
+    from universal_data_connector_spark.operators.dedup_state import (
+        PosixSeenStore,
+    )
+
+    for mod_name, attr, _ in (*tracing.WRAPPED, *tracing.CONTEXT_WRAPPED):
+        owner = importlib.import_module(f"{tracing.PKG}.{mod_name}")
+        *path, leaf = attr.split(".")
+        for part in path:
+            owner = getattr(owner, part)
+        assert callable(getattr(owner, leaf, None)), (mod_name, attr)
+        # restores the unwrapped attribute after the test
+        monkeypatch.setattr(owner, leaf, getattr(owner, leaf))
+    spans = tracing.Spans()
+    tracing.install(spans)
+    with PosixSeenStore(str(tmp_path / "seen")).span():
+        pass
+    assert [name for name, _, _ in spans._spans] == [
+        "store_lease.writer_mark_s"]

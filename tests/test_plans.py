@@ -573,6 +573,46 @@ def test_seen_store_backend_is_picked_in_one_place():
                        ("maintenance.py", "vacuum_stores")}
 
 
+def test_lease_protocol_is_written_once():
+    """Source lint: ``store_lease`` writes the lease protocol once over
+    one object of storage primitives per backend. No function is a
+    ``_posix_*``/``_s3_*`` twin; the nonce registration, the refusal
+    and the expiry check each sit in one protocol function; the
+    exclusive create, the PUTs and the control-object delete sit only
+    inside ``_PosixLeases`` and ``_S3Leases``."""
+    import ast
+    import pathlib
+
+    import universal_data_connector_spark as pkg
+
+    tree = ast.parse(
+        (pathlib.Path(pkg.__file__).parent / "store_lease.py").read_text())
+    twins = [n.name for n in ast.walk(tree)
+             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+             and n.name.startswith(("_posix_", "_s3_"))]
+    assert twins == []
+
+    def users(match) -> set[str]:
+        """Top-level definitions holding a node that ``match``es."""
+        return {getattr(top, "name", type(top).__name__)
+                for top in tree.body for n in ast.walk(top) if match(n)}
+
+    def name(n, names):
+        return isinstance(n, ast.Name) and n.id in names
+
+    def attr(n, names):
+        return isinstance(n, ast.Attribute) and n.attr in names
+
+    assert users(lambda n: name(n, {"_held_nonce"})) == {"_hold"}
+    assert users(lambda n: isinstance(n, ast.Call)
+                 and name(n.func, {"StoreLeaseHeld"})) == {"_refusal"}
+    assert users(lambda n: isinstance(n, ast.Call)
+                 and attr(n.func, {"expired"})) == {"_release"}
+    assert users(lambda n: attr(n, {"O_EXCL"})) == {"_PosixLeases"}
+    assert users(lambda n: attr(n, {"put_object", "_put_cas",
+                                    "delete_object"})) == {"_S3Leases"}
+
+
 def _plan_chain(plan) -> list[str]:
     """Node names from ``plan`` down its first-child spine."""
     names = []

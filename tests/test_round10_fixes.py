@@ -142,10 +142,11 @@ def test_begin_batch_run_recorded_zero_swapped_reclaims(spark, tmp_path):
     from universal_data_connector_spark.streaming.windows import (
         _BATCH_INTENT,
         _intent_load,
-        _intent_record_touched,
+        PosixStateTarget,
         agg_state_merge,
         begin_batch_run,
         end_batch_run,
+        record_touched,
     )
 
     def mk(rows):
@@ -163,7 +164,7 @@ def test_begin_batch_run_recorded_zero_swapped_reclaims(spark, tmp_path):
     assert rid1 > rid0
     # crash AFTER recording the planned buckets, BEFORE any swap:
     # every marker in the touched dirs is still below rid1
-    _intent_record_touched(target, rid1, [0, 1, 2, 3])
+    record_touched(PosixStateTarget(target), rid1, [0, 1, 2, 3])
     rid2 = begin_batch_run(target, num_buckets=4, fingerprint="fp2")
     assert rid2 == rid1  # fresh claim recomputes the same next id
     stored = _intent_load(os.path.join(target, _BATCH_INTENT))

@@ -305,14 +305,15 @@ def test_intent_record_touched_posix_unions(tmp_path):
     from universal_data_connector_spark.streaming.windows import (
         _BATCH_INTENT,
         _intent_load,
-        _intent_record_touched,
+        PosixStateTarget,
         begin_batch_run,
+        record_touched,
     )
 
     path = str(tmp_path / "state")
     run = begin_batch_run(path, num_buckets=4, fingerprint="A")
-    _intent_record_touched(path, run, [0, 1])
-    _intent_record_touched(path, run, [1])
+    record_touched(PosixStateTarget(path), run, [0, 1])
+    record_touched(PosixStateTarget(path), run, [1])
     stored = _intent_load(f"{path}/{_BATCH_INTENT}")
     assert stored["touched"] == [0, 1]
 

@@ -161,34 +161,6 @@ def test_sweep_mark_leaves_nothing_behind(spark, tmp_path):
     assert not os.path.isdir(wdir) or os.listdir(wdir) == []
 
 
-def test_posix_renewer_never_overwrites_successor(tmp_path):
-    """Inode fence (r17 review): after a breaker unlinks and re-claims
-    the lease, the old holder's heartbeat must neither overwrite the
-    successor's file (writes go through the held fd -> orphaned
-    inode) nor delete it at release (lost flips on the inode
-    mismatch)."""
-    import json as _json
-    import time as _time
-
-    from universal_data_connector_spark.store_lease import LEASE_NAME
-
-    store = str(tmp_path / "seen")
-    lease = os.path.join(store, LEASE_NAME)
-    successor = {"owner": "successor", "op": "compact", "pid": 1,
-                 "host": "elsewhere", "acquired_unix": 0.0,
-                 "ttl_seconds": None}
-    with posix_maintenance_lease(store, renew_every=0.1):
-        os.unlink(lease)  # a breaker...
-        with open(lease, "w") as fh:  # ...and its successor's claim
-            _json.dump(successor, fh)
-        _time.sleep(0.45)  # several heartbeat ticks fire
-        with open(lease) as fh:
-            assert _json.load(fh)["owner"] == "successor"
-    # release skipped its unlink: the successor's lease survives
-    with open(lease) as fh:
-        assert _json.load(fh)["owner"] == "successor"
-
-
 def test_async_maintenance_stop_lands_cancelled(spark, tmp_path,
                                                 monkeypatch):
     """stop() racing an async maintenance submission always lands: the
@@ -300,30 +272,6 @@ def test_streaming_batch_refuses_before_shipping_under_maintenance(
     finally:
         q2.stop()
     assert sorted(os.listdir(out)) == ["a.txt", "b.txt"]
-
-
-def test_posix_renewer_failure_releases_claim(tmp_path, monkeypatch):
-    """A renewer that fails to construct (fd exhaustion) must release
-    the just-claimed artifact instead of wedging the store until the
-    process exits (r17 review)."""
-    import pytest
-
-    from universal_data_connector_spark import store_lease as sl
-
-    def boom(path, payload, renew_every):
-        raise OSError(24, "Too many open files")
-
-    monkeypatch.setattr(sl, "_posix_renewer", boom)
-    store = str(tmp_path / "seen")
-    with pytest.raises(OSError):
-        with sl.posix_maintenance_lease(store):
-            pass
-    assert not os.path.exists(os.path.join(store, sl.LEASE_NAME))
-    with pytest.raises(OSError):
-        with sl.posix_writer_mark(store):
-            pass
-    wdir = os.path.join(store, sl.WRITERS_DIR)
-    assert os.listdir(wdir) == []
 
 
 def test_maintenance_keep_going_stops_at_store_boundary(spark, tmp_path):

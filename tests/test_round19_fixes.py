@@ -15,12 +15,12 @@ without a renewal is now treated as not-live.
 ADVICE r18 (low ×2): the POSIX release self-fence is inode-narrowed
 (an untouched artifact is provably still ours and gets deleted even
 after a pause past the TTL), and heartbeat ticks dispatch to a small
-worker pool so one hung renewal cannot starve other holders.
+worker pool so one hung renewal cannot starve other holders. The
+tests of these last two paragraphs live in ``tests/test_store_lease.py``.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 import time
@@ -123,86 +123,6 @@ def test_thread_start_failure_closes_store_span(spark, tmp_path,
     monkeypatch.setattr(mgr_mod, "threading", threading)
     assert mgr.jobs() == []  # no registered zombie left behind
     compact_seen_store(spark, store)  # span closed -> no StoreLeaseHeld
-
-
-def test_wedged_nonce_ages_out_and_same_owner_supersedes(
-        tmp_path, monkeypatch):
-    """VERDICT r18 item 4: a nonce registered by a thread that died
-    between claim and finally (no heartbeat ever ran) must stop
-    counting as live once its artifact ages past the TTL without a
-    renewal, so a same-process restart of the owner supersedes instead
-    of wedging until process exit. Fails against the r18
-    ``_is_stale`` (the bare registry check)."""
-    import universal_data_connector_spark.store_lease as sl
-
-    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
-    store = str(tmp_path / "seen")
-    os.makedirs(store)
-    path = os.path.join(store, sl.LEASE_NAME)
-    payload = sl._payload("maintenance", "job:x", None)
-    with open(path, "w") as fh:
-        json.dump(payload, fh)
-    # simulate the wedge: nonce registered, holding frame never
-    # unwinds, renewer never constructed (no heartbeat)
-    with sl._LIVE_NONCES_LOCK:
-        sl._LIVE_NONCES.add(payload["nonce"])
-    try:
-        with sl.lease_owner("job:x"):
-            # artifact still TTL-fresh: the registered nonce holds
-            with pytest.raises(sl.StoreLeaseHeld):
-                with sl.posix_maintenance_lease(store):
-                    pass
-            time.sleep(0.4)  # ages past the TTL with no renewal
-            with sl.posix_maintenance_lease(store):
-                pass  # supersedes the wedged leftover
-    finally:
-        with sl._LIVE_NONCES_LOCK:
-            sl._LIVE_NONCES.discard(payload["nonce"])
-
-
-def test_posix_paused_holder_untouched_artifact_still_released(
-        tmp_path, monkeypatch):
-    """ADVICE r18 (low): on POSIX a same-host live-pid no-TTL leftover
-    is never stale to a different-owner checker, so the r18 self-fence
-    (leave the artifact whenever the pause outlived the TTL) wedged
-    maintenance until process exit. The inode fence proves the file
-    was never broken/re-claimed during the pause and deletes it."""
-    import universal_data_connector_spark.store_lease as sl
-
-    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
-    store = str(tmp_path / "seen")
-    lease = os.path.join(store, sl.LEASE_NAME)
-    # renew_every default (TTL/3) was bound at import => no renewal
-    # lands during the pause; last_ok stays at claim time
-    with sl.posix_maintenance_lease(store):
-        time.sleep(0.5)  # pause past the TTL; nobody touches the file
-    assert not os.path.exists(lease)  # r18 self-fence left it behind
-    # the wedge the advisor described: a DIFFERENT owner proceeds now
-    with sl.lease_owner("other-owner"):
-        with sl.posix_maintenance_lease(store):
-            pass
-
-
-def test_posix_paused_holder_replaced_artifact_still_fenced(
-        tmp_path, monkeypatch):
-    """The narrowing keeps the fence where it matters: if the file was
-    broken and re-claimed during the pause (different inode), the
-    release still leaves the successor's artifact alone."""
-    import universal_data_connector_spark.store_lease as sl
-
-    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
-    store = str(tmp_path / "seen")
-    lease = os.path.join(store, sl.LEASE_NAME)
-    successor = {"owner": "successor", "op": "vacuum", "pid": 1,
-                 "host": "other-host", "nonce": "succ-nonce",
-                 "acquired_unix": time.time(), "ttl_seconds": 3600.0}
-    with sl.posix_maintenance_lease(store):
-        time.sleep(0.5)
-        os.unlink(lease)  # a breaker took the lapsed lease...
-        with open(lease, "w") as fh:  # ...and a successor claimed it
-            json.dump(successor, fh)
-    with open(lease) as fh:
-        assert json.load(fh)["nonce"] == "succ-nonce"
 
 
 def test_abort_interleaving_fuzz_never_wedges_maintenance(
@@ -351,35 +271,6 @@ def test_window_rotation_invariant_holds():
     assert "INVARIANT OK" in proc.stdout
 
 
-def test_heartbeat_pool_many_holders_all_tick_and_stop_clean():
-    """Stress the pooled tick dispatcher: 24 concurrent renewers (6×
-    the pool size) with mixed intervals — every one must keep
-    receiving ticks (no lost re-schedule in the worker handoff) and
-    stop() must leave no tick in flight."""
-    import universal_data_connector_spark.store_lease as sl
-
-    counts = [0] * 24
-    renewers = []
-
-    def make(i):
-        def renew() -> bool:
-            counts[i] += 1
-            return True
-        return renew
-
-    for i in range(24):
-        renewers.append(sl._Renewer(make(i), 0.05 + (i % 3) * 0.03))
-    try:
-        time.sleep(1.5)
-    finally:
-        for r in renewers:
-            r.stop()
-    assert min(counts) >= 3, f"some renewer starved: {counts}"
-    settled = list(counts)
-    time.sleep(0.3)
-    assert counts == settled, "tick fired after stop()"
-
-
 def test_embedding_cosine_banded_oracle_equals_brute_force():
     """VERDICT r18 item 5: the dedup_embedding_cosine oracle now bands
     candidates with the engine's own fixed-seed hyperplanes so it
@@ -407,72 +298,6 @@ def test_embedding_cosine_banded_oracle_equals_brute_force():
         got = sorted(con.sql(ORACLES["dedup_embedding_cosine"]).fetchall())
         want = sorted(con.sql(brute).fetchall())
         assert got == want, f"banded != brute at {sf_dir}"
-
-
-def test_is_stale_decision_matrix(monkeypatch):
-    """Exhaustive truth table for the staleness rules after the r19
-    nonce-TTL narrowing — every (owner-match, pid, host, nonce-state,
-    ttl-state) combination asserted against the module docstring's
-    three rules, so any future edit that flips one cell fails here
-    with the exact combination named."""
-    import socket as _socket
-
-    import universal_data_connector_spark.store_lease as sl
-
-    me_host = _socket.gethostname()
-    me_pid = os.getpid()
-    now = time.time()
-    live_nonce = "tt-live-nonce"
-    with sl._LIVE_NONCES_LOCK:
-        sl._LIVE_NONCES.add(live_nonce)
-    try:
-        def payload(owner="job:x", pid=me_pid, host=me_host,
-                    nonce="tt-unregistered", age=0.0, ttl=None):
-            return {"owner": owner, "op": "t", "pid": pid, "host": host,
-                    "nonce": nonce, "acquired_unix": now - age,
-                    "ttl_seconds": ttl}
-
-        dead_pid = 2 ** 22 + 12345  # outside this sandbox's pid space
-        cases = [
-            # (description, payload, checker_owner, expect_stale)
-            ("own pid + owner + unregistered nonce -> leftover",
-             payload(), "job:x", True),
-            ("own pid + owner + LIVE fresh nonce -> held (ADVICE r17)",
-             payload(nonce=live_nonce), "job:x", False),
-            ("own pid + owner + live nonce but artifact aged past TTL"
-             " -> wedged, breakable (VERDICT r18 item 4)",
-             payload(nonce=live_nonce, age=sl.DEFAULT_S3_TTL + 1),
-             "job:x", True),
-            ("owner mismatch + our live pid -> held",
-             payload(), "job:OTHER", False),
-            ("no owner recorded + our live pid -> held",
-             payload(owner=None), "job:x", False),
-            ("same host, dead pid -> breakable regardless of owner",
-             payload(owner="someone", pid=dead_pid), "job:x", True),
-            ("same host, live pid, no ttl -> held",
-             payload(owner="someone"), "job:x", False),
-            ("foreign host, no ttl -> undecidable here (mtime bound"
-             " lives in _posix_stale, not _is_stale)",
-             payload(host="elsewhere"), "job:OTHER", False),
-            ("foreign host, ttl expired -> breakable",
-             payload(host="elsewhere", age=10.0, ttl=5.0),
-             "job:OTHER", True),
-            ("foreign host, ttl not yet expired -> held",
-             payload(host="elsewhere", age=2.0, ttl=500.0),
-             "job:OTHER", False),
-            ("same OWNER but different pid, live ttl -> held"
-             " (ADVICE r16: zombie predecessor keeps exclusion)",
-             payload(pid=dead_pid + 1, host="elsewhere", ttl=500.0),
-             "job:x", False),
-            ("unreadable payload -> not breakable here",
-             None, "job:x", False),
-        ]
-        for desc, p, checker, want in cases:
-            got = sl._is_stale(p, checker)
-            assert got == want, f"{desc}: got {got}, want {want}"
-    finally:
-        with sl._LIVE_NONCES_LOCK:
-            sl._LIVE_NONCES.discard(live_nonce)
 
 
 def test_embedding_cosine_banded_oracle_boundary_pairs(tmp_path):
@@ -536,35 +361,3 @@ def test_embedding_cosine_banded_oracle_boundary_pairs(tmp_path):
     assert (0, 3) not in got and (0, 6) not in got
     for pair in ((0, 1), (0, 2), (0, 4), (1, 4), (2, 4)):
         assert pair in got, (pair, got)
-
-
-def test_hung_renewal_does_not_starve_other_heartbeats():
-    """ADVICE r18 (low): ticks run on a small worker pool, so a single
-    hung renewal (boto retries can take minutes) cannot head-of-line
-    block every other holder's heartbeat and erode the 2/3-TTL slack.
-    Fails against the r18 serial scheduler (the fast holder gets ~1
-    tick in the window instead of dozens)."""
-    import universal_data_connector_spark.store_lease as sl
-
-    hang = threading.Event()
-
-    def slow_renew() -> bool:
-        hang.wait(10)  # simulated stalled network renewal
-        return True
-
-    ticks: list[float] = []
-
-    def fast_renew() -> bool:
-        ticks.append(time.time())
-        return True
-
-    slow = sl._Renewer(slow_renew, 0.05)
-    fast = sl._Renewer(fast_renew, 0.05)
-    try:
-        time.sleep(1.0)
-        assert len(ticks) >= 5, (
-            f"fast heartbeat starved behind the hung one: {len(ticks)}")
-    finally:
-        hang.set()
-        fast.stop()
-        slow.stop()

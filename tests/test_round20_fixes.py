@@ -114,128 +114,8 @@ def test_rotation_check_red_on_wrong_window(tmp_path, mutation):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r19: store_lease fixes
+# ADVICE r19: scratch sweep and flat props
 # ---------------------------------------------------------------------------
-
-def test_posix_fenced_release_leaves_successor_file(tmp_path, monkeypatch):
-    """ADVICE r19 (medium): the release ownership check runs while the
-    claim fd is still OPEN. A holder paused past the TTL whose lease
-    was broken and re-claimed by a successor must leave the
-    successor's file in place — detected through the held fd
-    (st_nlink==0 / inode mismatch), not a close-then-stat race."""
-    import json as _json
-    import os
-    import time
-
-    import universal_data_connector_spark.store_lease as sl
-
-    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
-    store = str(tmp_path / "seen")
-    lease = os.path.join(store, sl.LEASE_NAME)
-    successor = {"owner": "successor", "op": "vacuum", "pid": 1,
-                 "host": "other-host", "nonce": "succ-nonce",
-                 "acquired_unix": time.time(), "ttl_seconds": 3600.0}
-    # renew_every huge: zero ticks land, so last_ok stays at claim
-    # time and the holder is genuinely expired at release
-    with sl.posix_maintenance_lease(store, renew_every=3600.0):
-        time.sleep(0.5)
-        os.unlink(lease)                 # breaker unlinked ours...
-        with open(lease, "w") as fh:     # ...successor re-claimed
-            _json.dump(successor, fh)
-    with open(lease) as fh:
-        assert _json.load(fh)["nonce"] == "succ-nonce"
-
-
-def test_posix_fenced_release_still_unwedges_untouched_artifact(
-        tmp_path, monkeypatch):
-    """The ADVICE r18 unwedge survives the r20 re-ordering: a holder
-    paused past the TTL whose artifact nobody touched (the common
-    same-host POSIX case) DELETES it — fd nlink, path inode and the
-    payload nonce all still prove ownership."""
-    import os
-    import time
-
-    import universal_data_connector_spark.store_lease as sl
-
-    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
-    store = str(tmp_path / "seen")
-    lease = os.path.join(store, sl.LEASE_NAME)
-    with sl.posix_maintenance_lease(store, renew_every=3600.0):
-        time.sleep(0.5)  # expired, artifact untouched
-    assert not os.path.exists(lease), (
-        "paused-but-untouched lease must be deleted, not left to "
-        "wedge maintenance until process exit")
-
-
-def test_nonce_exclusion_bound_scales_with_claim_schedule():
-    """ADVICE r19 (low): _nonce_holds_exclusion must bound staleness
-    by the claim's ACTUAL ttl/renew cadence, not the bare
-    DEFAULT_S3_TTL — a live on-schedule holder with ttl >
-    3x default (renew interval > 1 h) must not become same-process
-    breakable between its own renewals."""
-    import time
-
-    import universal_data_connector_spark.store_lease as sl
-
-    base = {"owner": "job:x", "op": "maintenance", "pid": 1,
-            "host": "h", "nonce": "n-sched"}
-    aged = time.time() - 2 * sl.DEFAULT_S3_TTL
-    with sl._held_nonce("n-sched"):
-        # default schedule, aged past the default TTL: wedge -> False
-        assert not sl._nonce_holds_exclusion(
-            dict(base, acquired_unix=aged,
-                 ttl_seconds=None, renew_seconds=None))
-        # big caller-supplied TTL: renewals land every ttl/3 > the
-        # default TTL, so the same age is on-schedule -> True
-        assert sl._nonce_holds_exclusion(
-            dict(base, acquired_unix=aged,
-                 ttl_seconds=4 * sl.DEFAULT_S3_TTL,
-                 renew_seconds=4 * sl.DEFAULT_S3_TTL / 3))
-        # POSIX (no ttl) with a slow renew cadence: bound follows
-        # 4x renew_seconds -> True
-        assert sl._nonce_holds_exclusion(
-            dict(base, acquired_unix=aged, ttl_seconds=None,
-                 renew_seconds=sl.DEFAULT_S3_TTL))
-    # not registered at all -> never live
-    assert not sl._nonce_holds_exclusion(
-        dict(base, acquired_unix=time.time(),
-             ttl_seconds=None, renew_seconds=None))
-
-
-def test_heartbeat_pool_grows_past_static_cap_under_hung_renewals():
-    """ADVICE r19 (low): 5+ simultaneously hung renewals (> the
-    static 4-worker pool) must not starve another holder's heartbeat
-    — the pool cap scales with the number of live renewers."""
-    import threading
-    import time
-
-    import universal_data_connector_spark.store_lease as sl
-
-    hang = threading.Event()
-
-    def hung_renew() -> bool:
-        hang.wait(15)
-        return True
-
-    ticks: list[float] = []
-
-    def healthy_renew() -> bool:
-        ticks.append(time.time())
-        return True
-
-    renewers = [sl._Renewer(hung_renew, 0.05) for _ in range(6)]
-    healthy = sl._Renewer(healthy_renew, 0.05)
-    try:
-        time.sleep(1.5)
-        assert len(ticks) >= 5, (
-            f"healthy heartbeat starved behind 6 hung renewals "
-            f"(pre-r20 pool cap): {len(ticks)} ticks")
-    finally:
-        hang.set()
-        healthy.stop()
-        for r in renewers:
-            r.stop()
-
 
 def test_scratch_dir_sweep_is_pid_aware(tmp_path, monkeypatch):
     """ADVICE r19 (low): the scratch sweep must never remove a
@@ -304,33 +184,3 @@ def test_flat_transformation_props_lifted_not_silently_dropped():
     assert cfg.transformations[0].properties == {"condition": "IMPORTANT"}
     assert cfg.transformations[1].properties == {"condition": "nested-wins"}
     assert cfg.sink.properties == {"path": "/out"}
-
-
-def test_posix_fenced_release_catches_same_inode_overwrite(
-        tmp_path, monkeypatch):
-    """Third fence layer: a successor that OVERWRITES the expired
-    lease in place (truncate+write — same path, same inode, so
-    neither fstat-nlink nor the inode compare can see it) is caught
-    by the payload-nonce re-read immediately before the unlink."""
-    import json as _json
-    import os
-    import time
-
-    import universal_data_connector_spark.store_lease as sl
-
-    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
-    store = str(tmp_path / "seen")
-    lease = os.path.join(store, sl.LEASE_NAME)
-    successor = {"owner": "successor", "op": "vacuum", "pid": 1,
-                 "host": "other-host", "nonce": "succ-nonce",
-                 "acquired_unix": time.time(), "ttl_seconds": 3600.0}
-    with sl.posix_maintenance_lease(store, renew_every=3600.0):
-        time.sleep(0.5)  # expired with zero landed renewals
-        ino_before = os.stat(lease).st_ino
-        with open(lease, "w") as fh:  # in-place adoption, inode kept
-            _json.dump(successor, fh)
-        assert os.stat(lease).st_ino == ino_before
-    with open(lease) as fh:
-        assert _json.load(fh)["nonce"] == "succ-nonce", (
-            "release deleted a successor's in-place claim the inode "
-            "checks cannot distinguish — the nonce re-read must fence")

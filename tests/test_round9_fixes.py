@@ -88,20 +88,21 @@ def test_begin_batch_run_changed_fp_incomplete_merge_raises(
     from universal_data_connector_spark.streaming.windows import (
         _APPLIED_PREFIX,
         _UPSERT_BUCKET_COL,
-        _intent_record_touched,
+        PosixStateTarget,
         begin_batch_run,
+        record_touched,
     )
 
     target = str(tmp_path / "state")
     rid = begin_batch_run(target, num_buckets=4, fingerprint="fpA")
     # the run recorded its planned buckets but swapped none of them
     # (no markers exist), then crashed; a changed input reclaims
-    _intent_record_touched(target, rid, [0, 1])
+    record_touched(PosixStateTarget(target), rid, [0, 1])
     assert begin_batch_run(target, num_buckets=4, fingerprint="fpB") == rid
 
     # now run rid is recorded again with ONE of two buckets marked
     # applied — a true partial apply — and the changed input refuses
-    _intent_record_touched(target, rid, [0, 1])
+    record_touched(PosixStateTarget(target), rid, [0, 1])
     bdir = os.path.join(target, f"{_UPSERT_BUCKET_COL}=0")
     os.makedirs(bdir, exist_ok=True)
     open(os.path.join(bdir, f"{_APPLIED_PREFIX}{rid}"), "w").close()

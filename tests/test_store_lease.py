@@ -20,7 +20,9 @@ import os
 import subprocess
 import sys
 import textwrap
+import threading
 import time
+import types
 import uuid
 
 import pytest
@@ -57,18 +59,116 @@ def _seed_store(spark, store) -> None:
 
 
 # ---------------------------------------------------------------------------
-# POSIX: primitive + wiring
+# Both backends: the primitive and its payload format; POSIX: wiring
 # ---------------------------------------------------------------------------
 
-def test_posix_lease_excludes_second_lease(tmp_path):
-    store = str(tmp_path / "seen")
-    with posix_maintenance_lease(store):
+@pytest.fixture(params=["posix", "s3"])
+def backend(request, tmp_path):
+    """A fresh store on one backend: its lease and writer mark through
+    the public entry points, plus direct access to the lease and mark
+    artifacts by their store-relative names."""
+    import universal_data_connector_spark.store_lease as sl
+
+    if request.param == "posix":
+        store = str(tmp_path / "seen")
+        os.makedirs(os.path.join(store, WRITERS_DIR))
+
+        def read(name):
+            with open(os.path.join(store, name)) as fh:
+                return json.load(fh)
+
+        def write(name, payload):
+            with open(os.path.join(store, name), "w") as fh:
+                json.dump(payload, fh)
+
+        return types.SimpleNamespace(
+            lease=lambda: sl.posix_maintenance_lease(store),
+            mark=lambda: sl.posix_writer_mark(store),
+            read=read, write=write, ttl=None,
+            names=lambda: sorted(
+                os.path.relpath(os.path.join(d, f), store)
+                for d, _, fs in os.walk(store) for f in fs))
+    target = request.getfixturevalue("target")
+
+    def write(name, payload):
+        target.client.put_object(Bucket=target.bucket,
+                                 Key=target._key(name),
+                                 Body=json.dumps(payload).encode())
+
+    return types.SimpleNamespace(
+        lease=lambda: sl.s3_maintenance_lease(target),
+        mark=lambda: sl.s3_writer_mark(target),
+        read=lambda name: target._get_json(target._key(name))[0],
+        write=write, ttl=sl.DEFAULT_S3_TTL,
+        names=lambda: sorted(
+            k[len(target.prefix) + 1:] for k in target.list_keys()
+            if k.endswith(LEASE_NAME) or f"/{WRITERS_DIR}/" in k))
+
+
+def test_lease_excludes_second_lease(backend):
+    """Lease and lease, lease and mark exclude each other on both
+    backends. Held artifacts keep their payload keys, order and
+    values, and artifacts in that format from another holder are
+    honoured: a fresh foreign-host holder refuses the other side, a
+    same-host dead pid is broken."""
+    from universal_data_connector_spark.store_lease import DEFAULT_S3_TTL
+
+    keys = ["owner", "op", "pid", "host", "nonce", "acquired_unix",
+            "ttl_seconds", "renew_seconds"]
+    with backend.lease():
         with pytest.raises(StoreLeaseHeld):
-            with posix_maintenance_lease(store):
+            with backend.lease():
                 pass
+        with pytest.raises(StoreLeaseHeld):
+            with backend.mark():
+                pass
+        assert backend.names() == [LEASE_NAME]  # refused mark removed
+        held = backend.read(LEASE_NAME)
+        assert list(held) == keys
+        assert (held["op"], held["pid"], held["ttl_seconds"],
+                held["renew_seconds"]) == (
+            "maintenance", os.getpid(), backend.ttl, DEFAULT_S3_TTL / 3)
+    with backend.mark():
+        (mark,) = backend.names()
+        assert mark.startswith(f"{WRITERS_DIR}/")
+        held = backend.read(mark)
+        assert list(held) == keys
+        assert (held["op"], held["ttl_seconds"]) == ("commit", backend.ttl)
+        with pytest.raises(StoreLeaseHeld):
+            with backend.lease():
+                pass
+        assert backend.names() == [mark]  # refused lease removed
     # released on exit: re-acquirable
-    with posix_maintenance_lease(store):
+    assert backend.names() == []
+    with backend.lease():
         pass
+
+    proc = subprocess.run([sys.executable, "-c",
+                           "import os; print(os.getpid())"],
+                          capture_output=True, text=True, check=True)
+    foreign = {"owner": "elsewhere", "op": "compact", "pid": 1,
+               "host": "other-host", "nonce": "foreign-nonce",
+               "acquired_unix": time.time(), "ttl_seconds": backend.ttl,
+               "renew_seconds": DEFAULT_S3_TTL / 3}
+    dead = dict(foreign, pid=int(proc.stdout),
+                host=__import__("socket").gethostname())
+    planted = f"{WRITERS_DIR}/{uuid.uuid4().hex}"
+    backend.write(LEASE_NAME, foreign)
+    with pytest.raises(StoreLeaseHeld):
+        with backend.mark():
+            pass
+    backend.write(LEASE_NAME, dead)
+    with backend.mark():
+        pass
+    assert backend.names() == []
+    backend.write(planted, dict(foreign, op="commit"))
+    with pytest.raises(StoreLeaseHeld):
+        with backend.lease():
+            pass
+    backend.write(planted, dict(dead, op="commit"))
+    with backend.lease():
+        pass
+    assert backend.names() == []
 
 
 def test_posix_compaction_refused_while_commit_in_flight(
@@ -804,7 +904,7 @@ def test_s3_lease_released_when_renewer_construction_fails(
     def boom(*a, **k):
         raise RuntimeError("can't start thread")
 
-    monkeypatch.setattr(sl, "_s3_renewer", boom)
+    monkeypatch.setattr(sl._S3Leases, "renewer", boom)
     with pytest.raises(RuntimeError, match="can't start thread"):
         with sl.s3_maintenance_lease(target):
             pass
@@ -820,7 +920,7 @@ def test_s3_mark_released_when_renewer_construction_fails(
     def boom(*a, **k):
         raise RuntimeError("can't start thread")
 
-    monkeypatch.setattr(sl, "_s3_renewer", boom)
+    monkeypatch.setattr(sl._S3Leases, "renewer", boom)
     with pytest.raises(RuntimeError, match="can't start thread"):
         with sl.s3_writer_mark(target):
             pass
@@ -843,7 +943,7 @@ def test_s3_paused_holder_release_never_deletes_successor(
             raise OSError("simulated pause: renewal cannot land")
         return sl._Renewer(never_lands, 0.05)
 
-    monkeypatch.setattr(sl, "_s3_renewer", frozen_renewer)
+    monkeypatch.setattr(sl._S3Leases, "renewer", frozen_renewer)
     key = target._key(LEASE_NAME)
     successor = {"owner": "successor", "op": "vacuum", "pid": 1,
                  "host": "other-host", "nonce": "succ-nonce",
@@ -870,7 +970,7 @@ def test_posix_paused_holder_release_never_deletes_successor(
             raise OSError("simulated pause")
         return sl._Renewer(never_lands, 0.05)
 
-    monkeypatch.setattr(sl, "_posix_renewer", frozen_renewer)
+    monkeypatch.setattr(sl._PosixLeases, "renewer", frozen_renewer)
     monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
     store = str(tmp_path / "seen")
     lease = os.path.join(store, LEASE_NAME)
@@ -923,7 +1023,7 @@ def test_in_process_same_owner_live_lease_not_broken(tmp_path):
 def test_in_process_same_owner_live_mark_excludes_maintenance(tmp_path):
     """The dangerous direction of ADVICE r17: a live writer mark from
     a same-owner sibling thread must keep excluding maintenance —
-    pre-r18, _posix_live_writers broke the LIVE mark as stale and
+    pre-r18, the maintenance-side mark sweep broke the LIVE mark as stale and
     compaction proceeded concurrently with the commit."""
     import threading
 
@@ -985,3 +1085,418 @@ def test_s3_in_process_same_owner_live_mark_excludes_maintenance(target):
     with lease_owner("job:x"):
         with s3_maintenance_lease(target):
             pass
+
+
+# ---------------------------------------------------------------------------
+# Lease internals: inode fence, renewer-construction release, pause
+# self-fence, nonce registry, staleness rules, heartbeat scheduler
+# (the default tier runs these: conftest._DEFAULT_TIER_SMOKE)
+# ---------------------------------------------------------------------------
+
+def test_posix_renewer_never_overwrites_successor(tmp_path):
+    """Inode fence (r17 review): after a breaker unlinks and re-claims
+    the lease, the old holder's heartbeat must neither overwrite the
+    successor's file (writes go through the held fd -> orphaned
+    inode) nor delete it at release (lost flips on the inode
+    mismatch)."""
+    import json as _json
+    import time as _time
+
+    from universal_data_connector_spark.store_lease import LEASE_NAME
+
+    store = str(tmp_path / "seen")
+    lease = os.path.join(store, LEASE_NAME)
+    successor = {"owner": "successor", "op": "compact", "pid": 1,
+                 "host": "elsewhere", "acquired_unix": 0.0,
+                 "ttl_seconds": None}
+    with posix_maintenance_lease(store, renew_every=0.1):
+        os.unlink(lease)  # a breaker...
+        with open(lease, "w") as fh:  # ...and its successor's claim
+            _json.dump(successor, fh)
+        _time.sleep(0.45)  # several heartbeat ticks fire
+        with open(lease) as fh:
+            assert _json.load(fh)["owner"] == "successor"
+    # release skipped its unlink: the successor's lease survives
+    with open(lease) as fh:
+        assert _json.load(fh)["owner"] == "successor"
+
+
+def test_posix_renewer_failure_releases_claim(tmp_path, monkeypatch):
+    """A renewer that fails to construct (fd exhaustion) must release
+    the just-claimed artifact instead of wedging the store until the
+    process exits (r17 review)."""
+    import pytest
+
+    from universal_data_connector_spark import store_lease as sl
+
+    def boom(*a, **k):
+        raise OSError(24, "Too many open files")
+
+    monkeypatch.setattr(sl._PosixLeases, "renewer", boom)
+    store = str(tmp_path / "seen")
+    with pytest.raises(OSError):
+        with sl.posix_maintenance_lease(store):
+            pass
+    assert not os.path.exists(os.path.join(store, sl.LEASE_NAME))
+    with pytest.raises(OSError):
+        with sl.posix_writer_mark(store):
+            pass
+    wdir = os.path.join(store, sl.WRITERS_DIR)
+    assert os.listdir(wdir) == []
+
+
+def test_wedged_nonce_ages_out_and_same_owner_supersedes(
+        tmp_path, monkeypatch):
+    """VERDICT r18 item 4: a nonce registered by a thread that died
+    between claim and finally (no heartbeat ever ran) must stop
+    counting as live once its artifact ages past the TTL without a
+    renewal, so a same-process restart of the owner supersedes instead
+    of wedging until process exit. Fails against the r18
+    ``_is_stale`` (the bare registry check)."""
+    import universal_data_connector_spark.store_lease as sl
+
+    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
+    store = str(tmp_path / "seen")
+    os.makedirs(store)
+    path = os.path.join(store, sl.LEASE_NAME)
+    payload = sl._payload("maintenance", "job:x", None)
+    with open(path, "w") as fh:
+        json.dump(payload, fh)
+    # simulate the wedge: nonce registered, holding frame never
+    # unwinds, renewer never constructed (no heartbeat)
+    with sl._LIVE_NONCES_LOCK:
+        sl._LIVE_NONCES.add(payload["nonce"])
+    try:
+        with sl.lease_owner("job:x"):
+            # artifact still TTL-fresh: the registered nonce holds
+            with pytest.raises(sl.StoreLeaseHeld):
+                with sl.posix_maintenance_lease(store):
+                    pass
+            time.sleep(0.4)  # ages past the TTL with no renewal
+            with sl.posix_maintenance_lease(store):
+                pass  # supersedes the wedged leftover
+    finally:
+        with sl._LIVE_NONCES_LOCK:
+            sl._LIVE_NONCES.discard(payload["nonce"])
+
+
+def test_posix_paused_holder_untouched_artifact_still_released(
+        tmp_path, monkeypatch):
+    """ADVICE r18 (low): on POSIX a same-host live-pid no-TTL leftover
+    is never stale to a different-owner checker, so the r18 self-fence
+    (leave the artifact whenever the pause outlived the TTL) wedged
+    maintenance until process exit. The inode fence proves the file
+    was never broken/re-claimed during the pause and deletes it."""
+    import universal_data_connector_spark.store_lease as sl
+
+    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
+    store = str(tmp_path / "seen")
+    lease = os.path.join(store, sl.LEASE_NAME)
+    # renew_every default (TTL/3) was bound at import => no renewal
+    # lands during the pause; last_ok stays at claim time
+    with sl.posix_maintenance_lease(store):
+        time.sleep(0.5)  # pause past the TTL; nobody touches the file
+    assert not os.path.exists(lease)  # r18 self-fence left it behind
+    # the wedge the advisor described: a DIFFERENT owner proceeds now
+    with sl.lease_owner("other-owner"):
+        with sl.posix_maintenance_lease(store):
+            pass
+
+
+def test_posix_paused_holder_replaced_artifact_still_fenced(
+        tmp_path, monkeypatch):
+    """The narrowing keeps the fence where it matters: if the file was
+    broken and re-claimed during the pause (different inode), the
+    release still leaves the successor's artifact alone."""
+    import universal_data_connector_spark.store_lease as sl
+
+    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
+    store = str(tmp_path / "seen")
+    lease = os.path.join(store, sl.LEASE_NAME)
+    successor = {"owner": "successor", "op": "vacuum", "pid": 1,
+                 "host": "other-host", "nonce": "succ-nonce",
+                 "acquired_unix": time.time(), "ttl_seconds": 3600.0}
+    with sl.posix_maintenance_lease(store):
+        time.sleep(0.5)
+        os.unlink(lease)  # a breaker took the lapsed lease...
+        with open(lease, "w") as fh:  # ...and a successor claimed it
+            json.dump(successor, fh)
+    with open(lease) as fh:
+        assert json.load(fh)["nonce"] == "succ-nonce"
+
+
+def test_heartbeat_pool_many_holders_all_tick_and_stop_clean():
+    """Stress the pooled tick dispatcher: 24 concurrent renewers (6×
+    the pool size) with mixed intervals — every one must keep
+    receiving ticks (no lost re-schedule in the worker handoff) and
+    stop() must leave no tick in flight."""
+    import universal_data_connector_spark.store_lease as sl
+
+    counts = [0] * 24
+    renewers = []
+
+    def make(i):
+        def renew() -> bool:
+            counts[i] += 1
+            return True
+        return renew
+
+    for i in range(24):
+        renewers.append(sl._Renewer(make(i), 0.05 + (i % 3) * 0.03))
+    try:
+        time.sleep(1.5)
+    finally:
+        for r in renewers:
+            r.stop()
+    assert min(counts) >= 3, f"some renewer starved: {counts}"
+    settled = list(counts)
+    time.sleep(0.3)
+    assert counts == settled, "tick fired after stop()"
+
+
+def test_is_stale_decision_matrix(monkeypatch):
+    """Exhaustive truth table for the staleness rules after the r19
+    nonce-TTL narrowing — every (owner-match, pid, host, nonce-state,
+    ttl-state) combination asserted against the module docstring's
+    three rules, so any future edit that flips one cell fails here
+    with the exact combination named."""
+    import socket as _socket
+
+    import universal_data_connector_spark.store_lease as sl
+
+    me_host = _socket.gethostname()
+    me_pid = os.getpid()
+    now = time.time()
+    live_nonce = "tt-live-nonce"
+    with sl._LIVE_NONCES_LOCK:
+        sl._LIVE_NONCES.add(live_nonce)
+    try:
+        def payload(owner="job:x", pid=me_pid, host=me_host,
+                    nonce="tt-unregistered", age=0.0, ttl=None):
+            return {"owner": owner, "op": "t", "pid": pid, "host": host,
+                    "nonce": nonce, "acquired_unix": now - age,
+                    "ttl_seconds": ttl}
+
+        dead_pid = 2 ** 22 + 12345  # outside this sandbox's pid space
+        cases = [
+            # (description, payload, checker_owner, expect_stale)
+            ("own pid + owner + unregistered nonce -> leftover",
+             payload(), "job:x", True),
+            ("own pid + owner + LIVE fresh nonce -> held (ADVICE r17)",
+             payload(nonce=live_nonce), "job:x", False),
+            ("own pid + owner + live nonce but artifact aged past TTL"
+             " -> wedged, breakable (VERDICT r18 item 4)",
+             payload(nonce=live_nonce, age=sl.DEFAULT_S3_TTL + 1),
+             "job:x", True),
+            ("owner mismatch + our live pid -> held",
+             payload(), "job:OTHER", False),
+            ("no owner recorded + our live pid -> held",
+             payload(owner=None), "job:x", False),
+            ("same host, dead pid -> breakable regardless of owner",
+             payload(owner="someone", pid=dead_pid), "job:x", True),
+            ("same host, live pid, no ttl -> held",
+             payload(owner="someone"), "job:x", False),
+            ("foreign host, no ttl -> undecidable here (mtime bound"
+             " lives in _PosixLeases.stale, not _is_stale)",
+             payload(host="elsewhere"), "job:OTHER", False),
+            ("foreign host, ttl expired -> breakable",
+             payload(host="elsewhere", age=10.0, ttl=5.0),
+             "job:OTHER", True),
+            ("foreign host, ttl not yet expired -> held",
+             payload(host="elsewhere", age=2.0, ttl=500.0),
+             "job:OTHER", False),
+            ("same OWNER but different pid, live ttl -> held"
+             " (ADVICE r16: zombie predecessor keeps exclusion)",
+             payload(pid=dead_pid + 1, host="elsewhere", ttl=500.0),
+             "job:x", False),
+            ("unreadable payload -> not breakable here",
+             None, "job:x", False),
+        ]
+        for desc, p, checker, want in cases:
+            got = sl._is_stale(p, checker)
+            assert got == want, f"{desc}: got {got}, want {want}"
+    finally:
+        with sl._LIVE_NONCES_LOCK:
+            sl._LIVE_NONCES.discard(live_nonce)
+
+
+def test_hung_renewal_does_not_starve_other_heartbeats():
+    """ADVICE r18 (low): ticks run on a small worker pool, so a single
+    hung renewal (boto retries can take minutes) cannot head-of-line
+    block every other holder's heartbeat and erode the 2/3-TTL slack.
+    Fails against the r18 serial scheduler (the fast holder gets ~1
+    tick in the window instead of dozens)."""
+    import universal_data_connector_spark.store_lease as sl
+
+    hang = threading.Event()
+
+    def slow_renew() -> bool:
+        hang.wait(10)  # simulated stalled network renewal
+        return True
+
+    ticks: list[float] = []
+
+    def fast_renew() -> bool:
+        ticks.append(time.time())
+        return True
+
+    slow = sl._Renewer(slow_renew, 0.05)
+    fast = sl._Renewer(fast_renew, 0.05)
+    try:
+        time.sleep(1.0)
+        assert len(ticks) >= 5, (
+            f"fast heartbeat starved behind the hung one: {len(ticks)}")
+    finally:
+        hang.set()
+        fast.stop()
+        slow.stop()
+
+
+def test_posix_fenced_release_leaves_successor_file(tmp_path, monkeypatch):
+    """ADVICE r19 (medium): the release ownership check runs while the
+    claim fd is still OPEN. A holder paused past the TTL whose lease
+    was broken and re-claimed by a successor must leave the
+    successor's file in place — detected through the held fd
+    (st_nlink==0 / inode mismatch), not a close-then-stat race."""
+    import json as _json
+    import os
+    import time
+
+    import universal_data_connector_spark.store_lease as sl
+
+    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
+    store = str(tmp_path / "seen")
+    lease = os.path.join(store, sl.LEASE_NAME)
+    successor = {"owner": "successor", "op": "vacuum", "pid": 1,
+                 "host": "other-host", "nonce": "succ-nonce",
+                 "acquired_unix": time.time(), "ttl_seconds": 3600.0}
+    # renew_every huge: zero ticks land, so last_ok stays at claim
+    # time and the holder is genuinely expired at release
+    with sl.posix_maintenance_lease(store, renew_every=3600.0):
+        time.sleep(0.5)
+        os.unlink(lease)                 # breaker unlinked ours...
+        with open(lease, "w") as fh:     # ...successor re-claimed
+            _json.dump(successor, fh)
+    with open(lease) as fh:
+        assert _json.load(fh)["nonce"] == "succ-nonce"
+
+
+def test_posix_fenced_release_still_unwedges_untouched_artifact(
+        tmp_path, monkeypatch):
+    """The ADVICE r18 unwedge survives the r20 re-ordering: a holder
+    paused past the TTL whose artifact nobody touched (the common
+    same-host POSIX case) DELETES it — fd nlink, path inode and the
+    payload nonce all still prove ownership."""
+    import os
+    import time
+
+    import universal_data_connector_spark.store_lease as sl
+
+    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
+    store = str(tmp_path / "seen")
+    lease = os.path.join(store, sl.LEASE_NAME)
+    with sl.posix_maintenance_lease(store, renew_every=3600.0):
+        time.sleep(0.5)  # expired, artifact untouched
+    assert not os.path.exists(lease), (
+        "paused-but-untouched lease must be deleted, not left to "
+        "wedge maintenance until process exit")
+
+
+def test_posix_fenced_release_catches_same_inode_overwrite(
+        tmp_path, monkeypatch):
+    """Third fence layer: a successor that OVERWRITES the expired
+    lease in place (truncate+write — same path, same inode, so
+    neither fstat-nlink nor the inode compare can see it) is caught
+    by the payload-nonce re-read immediately before the unlink."""
+    import json as _json
+    import os
+    import time
+
+    import universal_data_connector_spark.store_lease as sl
+
+    monkeypatch.setattr(sl, "DEFAULT_S3_TTL", 0.3)
+    store = str(tmp_path / "seen")
+    lease = os.path.join(store, sl.LEASE_NAME)
+    successor = {"owner": "successor", "op": "vacuum", "pid": 1,
+                 "host": "other-host", "nonce": "succ-nonce",
+                 "acquired_unix": time.time(), "ttl_seconds": 3600.0}
+    with sl.posix_maintenance_lease(store, renew_every=3600.0):
+        time.sleep(0.5)  # expired with zero landed renewals
+        ino_before = os.stat(lease).st_ino
+        with open(lease, "w") as fh:  # in-place adoption, inode kept
+            _json.dump(successor, fh)
+        assert os.stat(lease).st_ino == ino_before
+    with open(lease) as fh:
+        assert _json.load(fh)["nonce"] == "succ-nonce", (
+            "release deleted a successor's in-place claim the inode "
+            "checks cannot distinguish — the nonce re-read must fence")
+
+
+def test_nonce_exclusion_bound_scales_with_claim_schedule():
+    """ADVICE r19 (low): _nonce_holds_exclusion must bound staleness
+    by the claim's ACTUAL ttl/renew cadence, not the bare
+    DEFAULT_S3_TTL — a live on-schedule holder with ttl >
+    3x default (renew interval > 1 h) must not become same-process
+    breakable between its own renewals."""
+    import time
+
+    import universal_data_connector_spark.store_lease as sl
+
+    base = {"owner": "job:x", "op": "maintenance", "pid": 1,
+            "host": "h", "nonce": "n-sched"}
+    aged = time.time() - 2 * sl.DEFAULT_S3_TTL
+    with sl._held_nonce("n-sched"):
+        # default schedule, aged past the default TTL: wedge -> False
+        assert not sl._nonce_holds_exclusion(
+            dict(base, acquired_unix=aged,
+                 ttl_seconds=None, renew_seconds=None))
+        # big caller-supplied TTL: renewals land every ttl/3 > the
+        # default TTL, so the same age is on-schedule -> True
+        assert sl._nonce_holds_exclusion(
+            dict(base, acquired_unix=aged,
+                 ttl_seconds=4 * sl.DEFAULT_S3_TTL,
+                 renew_seconds=4 * sl.DEFAULT_S3_TTL / 3))
+        # POSIX (no ttl) with a slow renew cadence: bound follows
+        # 4x renew_seconds -> True
+        assert sl._nonce_holds_exclusion(
+            dict(base, acquired_unix=aged, ttl_seconds=None,
+                 renew_seconds=sl.DEFAULT_S3_TTL))
+    # not registered at all -> never live
+    assert not sl._nonce_holds_exclusion(
+        dict(base, acquired_unix=time.time(),
+             ttl_seconds=None, renew_seconds=None))
+
+
+def test_heartbeat_pool_grows_past_static_cap_under_hung_renewals():
+    """ADVICE r19 (low): 5+ simultaneously hung renewals (> the
+    static 4-worker pool) must not starve another holder's heartbeat
+    — the pool cap scales with the number of live renewers."""
+    import threading
+    import time
+
+    import universal_data_connector_spark.store_lease as sl
+
+    hang = threading.Event()
+
+    def hung_renew() -> bool:
+        hang.wait(15)
+        return True
+
+    ticks: list[float] = []
+
+    def healthy_renew() -> bool:
+        ticks.append(time.time())
+        return True
+
+    renewers = [sl._Renewer(hung_renew, 0.05) for _ in range(6)]
+    healthy = sl._Renewer(healthy_renew, 0.05)
+    try:
+        time.sleep(1.5)
+        assert len(ticks) >= 5, (
+            f"healthy heartbeat starved behind 6 hung renewals "
+            f"(pre-r20 pool cap): {len(ticks)} ticks")
+    finally:
+        hang.set()
+        healthy.stop()
+        for r in renewers:
+            r.stop()

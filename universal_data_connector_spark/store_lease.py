@@ -48,29 +48,50 @@ Long operations vs the TTL (r17): every held lease/mark starts a
 daemon HEARTBEAT that refreshes its payload (``acquired_unix``, and
 thereby the POSIX mtime) every ttl/3, so a legitimately long
 compaction or commit never loses its exclusion while live — only a
-holder that stops renewing (crash, kill) expires. Object-store
-renewals are ETag-CAS fenced: a renewal that loses the CAS marks the
-exclusion LOST and the holder's release skips the delete (it no
+holder that stops renewing (crash, kill) expires. Renewals are
+fenced: a renewal that finds its artifact broken or replaced marks
+the exclusion LOST and the holder's release skips the delete (it no
 longer owns the artifact). Clock-skew assumption: cross-host clock
 skew must stay well under 2/3 of the TTL (the slack between the
 last renewal a breaker could observe and expiry). A process paused
 longer than the TTL between its last landed renewal and release
-SELF-FENCES (r18, VERDICT r17 item 4): the release checks
-``_Renewer.last_ok`` and skips its delete when the TTL has lapsed —
-a successor may have legitimately broken and re-claimed the
-artifact during the pause, and an unconditional delete would
-destroy the successor's LIVE exclusion. On POSIX the fence is
-inode-narrowed (r19, ADVICE r18) and — since r20 (ADVICE r19) —
-decided while the claim fd is STILL OPEN: the open fd pins our
-inode so its number cannot be recycled into a successor's file,
-nlink-through-the-fd detects a breaker's unlink, and a payload
-nonce re-read immediately precedes the unlink, so an unchanged
-inode genuinely PROVES no breaker/successor touched it and the
-delete proceeds — without this narrowing, a paused same-host
-holder (live pid, no TTL in POSIX payloads) would leave a leftover
-no different-owner checker can ever find stale, wedging
-maintenance until process exit. A skipped S3 artifact expires via
-its TTL.
+SELF-FENCES: the release checks ``_Renewer.last_ok`` and skips its
+delete when the TTL has lapsed — a successor may have legitimately
+broken and re-claimed the artifact during the pause, and an
+unconditional delete would destroy the successor's LIVE exclusion —
+unless the backend can prove the artifact is still its own.
+
+The protocol (claim with one stale break, heartbeat, other-side
+check, fenced release) is written once, in ``_hold``, over one small
+object of storage primitives per backend:
+
+================  ==============================  ===============================
+primitive         ``_PosixLeases(store_dir)``     ``_S3Leases(target, ttl)``
+================  ==============================  ===============================
+lease name        ``<dir>/_udc_lease``            ``<prefix>/_udc_lease``
+mark name         ``<dir>/_udc_writers/<hex>``    ``<prefix>/_udc_writers/<hex>``
+create            ``O_CREAT|O_EXCL`` file         ``If-None-Match:*`` PUT (ETag)
+read              JSON file (None: torn)          JSON object
+delete            unlink, missing is fine         ``client.delete_object``
+marks             list ``_udc_writers/``          list ``_udc_writers/``
+stale             ``_is_stale``; a torn or        ``_is_stale`` (the payload
+                  foreign-host payload: mtime     carries its TTL)
+                  + the default TTL
+renewer fence     inode + the held claim fd       ETag CAS, own nonce re-adopted
+expired release   provably ours: fd nlink, path   never provably ours
+                  inode and nonce re-read
+================  ==============================  ===============================
+
+The fences differ in one way that matters: a POSIX holder writes
+only through the fd it claimed, and at release decides ownership
+while that fd still pins its inode, so a holder paused past the TTL
+can still PROVE its file untouched and delete it (a same-host live
+pid with no TTL would otherwise wedge maintenance until the process
+exits); an S3 holder has only the ETag of its last write, can never
+prove that after a pause, and leaves the object to expire via its
+TTL. Control objects are deleted with ``delete_object`` directly,
+never ``delete_keys``: the release must not share a failure mode
+with the data-plane deletes.
 
 Non-goals: writer-vs-writer exclusion (the stores keep their
 single-writer contract; marks are visible to maintenance only) and
@@ -433,211 +454,336 @@ class _Renewer:
 
 
 # ---------------------------------------------------------------------------
-# POSIX backend
+# the protocol, written once over a backend's storage primitives (``b``:
+# a ``_PosixLeases`` or an ``_S3Leases``)
 # ---------------------------------------------------------------------------
 
-def _posix_read(path: str) -> dict | None:
-    """Payload of a lease/mark file, or None when unreadable. A file
-    that cannot be parsed (crash between O_EXCL create and the payload
-    write) counts as stale once its mtime is older than the default
-    TTL — otherwise an empty 0-byte lease would wedge the store with
-    no recorded pid to liveness-check."""
-    try:
-        with open(path) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        raise
-    except Exception:  # noqa: BLE001 - torn/empty payload
-        return None
+_GONE = object()  # what ``read`` returns for an artifact that is absent
 
 
-def _posix_stale(path: str, checker_owner: str | None) -> bool:
-    try:
-        payload = _posix_read(path)
-    except FileNotFoundError:
-        return True  # already gone
-    if payload is None:
-        try:
-            return time.time() > os.path.getmtime(path) + DEFAULT_S3_TTL
-        except FileNotFoundError:
-            return True
-    if _is_stale(payload, checker_owner):
-        return True
-    if payload.get("host") != socket.gethostname():
-        # shared filesystem, foreign host: pid liveness is
-        # undecidable and POSIX payloads carry no TTL — a holder
-        # leaked by a crashed container (hostname changes on restart)
-        # must not wedge the store forever. Bound it by mtime + the
-        # default TTL; the holder's heartbeat refreshes mtime while
-        # live (ADVICE r16 / VERDICT r16 item 3).
-        try:
-            return time.time() > os.path.getmtime(path) + DEFAULT_S3_TTL
-        except FileNotFoundError:
-            return True
-    return False
-
-
-def _posix_renewer(path: str, payload: dict,
-                   renew_every: float) -> _Renewer:
-    """Heartbeat for a held POSIX lease/mark: rewrite the payload with
-    a fresh ``acquired_unix`` (which also refreshes the mtime the
-    foreign-host staleness bound reads). Inode-fenced, mirroring the
-    S3 renewer's ETag fence: the renewer holds an fd on the file it
-    claimed and ONLY writes through that fd, so after a breaker
-    unlinks (and possibly recreates) the path the write lands on the
-    orphaned inode — invisible, never on a successor's file — and the
-    stat-vs-fstat inode comparison flips ``lost``. The in-place
-    truncate+write is torn-read-safe: a checker reading mid-write
-    sees an unparseable payload and falls back to the (fresh)
-    mtime."""
-    fd = os.open(path, os.O_RDWR)
-    my_ino = os.fstat(fd).st_ino
-
-    def renew() -> bool:
-        try:
-            if os.stat(path).st_ino != my_ino:
-                return False  # broken + re-claimed by a successor
-        except FileNotFoundError:
-            return False  # broken by a checker
-        body = json.dumps(dict(payload, acquired_unix=time.time()))
-        os.ftruncate(fd, 0)
-        os.pwrite(fd, body.encode(), 0)
-        return True
-
-    renewer = _Renewer(renew, renew_every)
-    renewer.ino = my_ino  # exposed for tests / diagnostics
-    inner_stop = renewer.stop
-    closed = [False]
-
-    def _close_fd() -> None:
-        # exactly-once close: release() and stop() may both run, and a
-        # second os.close on a recycled fd number would close someone
-        # else's descriptor
-        if not closed[0]:
-            closed[0] = True
-            with contextlib.suppress(OSError):
-                os.close(fd)
-
-    def stop() -> None:
-        inner_stop()
-        _close_fd()
-
-    def release() -> None:
-        """Fenced release (ADVICE r19): stop the ticks, then decide
-        ownership WHILE the claim fd is still open — the open fd pins
-        our inode so the number cannot be recycled into a successor's
-        file — and unlink BEFORE closing the fd. The r18/r19 ordering
-        (stop-and-close, then stat, then unlink) was check-then-act:
-        once the fd closed, a checker could break the expired artifact,
-        a successor re-claim it, and inode reuse make the stat match —
-        letting a paused holder delete the successor's LIVE exclusion."""
-        inner_stop()  # tick barrier; the fd intentionally stays open
-        try:
-            if renewer.lost:
-                return  # a breaker took it; no longer ours to delete
-            if renewer.expired(DEFAULT_S3_TTL):
-                # paused past the TTL: the artifact has been breakable,
-                # so prove it is still literally OUR file before the
-                # unlink. fstat through the held fd: st_nlink == 0 iff
-                # our file was unlinked (we never hardlink these);
-                # a path-inode mismatch means a successor's file sits
-                # at the path (it can't reuse our pinned inode); a
-                # nonce re-read immediately before the unlink shrinks
-                # the residual stat-to-unlink window to microseconds.
-                try:
-                    current = None
-                    if (os.fstat(fd).st_nlink > 0
-                            and os.stat(path).st_ino == my_ino):
-                        current = _posix_read(path)
-                except OSError:
-                    current = None
-                if (not isinstance(current, dict)
-                        or current.get("nonce") != payload.get("nonce")):
-                    log.error(
-                        "store_lease: release self-fenced — more than "
-                        "the TTL since the last landed renewal of %s "
-                        "(process pause?) and the file is no longer "
-                        "provably ours; a successor may hold it now, "
-                        "leaving it in place", path)
-                    return
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(path)
-        finally:
-            _close_fd()
-
-    renewer.stop = stop
-    renewer.release = release
-    return renewer
-
-
-def _posix_release(renewer, path: str) -> None:
-    """Release a held POSIX lease/mark through the renewer's fenced
-    ``release`` (ownership decided while the claim fd is open — see
-    ``_posix_renewer``, ADVICE r19). A bare ``_Renewer`` without a
-    claim fd (tests substituting the renewal machinery) falls back to
-    the conservative form: delete only when the exclusion provably
-    never lapsed, self-fence otherwise."""
-    release = getattr(renewer, "release", None)
-    if release is not None:
-        release()
-        return
-    renewer.stop()
-    if renewer.lost:
-        return
-    if renewer.expired(DEFAULT_S3_TTL):
-        log.error("store_lease: release self-fenced — more than the "
-                  "TTL since the last landed renewal of %s (process "
-                  "pause?) and no claim fd to verify ownership; a "
-                  "successor may hold it now, leaving it in place",
-                  path)
-        return
-    with contextlib.suppress(FileNotFoundError):
-        os.unlink(path)
-
-
-def _posix_claim(path: str, payload: dict, checker_owner: str | None,
-                 kind: str) -> None:
-    """Create ``path`` with O_CREAT|O_EXCL (the claim IS the create),
-    breaking one stale predecessor."""
-    for attempt in (0, 1):
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            if attempt == 0 and _posix_stale(path, checker_owner):
-                log.warning("store_lease: breaking stale %s %s", kind, path)
-                with contextlib.suppress(FileNotFoundError):
-                    os.unlink(path)
-                continue
-            try:
-                holder = _posix_read(path)
-            except FileNotFoundError:
-                holder = None
-            raise StoreLeaseHeld(
-                f"store {kind} {path!r} is held by a live holder "
-                f"({holder}); retry after it finishes", holder) from None
-        with os.fdopen(fd, "w") as fh:
-            json.dump(payload, fh)
-        return
-
-
-def _posix_live_writers(store_dir: str,
-                        checker_owner: str | None) -> list[str]:
-    """Live writer-mark paths under the store, removing stale ones."""
-    wdir = os.path.join(store_dir, WRITERS_DIR)
-    if not os.path.isdir(wdir):
-        return []
-    live = []
-    for name in os.listdir(wdir):
-        mark = os.path.join(wdir, name)
-        if _posix_stale(mark, checker_owner):
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(mark)
+def _live(b, names: list[str], owner: str | None, kind: str) -> dict:
+    """The live artifacts among ``names``, each with its payload (None
+    when unreadable). Stale ones are broken on the way."""
+    live = {}
+    for name in names:
+        payload = b.read(name)
+        if payload is _GONE:
+            continue
+        if b.stale(name, payload, owner):
+            log.warning("store_lease: breaking stale %s %s", kind, name)
+            b.delete(name)
         else:
-            live.append(mark)
+            live[name] = payload
     return live
 
 
+def _refusal(b, live: dict, what: str, why: str) -> StoreLeaseHeld:
+    holder = next(iter(live.values())) if len(live) == 1 else None
+    shown = dict(list(live.items())[:3])
+    return StoreLeaseHeld(f"store {b.label} {what} ({shown}); {why}",
+                          holder)
+
+
+def _claim(b, name: str, payload: dict, owner: str | None, kind: str):
+    """Create ``name`` exclusively (the claim IS the create), breaking
+    a stale predecessor for one retry. Returns the backend's fence
+    token."""
+    for retry in (False, True):
+        try:
+            return b.create(name, payload)
+        except FileExistsError:
+            live = _live(b, [name], owner, kind)
+        if live or retry:
+            raise _refusal(b, live or {name: None},
+                           f"{kind} is held by a live holder",
+                           "retry after it finishes")
+
+
+def _drop(b, name: str) -> None:
+    """Delete our own artifact without masking the exception in
+    flight; a leftover ages out under the staleness rules."""
+    try:
+        b.delete(name)
+    except Exception:  # noqa: BLE001
+        log.warning("store_lease: could not delete %s", name,
+                    exc_info=True)
+
+
+def _release(b, name: str, payload: dict, renewer: _Renewer) -> None:
+    """Fenced release: stop the ticks, then delete only what is still
+    ours. A lost renewal means a breaker took the artifact; a holder
+    paused past the TTL self-fences unless the backend proves the
+    artifact untouched."""
+    renewer.stop()  # tick barrier; a POSIX claim fd stays open
+    try:
+        if renewer.lost:
+            return
+        ttl = DEFAULT_S3_TTL if b.ttl is None else b.ttl
+        if renewer.expired(ttl) and not b.still_ours(name, payload,
+                                                     renewer):
+            log.error("store_lease: release self-fenced — more than the "
+                      "TTL since the last landed renewal of %s (process "
+                      "pause?) and it is not provably ours; a successor "
+                      "may hold it now, leaving it in place", name)
+            return
+        _drop(b, name)
+    finally:
+        b.close(renewer)
+
+
 @contextlib.contextmanager
+def _hold(b, kind: str, op: str, owner: str | None, renew_every: float):
+    """Hold the store's lease (``kind`` "lease") or a fresh writer mark
+    (``kind`` "mark"): claim it, heartbeat it, refuse while the other
+    side is live, and release it fenced on exit."""
+    owner = owner if owner is not None else current_owner()
+    name = b.lease if kind == "lease" else b.mark_name()
+    payload = _payload(op, owner, b.ttl, renew_every)
+    # nonce registered BEFORE the claim lands: the instant the artifact
+    # exists it must read as LIVE to same-process checkers, or a
+    # sibling thread racing the registration gap could break it
+    with _held_nonce(payload["nonce"]):
+        token = _claim(b, name, payload, owner, kind)
+        try:
+            renewer = b.renewer(name, payload, token, renew_every)
+        except BaseException:
+            # a failed renewer construction (fd or thread exhaustion)
+            # must release the just-claimed artifact, or it wedges the
+            # store until this process exits or its TTL lapses
+            _drop(b, name)
+            raise
+        try:
+            if kind == "lease":
+                live = _live(b, b.marks(), owner, "mark")
+                if live:
+                    raise _refusal(b, live, f"has {len(live)} writer "
+                                   "commit(s) in flight",
+                                   "maintenance is exclusive — retry "
+                                   "after they finish")
+            else:
+                live = _live(b, [b.lease], owner, "lease")
+                if live:
+                    raise _refusal(b, live, "is under maintenance",
+                                   "the commit was refused BEFORE any "
+                                   "append — rerun after maintenance "
+                                   "completes")
+            yield
+        finally:
+            _release(b, name, payload, renewer)
+
+
+# ---------------------------------------------------------------------------
+# storage primitives
+# ---------------------------------------------------------------------------
+
+class _PosixLeases:
+    """One file per artifact in a store directory. Payloads carry no
+    TTL (``ttl`` None): pid liveness decides on this host, mtime + the
+    default TTL across hosts."""
+
+    ttl = None
+
+    def __init__(self, store_dir: str):
+        self.root = store_dir
+        self.label = repr(store_dir)
+        self.lease = os.path.join(store_dir, LEASE_NAME)
+
+    def mark_name(self) -> str:
+        return os.path.join(self.root, WRITERS_DIR, uuid.uuid4().hex)
+
+    def create(self, name: str, payload: dict) -> None:
+        os.makedirs(os.path.dirname(name), exist_ok=True)
+        fd = os.open(name, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        with os.fdopen(fd, "w") as fh:
+            json.dump(payload, fh)
+
+    def read(self, name: str):
+        """The payload; None when unparseable (a crash between the
+        exclusive create and the payload write)."""
+        try:
+            with open(name) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return _GONE
+        except (OSError, ValueError):
+            return None
+
+    def delete(self, name: str) -> None:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(name)
+
+    def marks(self) -> list[str]:
+        wdir = os.path.join(self.root, WRITERS_DIR)
+        if not os.path.isdir(wdir):
+            return []
+        return [os.path.join(wdir, n) for n in os.listdir(wdir)]
+
+    def stale(self, name: str, payload, owner: str | None) -> bool:
+        """``_is_stale``, and an unreadable or foreign-host payload is
+        bounded by mtime + the default TTL: a torn file records no pid
+        to check, and across hosts (shared filesystem, a crashed
+        container whose hostname changed) pid liveness is undecidable.
+        The holder's heartbeat refreshes mtime while live."""
+        if payload is not None:
+            if _is_stale(payload, owner):
+                return True
+            if payload.get("host") == socket.gethostname():
+                return False
+        try:
+            return time.time() > os.path.getmtime(name) + DEFAULT_S3_TTL
+        except FileNotFoundError:
+            return True
+
+    def renewer(self, name: str, payload: dict, token,
+                renew_every: float) -> _Renewer:
+        """Heartbeat that rewrites the payload with a fresh
+        ``acquired_unix`` (refreshing mtime too), inode-fenced: it
+        writes ONLY through the fd it holds on the claimed file, so
+        after a breaker unlinks (and maybe recreates) the path the
+        write lands on the orphaned inode, never on a successor's
+        file, and the stat-vs-fstat inode check flips ``lost``. The
+        in-place truncate+write is torn-read-safe: a checker reading
+        mid-write sees an unparseable payload and falls back to the
+        (fresh) mtime."""
+        fd = os.open(name, os.O_RDWR)
+        ino = os.fstat(fd).st_ino
+
+        def renew() -> bool:
+            try:
+                if os.stat(name).st_ino != ino:
+                    return False  # broken + re-claimed by a successor
+            except FileNotFoundError:
+                return False  # broken by a checker
+            body = json.dumps(dict(payload, acquired_unix=time.time()))
+            os.ftruncate(fd, 0)
+            os.pwrite(fd, body.encode(), 0)
+            return True
+
+        try:
+            renewer = _Renewer(renew, renew_every)
+        except BaseException:
+            os.close(fd)
+            raise
+        renewer.fd, renewer.ino = fd, ino
+        return renewer
+
+    def still_ours(self, name: str, payload: dict, renewer) -> bool:
+        """Decided while the claim fd is still open (it pins our inode,
+        so its number cannot be recycled into a successor's file):
+        fstat through it shows st_nlink 0 iff our file was unlinked
+        (these are never hardlinked), a path-inode mismatch means a
+        successor's file sits at the path, and a nonce re-read just
+        before the unlink catches an in-place overwrite. A renewer
+        without a claim fd proves nothing."""
+        fd = getattr(renewer, "fd", None)
+        if fd is None:
+            return False
+        try:
+            if (os.fstat(fd).st_nlink == 0
+                    or os.stat(name).st_ino != renewer.ino):
+                return False
+        except OSError:
+            return False
+        current = self.read(name)
+        return (isinstance(current, dict)
+                and current.get("nonce") == payload.get("nonce"))
+
+    def close(self, renewer) -> None:
+        fd = getattr(renewer, "fd", None)
+        if fd is not None:
+            with contextlib.suppress(OSError):
+                os.close(fd)
+
+
+class _S3Leases:
+    """One object per artifact under an ``S3StateTarget`` prefix.
+    Payloads carry ``ttl``: no cross-host pid liveness exists on an
+    object store, so a crashed holder's artifact expires on its own."""
+
+    def __init__(self, target, ttl: float):
+        self.target = target
+        self.ttl = ttl
+        self.label = f"s3://{target.bucket}/{target.prefix}"
+        self.lease = target._key(LEASE_NAME)
+
+    def mark_name(self) -> str:
+        return self.target._key(WRITERS_DIR, uuid.uuid4().hex)
+
+    def create(self, name: str, payload: dict) -> str | None:
+        from universal_data_connector_spark.streaming.object_state import (
+            CasConflict,
+        )
+
+        try:
+            return self.target._put_cas(name, payload, None)
+        except CasConflict:
+            raise FileExistsError(name) from None
+
+    def read(self, name: str):
+        payload, _ = self.target._get_json(name)
+        return _GONE if payload is None else payload
+
+    def delete(self, name: str) -> None:
+        self.target.client.delete_object(Bucket=self.target.bucket,
+                                         Key=name)
+
+    def marks(self) -> list[str]:
+        return self.target.list_keys(under=WRITERS_DIR)
+
+    def stale(self, name: str, payload, owner: str | None) -> bool:
+        return _is_stale(payload, owner)
+
+    def renewer(self, name: str, payload: dict, etag: str | None,
+                renew_every: float) -> _Renewer:
+        """Heartbeat that re-PUTs the payload with a fresh
+        ``acquired_unix``, conditioned on the ETag of OUR last write.
+        Losing the CAS to another writer, or finding the key gone
+        (broken and deleted), means the exclusion is lost. Zero added
+        requests on the un-renewed fast path: the ETag rides on the
+        claim PUT's response."""
+        from universal_data_connector_spark.streaming.object_state import (
+            CasConflict,
+            _is_missing,
+        )
+
+        def renew() -> bool:
+            nonlocal etag
+            fresh = dict(payload, acquired_unix=time.time())
+            try:
+                etag = self.target._put_cas(name, fresh, etag)
+                return True
+            except CasConflict:
+                # maybe a self-conflict: an HTTP-level retry can replay
+                # the PUT after the first attempt landed, and an
+                # earlier tick's PUT may have landed with its response
+                # lost. The claim nonce identifies OUR artifact
+                # whichever tick's acquired_unix is current: re-adopt
+                # its ETag; only a foreign nonce means the exclusion
+                # was truly lost.
+                holder, current = self.target._get_json(name)
+                if (isinstance(holder, dict)
+                        and holder.get("nonce") == payload.get("nonce")):
+                    etag = current
+                    return True
+                return False
+            except Exception as exc:  # noqa: BLE001
+                if _is_missing(exc):
+                    return False  # broken by a checker
+                raise  # transient: _Renewer logs and retries
+
+        return _Renewer(renew, renew_every)
+
+    def still_ours(self, name: str, payload: dict, renewer) -> bool:
+        return False  # an ETag cannot prove a paused holder untouched
+
+    def close(self, renewer) -> None:
+        pass
+
+
+# ---------------------------------------------------------------------------
+# public entry points
+# ---------------------------------------------------------------------------
+
 def posix_maintenance_lease(store_dir: str, op: str = "maintenance",
                             owner: str | None = None,
                             renew_every: float = DEFAULT_S3_TTL / 3.0):
@@ -645,283 +791,38 @@ def posix_maintenance_lease(store_dir: str, op: str = "maintenance",
     file, then refuse if any writer commit is in flight. A heartbeat
     refreshes the payload/mtime every ``renew_every`` seconds so a
     long compaction never ages past the foreign-host mtime bound."""
-    owner = owner if owner is not None else current_owner()
-    path = os.path.join(store_dir, LEASE_NAME)
-    os.makedirs(store_dir, exist_ok=True)
-    payload = _payload(op, owner, None, renew_every)
-    # nonce registered BEFORE the claim lands: the instant the artifact
-    # exists it must read as LIVE to same-process checkers, or a
-    # sibling thread racing the registration gap could break it
-    with _held_nonce(payload["nonce"]):
-        _posix_claim(path, payload, owner, "lease")
-        try:
-            # a failed renewer construction (fd exhaustion) must
-            # release the just-claimed artifact, or it wedges the
-            # store until this process exits (its pid stays live)
-            renewer = _posix_renewer(path, payload, renew_every)
-        except BaseException:
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(path)
-            raise
-        try:
-            live = _posix_live_writers(store_dir, owner)
-            if live:
-                raise StoreLeaseHeld(
-                    f"store {store_dir!r} has {len(live)} writer "
-                    f"commit(s) in flight ({live[:3]}); maintenance is "
-                    "exclusive — retry after they finish")
-            yield
-        finally:
-            # fenced release: ownership is decided while the claim fd
-            # is still open (see _posix_renewer.release, ADVICE r19)
-            _posix_release(renewer, path)
+    return _hold(_PosixLeases(store_dir), "lease", op, owner, renew_every)
 
 
-@contextlib.contextmanager
 def posix_writer_mark(store_dir: str, owner: str | None = None,
                       renew_every: float = DEFAULT_S3_TTL / 3.0):
     """Writer-commit mark on a POSIX store: register the mark, then
     refuse if a maintenance lease is live (mark removed on refusal,
     so a refused commit leaves nothing behind). Heartbeat-renewed for
     the commit's duration, as the lease is."""
-    owner = owner if owner is not None else current_owner()
-    wdir = os.path.join(store_dir, WRITERS_DIR)
-    os.makedirs(wdir, exist_ok=True)
-    mark = os.path.join(wdir, uuid.uuid4().hex)
-    payload = _payload("commit", owner, None, renew_every)
-    with _held_nonce(payload["nonce"]):  # registered before the claim
-        _posix_claim(mark, payload, owner, "mark")
-        try:
-            renewer = _posix_renewer(mark, payload, renew_every)
-        except BaseException:
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(mark)
-            raise
-        try:
-            lease = os.path.join(store_dir, LEASE_NAME)
-            if os.path.exists(lease):
-                if _posix_stale(lease, owner):
-                    log.warning("store_lease: breaking stale lease %s",
-                                lease)
-                    with contextlib.suppress(FileNotFoundError):
-                        os.unlink(lease)
-                else:
-                    holder = None
-                    with contextlib.suppress(FileNotFoundError):
-                        holder = _posix_read(lease)
-                    raise StoreLeaseHeld(
-                        f"store {store_dir!r} is under maintenance "
-                        f"({holder}); the commit was refused BEFORE "
-                        "any append — rerun after maintenance "
-                        "completes", holder)
-            yield
-        finally:
-            # fenced release: ownership is decided while the claim fd
-            # is still open (see _posix_renewer.release, ADVICE r19)
-            _posix_release(renewer, mark)
+    return _hold(_PosixLeases(store_dir), "mark", "commit", owner,
+                 renew_every)
 
 
-# ---------------------------------------------------------------------------
-# object-store backend (duck-typed over S3StateTarget)
-# ---------------------------------------------------------------------------
-
-def _s3_lease_key(target) -> str:
-    return target._key(LEASE_NAME)
-
-
-def _s3_delete_control(target, key: str) -> None:
-    """Delete a lease/mark control object DIRECTLY, not through
-    ``target.delete_keys``: the release must not share a failure mode
-    with the data-plane deletes (a compaction whose data deletes are
-    failing must still release its lease, or every later maintenance
-    run wedges on it until the TTL)."""
-    target.client.delete_object(Bucket=target.bucket, Key=key)
-
-
-def _s3_stale(payload: dict | None, checker_owner: str | None) -> bool:
-    # an unreadable object cannot happen (PUTs are atomic); a payload
-    # without TTL fields still breaks on same-host dead pid or an
-    # own-process owner-match leftover
-    return _is_stale(payload, checker_owner)
-
-
-def _s3_claim_lease(target, payload: dict,
-                    checker_owner: str | None) -> str | None:
-    from universal_data_connector_spark.streaming.object_state import (
-        CasConflict,
-    )
-
-    key = _s3_lease_key(target)
-    for attempt in (0, 1):
-        try:
-            return target._put_cas(key, payload, None)
-        except CasConflict:
-            holder, _ = target._get_json(key)
-            if attempt == 0 and _s3_stale(holder, checker_owner):
-                log.warning("store_lease: breaking stale lease %s", key)
-                _s3_delete_control(target, key)
-                continue
-            raise StoreLeaseHeld(
-                f"store s3://{target.bucket}/{target.prefix} lease is "
-                f"held by a live holder ({holder}); retry after it "
-                "finishes", holder) from None
-    return None
-
-
-def _s3_renewer(target, key: str, payload: dict, etag: str | None,
-                ttl: float) -> _Renewer:
-    """ETag-CAS-fenced heartbeat for a held S3 lease/mark: re-PUT the
-    payload with a fresh ``acquired_unix`` conditioned on the ETag of
-    OUR last write. Losing the CAS (replaced) or finding the key gone
-    (broken+deleted) means the exclusion is lost — the renewer stops
-    and the release skips its delete so a successor's claim is never
-    clobbered. Zero added requests on the un-renewed fast path: the
-    ETag rides on the claim PUT's response."""
-    from universal_data_connector_spark.streaming.object_state import (
-        CasConflict,
-    )
-
-    state = {"etag": etag}
-
-    def renew() -> bool:
-        fresh = dict(payload, acquired_unix=time.time())
-        try:
-            state["etag"] = target._put_cas(key, fresh, state["etag"])
-            return True
-        except CasConflict:
-            # disambiguate a self-conflict: an HTTP-level retry can
-            # replay the PUT after the first attempt landed (412 vs
-            # our own fresh write), and a PREVIOUS tick's PUT may have
-            # landed while its response was lost (stale cached ETag
-            # CAS-conflicting with our own earlier write). The claim
-            # nonce identifies OUR artifact regardless of which tick's
-            # acquired_unix is current — if it matches, re-adopt the
-            # ETag and keep renewing; only a foreign nonce means the
-            # exclusion was truly lost.
-            holder, new_etag = target._get_json(key)
-            if (isinstance(holder, dict)
-                    and holder.get("nonce") == payload.get("nonce")):
-                state["etag"] = new_etag
-                return True
-            return False
-        except Exception as exc:  # noqa: BLE001
-            code = getattr(exc, "response", {}).get(
-                "Error", {}).get("Code", "")
-            if code in ("NoSuchKey", "404"):
-                return False  # broken by a checker
-            raise  # transient: _Renewer logs and retries
-
-    return _Renewer(renew, ttl / 3.0)
-
-
-def _s3_live_writers(target, checker_owner: str | None) -> list[str]:
-    live = []
-    for k in target.list_keys(under=WRITERS_DIR):
-        payload, _ = target._get_json(k)
-        if _s3_stale(payload, checker_owner):
-            _s3_delete_control(target, k)
-        else:
-            live.append(k)
-    return live
-
-
-@contextlib.contextmanager
 def s3_maintenance_lease(target, op: str = "maintenance",
                          owner: str | None = None,
                          ttl: float = DEFAULT_S3_TTL):
     """Exclusive maintenance lease on an object-store target (CAS
     create via ``If-None-Match:*``), refused while writer commits are
-    in flight. Carries a TTL (default 1 h): no cross-host pid
-    liveness exists on an object store, so a crashed holder's lease
-    must expire on its own. A live holder heartbeat-renews every
-    ttl/3, so a compaction longer than the TTL keeps its exclusion
-    (VERDICT r16 item 1)."""
-    owner = owner if owner is not None else current_owner()
-    payload = _payload(op, owner, ttl, ttl / 3.0)
-    with _held_nonce(payload["nonce"]):  # registered before the claim
-        etag = _s3_claim_lease(target, payload, owner)
-        try:
-            # a failed renewer construction must release the
-            # just-claimed lease, or it lingers until its TTL
-            # (VERDICT r17 item 3 — the POSIX paths got this in r17)
-            renewer = _s3_renewer(target, _s3_lease_key(target),
-                                  payload, etag, ttl)
-        except BaseException:
-            with contextlib.suppress(Exception):
-                _s3_delete_control(target, _s3_lease_key(target))
-            raise
-        try:
-            live = _s3_live_writers(target, owner)
-            if live:
-                raise StoreLeaseHeld(
-                    f"store s3://{target.bucket}/{target.prefix} has "
-                    f"{len(live)} writer commit(s) in flight "
-                    f"({live[:3]}); maintenance is exclusive — retry "
-                    "after they finish")
-            yield
-        finally:
-            renewer.stop()
-            if renewer.expired(ttl):
-                log.error("store_lease: release self-fenced — more "
-                          "than the TTL since the last landed renewal "
-                          "of the lease under s3://%s/%s (process "
-                          "pause?); a successor may hold it now, "
-                          "leaving it in place",
-                          target.bucket, target.prefix)
-            elif not renewer.lost:
-                with contextlib.suppress(Exception):
-                    _s3_delete_control(target, _s3_lease_key(target))
+    in flight. Carries a TTL (default 1 h); a live holder
+    heartbeat-renews every ttl/3, so a compaction longer than the TTL
+    keeps its exclusion."""
+    return _hold(_S3Leases(target, ttl), "lease", op, owner, ttl / 3.0)
 
 
-@contextlib.contextmanager
 def s3_writer_mark(target, owner: str | None = None,
                    ttl: float = DEFAULT_S3_TTL):
     """Writer-commit mark on an object-store target: one nonce object
     under ``_udc_writers/`` for the commit's duration (excluded from
     vacuum and never read as data — bucket objects must match
     ``seen-*.parquet``). Heartbeat-renewed every ttl/3: a merge
-    slower than the TTL keeps fencing maintenance out (VERDICT r16
-    item 1); a normal sub-TTL commit never issues a renewal request,
-    so the k+2 GET / k+1 PUT / 1 DELETE per-merge driver op pin
-    holds."""
-    owner = owner if owner is not None else current_owner()
-    key = target._key(WRITERS_DIR, uuid.uuid4().hex)
-    payload = _payload("commit", owner, ttl, ttl / 3.0)
-    with _held_nonce(payload["nonce"]):  # registered before the claim
-        resp = target.client.put_object(
-            Bucket=target.bucket, Key=key,
-            Body=json.dumps(payload).encode())
-        try:
-            # release the just-registered mark if the renewer cannot
-            # be constructed (VERDICT r17 item 3)
-            renewer = _s3_renewer(target, key, payload,
-                                  resp.get("ETag"), ttl)
-        except BaseException:
-            with contextlib.suppress(Exception):
-                _s3_delete_control(target, key)
-            raise
-        try:
-            holder, _ = target._get_json(_s3_lease_key(target))
-            if holder is not None:
-                if _s3_stale(holder, owner):
-                    log.warning("store_lease: breaking stale lease "
-                                "under s3://%s/%s",
-                                target.bucket, target.prefix)
-                    _s3_delete_control(target, _s3_lease_key(target))
-                else:
-                    raise StoreLeaseHeld(
-                        f"store s3://{target.bucket}/{target.prefix} "
-                        f"is under maintenance ({holder}); the commit "
-                        "was refused BEFORE any append — rerun after "
-                        "maintenance completes", holder)
-            yield
-        finally:
-            renewer.stop()
-            if renewer.expired(ttl):
-                log.error("store_lease: release self-fenced — more "
-                          "than the TTL since the last landed renewal "
-                          "of mark %s (process pause?); leaving it "
-                          "for the staleness rules", key)
-            elif not renewer.lost:
-                with contextlib.suppress(Exception):
-                    _s3_delete_control(target, key)
+    slower than the TTL keeps fencing maintenance out; a normal
+    sub-TTL commit never issues a renewal request, so the k+2 GET /
+    k+1 PUT / 1 DELETE per-merge driver op pin holds."""
+    return _hold(_S3Leases(target, ttl), "mark", "commit", owner,
+                 ttl / 3.0)

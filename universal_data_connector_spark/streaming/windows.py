@@ -740,12 +740,6 @@ def foreachbatch_upsert(stream: DataFrame, path: str, keys: list[str],
         checkpoint, trigger_available_now)
 
 
-def _intent_record_touched(path: str, run_id: int,
-                           touched: list[int]) -> None:
-    """``record_touched`` on the POSIX target at ``path``."""
-    record_touched(PosixStateTarget(path), run_id, touched)
-
-
 def begin_batch_run(path: str, num_buckets: int = 32,
                     fingerprint: str | None = None) -> int:
     """``claim_batch_run`` on the POSIX target at ``path``."""
