@@ -51,6 +51,8 @@ _DEFAULT_TIER_SMOKE = {
     "test_store_lease.py::test_posix_stale_dead_pid_artifacts_are_broken",
     *(f"test_store_lease.py::{name}" for name in (
         "test_posix_renewer_never_overwrites_successor",
+        "test_posix_paused_breaker_never_deletes_successor_lease",
+        "test_s3_paused_breaker_never_deletes_successor_lease",
         "test_posix_renewer_failure_releases_claim",
         "test_wedged_nonce_ages_out_and_same_owner_supersedes",
         "test_posix_paused_holder_untouched_artifact_still_released",
@@ -100,7 +102,7 @@ def pytest_collection_modifyitems(config, items):
 @pytest.fixture(scope="session")
 def spark():
     from universal_data_connector_spark.session import get_spark
-    s = get_spark("udc-tests", cpus=8)
+    s = get_spark("udc-tests")
     yield s
 
 

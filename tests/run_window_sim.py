@@ -21,7 +21,10 @@ def main() -> int:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
     sys.path.insert(0, os.path.join(repo, "tests"))
-    spark = SparkSession.builder.master("local[8]").getOrCreate()
+    from universal_data_connector_spark.session import DEFAULT_CPUS
+
+    spark = (SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
+             .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as e
     from oracle_harness import compare, duck_connection

@@ -526,6 +526,20 @@ def test_frames_from_rows_go_through_local_frame():
     assert found == allowed
 
 
+def test_python_daemon_module_is_set_in_session_only():
+    """Source lint: ``spark.python.daemon.module`` is named only in
+    ``session.py``, where ``get_spark`` falls back to the stock daemon
+    when its checks fail."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [*(root / "universal_data_connector_spark").rglob("*.py"),
+             *(root / "tools").rglob("*.py"), *root.glob("*.py")]
+    naming = {str(py.relative_to(root)) for py in files
+              if "spark.python.daemon.module" in py.read_text()}
+    assert naming == {"universal_data_connector_spark/session.py"}
+
+
 def test_seen_store_backend_is_picked_in_one_place():
     """Source lint: the dedup_state seen store is written once over a
     per-backend store object. ``operators/dedup_state.py`` defines no

@@ -1500,3 +1500,110 @@ def test_heartbeat_pool_grows_past_static_cap_under_hung_renewals():
         healthy.stop()
         for r in renewers:
             r.stop()
+
+
+# ---------------------------------------------------------------------------
+# conditional stale break: a breaker paused between its read and its
+# break must not remove a successor's live lease
+# ---------------------------------------------------------------------------
+
+def _race_paused_breaker(monkeypatch, backend, hold, lease_nonce):
+    """Thread A reads the stale lease and pauses inside ``read``; the
+    main thread breaks that lease and claims its own; A then resumes.
+    Returns what A got and the lease nonce seen while the main thread
+    still held."""
+    real_read = backend.read
+    paused, resume = threading.Event(), threading.Event()
+    breaker = {}
+
+    def read(self, name):
+        got = real_read(self, name)
+        payload = got[0] if isinstance(got, tuple) else got
+        if (threading.get_ident() == breaker.get("ident")
+                and not paused.is_set() and isinstance(payload, dict)
+                and payload.get("nonce") == "stale-nonce"):
+            paused.set()
+            resume.wait(30)
+        return got
+
+    monkeypatch.setattr(backend, "read", read)
+    outcome = []
+
+    def run():
+        breaker["ident"] = threading.get_ident()
+        try:
+            with hold():
+                outcome.append("held")
+        except StoreLeaseHeld:
+            outcome.append("refused")
+
+    a = threading.Thread(target=run)
+    a.start()
+    assert paused.wait(30)
+    with hold():
+        resume.set()
+        a.join(30)
+        seen = lease_nonce()
+    return outcome, seen
+
+
+def test_posix_paused_breaker_never_deletes_successor_lease(
+        tmp_path, monkeypatch):
+    """A breaker that read a dead-pid lease and paused must not unlink
+    the successor's lease that took its name meanwhile: it moves the
+    file aside, finds another nonce, links it back and is refused."""
+    import socket
+
+    import universal_data_connector_spark.store_lease as sl
+
+    store = str(tmp_path / "seen")
+    os.makedirs(store)
+    lease = os.path.join(store, LEASE_NAME)
+    dead = subprocess.run([sys.executable, "-c",
+                           "import os; print(os.getpid())"],
+                          capture_output=True, text=True, check=True)
+    with open(lease, "w") as fh:
+        json.dump({"owner": None, "op": "compact",
+                   "pid": int(dead.stdout), "host": socket.gethostname(),
+                   "nonce": "stale-nonce", "acquired_unix": time.time(),
+                   "ttl_seconds": None}, fh)
+
+    def lease_nonce():
+        if os.path.exists(lease):
+            with open(lease) as fh:
+                return json.load(fh)["nonce"]
+
+    outcome, seen = _race_paused_breaker(
+        monkeypatch, sl._PosixLeases,
+        lambda: posix_maintenance_lease(store, op="compact"), lease_nonce)
+    successor_held = seen not in (None, "stale-nonce")
+    assert (outcome, successor_held) == (["refused"], True)
+    assert not os.path.exists(lease)  # released by its one holder
+    assert sorted(os.listdir(store)) == []  # no file left moved aside
+
+
+def test_s3_paused_breaker_never_deletes_successor_lease(
+        target, monkeypatch):
+    """S3 twin: the paused breaker's delete carries the ETag it read,
+    fails its precondition on the successor's object, and the re-read
+    finds that lease live."""
+    import universal_data_connector_spark.store_lease as sl
+
+    key = target._key(LEASE_NAME)
+    target.client.put_object(
+        Bucket=target.bucket, Key=key,
+        Body=json.dumps({"owner": "crashed-elsewhere", "op": "vacuum",
+                         "pid": 1, "host": "another-host",
+                         "nonce": "stale-nonce", "acquired_unix": 0.0,
+                         "ttl_seconds": 0.0}).encode())
+
+    def lease_nonce():
+        got, _ = target._get_json(key)
+        return got and got["nonce"]
+
+    outcome, seen = _race_paused_breaker(
+        monkeypatch, sl._S3Leases,
+        lambda: sl.s3_maintenance_lease(target), lease_nonce)
+    successor_held = seen not in (None, "stale-nonce")
+    assert (outcome, successor_held) == (["refused"], True)
+    assert target._get_json(key) == (None, None)

@@ -28,8 +28,10 @@ def main() -> int:
 
     import __spark_entry__ as e
     from oracle_harness import compare, duck_connection
+    from universal_data_connector_spark.session import DEFAULT_CPUS
 
-    spark = SparkSession.builder.master("local[8]").getOrCreate()
+    spark = (SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
+             .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     qs, osql = e.queries(), e.oracle_sql()
     bad = 0

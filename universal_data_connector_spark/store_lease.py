@@ -71,8 +71,10 @@ primitive         ``_PosixLeases(store_dir)``     ``_S3Leases(target, ttl)``
 lease name        ``<dir>/_udc_lease``            ``<prefix>/_udc_lease``
 mark name         ``<dir>/_udc_writers/<hex>``    ``<prefix>/_udc_writers/<hex>``
 create            ``O_CREAT|O_EXCL`` file         ``If-None-Match:*`` PUT (ETag)
-read              JSON file (None: torn)          JSON object
+read              JSON file (None: torn)          JSON object and its ETag
 delete            unlink, missing is fine         ``client.delete_object``
+break stale       rename aside, re-read the       ``delete_object`` with
+                  nonce, unlink or link back      ``IfMatch`` on the read ETag
 marks             list ``_udc_writers/``          list ``_udc_writers/``
 stale             ``_is_stale``; a torn or        ``_is_stale`` (the payload
                   foreign-host payload: mtime     carries its TTL)
@@ -92,6 +94,19 @@ prove that after a pause, and leaves the object to expire via its
 TTL. Control objects are deleted with ``delete_object`` directly,
 never ``delete_keys``: the release must not share a failure mode
 with the data-plane deletes.
+
+Breaking a stale artifact is conditional on it still being the one
+that was read. A delete by name would remove whatever sits at the
+name by then: a breaker paused between its read and its delete would
+take a successor's live lease, and two holders would hold one store.
+A POSIX breaker renames the file to a unique name, re-reads it, and
+unlinks it only if it carries the nonce judged stale and is still
+stale; otherwise it links the file back. An S3 breaker deletes with
+``IfMatch`` on the ETag it read. Either way a changed artifact is read
+and judged again. One gap is left on POSIX: while a live file is
+moved aside its name is vacant, so a claim landing in those
+microseconds wins and the displaced holder's exclusion is lost
+(logged; its heartbeat then sees the inode change).
 
 Non-goals: writer-vs-writer exclusion (the stores keep their
 single-writer contract; marks are visible to maintenance only) and
@@ -463,18 +478,26 @@ _GONE = object()  # what ``read`` returns for an artifact that is absent
 
 def _live(b, names: list[str], owner: str | None, kind: str) -> dict:
     """The live artifacts among ``names``, each with its payload (None
-    when unreadable). Stale ones are broken on the way."""
+    when unreadable). Stale ones are broken on the way, each only if
+    it is still the artifact that was read; one that changed since is
+    read and judged again."""
     live = {}
     for name in names:
-        payload = b.read(name)
-        if payload is _GONE:
-            continue
-        if b.stale(name, payload, owner):
+        while True:
+            payload, tag = b.read(name)
+            if payload is _GONE:
+                break
+            if not b.stale(name, payload, owner):
+                live[name] = payload
+                break
             log.warning("store_lease: breaking stale %s %s", kind, name)
-            b.delete(name)
-        else:
-            live[name] = payload
+            if b.break_stale(name, payload, tag, owner):
+                break
     return live
+
+
+def _nonce(payload):
+    return payload.get("nonce") if isinstance(payload, dict) else None
 
 
 def _refusal(b, live: dict, what: str, why: str) -> StoreLeaseHeld:
@@ -598,19 +621,45 @@ class _PosixLeases:
             json.dump(payload, fh)
 
     def read(self, name: str):
-        """The payload; None when unparseable (a crash between the
-        exclusive create and the payload write)."""
+        """(payload, None); the payload is None when unparseable (a
+        crash between the exclusive create and the payload write)."""
         try:
             with open(name) as fh:
-                return json.load(fh)
+                return json.load(fh), None
         except FileNotFoundError:
-            return _GONE
+            return _GONE, None
         except (OSError, ValueError):
-            return None
+            return None, None
 
     def delete(self, name: str) -> None:
         with contextlib.suppress(FileNotFoundError):
             os.unlink(name)
+
+    def break_stale(self, name: str, payload, tag, owner) -> bool:
+        """Move the file to a unique name, then unlink it if it is the
+        stale one that was read (same nonce, still stale); otherwise
+        link it back. False when the file changed or went: read it
+        again."""
+        aside = f"{name}.break-{uuid.uuid4().hex}"
+        try:
+            os.rename(name, aside)
+        except FileNotFoundError:
+            return False
+        moved, _ = self.read(aside)
+        if (moved is not _GONE and _nonce(moved) == _nonce(payload)
+                and self.stale(aside, moved, owner)):
+            self.delete(aside)
+            return True
+        try:
+            os.link(aside, name)
+        except FileExistsError:
+            log.error("store_lease: %s was claimed while a live holder's "
+                      "file was moved aside; that holder has lost its "
+                      "exclusion", name)
+        except FileNotFoundError:
+            return False
+        self.delete(aside)
+        return False
 
     def marks(self) -> list[str]:
         wdir = os.path.join(self.root, WRITERS_DIR)
@@ -684,9 +733,8 @@ class _PosixLeases:
                 return False
         except OSError:
             return False
-        current = self.read(name)
-        return (isinstance(current, dict)
-                and current.get("nonce") == payload.get("nonce"))
+        current, _ = self.read(name)
+        return _nonce(current) == payload["nonce"]
 
     def close(self, renewer) -> None:
         fd = getattr(renewer, "fd", None)
@@ -720,12 +768,31 @@ class _S3Leases:
             raise FileExistsError(name) from None
 
     def read(self, name: str):
-        payload, _ = self.target._get_json(name)
-        return _GONE if payload is None else payload
+        """(payload, ETag)."""
+        payload, etag = self.target._get_json(name)
+        return (_GONE, None) if payload is None else (payload, etag)
 
     def delete(self, name: str) -> None:
         self.target.client.delete_object(Bucket=self.target.bucket,
                                          Key=name)
+
+    def break_stale(self, name: str, payload, etag, owner) -> bool:
+        """Delete the object only while its ETag is the one read. False
+        when it changed (``PreconditionFailed``) or went: read it
+        again."""
+        from universal_data_connector_spark.streaming.object_state import (
+            _is_missing,
+            _is_precondition_failed,
+        )
+
+        try:
+            self.target.client.delete_object(
+                Bucket=self.target.bucket, Key=name, IfMatch=etag)
+        except Exception as exc:
+            if _is_precondition_failed(exc) or _is_missing(exc):
+                return False
+            raise
+        return True
 
     def marks(self) -> list[str]:
         return self.target.list_keys(under=WRITERS_DIR)
