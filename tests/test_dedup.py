@@ -339,18 +339,15 @@ def test_connected_components_long_chain_converges(spark, monkeypatch):
 
 
 def test_gramless_docs_excluded_from_banding(spark):
-    """Skew guard: docs too short to carry a shingle must produce NO
-    banded rows (they can never verify above a positive Jaccard
+    """Skew guard: docs too short to carry a shingle must never reach
+    the band self-join (they can never verify above a positive Jaccard
     threshold, and at corpus scale a shared sentinel bucket makes the
-    band self-join quadratic in the empty-doc count). They also must
-    not pair in simhash candidates — identical-content pairs belong to
-    exact_dedup."""
-    from pyspark.sql import functions as F
-
+    band self-join quadratic in the empty-doc count). At threshold 0
+    every candidate pair verifies (an empty union scores 0.0), so the
+    output IS the candidate set. They also must not pair in simhash
+    candidates — identical-content pairs belong to exact_dedup."""
     from universal_data_connector_spark.operators.dedup import (
-        _banded_from_grams,
         minhash_dedup_pairs,
-        shingle_hashes_df,
         simhash_candidates,
     )
 
@@ -360,13 +357,13 @@ def test_gramless_docs_excluded_from_banding(spark):
          (6, "a proper document with enough words to carry shingles")],
         "doc_id bigint, text string")
 
-    grams = shingle_hashes_df(docs)
-    banded = _banded_from_grams(grams)
-    assert (banded.select("doc_id").distinct().count() == 2)  # only 5, 6
+    cands = {(r.id_1, r.id_2)
+             for r in minhash_dedup_pairs(docs, threshold=0.0).collect()}
+    assert cands == {(5, 6)}  # empty/short docs never become candidates
 
     pairs = {(r.id_1, r.id_2)
              for r in minhash_dedup_pairs(docs, threshold=0.8).collect()}
-    assert pairs == {(5, 6)}  # empty/short docs never pair via LSH
+    assert pairs == {(5, 6)}
 
     sim = {(r.id_1, r.id_2) for r in simhash_candidates(docs).collect()}
     assert (1, 2) not in sim and (1, 4) not in sim
@@ -384,9 +381,7 @@ def test_fold_bands_batch_bitwise_equals_per_doc():
         _minhash_coeffs,
     )
 
-    coeffs = _minhash_coeffs(128)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
+    A, B = _minhash_coeffs(128)
     rng = np.random.default_rng(7)
     lists = [rng.integers(-2**62, 2**62,
                           size=int(rng.integers(0, 60))).tolist()
@@ -395,6 +390,67 @@ def test_fold_bands_batch_bitwise_equals_per_doc():
     with np.errstate(over="ignore"):
         ref = np.stack([_fold_bands(l, A, B, 32, 4) for l in lists])
         # tiny chunk size forces many reduceat chunks incl. 1-doc ones
-        got = _fold_bands_batch(lists, A, B, 32, 4, max_chunk_grams=53)
-        full = _fold_bands_batch(lists, A, B, 32, 4)
+        got = _fold_bands_batch(lists, A, B, 32, max_chunk_grams=53)
+        full = _fold_bands_batch(lists, A, B, 32)
     assert (ref == got).all() and (ref == full).all()
+
+
+def test_fold_bands_batch_oversized_single_doc():
+    """A single document larger than the chunk cap is column-chunked
+    (bounded memory) and still folds bitwise-identically."""
+    import numpy as np
+
+    from universal_data_connector_spark.operators.dedup import (
+        _fold_bands,
+        _fold_bands_batch,
+        _minhash_coeffs,
+    )
+
+    A, B = _minhash_coeffs(64)
+    rng = np.random.default_rng(11)
+    lists = [rng.integers(-2**62, 2**62, size=5000).tolist(),  # oversized
+             rng.integers(-2**62, 2**62, size=10).tolist(),
+             []]
+    with np.errstate(over="ignore"):
+        ref = np.stack([_fold_bands(l, A, B, 16, 4) for l in lists])
+        got = _fold_bands_batch(lists, A, B, 16, max_chunk_grams=700)
+    assert (ref == got).all()
+
+
+def test_sig_band_df_sig_matches_per_doc_reference(spark):
+    """``_sig_band_df`` (the cross-run store's input) emits, per doc,
+    the signature written out per doc below and the `_fold_bands`
+    reference bands. One input partition makes one Arrow batch whose
+    grams exceed the kernel's 128k-gram chunk cap, so the batch signs
+    in more than one reduceat chunk; the empty and the too-short doc
+    sign the sentinel shingle."""
+    import numpy as np
+
+    from universal_data_connector_spark.operators.dedup import (
+        _MERSENNE,
+        _fold_bands,
+        _minhash_coeffs,
+        _sig_band_df,
+        shingle_hashes_df,
+    )
+
+    rows = [(i, " ".join(f"w{i}x{j}" for j in range(50_000)))
+            for i in range(3)]
+    rows += [(3, ""), (4, "too short"), (5, BASE), (6, NEAR)]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string") \
+                .coalesce(1)
+    num_hashes, bands = 16, 4
+    got = {r.doc_id: (list(r["__sig"]), list(r["__bands"]))
+           for r in _sig_band_df(docs, "text", "doc_id", num_hashes,
+                                 bands, 3).collect()}
+    grams = {r.doc_id: r["__g"]
+             for r in shingle_hashes_df(docs, shingle_n=3).collect()}
+    assert sum(len(g) for g in grams.values()) > 1 << 17
+    A, B = _minhash_coeffs(num_hashes)
+    assert set(got) == set(grams)
+    for doc_id, g in grams.items():
+        h = np.asarray(g or [_MERSENNE], dtype=np.int64) % _MERSENNE
+        sig = ((A * h[None, :] + B) % _MERSENNE).min(axis=1)
+        with np.errstate(over="ignore"):
+            folded = _fold_bands(g, A, B, bands, num_hashes // bands)
+        assert got[doc_id] == (sig.tolist(), folded.tolist()), doc_id

@@ -510,10 +510,8 @@ def test_sig_band_df_bands_match_lsh_pipeline(spark):
     that lets a corpus deduped in-batch and a corpus deduped
     incrementally agree on what is near."""
     from universal_data_connector_spark.operators.dedup import (
-        shingle_band_df,
-    )
-    from universal_data_connector_spark.operators.dedup_state import (
         _sig_band_df,
+        shingle_band_df,
     )
 
     docs = _near_docs(spark, [(i, f"{_BASE} variant {i % 3}")

@@ -85,7 +85,8 @@ def test_minhash_signatures_shuffle_free(spark):
     UDF over the scan): any Exchange before signatures means the plan
     re-shuffles the full corpus text."""
     docs = load(spark, SF_DIR, "documents")
-    sig = od.minhash_signature_df(docs, num_hashes=16, shingle_n=3)
+    sig = od._sig_band_df(docs, "text", "doc_id", num_hashes=16, bands=4,
+                          shingle_n=3)
     p = plan_str(sig)
     # spread() repartitions by id for local parallelism; RoundRobin/hash
     # on the skinny (id, text) projection is acceptable — a shuffle of
@@ -625,6 +626,43 @@ def test_lease_protocol_is_written_once():
     assert users(lambda n: attr(n, {"O_EXCL"})) == {"_PosixLeases"}
     assert users(lambda n: attr(n, {"put_object", "_put_cas",
                                     "delete_object"})) == {"_S3Leases"}
+
+
+def test_lsh_kernels_are_written_once():
+    """Source lint: the hyperplane planes are drawn only in
+    ``similarity.lsh_plane_weights``; the MinHash modulus ``_MERSENNE``
+    is named only in ``operators/dedup.py``, which owns the signature
+    and band-fold kernels; and ``dedup_state`` imports none of the
+    MinHash constants or the hash-family builder."""
+    import ast
+    import pathlib
+
+    import universal_data_connector_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    draws, mersenne = set(), set()
+    for py in root.rglob("*.py"):
+        rel = str(py.relative_to(root))
+        tree = ast.parse(py.read_text())
+        for top in tree.body:
+            for n in ast.walk(top):
+                if (isinstance(n, ast.Call)
+                        and getattr(n.func, "attr", None)
+                        == "standard_normal"):
+                    draws.add((rel, getattr(top, "name", None)))
+                if "_MERSENNE" in (getattr(n, "id", None),
+                                   getattr(n, "attr", None),
+                                   getattr(n, "name", None)):
+                    mersenne.add(rel)
+    assert draws == {("operators/similarity.py", "lsh_plane_weights")}
+    assert mersenne == {"operators/dedup.py"}
+
+    tree = ast.parse((root / "operators/dedup_state.py").read_text())
+    imported = {a.name for n in ast.walk(tree)
+                if isinstance(n, ast.ImportFrom) for a in n.names}
+    assert not {name for name in imported
+                if name.startswith("_FNV")
+                or name in ("_MERSENNE", "_minhash_coeffs")}
 
 
 def _plan_chain(plan) -> list[str]:

@@ -269,95 +269,3 @@ def test_window_rotation_invariant_holds():
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     assert proc.returncode == 0, proc.stdout + proc.stderr
     assert "INVARIANT OK" in proc.stdout
-
-
-def test_embedding_cosine_banded_oracle_equals_brute_force():
-    """VERDICT r18 item 5: the dedup_embedding_cosine oracle now bands
-    candidates with the engine's own fixed-seed hyperplanes so it
-    scales to the sf10 population. This differential pins the banded
-    SQL to the retired brute-force SQL on real testdata — identical
-    result sets (both all-pairs-verified here, since the data holds no
-    >=0.95 pair the bands could miss; planted-dup recall is pinned
-    separately in tests/test_dedup.py)."""
-    import duckdb
-
-    from universal_data_connector_spark.plans.catalog import ORACLES
-
-    brute = """
-    SELECT a.vec_id AS id_1, b.vec_id AS id_2
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-          / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-             * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
-          >= 0.95
-    """
-    for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        con = duckdb.connect()
-        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/embeddings.parquet')")
-        got = sorted(con.sql(ORACLES["dedup_embedding_cosine"]).fetchall())
-        want = sorted(con.sql(brute).fetchall())
-        assert got == want, f"banded != brute at {sf_dir}"
-
-
-def test_embedding_cosine_banded_oracle_boundary_pairs(tmp_path):
-    """Threshold semantics of the banded oracle on PLANTED vectors:
-    pairs engineered just above and just below cosine 0.95 (and an
-    exact-duplicate pair) must classify identically under the banded
-    SQL and the brute-force SQL — the real-testdata differential never
-    exercises the boundary because its pair population sits at ~0.5
-    (random tails) or ~0.99 (clusters)."""
-    import duckdb
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from universal_data_connector_spark.plans.catalog import ORACLES
-
-    rng = np.random.default_rng(191)
-    base = rng.standard_normal(64)
-    base /= np.linalg.norm(base)
-    ortho = rng.standard_normal(64)
-    ortho -= ortho.dot(base) * base
-    ortho /= np.linalg.norm(ortho)
-
-    def at_cosine(c: float) -> np.ndarray:
-        return c * base + np.sqrt(1 - c * c) * ortho
-
-    vecs = [
-        base,                 # 0: anchor
-        at_cosine(0.9995),    # 1: well above -> pair with 0
-        at_cosine(0.951),     # 2: just above -> pair with 0
-        at_cosine(0.949),     # 3: just below -> NOT a pair with 0
-        base.copy(),          # 4: exact duplicate -> pair with 0, 1, 2
-        rng.standard_normal(64),  # 5: unrelated
-        np.zeros(64),         # 6: zero vector -> never a pair
-    ]
-    table = pa.table({
-        "vec_id": pa.array(range(len(vecs)), pa.int64()),
-        "embedding": pa.array([list(map(float, v)) for v in vecs],
-                              pa.list_(pa.float64())),
-    })
-    path = str(tmp_path / "embeddings.parquet")
-    pq.write_table(table, path)
-
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM "
-            f"read_parquet('{path}')")
-    brute = """
-    SELECT a.vec_id AS id_1, b.vec_id AS id_2
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]) > 0
-      AND list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]) > 0
-      AND list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-          / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-             * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
-          >= 0.95
-    """
-    got = sorted(con.sql(ORACLES["dedup_embedding_cosine"]).fetchall())
-    want = sorted(con.sql(brute).fetchall())
-    assert got == want
-    # the planted geometry resolved the way it was engineered
-    assert (0, 3) not in got and (0, 6) not in got
-    for pair in ((0, 1), (0, 2), (0, 4), (1, 4), (2, 4)):
-        assert pair in got, (pair, got)

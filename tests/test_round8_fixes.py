@@ -481,30 +481,6 @@ def test_engine_defers_agg_state_finalize_past_bookkeeping(
     assert not os.path.isfile(os.path.join(target, W._BATCH_INTENT))
 
 
-def test_fold_bands_batch_oversized_single_doc():
-    """A single document larger than the chunk cap is column-chunked
-    (bounded memory) and still folds bitwise-identically."""
-    import numpy as np
-
-    from universal_data_connector_spark.operators.dedup import (
-        _fold_bands,
-        _fold_bands_batch,
-        _minhash_coeffs,
-    )
-
-    coeffs = _minhash_coeffs(64)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
-    rng = np.random.default_rng(11)
-    lists = [rng.integers(-2**62, 2**62, size=5000).tolist(),  # oversized
-             rng.integers(-2**62, 2**62, size=10).tolist(),
-             []]
-    with np.errstate(over="ignore"):
-        ref = np.stack([_fold_bands(l, A, B, 16, 4) for l in lists])
-        got = _fold_bands_batch(lists, A, B, 16, 4, max_chunk_grams=700)
-    assert (ref == got).all()
-
-
 def test_lenient_casts_saturate(spark):
     """Out-of-range numerics saturate (Java narrowing intValue/
     longValue, the reference's fallback), never silently null->0."""
@@ -831,27 +807,6 @@ def test_partition_by_content_hash_distribution(spark):
     nonempty = [s for s in sizes if s > 0]
     assert len(nonempty) == 16, f"empty partitions: {sizes}"
     assert max(sizes) <= 3 * (512 // 16), f"skewed: {sizes}"
-
-
-def test_cosine_topk_pandas_empty_and_zero_norm(spark):
-    """Empty query sets return empty (no numpy AxisError); zero-norm
-    vectors are excluded instead of ranking NaN first everywhere."""
-    from universal_data_connector_spark.operators.similarity import (
-        cosine_topk_pandas,
-    )
-
-    corpus = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0])],
-        "vec_id bigint, embedding array<double>")
-    empty_q = corpus.filter("vec_id < 0")
-    assert cosine_topk_pandas(empty_q, corpus, k=2).count() == 0
-
-    queries = corpus.filter("vec_id = 1")
-    got = [(r.neighbor_id, r.rank) for r in
-           cosine_topk_pandas(queries, corpus, k=2)
-           .orderBy("rank").collect()]
-    # zero vector 3 must NOT appear (NaN would have ranked first)
-    assert got == [(2, 1)]
 
 
 def test_kafka_records_preserves_explicit_key(spark):

@@ -305,6 +305,11 @@ def _check_dedup_state_props(columns: list, props: dict) -> None:
     """Mode/column/store validation shared by the batch dispatch and
     the streaming tag (so a config typo fails at BUILD, not in the
     tenth micro-batch)."""
+    from universal_data_connector_spark.operators.dedup_state import (
+        _embedding_params,
+        _near_params,
+    )
+
     mode = str(props.get("mode", "exact")).lower()
     if mode == "near":
         need = [props.get("textColumn", "content"),
@@ -312,18 +317,12 @@ def _check_dedup_state_props(columns: list, props: dict) -> None:
         # tuning props validate at BUILD (r15 review: they plumb
         # through now, so a bad combination must not wait for the
         # first micro-batch to raise inside foreachBatch)
-        num_hashes = int(props.get("numHashes", 128))
-        bands = int(props.get("bands", 32))
-        if bands < 1 or num_hashes % bands:
-            raise ValueError(
-                f"dedup_state near: bands ({bands}) must be >= 1 and "
-                f"divide numHashes ({num_hashes})")
+        _near_params(int(props.get("numHashes", 128)),
+                     int(props.get("bands", 32)),
+                     int(props.get("shingleN", 5)))
     elif mode == "embedding":
         need = [props.get("vectorColumn", "embedding"),
                 props.get("idColumn", "vec_id")]
-        from universal_data_connector_spark.operators.dedup_state import (
-            _embedding_params,
-        )
         _embedding_params(int(props.get("nPlanes", 4096)),
                           int(props.get("bands", 128)),
                           int(props.get("seed", 7)))

@@ -593,64 +593,10 @@ def _pin_params(store, params: dict) -> None:
 
 def _near_params(num_hashes: int, bands: int, shingle_n: int) -> dict:
     if bands < 1 or num_hashes % bands:
-        raise ValueError(f"bands ({bands}) must divide num_hashes "
-                         f"({num_hashes})")
+        raise ValueError(f"bands ({bands}) must be >= 1 and divide "
+                         f"numHashes (num_hashes={num_hashes})")
     return {"num_hashes": int(num_hashes), "bands": int(bands),
             "shingle_n": int(shingle_n)}
-
-
-def _sig_band_df(df: DataFrame, text_col: str, id_col: str,
-                 num_hashes: int, bands: int,
-                 shingle_n: int) -> DataFrame:
-    """(id, __sig, __bands) in ONE map over the scan: the pure-JVM
-    shingle expression feeds a mapInPandas that computes the affine-min
-    signature AND its per-band FNV fold together (the same math as
-    ``dedup._fold_bands`` — signature sliced into ``bands`` rows of
-    ``r``, FNV-1a over each slice), so the cross-run store and the
-    in-batch LSH pipeline band identically."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from universal_data_connector_spark.operators.dedup import (
-        _FNV_OFF,
-        _FNV_P,
-        _MERSENNE,
-        _minhash_coeffs,
-        shingle_hashes_df,
-    )
-
-    coeffs = _minhash_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
-    r = num_hashes // bands
-    grams = shingle_hashes_df(df, text_col, id_col, shingle_n)
-    out_schema = T.StructType([
-        T.StructField(id_col, grams.schema[id_col].dataType),
-        T.StructField("__sig", T.ArrayType(T.LongType())),
-        T.StructField("__bands", T.ArrayType(T.LongType())),
-    ])
-
-    def emit(batches):
-        for pdf in batches:
-            sigs, folds = [], []
-            with np.errstate(over="ignore"):
-                for lst in pdf["__g"]:
-                    h = np.asarray(lst, dtype=np.int64)
-                    if h.size == 0:
-                        h = np.array([_MERSENNE], dtype=np.int64)
-                    h = h % _MERSENNE
-                    sig = ((A * h[None, :] + B) % _MERSENNE).min(axis=1)
-                    folded = np.full(bands, _FNV_OFF, dtype=np.uint64)
-                    band_sig = sig.astype(np.uint64).reshape(bands, r)
-                    for j in range(r):
-                        folded = (folded ^ band_sig[:, j]) * _FNV_P
-                    sigs.append(sig)
-                    folds.append(folded.astype(np.int64))
-            yield pd.DataFrame({id_col: pdf[id_col], "__sig": sigs,
-                                "__bands": folds})
-
-    return grams.mapInPandas(emit, out_schema)
 
 
 def _reject_null_ids(df: DataFrame, id_col: str, mode: str) -> None:
@@ -739,7 +685,7 @@ def seen_near_filter(df: DataFrame, store,
     Batch flow — every store read is confined to touched buckets:
 
     1. one map over the scan computes each new doc's signature + band
-       hashes (``_sig_band_df``, no shuffle);
+       hashes (``dedup._sig_band_df``, no shuffle);
     2. new band rows equi-join the band store's touched buckets on
        (band_idx, band_hash) -> candidate (new id, stored doc_key)
        pairs — LSH guarantees a near-dup shares >= 1 band with
@@ -763,6 +709,8 @@ def seen_near_filter(df: DataFrame, store,
     docs * bands * ~40B) — at 1B shipped docs and 128 hashes, ~1 TB of
     signature parquet spread over the bucket dirs, read strictly
     per-touched-bucket."""
+    from universal_data_connector_spark.operators.dedup import _sig_band_df
+
     store = seen_store(store, num_buckets)
     n = store.open()
     _pin_params(store, _near_params(num_hashes, bands, shingle_n))
@@ -800,12 +748,11 @@ def seen_near_filter(df: DataFrame, store,
 # ---------------------------------------------------------------------------
 
 def _embedding_params(n_planes: int, bands: int, seed: int) -> dict:
-    if n_planes % bands:
-        raise ValueError(f"bands ({bands}) must divide n_planes "
-                         f"({n_planes})")
-    if not 1 <= n_planes // bands <= 63:
-        raise ValueError(
-            f"bits per band must be in [1, 63], got {n_planes // bands}")
+    from universal_data_connector_spark.operators.similarity import (
+        _band_width,
+    )
+
+    _band_width(n_planes, bands)
     return {"kind": "embedding", "n_planes": int(n_planes),
             "bands": int(bands), "seed": int(seed)}
 
@@ -858,7 +805,7 @@ def seen_embedding_filter(df: DataFrame, store,
     can miss a near-dup but never false-drops, since the exact cosine
     decides). Band codes come from ``similarity.hyperplane_bands`` —
     bit-for-bit the codes the in-batch LSH pipeline uses, the same
-    parity rule as the MinHash store's ``_sig_band_df`` — and are
+    parity rule as the MinHash store's ``dedup._sig_band_df`` — and are
     stored under the MinHash store's band schema, with a ``vecs``
     sub-store in place of ``sigs``; its crash contract is the MinHash
     store's verbatim. Zero-norm vectors have NULL cosine and therefore

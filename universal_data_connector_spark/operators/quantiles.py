@@ -162,10 +162,10 @@ def _small_input_percentiles(vals: DataFrame, g: list[str],
 # count collect, pick join) — measured ~0.7-1.2 s of fixed overhead
 # per call at local sf0.1 vs milliseconds for one tiny aggregate. The
 # default (64 MB) bounds the worst case (one group owning every row)
-# to one aggregation buffer of a few million doubles; production
-# deployments tune via env, and the estimate grows with the data so
-# the 100 TB regime always takes rank-selection.
-_SMALL_INPUT_BYTES_ENV = "UDC_PCTL_AGG_MAX_BYTES"
+# to one aggregation buffer of a few million doubles; a caller tunes
+# it with ``small_input_bytes`` (0 disables the fast path), and the
+# estimate grows with the data so the 100 TB regime always takes
+# rank-selection.
 _SMALL_INPUT_BYTES_DEFAULT = 64 << 20
 
 
@@ -214,9 +214,7 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
     vals = (df.select(*g, vcol.cast("double").alias("__v"))
               .filter(F.col("__v").isNotNull()))
     if small_input_bytes is None:
-        import os
-        small_input_bytes = int(os.environ.get(
-            _SMALL_INPUT_BYTES_ENV, _SMALL_INPUT_BYTES_DEFAULT))
+        small_input_bytes = _SMALL_INPUT_BYTES_DEFAULT
     if small_input_bytes > 0:
         est = _estimated_bytes(vals)
         if est is not None and est <= small_input_bytes:

@@ -1,6 +1,6 @@
 """Similarity search (ANN) over `array<float>` embedding columns.
 
-Two tiers:
+Three tiers:
 
 * `brute_force_topk` — exact cosine top-k. The query set is broadcast,
   so the corpus is scanned once with no shuffle on the corpus side;
@@ -13,6 +13,11 @@ Two tiers:
   Centroids here are taken deterministically from the corpus (first
   `n_centroids` ids); on a real deployment you'd plug k-means centroids
   in through the same interface.
+* hyperplane LSH — `lsh_topk`, `lsh_verified_matches`,
+  `hyperplane_bands` and `lsh_near_dup_pairs` all band on one code:
+  the sign bits against the fixed-seed planes of `lsh_plane_weights`,
+  packed per band by `_band_vals_udf`; candidates are verified with
+  exact cosine.
 
 Vector math is `zip_with`/`aggregate` (JVM, sequential, deterministic);
 for very wide vectors swap in the numpy Pandas-UDF variant
@@ -205,42 +210,6 @@ def cosine_topk_pandas(queries: DataFrame, corpus: DataFrame, k: int = 5,
                            k, rank_alias="rank")
 
 
-def lsh_signatures(df: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding", n_planes: int = 16,
-                   seed: int = 7, spread_input: bool = True) -> DataFrame:
-    """Random-hyperplane LSH signatures: sign bit of the dot product
-    against `n_planes` fixed Gaussian hyperplanes, packed into one int.
-
-    The hyperplanes are generated ONCE at plan-build time from a fixed
-    seed, so every executor, run, and cluster sees identical constants
-    — signatures are reproducible. Arrow-batched matrix multiply, pure
-    projection, no shuffle: at 100 TB the signature pass rides the
-    scan. Collision probability for two vectors is (1 - theta/pi) per
-    bit (Charikar), so same-bucket rates track cosine similarity.
-    """
-    from pyspark.sql import types as T
-
-    if not 1 <= n_planes <= 63:
-        # packed into one signed int64; bit 63 would flip the sign and
-        # corrupt shiftright-based band extraction downstream
-        raise ValueError(f"n_planes must be in [1, 63], got {n_planes}")
-
-    @F.pandas_udf(T.LongType())
-    def sig(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype="int64")
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        weights = np.random.default_rng(seed).standard_normal(
-            (M.shape[1], n_planes))
-        bits = (M @ weights) > 0
-        packed = (bits * (1 << np.arange(n_planes, dtype=np.int64))).sum(axis=1)
-        return pd.Series(packed.astype(np.int64))
-
-    base = spread(df, id_col) if spread_input else df
-    return base.select(
-        F.col(id_col), F.col(vec_col), sig(vec_col).alias("__sig"))
-
-
 def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
              id_col: str = "vec_id", vec_col: str = "embedding",
              n_planes: int = 16, bands: int = 4, seed: int = 7) -> DataFrame:
@@ -273,51 +242,53 @@ def _lsh_candidates_with_vecs(queries: DataFrame, corpus: DataFrame,
     """LSH candidate rows (query_id, neighbor_id, __qv, __nv) — one
     corpus pass, no shuffle of the corpus.
 
-    Corpus rows flow scan -> signature matmul -> band explode ->
-    broadcast-probe against the (small-by-contract) query codes, with
-    the vectors riding along, so the corpus is scanned ONCE and never
-    checkpointed, shuffled, or re-joined to attach vectors. The query
-    side skips `spread` (repartitioning a handful of rows across the
-    cluster costs an exchange plus one Python-worker round trip per
-    core for no parallelism gain). Duplicate (query, neighbor) rows —
-    several bands matching — are NOT collapsed here; callers dedup
-    after computing their per-pair values, which are deterministic
-    expressions and therefore equal across duplicates."""
-    if n_planes % bands:
-        raise ValueError(
-            f"bands ({bands}) must divide n_planes ({n_planes}); the top "
-            f"{n_planes % bands} bits would silently drop out of every band")
-    width = n_planes // bands
-    mask = (1 << width) - 1
+    Corpus rows flow scan -> band-code matmul (`_band_vals_udf`) ->
+    band explode -> broadcast-probe against the (small-by-contract)
+    query codes, with the vectors riding along, so the corpus is
+    scanned ONCE and never checkpointed, shuffled, or re-joined to
+    attach vectors. The query side skips `spread` (repartitioning a
+    handful of rows across the cluster costs an exchange plus one
+    Python-worker round trip per core for no parallelism gain).
+    Duplicate (query, neighbor) rows — several bands matching — are
+    NOT collapsed here; callers dedup after computing their per-pair
+    values, which are deterministic expressions and therefore equal
+    across duplicates."""
+    band_vals = _band_vals_udf(n_planes, bands, seed)
 
-    def codes(df: DataFrame, prefix: str, vec_alias: str,
-              spread_input: bool) -> DataFrame:
-        sig = lsh_signatures(df, id_col, vec_col, n_planes, seed,
-                             spread_input=spread_input)
-        bs = F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band_idx"),
-                     F.shiftright("__sig", b * width).bitwiseAND(mask)
-                      .alias("band_val"))
-            for b in range(bands)]))
-        return (sig.select(F.col(id_col).alias(f"{prefix}_id"),
-                           F.col(vec_col).alias(vec_alias),
-                           bs.alias("b"))
-                   .select(f"{prefix}_id", vec_alias,
-                           "b.band_idx", "b.band_val"))
+    def codes(df: DataFrame, prefix: str, vec_alias: str) -> DataFrame:
+        return (df.select(F.col(id_col).alias(f"{prefix}_id"),
+                          F.col(vec_col).alias(vec_alias),
+                          band_vals(vec_col).alias("__bands"))
+                  .select(f"{prefix}_id", vec_alias,
+                          F.posexplode("__bands")
+                          .alias("band_idx", "band_val")))
 
-    qb = codes(queries, "query", "__qv", spread_input=False)
-    cb = codes(corpus, "neighbor", "__nv", spread_input=True)
+    qb = codes(queries, "query", "__qv")
+    cb = codes(spread(corpus, id_col), "neighbor", "__nv")
     return (cb.join(F.broadcast(qb), ["band_idx", "band_val"])
               .filter(F.col("query_id") != F.col("neighbor_id"))
               .select("query_id", "neighbor_id", "__qv", "__nv"))
 
 
 def lsh_plane_weights(dim: int, n_planes: int = 16, seed: int = 7):
-    """The fixed hyperplane constants `lsh_signatures` uses — exposed
-    so an external oracle can replicate the signatures bit-for-bit.
-    Deterministic: same (dim, n_planes, seed) -> same float64 matrix
-    on every machine (NumPy's Generator guarantees stream stability)."""
+    """The fixed hyperplane constants, (dim, n_planes) float64 — the
+    one place they are drawn: `_band_vals_udf` codes against them, and
+    an external oracle replicates the codes bit-for-bit from them.
+    Deterministic: same (dim, n_planes, seed) -> same matrix on every
+    machine (NumPy's Generator guarantees stream stability)."""
     return np.random.default_rng(seed).standard_normal((dim, n_planes))
+
+
+def _band_width(n_planes: int, bands: int) -> int:
+    """Sign bits per band code, ``n_planes // bands``; raises unless
+    ``bands`` divides ``n_planes`` (the remainder planes would drop out
+    of every band) and each code fits one signed int64 (1-63 bits)."""
+    if bands < 1 or n_planes % bands:
+        raise ValueError(f"bands ({bands}) must divide n_planes ({n_planes})")
+    width = n_planes // bands
+    if not 1 <= width <= 63:
+        raise ValueError(f"bits per band must be in [1, 63], got {width}")
+    return width
 
 
 def lsh_verified_matches(queries: DataFrame, corpus: DataFrame,
@@ -358,12 +329,11 @@ def hyperplane_bands(df: DataFrame, id_col: str = "vec_id",
                      bands: int = 32, seed: int = 7) -> DataFrame:
     """Per-band hyperplane-LSH codes: (id, band_idx, band_val).
 
-    Unlike `lsh_signatures` (one packed int64, <= 63 planes total) each
-    band's `width = n_planes // bands` sign bits are packed into its own
-    int64, so `n_planes` can grow to whatever the recall target needs
-    (only the per-band width is capped at 63). One Arrow matmul per
-    batch, fixed-seed hyperplanes, bounded fan-out of `bands` rows per
-    vector — the pass rides the scan, no shuffle.
+    Each band's `width = n_planes // bands` sign bits are packed into
+    its own int64, so `n_planes` can grow to whatever the recall target
+    needs (only the per-band width is capped at 63). One Arrow matmul
+    per batch, fixed-seed hyperplanes, bounded fan-out of `bands` rows
+    per vector — the pass rides the scan, no shuffle.
     """
     return (spread(df, id_col)
             .select(F.col(id_col),
@@ -373,25 +343,24 @@ def hyperplane_bands(df: DataFrame, id_col: str = "vec_id",
 
 
 def _band_vals_udf(n_planes: int, bands: int, seed: int):
-    """The Arrow-batched band-code projection `hyperplane_bands` and
-    `lsh_near_dup_pairs` share: vector -> array of `bands` packed
-    sign-bit codes (one int64 per band, `width = n_planes // bands`
-    bits each), fixed-seed hyperplanes."""
+    """The one hyperplane-code projection, shared by `hyperplane_bands`,
+    `lsh_near_dup_pairs` and the `lsh_topk`/`lsh_verified_matches`
+    candidates: vector -> array of `bands` codes, band ``b`` packing
+    the sign bits of planes ``b*width .. b*width + width - 1`` of
+    `lsh_plane_weights` (plane ``b*width + i`` is bit ``i``) into one
+    int64, `width = n_planes // bands`. Collision probability for two
+    vectors is (1 - theta/pi) per bit (Charikar), so same-bucket rates
+    track cosine similarity."""
     from pyspark.sql import types as T
 
-    if n_planes % bands:
-        raise ValueError(f"bands ({bands}) must divide n_planes ({n_planes})")
-    width = n_planes // bands
-    if not 1 <= width <= 63:
-        raise ValueError(f"bits per band must be in [1, 63], got {width}")
+    width = _band_width(n_planes, bands)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def band_vals(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype=object)
         M = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        weights = np.random.default_rng(seed).standard_normal(
-            (M.shape[1], n_planes))
+        weights = lsh_plane_weights(M.shape[1], n_planes, seed)
         pack = 1 << np.arange(width, dtype=np.int64)   # (width,)
         # chunk the projection so the transient (rows x n_planes)
         # float64 product stays ~16 MB per task even at thousands of

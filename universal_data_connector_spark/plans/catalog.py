@@ -1567,6 +1567,31 @@ def dedup_simhash(spark, sf_dir):
     return od.simhash_candidates(d, max_hamming=3)
 
 
+def _hyperplane_band_sql(dim: int, n_planes: int, bands: int,
+                         seed: int) -> list[str]:
+    """One DuckDB expression per band over a ``DOUBLE[]`` column ``e``:
+    the engine's band code (`similarity._band_vals_udf`) rebuilt from
+    the fixed-seed planes (`lsh_plane_weights`), plane ``b*width + i``
+    contributing bit ``i`` of band ``b``. The plane constants are
+    shortest-round-trip float64 literals, so both engines dot the same
+    doubles."""
+    from universal_data_connector_spark.operators.similarity import (
+        lsh_plane_weights,
+    )
+
+    W = lsh_plane_weights(dim, n_planes, seed)
+    width = n_planes // bands
+
+    def plane_lit(p: int) -> str:
+        return "[" + ",".join(repr(float(x)) for x in W[:, p]) + "]"
+
+    return ["(" + " + ".join(
+        f"(CASE WHEN list_dot_product(e, {plane_lit(b * width + i)})"
+        f" > 0 THEN {1 << i} ELSE 0 END)"
+        for i in range(width)) + ")"
+        for b in range(bands)]
+
+
 def _embedding_cosine_banded_oracle_sql(dim: int = 64,
                                         n_planes: int = 1280,
                                         bands: int = 64, seed: int = 7,
@@ -1583,27 +1608,13 @@ def _embedding_cosine_banded_oracle_sql(dim: int = 64,
     brute-force oracle wherever band recall is exact (pinned both
     ways: the planted-dup recall bound in tests/test_dedup.py, and the
     banded-vs-brute SQL equality differential in
-    tests/test_round19_fixes.py). Sign decisions are safe across
+    tests/test_similarity.py). Sign decisions are safe across
     engines exactly as in `_lsh_oracle_sql`: the plane constants are
     shortest-round-trip float64 literals, so both engines dot the same
     doubles. The zero-norm guard mirrors the engine's NULL-on-zero
     (Spark drops the row; bare DuckDB would compare NaN)."""
-    from universal_data_connector_spark.operators.similarity import (
-        lsh_plane_weights,
-    )
-
-    W = lsh_plane_weights(dim, n_planes, seed)
-    width = n_planes // bands
-
-    def plane_lit(p: int) -> str:
-        return "[" + ",".join(repr(float(x)) for x in W[:, p]) + "]"
-
     band_exprs = ",\n               ".join(
-        "(" + " + ".join(
-            f"(CASE WHEN list_dot_product(e, {plane_lit(b * width + i)})"
-            f" > 0 THEN {1 << i} ELSE 0 END)"
-            for i in range(width)) + ")"
-        for b in range(bands))
+        _hyperplane_band_sql(dim, n_planes, bands, seed))
     cos = ("list_dot_product(a.e, b.e) / (sqrt(list_dot_product(a.e, a.e))"
            " * sqrt(list_dot_product(b.e, b.e)))")
     return f"""
@@ -1644,7 +1655,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     oracle). Since r19 the DuckDB oracle replicates the SAME fixed-seed
     banding (see _embedding_cosine_banded_oracle_sql) so it scales to
     the sf10 population the brute-force form timed out on; banded ==
-    brute-force SQL equality is pinned in tests/test_round19_fixes.py.
+    brute-force SQL equality is pinned in tests/test_similarity.py.
     Cosine values are excluded from the output so the check is
     robust to last-ulp float differences; 0.95 sits far above the
     testdata's max pairwise cosine (~0.51 — random vectors, no planted
@@ -1794,22 +1805,9 @@ def _lsh_oracle_sql(dim: int = 64, n_planes: int = 16, bands: int = 4,
     because its randomness is a deterministic, published constant.
     Sign decisions are safe across engines: min |dot| over the test
     embeddings is ~2e-5, ten orders above double reordering noise."""
-    from universal_data_connector_spark.operators.similarity import (
-        lsh_plane_weights,
-    )
-
-    W = lsh_plane_weights(dim, n_planes, seed)
-    width = n_planes // bands
-
-    def plane_lit(p: int) -> str:
-        return "[" + ",".join(repr(float(x)) for x in W[:, p]) + "]"
-
     band_cols = ",\n               ".join(
-        "(" + " + ".join(
-            f"(CASE WHEN list_dot_product(e, {plane_lit(b * width + i)})"
-            f" > 0 THEN {1 << i} ELSE 0 END)"
-            for i in range(width)) + f") AS b{b}"
-        for b in range(bands))
+        f"{code} AS b{b}" for b, code in
+        enumerate(_hyperplane_band_sql(dim, n_planes, bands, seed)))
     on = " OR ".join(f"q.b{b} = c.b{b}" for b in range(bands))
     cos = ("list_dot_product(q.e, c.e) / (sqrt(list_dot_product(q.e, q.e))"
            " * sqrt(list_dot_product(c.e, c.e)))")
