@@ -633,7 +633,7 @@ def test_lsh_kernels_are_written_once():
     ``similarity.lsh_plane_weights``; the MinHash modulus ``_MERSENNE``
     is named only in ``operators/dedup.py``, which owns the signature
     and band-fold kernels; and ``dedup_state`` imports none of the
-    MinHash constants or the hash-family builder."""
+    MinHash constants or the hash-family constructor."""
     import ast
     import pathlib
 

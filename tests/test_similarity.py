@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_DIR_MED
 from universal_data_connector_spark.operators.similarity import (
     brute_force_topk,
     cosine_topk_pandas,
@@ -210,9 +210,9 @@ def test_cosine_topk_pandas_empty_and_zero_norm(spark):
 
 
 def test_embedding_cosine_banded_oracle_equals_brute_force():
-    """VERDICT r18 item 5: the dedup_embedding_cosine oracle now bands
-    candidates with the engine's own fixed-seed hyperplanes so it
-    scales to the sf10 population. This differential pins the banded
+    """The dedup_embedding_cosine oracle bands candidates with the
+    engine's own fixed-seed hyperplanes so it scales to the sf10
+    population. This differential pins the banded
     SQL to the retired brute-force SQL on real testdata — identical
     result sets (both all-pairs-verified here, since the data holds no
     >=0.95 pair the bands could miss; planted-dup recall is pinned
@@ -229,7 +229,7 @@ def test_embedding_cosine_banded_oracle_equals_brute_force():
              * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
           >= 0.95
     """
-    for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+    for sf_dir in (SF_DIR, SF_DIR_MED):
         con = duckdb.connect()
         con.sql(f"CREATE VIEW embeddings AS SELECT * FROM "
                 f"read_parquet('{sf_dir}/embeddings.parquet')")

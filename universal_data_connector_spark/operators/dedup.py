@@ -78,8 +78,8 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
 def _minhash_coeffs(num_hashes: int, seed: int = 42):
     """Fixed affine hash family as (A, B) int64 column vectors of
     shape (num_hashes, 1) — deterministic, no RNG at plan time (same
-    plan on every executor / every run). The one builder of the family
-    every MinHash signature uses."""
+    plan on every executor / every run). Every MinHash signature takes
+    its family from here."""
     coeffs = []
     a, b = seed * 2 + 1, seed * 31 + 7
     for _ in range(num_hashes):
