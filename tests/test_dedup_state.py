@@ -251,22 +251,37 @@ def test_dedup_state_commit_precedes_manifest(spark, tmp_path,
 
 def test_dedup_state_streaming_tags_frame_and_validates(spark,
                                                         tmp_path):
-    """A streaming frame is TAGGED (the filter runs per micro-batch in
-    start_streaming_sink), with config typos still failing at build."""
-    from universal_data_connector_spark.engine import (
-        _dedup_state_transform,
-    )
+    """A streaming dedup_state hands its props to the run (the filter
+    runs per micro-batch in start_streaming_sink), with config typos
+    still failing at build."""
+    from universal_data_connector_spark.config import parse_config
+    from universal_data_connector_spark.engine import prepare
 
-    stream = (spark.readStream.schema("doc_id bigint, text string")
-              .json(str(tmp_path)))
-    out = _dedup_state_transform(
-        stream, {"stateDir": str(tmp_path / "s"), "keys": "text"})
-    assert out._udc_stream_dedup_state["keys"] == "text"
+    (tmp_path / "in").mkdir()
+
+    def cfg(props):
+        return parse_config({"pipelines": [{
+            "name": "stream-tag",
+            "source": {"type": "file",
+                       "properties": {"path": str(tmp_path / "in"),
+                                      "pattern": "*.txt"}},
+            "transformations": [{"type": "dedup_state",
+                                 "properties": props}],
+            "sink": {"type": "file",
+                     "properties": {"path": str(tmp_path / "out")}},
+        }]}).pipelines[0]
+
+    run = prepare(spark, cfg({"stateDir": str(tmp_path / "s"),
+                              "keys": "content"}), streaming=True)
+    try:
+        assert run.stream_dedup["keys"] == "content"
+    finally:
+        run.close()
     with pytest.raises(ValueError, match="not in"):
-        _dedup_state_transform(
-            stream, {"stateDir": str(tmp_path / "s"), "keys": "nope"})
+        prepare(spark, cfg({"stateDir": str(tmp_path / "s"),
+                            "keys": "nope"}), streaming=True)
     with pytest.raises(ValueError, match="stateDir.*bucketName"):
-        _dedup_state_transform(stream, {"keys": "text"})
+        prepare(spark, cfg({"keys": "content"}), streaming=True)
 
 
 def test_dedup_state_streaming_must_be_last(spark, tmp_path):

@@ -605,3 +605,64 @@ def test_upsert_sink_type_streaming_yaml(spark, tmp_path):
     q.awaitTermination()
     state = {r.user_id: r.ts for r in spark.read.parquet(target).collect()}
     assert state == {7: "2026-01-01 12:00:00", 8: "2026-01-01 10:30:00"}
+
+
+def test_one_pipeline_run_for_both_runners():
+    """engine.run and the manager's worker execute the same prepared
+    run (engine.PipelineRun): no transform-to-sink state rides on a
+    DataFrame, the batch sink sequence is called from one place, the
+    manager calls none of its steps, and one engine function reads the
+    bookkeeping hooks a source attaches to its frame."""
+    import ast
+    import pathlib
+
+    import universal_data_connector_spark as pkg
+
+    class Calls(ast.NodeVisitor):
+        """callee name -> {(file, enclosing function)}; a getattr with
+        a literal ``_udc_*`` name is recorded under that name."""
+
+        def __init__(self, rel, found):
+            self.rel, self.scope, self.found = rel, [""], found
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            name = getattr(node.func, "id", None) or \
+                getattr(node.func, "attr", None)
+            if (name == "getattr" and len(node.args) > 1
+                    and isinstance(node.args[1], ast.Constant)
+                    and str(node.args[1].value).startswith("_udc_")):
+                name = node.args[1].value
+            self.found.setdefault(name, set()).add(
+                (self.rel, self.scope[-1]))
+            self.generic_visit(node)
+
+    root = pathlib.Path(pkg.__file__).parent
+    found: dict = {}
+    for py in root.rglob("*.py"):
+        text, rel = py.read_text(), str(py.relative_to(root))
+        for side_channel in ("_udc_post_sink_commits", "_udc_store_spans",
+                             "_udc_stream_dedup_state"):
+            assert side_channel not in text, (rel, side_channel)
+        Calls(rel, found).visit(ast.parse(text))
+
+    assert found["prepare_batch_sink_cfg"] == {("engine.py", "execute")}
+    assert found["finalize_batch_sink"] == {("engine.py", "execute")}
+    for step in ("prepare_batch_sink_cfg", "finalize_batch_sink",
+                 "create_sink", "batch_archive_plan",
+                 "batch_manifest_plan"):
+        assert not {fn for rel, fn in found.get(step, ())
+                    if rel == "manager.py"}, step
+    hooks = set().union(*(calls for name, calls in found.items()
+                          if str(name).startswith("_udc_")))
+    assert {c for c in hooks if c[0] in ("engine.py", "manager.py")} \
+        == {("engine.py", "_source_hooks")}
+    for attr in ("_udc_input_files", "_udc_input_fingerprint",
+                 "_udc_kafka_commit"):
+        assert found[attr] == {("engine.py", "_source_hooks")}, attr

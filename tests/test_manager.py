@@ -1,22 +1,15 @@
-"""Round-19 fixes.
+"""The pipeline runners: ``engine.run`` and ``PipelineManager``'s
+worker execute the same prepared run (``engine.prepare``), and every
+way out of either closes it.
 
-ADVICE r18 (high): the maintenance-abort branch in
-``PipelineManager.start_pipeline`` (registration re-check) never closed
-the batch dedup_state writer-mark span the build opened — the span's
-heartbeat renewed the mark indefinitely (live pid, live nonce), so the
-very maintenance op that triggered the abort was refused with
-StoreLeaseHeld until process exit.
-
-VERDICT r18 item 4: a thread killed between claim and ``finally``
-keeps its nonce in ``_LIVE_NONCES`` forever, wedging same-process
-supersession; a registered nonce whose artifact aged past the TTL
-without a renewal is now treated as not-live.
-
-ADVICE r18 (low ×2): the POSIX release self-fence is inode-narrowed
-(an untouched artifact is provably still ours and gets deleted even
-after a pause past the TTL), and heartbeat ticks dispatch to a small
-worker pool so one hung renewal cannot starve other holders. The
-tests of these last two paragraphs live in ``tests/test_store_lease.py``.
+A batch dedup_state holds a POSIX writer mark across its WHOLE
+read-filter-ship-commit sequence — the same span the streaming
+foreachBatch path holds — so a cross-process compaction cannot
+rename-swap a bucket dir out of the seen filter's listing. The span
+and the build's DISK_ONLY pins belong to the run: its close releases
+them on success, on a failed sink, on a failed build, and on each of
+the manager's abort paths (maintenance re-check at registration, a
+worker thread that cannot start).
 """
 
 from __future__ import annotations
@@ -29,9 +22,15 @@ import types
 import pytest
 
 from universal_data_connector_spark.config import parse_config
+from universal_data_connector_spark.engine import prepare, run
+from universal_data_connector_spark.manager import PipelineManager
 from universal_data_connector_spark.operators.dedup_state import (
     compact_seen_store,
     seen_filter,
+)
+from universal_data_connector_spark.store_lease import (
+    StoreLeaseHeld,
+    posix_maintenance_lease,
 )
 
 
@@ -42,7 +41,9 @@ def _seed(spark, store) -> None:
     c()
 
 
-def _dedup_pipeline_cfg(tmp_path, store):
+def _dedup_pipeline_cfg(tmp_path, store, *after):
+    """file -> dedup_state(content) [-> ``after`` transformations] ->
+    file, over one input file ``in/a.txt``."""
     inp, out = tmp_path / "in", tmp_path / "out"
     inp.mkdir(exist_ok=True)
     (inp / "a.txt").write_text("hello corpus")
@@ -54,10 +55,122 @@ def _dedup_pipeline_cfg(tmp_path, store):
             {"type": "dedup_state",
              "properties": {"stateDir": store, "keys": "content",
                             "numBuckets": "4"}},
+            *after,
         ],
         "sink": {"type": "file",
                  "properties": {"path": str(out), "extension": ".txt"}},
     }]}).pipelines[0]
+
+
+@pytest.mark.parametrize("runner", ["engine.run", "start_pipeline"])
+def test_failed_build_leaves_no_cache_entry(spark, tmp_path, runner):
+    """A build that fails after dedup_state pinned its DISK_ONLY keyed
+    frame must leave the CacheManager empty on both runners. The
+    manager used to release its build pins only once the build had
+    succeeded, so the long-lived service kept one cache entry per
+    failed submission."""
+    from pyspark.errors import AnalysisException
+
+    cfg = _dedup_pipeline_cfg(
+        tmp_path, str(tmp_path / "seen"),
+        {"type": "sql",
+         "properties": {"query": "SELECT no_such_column FROM _input"}})
+    spark.catalog.clearCache()
+    with pytest.raises(AnalysisException):
+        if runner == "engine.run":
+            run(spark, cfg)
+        else:
+            PipelineManager(spark).start_pipeline(cfg)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_batch_dedup_state_span_excludes_maintenance(spark, tmp_path):
+    """From the moment a batch dedup_state is BUILT (its seen-store
+    listing happens then) until its commit, maintenance must refuse —
+    pre-r18 only the commit carried a mark, so a compaction could
+    rename-swap bucket dirs between the listing and the commit. Fails
+    against the r17 code (the mid-build compaction succeeded)."""
+    store = str(tmp_path / "seen")
+    _seed(spark, store)
+    prepared = prepare(spark, _dedup_pipeline_cfg(tmp_path, store))
+    try:
+        with pytest.raises(StoreLeaseHeld):
+            compact_seen_store(spark, store)
+    finally:
+        prepared.close()
+    # span released (sink failed / never ran): maintenance proceeds
+    compact_seen_store(spark, store)
+
+
+def test_batch_dedup_state_refuses_up_front_under_maintenance(
+        spark, tmp_path):
+    """The mirror: a batch pipeline whose dedup_state store is under
+    live maintenance refuses at BUILD — before reading anything or
+    writing to the sink — instead of shipping rows and only failing at
+    the post-sink commit. Fails against the r17 code (the run wrote
+    the sink output first and raised at commit time)."""
+    store = str(tmp_path / "seen")
+    _seed(spark, store)
+    out = tmp_path / "out"
+    cfg = _dedup_pipeline_cfg(tmp_path, store)
+    with posix_maintenance_lease(store):
+        with pytest.raises(StoreLeaseHeld):
+            run(spark, cfg)
+        assert not out.exists() or os.listdir(out) == []
+    # maintenance done: the same run completes and the span is gone
+    run(spark, cfg)
+    assert sorted(os.listdir(out)) == ["a.txt"]
+    compact_seen_store(spark, store)
+
+
+def test_batch_dedup_state_span_released_on_sink_failure(
+        spark, tmp_path, monkeypatch):
+    """A failed sink (commit never runs) must release the span, or the
+    store wedges maintenance until process exit."""
+    from universal_data_connector_spark import sinks
+
+    store = str(tmp_path / "seen")
+    out = tmp_path / "out"
+    cfg = _dedup_pipeline_cfg(tmp_path, store)
+
+    def failing_sink(*a, **k):
+        raise RuntimeError("sink exploded")
+
+    monkeypatch.setattr(sinks, "create_sink", failing_sink)
+    with pytest.raises(RuntimeError, match="sink exploded"):
+        run(spark, cfg)
+    monkeypatch.undo()
+    # span released on the failure path: maintenance proceeds, and the
+    # clean rerun ships the file (nothing was committed)
+    compact_seen_store(spark, store)
+    run(spark, cfg)
+    assert sorted(os.listdir(out)) == ["a.txt"]
+
+
+def test_manager_batch_dedup_state_span_follows_job_lifecycle(
+        spark, tmp_path):
+    """Managed batch jobs hold the span from submission (build) to the
+    job's terminal state: maintenance refuses while the job runs and
+    proceeds after it completes."""
+    store = str(tmp_path / "seen")
+    _seed(spark, store)
+    out = tmp_path / "out"
+    cfg = _dedup_pipeline_cfg(tmp_path, store)
+
+    mgr = PipelineManager(spark)
+    job = mgr.start_pipeline(cfg)
+
+    def job_status():
+        return {j["name"]: j for j in mgr.jobs()}[job]["status"]
+
+    for _ in range(600):
+        if job_status() in ("COMPLETED", "FAILED"):
+            break
+        time.sleep(0.05)
+    assert job_status() == "COMPLETED"
+    assert sorted(os.listdir(out)) == ["a.txt"]
+    # terminal job: its span is closed, maintenance proceeds
+    compact_seen_store(spark, store)
 
 
 def test_maintenance_abort_closes_store_span(spark, tmp_path, monkeypatch):
@@ -68,10 +181,7 @@ def test_maintenance_abort_closes_store_span(spark, tmp_path, monkeypatch):
     until process exit. Fails against the r18 code (ADVICE r18,
     high)."""
     from universal_data_connector_spark import engine
-    from universal_data_connector_spark.manager import (
-        MaintenanceConflict,
-        PipelineManager,
-    )
+    from universal_data_connector_spark.manager import MaintenanceConflict
 
     store = str(tmp_path / "seen")
     _seed(spark, store)
@@ -138,11 +248,7 @@ def test_abort_interleaving_fuzz_never_wedges_maintenance(
     import random
 
     from universal_data_connector_spark import engine
-    from universal_data_connector_spark.manager import (
-        MaintenanceConflict,
-        PipelineManager,
-    )
-    from universal_data_connector_spark.store_lease import StoreLeaseHeld
+    from universal_data_connector_spark.manager import MaintenanceConflict
 
     store = str(tmp_path / "shared-store")
     _seed(spark, store)
@@ -249,23 +355,3 @@ def test_abort_interleaving_fuzz_never_wedges_maintenance(
                 pytest.fail("maintenance wedged after the fuzz — a "
                             "leaked writer-mark span survives drain")
             time.sleep(0.5)
-
-
-def test_window_rotation_invariant_holds():
-    """The rotation invariant the judge recomputes each round
-    (latest-evidence union over all CORRECTNESS files = all live keys;
-    stale and never-evidenced sets empty; the current _CHECK_FIRST is
-    exactly the oldest cohort + flagship + middle-cohort spares, 50
-    keys) is now mechanized in tools/window_rotation.py — this pins
-    the tool green so a botched future rotation fails the suite, not
-    the round's driver gate."""
-    import subprocess
-    import sys as _sys
-
-    proc = subprocess.run(
-        [_sys.executable, os.path.join("tools", "window_rotation.py"),
-         "--check"],
-        capture_output=True, text=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    assert "INVARIANT OK" in proc.stdout

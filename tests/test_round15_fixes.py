@@ -763,17 +763,31 @@ def test_compact_cadence_on_batch_pipeline_warns_and_ignores(
         spark, tmp_path, caplog):
     import logging
 
-    from universal_data_connector_spark.engine import (
-        _dedup_state_transform,
-    )
+    from universal_data_connector_spark.config import parse_config
+    from universal_data_connector_spark.engine import prepare
 
-    df = _doc_frame(spark, [(1, "batch cadence")])
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "a.txt").write_text("batch cadence")
+    cfg = parse_config({"pipelines": [{
+        "name": "batch-cadence",
+        "source": {"type": "file",
+                   "properties": {"path": str(inp), "pattern": "*.txt"}},
+        "transformations": [
+            {"type": "dedup_state",
+             "properties": {"keys": "content",
+                            "stateDir": str(tmp_path / "store"),
+                            "compactEveryBatches": "3"}}],
+        "sink": {"type": "file",
+                 "properties": {"path": str(tmp_path / "out")}},
+    }]}).pipelines[0]
     with caplog.at_level(logging.WARNING,
                          logger="universal_data_connector_spark.engine"):
-        out = _dedup_state_transform(df, {
-            "keys": "text", "stateDir": str(tmp_path / "store"),
-            "compactEveryBatches": "3"})
-    assert out.count() == 1
+        run = prepare(spark, cfg)
+    try:
+        assert run.df.count() == 1
+    finally:
+        run.close()
     assert any("compactEveryBatches" in r.message for r in caplog.records)
 
 

@@ -26,7 +26,10 @@ Transformation registry semantics:
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
 import logging
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -240,18 +243,25 @@ def _dedup_state_transform(df: DataFrame, props: dict) -> DataFrame:
     """Cross-run dedup against a persistent seen store
     (``operators/dedup_state.py``): rows whose content (exact key
     columns / MinHash-near text / embedding-near vector) was seen in
-    ANY previous successful run are dropped. Batch frames get the
-    filter immediately and the commit rides post-sink via
-    ``_udc_post_sink_commits`` (commit strictly after the sink,
-    strictly before archive/manifest). STREAMING frames are tagged
-    instead: the seen filter + batch sink + commit all run inside one
-    ``foreachBatch`` scope per micro-batch (``start_streaming_sink``),
-    because the commit must observe sink success — which means
-    dedup_state must be the LAST transformation of a streaming
-    pipeline (enforced in ``apply_transformations``)."""
+    ANY previous successful run are dropped. Runs inside ``prepare``
+    only, handing the run what must follow the sink. Batch frames get
+    the filter now and a writer-mark span over the whole
+    read-filter-ship-commit; the commit runs post-sink
+    (``finalize_batch_sink``). STREAMING frames pass through and the
+    run keeps the props: the seen filter + batch sink + commit all run
+    inside one ``foreachBatch`` scope per micro-batch
+    (``start_streaming_sink``), because the commit must observe sink
+    success — which means dedup_state must be the LAST transformation
+    of a streaming pipeline (enforced in ``apply_transformations``)."""
     _check_dedup_state_props(df.columns, props)
+    run = _PREPARING.get()
+    if run is None:
+        raise ValueError(
+            "dedup_state runs only inside a prepared pipeline run "
+            "(engine.prepare / engine.run): its seen-key commit must "
+            "follow the run's sink")
     if df.isStreaming:
-        df._udc_stream_dedup_state = dict(props)
+        run.stream_dedup = dict(props)
         return df
     if props.get("compactEveryBatches") is not None:
         # cadence is a STREAMING notion (counted in micro-batches);
@@ -260,45 +270,13 @@ def _dedup_state_transform(df: DataFrame, props: dict) -> DataFrame:
         log.warning("dedup_state: compactEveryBatches applies to "
                     "streaming pipelines only; batch runs compact via "
                     "--compact-stores / POST /api/pipelines/maintenance")
-    # the store's span covers the WHOLE read-filter-ship-commit, like
-    # the streaming path's (``span`` in operators/dedup_state.py). It
-    # is closed by the wrapped commit post-sink, or by the runner's
-    # finally on any failure path (close_store_spans — ExitStack.close
-    # is idempotent).
-    import contextlib
-
     store = dedup_state_store(props)
-    span = contextlib.ExitStack()
-    span.enter_context(store.span())
-    try:
-        survivors, commit = _seen_filter_for(df, props, store)
-    except BaseException:
-        span.close()
-        raise
-
-    def commit_and_release(_commit=commit, _span=span):
-        try:
-            _commit()
-        finally:
-            _span.close()
-
-    survivors._udc_post_sink_commits = list(
-        getattr(df, "_udc_post_sink_commits", [])) + [commit_and_release]
-    survivors._udc_store_spans = list(
-        getattr(df, "_udc_store_spans", [])) + [span]
+    # released by finalize_batch_sink after the commit, or by the
+    # run's close on any failure path
+    run.spans.enter_context(store.span())
+    survivors, commit = _seen_filter_for(df, props, store)
+    run.store_commits.append(commit)
     return survivors
-
-
-def close_store_spans(df) -> None:
-    """Release any batch dedup_state writer-mark spans riding on a
-    frame — called by every batch runner's failure/cleanup path; a
-    span already closed by its commit is a no-op (ExitStack.close is
-    idempotent)."""
-    import contextlib
-
-    for span in getattr(df, "_udc_store_spans", ()) or ():
-        with contextlib.suppress(Exception):
-            span.close()
 
 
 def _check_dedup_state_props(columns: list, props: dict) -> None:
@@ -418,35 +396,23 @@ TRANSFORMS = {
 def apply_transformations(df: DataFrame,
                           transformations: list[TransformationConfig]) -> DataFrame:
     """Linear, YAML-order composition (``PipelineBuilder.java:125-142``)."""
+    known = [t.type for t in transformations if t.type in TRANSFORMS]
+    if "dedup_state" in known[:-1] and df.isStreaming:
+        raise ValueError(
+            "dedup_state must be the LAST transformation of a "
+            "streaming pipeline: its seen filter runs inside the "
+            "sink's per-micro-batch scope (start_streaming_sink), so "
+            f"no further transformation "
+            f"({known[known.index('dedup_state') + 1]!r}) can apply "
+            "after it — move it to the end, or pre-shape columns with "
+            "a sql transformation before it")
     for t in transformations:
         fn = TRANSFORMS.get(t.type)
         if fn is None:
             log.warning("unknown transformation type %r — passing through "
                         "unchanged", t.type)
             continue
-        if getattr(df, "_udc_stream_dedup_state", None) is not None:
-            raise ValueError(
-                "dedup_state must be the LAST transformation of a "
-                "streaming pipeline: its seen filter runs inside the "
-                "sink's per-micro-batch scope (start_streaming_sink), "
-                f"so no further transformation ({t.type!r}) can apply "
-                "after it — move it to the end, or pre-shape columns "
-                "with a sql transformation before it")
-        try:
-            out = fn(df, t.properties)
-        except BaseException:
-            # a later transform failing must release any writer-mark
-            # spans an earlier dedup_state already opened
-            close_store_spans(df)
-            raise
-        # post-sink commit callbacks + writer-mark spans (dedup_state)
-        # ride on the frame; transforms that don't add their own must
-        # not drop upstream ones — DataFrame attributes do not
-        # propagate through ops
-        for attr in ("_udc_post_sink_commits", "_udc_store_spans"):
-            if hasattr(df, attr) and not hasattr(out, attr):
-                setattr(out, attr, getattr(df, attr))
-        df = out
+        df = fn(df, t.properties)
     return df
 
 
@@ -564,7 +530,7 @@ def batch_manifest_plan(cfg: PipelineConfig, source_df: DataFrame,
     manifest_dir = cfg.source.properties.get("manifestDir")
     if not manifest_dir:
         return None, []
-    listed = getattr(source_df, "_udc_input_files", None)
+    listed = _source_hooks(source_df)[0]
     if listed is None:
         listed = source_df.inputFiles()
     consumed = [f for f in listed
@@ -645,6 +611,114 @@ def _archive_consumed(files: list[str], archive_dir: str,
                 pass
 
 
+def _source_hooks(source_df: DataFrame) -> tuple:
+    """(listed input files, input fingerprint, post-sink offset commit)
+    a source attached to its frame, each None when absent — the one
+    reader of those attributes. The s3 boto3 fallback lists its input
+    in ``_udc_input_files`` (its mapInPandas plan has no inputFiles());
+    the loopback kafka source hashes its polled offset slices into
+    ``_udc_input_fingerprint`` and defers its consumer-group commit to
+    ``_udc_kafka_commit``."""
+    return (getattr(source_df, "_udc_input_files", None),
+            getattr(source_df, "_udc_input_fingerprint", None),
+            getattr(source_df, "_udc_kafka_commit", None))
+
+
+#: the run ``prepare`` is building in this context: where a dedup_state
+#: transformation hands over its seen-key commit and writer-mark span
+#: (batch) or its props (streaming). Set and reset by ``prepare`` only;
+#: the transformation chain in between (``build_parts`` ->
+#: ``apply_transformations``) keeps its signatures, the way
+#: ``materialize_reliable`` reaches the innermost ``pin_scope``.
+_PREPARING: contextvars.ContextVar[PipelineRun | None] = \
+    contextvars.ContextVar("udc_preparing_run", default=None)
+
+
+class PipelineRun:
+    """One pipeline run, prepared once and executed the same way by
+    both runners — ``run`` below and the manager's worker thread — so
+    the sink-then-commit-then-archive order lives in one place.
+
+    ``prepare`` builds it: the source and transformed frames under one
+    ``pin_scope``, the archive and manifest plans, the source's hooks,
+    and what the build leaves for after the sink — a batch
+    dedup_state's seen-key commit plus the writer-mark span covering
+    its read-filter-ship-commit, or a streaming dedup_state's props.
+    ``execute`` runs a batch run to completion, ``start`` starts a
+    streaming one, and ``close`` releases the spans and the build's
+    DISK_ONLY pins. ``close`` is idempotent and thread-safe; every way
+    out of every runner calls it."""
+
+    def __init__(self, spark: SparkSession, cfg: PipelineConfig):
+        self.spark, self.cfg = spark, cfg
+        self.source_df = self.df = None
+        self.archive_plan = (None, [], None)
+        self.manifest_plan = (None, [])
+        self.input_files = self.input_fingerprint = None
+        self.kafka_commit = None
+        self.store_commits: list = []
+        self.stream_dedup: dict | None = None
+        self.spans = contextlib.ExitStack()
+        self.pins: list = []
+        self._lock = threading.Lock()
+
+    def execute(self, cancelled=lambda: False) -> None:
+        """Run a batch run: the sink, then ``finalize_batch_sink``.
+        ``cancelled`` is the manager's stop() check, re-checked before
+        every post-sink step. The sink is looked up in ``sinks`` at
+        call time, the one name a tracer wraps."""
+        from universal_data_connector_spark import sinks
+
+        sink_cfg, defer_state = prepare_batch_sink_cfg(self)
+        sinks.create_sink(self.df, sink_cfg, streaming=False)
+        finalize_batch_sink(self, defer_state, cancelled)
+
+    def start(self):
+        """Start a streaming run's sink; returns the StreamingQuery."""
+        return start_streaming_sink(self.df, self.cfg.sink,
+                                    self.stream_dedup)
+
+    def close(self) -> None:
+        """Release the spans and the build's pins exactly once."""
+        from universal_data_connector_spark.operators.relational import (
+            release_frames,
+        )
+
+        with self._lock:
+            pins, self.pins = self.pins, []
+            with contextlib.suppress(Exception):
+                self.spans.close()  # ExitStack.close empties the stack
+        release_frames(pins)
+
+
+def prepare(spark: SparkSession, cfg: PipelineConfig,
+            streaming: bool = False) -> PipelineRun:
+    """Build one pipeline run without executing it. A build error
+    closes the run before it propagates, so a failed build holds no
+    pins or spans."""
+    from universal_data_connector_spark.operators.relational import (
+        pin_scope,
+    )
+
+    run = PipelineRun(spark, cfg)
+    token = _PREPARING.set(run)
+    try:
+        with pin_scope() as run.pins:
+            run.source_df, run.df = build_parts(spark, cfg, streaming)
+        run.archive_plan = batch_archive_plan(cfg, run.source_df,
+                                              streaming)
+        run.manifest_plan = batch_manifest_plan(cfg, run.source_df,
+                                                streaming)
+        run.input_files, run.input_fingerprint, run.kafka_commit = \
+            _source_hooks(run.source_df)
+    except BaseException:
+        run.close()
+        raise
+    finally:
+        _PREPARING.reset(token)
+    return run
+
+
 def run(spark: SparkSession, cfg: PipelineConfig, streaming: bool = False):
     """Build and execute one pipeline. Batch: runs to completion and
     returns None. Streaming: returns the started StreamingQuery.
@@ -655,47 +729,19 @@ def run(spark: SparkSession, cfg: PipelineConfig, streaming: bool = False):
     ``cleanSource=archive``, and the reference's always-on
     move-to-processed (``FileSourceContext.java:113-125``). The move
     happens strictly after the sink returns, so a failed write leaves
-    the inputs in place for a clean re-run."""
-    from universal_data_connector_spark.operators.relational import (
-        pin_scope, release_frames,
-    )
-
-    if streaming:
-        source_df, df = build_parts(spark, cfg, streaming)
-        return start_streaming_sink(df, cfg.sink)
-    # Batch: the build AND its consuming action both complete inside
-    # this call, so scope any DISK_ONLY intermediates the operators pin
-    # to this job and free them on the way out (success or failure) —
-    # a long-lived caller never accumulates corpus-sized cache entries,
-    # and concurrent jobs' pins are untouched (per-build scope).
-    df = None
-    with pin_scope() as pins:
-        try:
-            source_df, df = build_parts(spark, cfg, streaming)
-            archive_dir, consumed, source_root = batch_archive_plan(
-                cfg, source_df, streaming)
-            manifest_dir, manifest_files = batch_manifest_plan(
-                cfg, source_df, streaming)
-            sink_cfg, defer_state_finalize = prepare_batch_sink_cfg(
-                cfg.sink, source_df, streaming)
-            result = create_sink(df, sink_cfg, streaming)
-            finalize_batch_sink(spark, cfg, source_df,
-                                archive_dir, consumed, source_root,
-                                manifest_dir, manifest_files,
-                                defer_state_finalize,
-                                transformed_df=df)
-        finally:
-            # a failed sink (commit never ran) must not leave the
-            # batch dedup_state writer-mark span behind
-            if df is not None:
-                close_store_spans(df)
-            release_frames(pins)
-    return result
+    the inputs in place for a clean re-run. The run is closed on the
+    way out, success or failure; a streaming build pins nothing and
+    opens no span (its dedup_state does both per micro-batch)."""
+    pipeline = prepare(spark, cfg, streaming)
+    try:
+        return pipeline.start() if streaming else pipeline.execute()
+    finally:
+        pipeline.close()
 
 
-def start_streaming_sink(df: DataFrame, sink_cfg):
-    """Start the streaming sink for a built pipeline frame. A frame
-    tagged by a streaming ``dedup_state`` routes through a
+def start_streaming_sink(df: DataFrame, sink_cfg, props: dict | None):
+    """Start the streaming sink for a built pipeline frame. Given a
+    streaming ``dedup_state``'s ``props``, the frame routes through a
     ``foreachBatch`` wrapper instead of the sink's native streaming
     form: per micro-batch, filter against the durable seen store, run
     the BATCH form of the configured sink on the survivors, then
@@ -720,7 +766,6 @@ def start_streaming_sink(df: DataFrame, sink_cfg):
     compaction is covered by the compactors' own crash contracts
     (staged-rename swap repair on POSIX, listing-scoped deletes on
     S3), and a crash-skipped cadence is caught by the next one."""
-    props = getattr(df, "_udc_stream_dedup_state", None)
     if props is None:
         return create_sink(df, sink_cfg, True)
     compact_every = int(props.get("compactEveryBatches", 0) or 0)
@@ -785,8 +830,7 @@ def start_streaming_sink(df: DataFrame, sink_cfg):
             .option("checkpointLocation", checkpoint).start())
 
 
-def prepare_batch_sink_cfg(sink_cfg, source_df: DataFrame,
-                           streaming: bool):
+def prepare_batch_sink_cfg(run: PipelineRun):
     """(effective sink cfg, defer_state) for one batch run. For an
     ``agg_state`` sink the additive run intent must outlive the
     consumed-input bookkeeping in ``finalize_batch_sink``: if archive/
@@ -796,31 +840,23 @@ def prepare_batch_sink_cfg(sink_cfg, source_df: DataFrame,
     FINGERPRINT travels with the intent, turning a crash AFTER the
     recording (which changes the next run's input) into a fresh
     reclaim instead of a blind resume that drops increments (ADVICE
-    r8; ``begin_batch_run``'s input-identity guard). ONE
-    implementation shared by ``engine.run`` and the manager — the
-    r10 reviews found the two hand-mirrored copies drifting."""
-    defer_state = (not streaming and sink_cfg.type == "agg_state")
-    if not defer_state:
+    r8; ``begin_batch_run``'s input-identity guard)."""
+    sink_cfg = run.cfg.sink
+    if sink_cfg.type != "agg_state":
         return sink_cfg, False
     from dataclasses import replace
 
     props = {**sink_cfg.properties, "_deferFinalize": "true"}
-    fp = batch_input_fingerprint(source_df)
+    fp = batch_input_fingerprint(run)
     if fp is not None:
         props["_inputFingerprint"] = fp
     return replace(sink_cfg, properties=props), True
 
 
-def finalize_batch_sink(spark: SparkSession, cfg: PipelineConfig,
-                        source_df: DataFrame,
-                        archive_dir, consumed, source_root,
-                        manifest_dir, manifest_files,
-                        defer_state: bool,
-                        cancelled=lambda: False,
-                        transformed_df: DataFrame | None = None) -> None:
+def finalize_batch_sink(run: PipelineRun, defer_state: bool,
+                        cancelled=lambda: False) -> None:
     """Post-sink bookkeeping for one successful batch run, in the
-    crash-ordering both runners must share (engine.run and the
-    manager's worker target — ONE copy, r10 review):
+    run's crash ordering:
 
     0. commit dedup_state seen keys — strictly after the sink (a
        failed sink never reaches here: store untouched, clean rerun)
@@ -829,7 +865,8 @@ def finalize_batch_sink(spark: SparkSession, cfg: PipelineConfig,
        as seen, which is correct (they already reached the sink); the
        reverse order would archive/record inputs whose keys never
        landed, leaking future duplicates — the one outcome the
-       operator exists to prevent;
+       operator exists to prevent. The commits are the last users of
+       the build's pins and spans, so the run closes right after;
     1. archive consumed inputs (a failed sink never reaches here, so
        inputs stay in place for a clean rerun);
     2. record consumed files in the manifest;
@@ -845,49 +882,48 @@ def finalize_batch_sink(spark: SparkSession, cfg: PipelineConfig,
     ``cancelled`` is re-checked before every step: a stop() that lands
     mid-sequence must keep the intent (clearing it would let the rerun
     of the same unrecorded input claim a fresh id and double-apply)."""
-    for commit in getattr(transformed_df, "_udc_post_sink_commits",
-                          ()) or ():
+    for commit in run.store_commits:
         if cancelled():
             break
         commit()
+    run.close()
+    archive_dir, consumed, source_root = run.archive_plan
     if archive_dir and consumed and not cancelled():
         _archive_consumed(consumed, archive_dir, source_root)
+    manifest_dir, manifest_files = run.manifest_plan
     if manifest_dir and manifest_files and not cancelled():
         from universal_data_connector_spark.sources.files import (
             manifest_record,
         )
-        manifest_record(manifest_files, manifest_dir, spark)
-    kafka_commit = getattr(source_df, "_udc_kafka_commit", None)
-    if kafka_commit is not None and not cancelled():
-        kafka_commit()
+        manifest_record(manifest_files, manifest_dir, run.spark)
+    if run.kafka_commit is not None and not cancelled():
+        run.kafka_commit()
     if defer_state and not cancelled():
         from universal_data_connector_spark.sinks.upsert import state_target
-        state_target(cfg.sink.properties).intent_clear()
+        state_target(run.cfg.sink.properties).intent_clear()
 
 
-def batch_input_fingerprint(source_df: DataFrame) -> str | None:
+def batch_input_fingerprint(run: PipelineRun) -> str | None:
     """Identity of a batch source's consumed input, for the agg_state
     intent's changed-input crash guard (``begin_batch_run``).
 
-    Resolution order: an explicit ``_udc_input_fingerprint`` the
-    source attached (the loopback kafka source hashes its polled
-    offset slices — no file list exists); the ``_udc_input_files``
-    listing a mapInPandas-backed source embeds (the s3 boto3
-    fallback); ``inputFiles()`` on a file-backed plan. None when no
-    identity is derivable — the guard is then inert (legacy resume
-    semantics), which is why sources without inputFiles() should
-    attach one of the two attributes."""
+    Resolution order: an explicit input fingerprint the source
+    attached (the loopback kafka source hashes its polled offset
+    slices — no file list exists); the input listing a
+    mapInPandas-backed source embeds (the s3 boto3 fallback);
+    ``inputFiles()`` on a file-backed plan. None when no identity is
+    derivable — the guard is then inert (legacy resume semantics),
+    which is why sources without inputFiles() should attach one of
+    the two (``_source_hooks``)."""
     import hashlib
 
-    explicit = getattr(source_df, "_udc_input_fingerprint", None)
-    if explicit is not None:
-        return str(explicit)
-    listed = getattr(source_df, "_udc_input_files", None)
-    if listed is not None:
-        in_files = sorted(listed)
+    if run.input_fingerprint is not None:
+        return str(run.input_fingerprint)
+    if run.input_files is not None:
+        in_files = sorted(run.input_files)
     else:
         try:
-            in_files = sorted(source_df.inputFiles())
+            in_files = sorted(run.source_df.inputFiles())
         except Exception:
             in_files = []
     if not in_files:

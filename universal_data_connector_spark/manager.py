@@ -51,10 +51,11 @@ class Job:
     kind: str  # "batch" | "streaming"
     query: StreamingQuery | None = None
     thread: threading.Thread | None = None
-    # DISK_ONLY frames materialize_reliable pinned during THIS job's
-    # build (pin_scope'd at submission); released when the job reaches
-    # a terminal state — never by another job's bookkeeping.
-    pins: list = field(default_factory=list, repr=False)
+    # the prepared pipeline run (engine.prepare, at submission); closed
+    # when the job reaches a terminal state, which releases exactly
+    # this job's build pins and writer-mark spans. None for
+    # maintenance jobs.
+    run: engine.PipelineRun | None = field(default=None, repr=False)
     _state: str = "RUNNING"
     error: str | None = None
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
@@ -65,24 +66,11 @@ class Job:
             if self.query.isActive:
                 return "RUNNING"
             # the stream reached a terminal state on its own (failure /
-            # source exhaustion): its build pins have no consumer left
-            self.release_pins()
+            # source exhaustion): its run has no consumer left
+            self.run.close()
             return "FAILED" if self.query.exception() else "COMPLETED"
         with self._lock:
             return self._state
-
-    def release_pins(self) -> None:
-        """Free this job's DISK_ONLY build pins exactly once
-        (idempotent, thread-safe) — called from every terminal path:
-        worker finish, stop(), and terminal-status observation of a
-        self-terminated stream."""
-        with self._lock:
-            pins, self.pins = self.pins, []
-        if pins:
-            from universal_data_connector_spark.operators.relational import (
-                release_frames,
-            )
-            release_frames(pins)
 
     def _finish(self, state: str, error: str | None = None) -> None:
         """Transition to a terminal state exactly once: a stop() that
@@ -263,185 +251,108 @@ class PipelineManager:
         # run it with its real (batch) semantics instead of raising on
         # a ported YAML (engine.effective_streaming logs the downgrade)
         streaming = engine.effective_streaming(cfg, streaming)
+        # refuse inside a maintenance window, then take a monotonic
+        # submission stamp: two submissions of one pipeline in the same
+        # millisecond would otherwise collide on the job name, silently
+        # orphaning the first job's handle AND sharing one Spark job
+        # group (stop() would cancel both)
         with self._lock:
             if self._maintenance:
                 raise MaintenanceConflict(
                     "store maintenance is in progress on this manager; "
                     "retry after it completes", [])
-        # monotonic submission stamp: two submissions of one pipeline
-        # in the same millisecond would otherwise collide on the job
-        # name, silently orphaning the first job's handle AND sharing
-        # one Spark job group (stop() would cancel both)
-        with self._lock:
             submit_ms = max(int(time.time() * 1000), self._last_ms + 1)
             self._last_ms = submit_ms
         job_name = f"{cfg.name}-{submit_ms}"
-        # Build the lineage synchronously: config/connector errors
+        # Prepare the run synchronously: config/connector errors
         # surface at submission (the reference's per-pipeline try/catch
         # boundary, PipelineManager.java:44-50); execution is deferred.
-        # Pin-scope the build so any DISK_ONLY intermediates belong to
-        # this job alone and are released at its terminal state.
-        from universal_data_connector_spark.operators.relational import (
-            pin_scope,
-        )
-        with pin_scope() as build_pins:
-            source_df, df = engine.build_parts(self.spark, cfg,
-                                               streaming=streaming)
-        # Anything that raises between here and job registration must
-        # free the build's DISK_ONLY pins — an unregistered job has no
-        # terminal state and no stop() to release them, and stale
-        # cached plans would silently substitute into later builds.
-        try:
-            if streaming:
-                # Register the job BEFORE the query starts (ADVICE
-                # r15): a streaming query's micro-batch 0 can append
-                # to a seen store the moment start() returns, so the
-                # job must already be visible to maintenance_window —
-                # the old start-then-register order left a window
-                # where a maintenance op opened during the build ran
-                # compaction concurrently with batch 0 until the
-                # abort's stop() landed. Registration is the atomic
-                # re-check: under the lock, a live maintenance window
-                # refuses BEFORE anything runs.
-                job = Job(job_name, cfg.name, submit_ms,
-                          "streaming", pins=build_pins)
-                with self._lock:
-                    if self._maintenance:
-                        raise MaintenanceConflict(
-                            "store maintenance began while this "
-                            "pipeline was building; retry after it "
-                            "completes", [])
-                    self._jobs[job_name] = job
-                try:
-                    query = engine.start_streaming_sink(df, cfg.sink)
-                except BaseException:
-                    with self._lock:
-                        self._jobs.pop(job_name, None)
-                    raise
-                # a stop()/stop_all() that landed between registration
-                # and start marked the job CANCELLED: honor it instead
-                # of leaving an orphaned live query behind
-                with job._lock:
-                    cancelled = job._state != "RUNNING"
-                    if not cancelled:
-                        job.query = query
-                if cancelled:
-                    with contextlib.suppress(Exception):
-                        query.stop()
-                    job.release_pins()
-                return job_name
-            else:
-                job = Job(job_name, cfg.name, submit_ms, "batch",
-                          pins=build_pins)
-                # Managed pipelines honor archiveDir exactly like direct
-                # engine.run callers (same helper, same move-after-sink
-                # ordering); the plan is captured here, at submission,
-                # from the SOURCE frame — not the transformed plan.
-                archive_dir, consumed, source_root = engine.batch_archive_plan(
-                    cfg, source_df, streaming)
-                manifest_dir, manifest_files = engine.batch_manifest_plan(
-                    cfg, source_df, streaming)
-        except BaseException:
-            from universal_data_connector_spark.operators.relational import (
-                release_frames,
-            )
-            engine.close_store_spans(df)
-            release_frames(build_pins)
-            raise
-        # batch only from here (the streaming branch returned above)
-
-        def target() -> None:
-            from universal_data_connector_spark.sinks import create_sink
-            try:
-                # Tag every Spark job this pipeline submits with its
-                # own job group so stop(job_name) can cancel just
-                # this pipeline (the reference's per-job
-                # stopPipeline, PipelineManager.java:74-81).
-                # PySpark's pinned-thread mode makes the group local
-                # to this worker thread.
-                sc = self.spark.sparkContext
-                sc.setJobGroup(job_name, f"pipeline {cfg.name}",
-                               interruptOnCancel=True)
-                if job.status == "CANCELLED":
-                    # stop() landed before the group tag existed;
-                    # its cancelJobGroup hit nothing — bail before
-                    # the first action instead of running the
-                    # pipeline to completion under a CANCELLED
-                    # status
-                    return
-                try:
-                    # ONE shared implementation of the agg_state
-                    # intent deferral + post-sink bookkeeping
-                    # ordering (engine.prepare_batch_sink_cfg /
-                    # finalize_batch_sink): the r10 reviews found
-                    # the hand-mirrored copies here drifting from
-                    # engine.run's — crash-ordering fixes must land
-                    # in one place. A stop() that lands mid-
-                    # sequence is re-checked before every step.
-                    sink_cfg, defer_state = \
-                        engine.prepare_batch_sink_cfg(
-                            cfg.sink, source_df, streaming=False)
-                    create_sink(df, sink_cfg, streaming=False)
-                    engine.finalize_batch_sink(
-                        source_df.sparkSession, cfg, source_df,
-                        archive_dir, consumed, source_root,
-                        manifest_dir, manifest_files, defer_state,
-                        cancelled=lambda: job.status == "CANCELLED",
-                        transformed_df=df)
-                    job._finish("COMPLETED")
-                except Exception as exc:  # noqa: BLE001
-                    if job.status == "CANCELLED":
-                        return  # stop() already recorded the outcome
-                    log.exception("pipeline %s failed", cfg.name)
-                    job._finish("FAILED", str(exc))
-            finally:
-                # terminal state (completed / failed / cancelled):
-                # release any batch dedup_state writer-mark span the
-                # build opened (no-op if the commit already closed it)
-                # and free exactly this job's pinned intermediates
-                # (the build ran under pin_scope)
-                engine.close_store_spans(df)
-                job.release_pins()
-            # No clearJobGroup needed: the group is local to this
-            # dedicated worker thread (pinned-thread mode) and the
-            # thread ends with the pipeline.
-
-        job.thread = threading.Thread(target=target,
-                                      name=job_name, daemon=True)
-        # register BEFORE the worker starts (r15 review; the streaming
-        # path above registers before its query starts for the same
-        # reason): running_pipelines()/the maintenance check must never
-        # miss a job that is already doing work. The registration is
-        # also the atomic re-check against a maintenance window that
-        # opened while this pipeline was building.
+        # From here on, every path that ends the job or never registers
+        # it closes the run (a failed prepare closes its own).
+        run = engine.prepare(self.spark, cfg, streaming)
+        job = Job(job_name, cfg.name, submit_ms,
+                  "streaming" if streaming else "batch", run=run)
+        if not streaming:
+            # attach the thread BEFORE registering so a stop() racing
+            # the registration always sees a stoppable job
+            job.thread = threading.Thread(
+                target=self._execute, args=(job,), name=job_name,
+                daemon=True)
+        # Register BEFORE anything runs (r15 review, ADVICE r15): a
+        # streaming query's micro-batch 0 can append to a seen store
+        # the moment start() returns, and running_pipelines()/the
+        # maintenance check must never miss a job that is already
+        # doing work. Registration is also the atomic re-check against
+        # a maintenance window that opened while this pipeline was
+        # building: under the lock, it refuses BEFORE anything runs.
         with self._lock:
             aborted = self._maintenance
             if not aborted:
                 self._jobs[job_name] = job
         if aborted:
-            # The build already opened any batch dedup_state writer-mark
-            # span; this job will never run, so close it here exactly like
-            # every other failure path — otherwise the span's heartbeat
-            # renews the mark forever (live pid + live nonce, never stale)
-            # and the very maintenance op that aborted us is refused with
-            # StoreLeaseHeld until process exit (ADVICE r18, high).
-            engine.close_store_spans(df)
-            job.release_pins()
+            # the run may hold a batch dedup_state writer-mark span,
+            # whose heartbeat would otherwise renew the mark forever
+            # (live pid + live nonce, never stale) and refuse the very
+            # maintenance op that aborted us (ADVICE r18, high)
+            run.close()
             raise MaintenanceConflict(
                 "store maintenance began while this pipeline was "
                 "building; retry after it completes", [])
         try:
-            job.thread.start()
+            query = run.start() if streaming else job.thread.start()
         except BaseException:
-            # can't-spawn-thread: the worker's finally will never run,
-            # so unwind its cleanup here (deregister + close spans +
-            # release pins) instead of leaking a registered zombie job
+            # a query that fails to start, or can't-spawn-thread (the
+            # worker's cleanup will never run): deregister and close
+            # here instead of leaking a registered zombie job
             with self._lock:
                 self._jobs.pop(job_name, None)
-            engine.close_store_spans(df)
-            job.release_pins()
+            run.close()
             raise
+        if streaming:
+            # a stop()/stop_all() that landed between registration and
+            # start marked the job CANCELLED: honor it instead of
+            # leaving an orphaned live query behind
+            with job._lock:
+                cancelled = job._state != "RUNNING"
+                if not cancelled:
+                    job.query = query
+            if cancelled:
+                with contextlib.suppress(Exception):
+                    query.stop()
+                run.close()
         return job_name
+
+    def _execute(self, job: Job) -> None:
+        """Worker thread of one batch job: execute its run, record the
+        terminal state, close the run."""
+        try:
+            # Tag every Spark job this pipeline submits with its own
+            # job group so stop(job_name) can cancel just this pipeline
+            # (the reference's per-job stopPipeline,
+            # PipelineManager.java:74-81). PySpark's pinned-thread mode
+            # makes the group local to this worker thread, which ends
+            # with the pipeline: no clearJobGroup needed.
+            self.spark.sparkContext.setJobGroup(
+                job.name, f"pipeline {job.pipeline}", interruptOnCancel=True)
+            if job.status == "CANCELLED":
+                # stop() landed before the group tag existed; its
+                # cancelJobGroup hit nothing — bail before the first
+                # action instead of running the pipeline to completion
+                # under a CANCELLED status
+                return
+            try:
+                # a stop() that lands mid-sequence is re-checked
+                # before every post-sink step
+                job.run.execute(
+                    cancelled=lambda: job.status == "CANCELLED")
+                job._finish("COMPLETED")
+            except Exception as exc:  # noqa: BLE001
+                if job.status == "CANCELLED":
+                    return  # stop() already recorded the outcome
+                log.exception("pipeline %s failed", job.pipeline)
+                job._finish("FAILED", str(exc))
+        finally:
+            job.run.close()
 
     # -- stop -----------------------------------------------------------
 
@@ -452,8 +363,8 @@ class PipelineManager:
             return False
         if job.query is not None:
             job.query.stop()
-            # the stream is down: its build-time pins have no consumer
-            job.release_pins()
+            # the stream is down: its run has no consumer left
+            job.run.close()
         elif job.kind == "streaming":
             # registered but the query handle is not attached yet (the
             # instant between registration and start()): mark CANCELLED
