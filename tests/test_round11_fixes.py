@@ -1,4 +1,4 @@
-"""Round-11 fixes: the four r10 ADVICE items plus VERDICT r10 item 6
+"""Round-11 fixes: three r10 ADVICE items plus VERDICT r10 item 6
 (multi-process producer serialization proof).
 
 1. Torn-tail log recovery (``kafka_loopback.py``): a producer crash
@@ -10,17 +10,12 @@
 3. Null-key round-robin seeded per Spark task so unkeyed records
    spread across topic partitions instead of every task restarting
    at partition 0.
-4. The rfm per-customer aggregate's persist registered via
-   ``pin_frame`` so a long-lived session releases it at the next
-   catalog build instead of retaining it forever.
 """
 
 from __future__ import annotations
 
 import json
 import os
-
-SF = "/root/testdata/sf0.001"
 
 
 # ---------------------------------------------------------------------------
@@ -185,41 +180,6 @@ def test_unkeyed_sink_spreads_across_topic_partitions(spark, tmp_path):
     # pre-fix: {0: 4, 1: 0, 2: 0, 3: 0}; post-fix each task seeds at
     # its own partition id, one record each
     assert ends == {0: 1, 1: 1, 2: 1, 3: 1}
-
-
-# ---------------------------------------------------------------------------
-# 4. rfm persist joins the pin lifecycle
-# ---------------------------------------------------------------------------
-
-def test_rfm_persist_released_by_next_catalog_build(spark):
-    from universal_data_connector_spark.plans.catalog import QUERIES
-
-    spark.catalog.clearCache()
-    out = QUERIES["events_rfm_segments"](spark, SF)
-    assert out.count() > 0
-    jcm = spark._jsparkSession.sharedState().cacheManager()
-    assert not jcm.isEmpty(), "rfm aggregate should be cached"
-    # building the NEXT catalog query on this thread releases the
-    # previous build's pins — including the rfm persist now
-    QUERIES["scan_parquet"](spark, SF).count()
-    import time
-    for _ in range(50):  # unpersist is non-blocking
-        if jcm.isEmpty():
-            break
-        time.sleep(0.1)
-    assert jcm.isEmpty(), "rfm persist must not outlive the next build"
-
-
-def test_pin_frame_registers_into_active_scope(spark):
-    from universal_data_connector_spark.operators import relational as orel
-
-    df = spark.range(10).persist()
-    with orel.pin_scope() as pins:
-        got = orel.pin_frame(df)
-    assert got is df
-    assert pins == [df]
-    orel.release_frames(pins)
-    assert df.storageLevel.useMemory is False
 
 
 # ---------------------------------------------------------------------------

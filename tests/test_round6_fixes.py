@@ -71,86 +71,6 @@ def test_watermarkable_ts_passthrough_on_timestamp(spark):
 
 
 # ---------------------------------------------------------------------------
-# 2. Pin scoping (round-5 ADVICE medium): materialize_reliable pins must
-#    belong to the build that created them. A release by one build/job
-#    must never unpersist frames another (possibly still-running) job
-#    pinned — the old process-global pop-all did exactly that.
-
-
-def _is_pinned(df):
-    lvl = df.storageLevel
-    return lvl.useMemory or lvl.useDisk
-
-
-def test_pin_scope_collects_and_release_unpersists(spark):
-    from universal_data_connector_spark.operators import relational as R
-
-    with R.pin_scope() as pins:
-        a = R.materialize_reliable(spark.range(10).toDF("n"))
-        b = R.materialize_reliable(spark.range(5).toDF("n"))
-    assert len(pins) == 2 and _is_pinned(a) and _is_pinned(b)
-    assert R.release_frames(pins) == 2
-    assert not pins
-    assert not _is_pinned(a) and not _is_pinned(b)
-
-
-def test_pin_scopes_nest_without_leaking(spark):
-    from universal_data_connector_spark.operators import relational as R
-
-    with R.pin_scope() as outer:
-        R.materialize_reliable(spark.range(3).toDF("n"))
-        with R.pin_scope() as inner:
-            R.materialize_reliable(spark.range(4).toDF("n"))
-        R.materialize_reliable(spark.range(5).toDF("n"))
-    assert len(outer) == 2 and len(inner) == 1
-    R.release_frames(outer)
-    R.release_frames(inner)
-
-
-def test_release_on_one_thread_keeps_other_threads_pins(spark):
-    """The regression the advice flagged: thread A releasing its own
-    build's pins must not unpersist thread B's still-needed frames."""
-    import threading
-
-    from universal_data_connector_spark.operators import relational as R
-
-    b_pins = []
-    pinned_evt = threading.Event()
-    release_evt = threading.Event()
-
-    def worker():
-        with R.pin_scope() as pins:
-            R.materialize_reliable(spark.range(7).toDF("n"))
-        b_pins.extend(pins)
-        pinned_evt.set()
-        release_evt.wait(timeout=30)
-
-    t = threading.Thread(target=worker)
-    t.start()
-    assert pinned_evt.wait(timeout=30)
-    # Thread A (this one) builds and releases its own scope while B's
-    # frame is still pinned and awaiting its consuming action.
-    with R.pin_scope() as a_pins:
-        R.materialize_reliable(spark.range(2).toDF("n"))
-    R.release_frames(a_pins)
-    assert len(b_pins) == 1 and _is_pinned(b_pins[0])
-    release_evt.set()
-    t.join(timeout=30)
-    R.release_frames(b_pins)
-
-
-def test_default_bucket_release_materialized(spark):
-    """materialize_reliable outside any pin_scope lands in the thread's
-    default bucket, drained by release_materialized()."""
-    from universal_data_connector_spark.operators import relational as R
-
-    d = R.materialize_reliable(spark.range(6).toDF("n"))
-    assert _is_pinned(d)
-    assert R.release_materialized() >= 1
-    assert not _is_pinned(d)
-
-
-# ---------------------------------------------------------------------------
 # 3. S3 raw-object fallback (round-4 ADVICE low): without boto3, raw
 #    file-mode rows must be written through Hadoop's FileSystem at the
 #    real URI — exact bytes, no trailing newline, raw key names — not

@@ -187,3 +187,18 @@ def test_yaml_pipeline_s3_to_s3(spark, s3_endpoint):
     body = c.get_object(Bucket=BUCKET,
                         Key=f"{dst_prefix}/keep.txt")["Body"].read()
     assert body == b"this line is important"
+
+
+def test_s3_default_checkpoint_stays_in_bucket():
+    from universal_data_connector_spark.sinks.files import (
+        _s3_default_checkpoint,
+    )
+
+    assert (_s3_default_checkpoint({"bucketName": "b"})
+            == "s3a://b/_checkpoint")
+    assert (_s3_default_checkpoint({"bucketName": "b", "prefix": ""})
+            == "s3a://b/_checkpoint")
+    assert (_s3_default_checkpoint({"bucketName": "b", "prefix": "p/q"})
+            == "s3a://b/p/q/_checkpoint")
+    assert (_s3_default_checkpoint({"bucketName": "b", "prefix": "p/"})
+            == "s3a://b/p/_checkpoint")

@@ -49,7 +49,6 @@ def main() -> int:
             print(f"sf{sf} {name}: {'ok' if ok else 'FAIL ' + detail[:200]}"
                   f" ({dt:.1f}s)")
             bad += 0 if ok else 1
-            spark.catalog.clearCache()
     return 1 if bad else 0
 
 

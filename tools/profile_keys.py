@@ -2,7 +2,7 @@
 event log.
 
 Times each named catalog key through bench.py's runner (``bench.run``:
-noop sink, clearCache between reps) in the session bench.py uses
+noop sink) in the session bench.py uses
 (``session.get_spark``: local[$SPARK_GRAFT_CPUS], default the host's
 usable cores), after the same warm-up, at $SPARK_GRAFT_SF_DIR (default
 sf0.1), $SPARK_GRAFT_BENCH_REPS times (default 4). The session also

@@ -628,8 +628,7 @@ def _source_hooks(source_df: DataFrame) -> tuple:
 #: transformation hands over its seen-key commit and writer-mark span
 #: (batch) or its props (streaming). Set and reset by ``prepare`` only;
 #: the transformation chain in between (``build_parts`` ->
-#: ``apply_transformations``) keeps its signatures, the way
-#: ``materialize_reliable`` reaches the innermost ``pin_scope``.
+#: ``apply_transformations``) keeps its signatures.
 _PREPARING: contextvars.ContextVar[PipelineRun | None] = \
     contextvars.ContextVar("udc_preparing_run", default=None)
 
@@ -639,15 +638,17 @@ class PipelineRun:
     both runners — ``run`` below and the manager's worker thread — so
     the sink-then-commit-then-archive order lives in one place.
 
-    ``prepare`` builds it: the source and transformed frames under one
-    ``pin_scope``, the archive and manifest plans, the source's hooks,
+    ``prepare`` builds it: the source and transformed frames, the
+    archive and manifest plans, the source's hooks,
     and what the build leaves for after the sink — a batch
     dedup_state's seen-key commit plus the writer-mark span covering
     its read-filter-ship-commit, or a streaming dedup_state's props.
     ``execute`` runs a batch run to completion, ``start`` starts a
-    streaming one, and ``close`` releases the spans and the build's
-    DISK_ONLY pins. ``close`` is idempotent and thread-safe; every way
-    out of every runner calls it."""
+    streaming one, and ``close`` releases the spans and drops the
+    frames, which frees the build's eager materializations once they
+    are unreachable (``relational.materialize``) — the manager keeps
+    finished runs' ``Job`` records. ``close`` is idempotent and
+    thread-safe; every way out of every runner calls it."""
 
     def __init__(self, spark: SparkSession, cfg: PipelineConfig):
         self.spark, self.cfg = spark, cfg
@@ -659,7 +660,6 @@ class PipelineRun:
         self.store_commits: list = []
         self.stream_dedup: dict | None = None
         self.spans = contextlib.ExitStack()
-        self.pins: list = []
         self._lock = threading.Lock()
 
     def execute(self, cancelled=lambda: False) -> None:
@@ -679,32 +679,23 @@ class PipelineRun:
                                     self.stream_dedup)
 
     def close(self) -> None:
-        """Release the spans and the build's pins exactly once."""
-        from universal_data_connector_spark.operators.relational import (
-            release_frames,
-        )
-
+        """Release the spans exactly once and drop the run's frames."""
         with self._lock:
-            pins, self.pins = self.pins, []
+            self.source_df = self.df = None
+            self.store_commits = []
             with contextlib.suppress(Exception):
                 self.spans.close()  # ExitStack.close empties the stack
-        release_frames(pins)
 
 
 def prepare(spark: SparkSession, cfg: PipelineConfig,
             streaming: bool = False) -> PipelineRun:
     """Build one pipeline run without executing it. A build error
     closes the run before it propagates, so a failed build holds no
-    pins or spans."""
-    from universal_data_connector_spark.operators.relational import (
-        pin_scope,
-    )
-
+    frames or spans."""
     run = PipelineRun(spark, cfg)
     token = _PREPARING.set(run)
     try:
-        with pin_scope() as run.pins:
-            run.source_df, run.df = build_parts(spark, cfg, streaming)
+        run.source_df, run.df = build_parts(spark, cfg, streaming)
         run.archive_plan = batch_archive_plan(cfg, run.source_df,
                                               streaming)
         run.manifest_plan = batch_manifest_plan(cfg, run.source_df,
@@ -730,8 +721,9 @@ def run(spark: SparkSession, cfg: PipelineConfig, streaming: bool = False):
     move-to-processed (``FileSourceContext.java:113-125``). The move
     happens strictly after the sink returns, so a failed write leaves
     the inputs in place for a clean re-run. The run is closed on the
-    way out, success or failure; a streaming build pins nothing and
-    opens no span (its dedup_state does both per micro-batch)."""
+    way out, success or failure; a streaming build materializes
+    nothing and opens no span (its dedup_state does both per
+    micro-batch)."""
     pipeline = prepare(spark, cfg, streaming)
     try:
         return pipeline.start() if streaming else pipeline.execute()
@@ -751,8 +743,8 @@ def start_streaming_sink(df: DataFrame, sink_cfg, props: dict | None):
     duplicates — and unlike the file manifest this also holds for
     byte-identical content under new filenames); a crash between sink
     and commit re-ships that batch's content once (at-least-once, the
-    same contract as every seen-store commit). Each batch's DISK_ONLY
-    pins are scoped and released inside the batch.
+    same contract as every seen-store commit). Each batch's eager
+    materializations go with the batch's frames.
 
     ``compactEveryBatches: N`` (optional) compacts the seen store
     after every Nth micro-batch's commit, INSIDE the foreachBatch
@@ -786,9 +778,6 @@ def start_streaming_sink(df: DataFrame, sink_cfg, props: dict | None):
         from universal_data_connector_spark.operators.dedup_state import (
             compact_seen_store,
         )
-        from universal_data_connector_spark.operators.relational import (
-            pin_scope, release_frames,
-        )
         from universal_data_connector_spark.store_lease import (
             StoreLeaseHeld, lease_owner,
         )
@@ -803,14 +792,11 @@ def start_streaming_sink(df: DataFrame, sink_cfg, props: dict | None):
         # (``span`` in operators/dedup_state.py)
         with lease_owner(f"stream:{checkpoint}"):
             store = dedup_state_store(props)
-            with store.span(), pin_scope() as pins:
-                try:
-                    survivors, commit = _seen_filter_for(batch_df, props,
-                                                         store)
-                    create_sink(survivors, sink_cfg, streaming=False)
-                    commit()
-                finally:
-                    release_frames(pins)
+            with store.span():
+                survivors, commit = _seen_filter_for(batch_df, props,
+                                                     store)
+                create_sink(survivors, sink_cfg, streaming=False)
+                commit()
             # post-commit, pre-next-batch: the store is idle and this
             # query is its single writer — the safe compaction window.
             # A refused cadence (foreign writer mark, concurrent REST
@@ -866,7 +852,7 @@ def finalize_batch_sink(run: PipelineRun, defer_state: bool,
        reverse order would archive/record inputs whose keys never
        landed, leaking future duplicates — the one outcome the
        operator exists to prevent. The commits are the last users of
-       the build's pins and spans, so the run closes right after;
+       the build's frames and spans, so the run closes right after;
     1. archive consumed inputs (a failed sink never reaches here, so
        inputs stay in place for a clean rerun);
     2. record consumed files in the manifest;

@@ -52,9 +52,9 @@ class Job:
     query: StreamingQuery | None = None
     thread: threading.Thread | None = None
     # the prepared pipeline run (engine.prepare, at submission); closed
-    # when the job reaches a terminal state, which releases exactly
-    # this job's build pins and writer-mark spans. None for
-    # maintenance jobs.
+    # when the job reaches a terminal state, which releases this job's
+    # writer-mark spans and drops its frames, so the kept record holds
+    # no materialized blocks. None for maintenance jobs.
     run: engine.PipelineRun | None = field(default=None, repr=False)
     _state: str = "RUNNING"
     error: str | None = None

@@ -53,7 +53,7 @@ def gram_hashes(text: Column, shingle_n: int) -> Column:
         lambda toks: F.transform(word_ngrams(toks, shingle_n),
                                  lambda g: F.xxhash64(g)))
 from universal_data_connector_spark.operators.relational import (
-    materialize_reliable,
+    materialize,
     spread,
 )
 from universal_data_connector_spark.session import local_frame
@@ -296,14 +296,14 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
     itself — and live only for the job.
     """
     gb = shingle_band_df(df, text_col, id_col, num_hashes, bands, shingle_n)
-    gb = materialize_reliable(gb)  # corpus-sized gram arrays
+    gb = materialize(gb)  # corpus-sized gram arrays
     grams = gb.select(id_col, "__g")
     # Skew guard: gram-less docs (< shingle_n words) can't verify
     # above a positive threshold (union = 0 -> jaccard 0), and all of
     # them band to the SAME sentinel buckets, which would make the
     # band self-join quadratic in the empty-doc count; identical empty
-    # docs are exact_dedup's job. __bands here is a cached ATTRIBUTE,
-    # so the explode is safe
+    # docs are exact_dedup's job. __bands here is a materialized
+    # ATTRIBUTE, so the explode is safe
     banded = gb.filter(F.size("__g") > 0).select(
         F.col(id_col),
         F.posexplode("__bands").alias("band_idx", "band_hash"))
@@ -355,8 +355,8 @@ def _inverted_shared_counts(df: DataFrame, text_col: str, id_col: str,
     # both join sides (+ the cap's hot-gram scan) read the exploded
     # grams: compute once, eagerly (lazy caches race under AQE's
     # concurrent stage launch, and AQE's broadcast choice on one side
-    # defeats plain exchange reuse). Corpus-sized -> recoverable.
-    grams = materialize_reliable(grams)
+    # defeats plain exchange reuse)
+    grams = materialize(grams)
     joinable = grams
     if max_postings is not None:
         hot = (grams.groupBy("g").agg(F.count("*").alias("__p"))
@@ -560,7 +560,7 @@ def simhash_candidates(df: DataFrame, text_col: str = "text",
     # __sig) also makes the self-join's two sides share one signature
     # pass; the chunk explode below is trivial JVM work re-derived per
     # side from the checkpointed frame.
-    sig = sig.localCheckpoint(eager=True)
+    sig = materialize(sig)
     chunk_ids = F.sequence(F.lit(0), F.lit(n_chunks - 1))
 
     def chunk_of(c):
@@ -627,7 +627,7 @@ def connected_components(edges: DataFrame, src: str = "id_1",
     list, state is the edge list itself (never adjacency in one task's
     memory), and convergence takes O(log n) rounds even on adversarial
     chain graphs — the 100 TB-safe formulation. Lineage is truncated
-    with an eager localCheckpoint per round (iterative plans otherwise
+    with an eager materialization per round (iterative plans otherwise
     grow exponentially under AQE re-planning).
 
     Only nodes that appear in `edges` are returned; callers give
@@ -653,7 +653,7 @@ def connected_components(edges: DataFrame, src: str = "id_1",
                       F.least("u", "v").alias("v")))
     if not edges_unique:
         e = e.distinct()
-    e = e.localCheckpoint(eager=True)
+    e = materialize(e)
 
     def _signature(df: DataFrame) -> tuple[int, int]:
         # xor-fold (overflow-free under ANSI mode) of the edge hashes:
@@ -740,7 +740,7 @@ def connected_components(edges: DataFrame, src: str = "id_1",
 
     converged = False
     for _ in range(max_iterations):
-        e = small_star(large_star(e)).localCheckpoint(eager=True)
+        e = materialize(small_star(large_star(e)))
         new_sig = _signature(e)
         if new_sig == sig:
             converged = True

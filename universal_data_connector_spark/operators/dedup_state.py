@@ -71,6 +71,7 @@ import uuid
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from universal_data_connector_spark.operators.relational import materialize
 from universal_data_connector_spark.streaming.windows import (
     _UPSERT_OLD_PREFIX,
     _contains_map,
@@ -368,11 +369,11 @@ class S3SeenStore:
 
     def read(self, spark, sub: str, buckets: list[int]):
         """Frame over the objects of sub-store ``sub``'s ``buckets``, or
-        None. Eagerly localCheckpoint-ed: the filters consume the
-        stored frame in several actions (candidate-bucket collect, the
-        flagging join, the survivor pin), and one distributed
-        materialization keeps the GET count at one per object (the
-        op-count table in BENCH_NOTES_r14 §6)."""
+        None. Eagerly materialized: the filters consume the stored
+        frame in several actions (candidate-bucket collect, the
+        flagging join, the survivor materialization), and one
+        distributed materialization keeps the GET count at one per
+        object (the op-count table in BENCH_NOTES_r14 §6)."""
         from universal_data_connector_spark.streaming.object_state import (
             read_objects,
         )
@@ -381,9 +382,8 @@ class S3SeenStore:
                          for k in self._objects(sub, b)]
         if not keyed_objects:
             return None
-        return (read_objects(spark, self.target, keyed_objects,
-                             _SUB_SCHEMAS[sub])
-                .localCheckpoint(eager=True))
+        return materialize(read_objects(spark, self.target,
+                                        keyed_objects, _SUB_SCHEMAS[sub]))
 
     def append(self, frame: DataFrame, sub: str, touched: list[int]) -> int:
         """Append a ``udc_kb``-carrying frame as one atomic PUT per
@@ -528,15 +528,6 @@ def _batch_keyed(df: DataFrame, cols: list[str], n: int) -> DataFrame:
                  .withColumn(_KB, _bucket(n, _KEY)))
 
 
-def _pin(keyed: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    from universal_data_connector_spark.operators.relational import (
-        pin_frame,
-    )
-    return pin_frame(keyed.persist(StorageLevel.DISK_ONLY))
-
-
 def seen_filter(df: DataFrame, store, cols: list[str],
                 num_buckets: int = 32):
     """(survivors, commit) for one batch against the exact seen store
@@ -549,10 +540,10 @@ def seen_filter(df: DataFrame, store, cols: list[str],
     rows). ``commit()`` appends the survivors' keys to the store —
     call it only after the survivors have durably reached their sink.
 
-    The keyed survivor frame is persisted (DISK_ONLY) and pinned so
-    the sink's consumption and the commit's key extraction share ONE
-    materialization — without it the commit would re-run the source
-    scan and anti-join a second time."""
+    The keyed survivor frame is materialized eagerly so the sink's
+    consumption and the commit's key extraction share ONE computation
+    — without it the commit would re-run the source scan and
+    anti-join a second time."""
     store = seen_store(store, num_buckets)
     keyed = _batch_keyed(df, cols, store.open())
     # touched-bucket set: bounded by num_buckets -> driver-safe
@@ -561,7 +552,7 @@ def seen_filter(df: DataFrame, store, cols: list[str],
     if seen is not None:
         keyed = keyed.join(seen.select(_KEY).distinct(), on=_KEY,
                            how="left_anti")
-    keyed = _pin(keyed)
+    keyed = materialize(keyed)
 
     def commit() -> None:
         moved = store.append(keyed.select(_KEY, _KB), "", touched)
@@ -645,7 +636,8 @@ def _survivors(df: DataFrame, keyed: DataFrame, flagged, id_col: str):
     """(survivors of ``df``, their ``keyed`` rows): the flagged ids
     dropped."""
     if flagged is not None:
-        keyed = _pin(keyed.join(flagged, on=id_col, how="left_anti"))
+        keyed = materialize(
+            keyed.join(flagged, on=id_col, how="left_anti"))
     return df.join(keyed.select(id_col), on=id_col, how="left_semi"), keyed
 
 
@@ -717,10 +709,10 @@ def seen_near_filter(df: DataFrame, store,
     _reject_null_ids(df, id_col, "near")
 
     sb = _sig_band_df(df, text_col, id_col, num_hashes, bands, shingle_n)
-    keyed = _pin(df.select(id_col, text_col)
-                   .withColumn("__dk", F.sha2(F.col(text_col)
-                                              .cast("string"), 256))
-                   .join(sb, on=id_col))
+    keyed = materialize(df.select(id_col, text_col)
+                          .withColumn("__dk", F.sha2(F.col(text_col)
+                                                     .cast("string"), 256))
+                          .join(sb, on=id_col))
     new_bands = (keyed.select(
         id_col, "__dk",
         F.posexplode("__bands").alias("band_idx", "band_hash"))
@@ -847,11 +839,11 @@ def seen_embedding_filter(df: DataFrame, store,
         _check_dim(store.pin(_EMB_DIM_META, dim), dim, store.label)
     _reject_null_ids(df, id_col, "embedding")
 
-    keyed = _pin(df.select(id_col, vec_col)
-                   .withColumn("__dk", F.sha2(F.to_json(
-                       F.col(vec_col).cast("array<double>")), 256)))
+    keyed = materialize(df.select(id_col, vec_col)
+                          .withColumn("__dk", F.sha2(F.to_json(
+                              F.col(vec_col).cast("array<double>")), 256)))
     # one Arrow matmul feeds filter AND commit
-    codes = _pin(hyperplane_bands(
+    codes = materialize(hyperplane_bands(
         keyed.filter(F.col(vec_col).isNotNull()), id_col, vec_col,
         n_planes=n_planes, bands=bands, seed=seed)
         .withColumnRenamed("band_val", "band_hash"))

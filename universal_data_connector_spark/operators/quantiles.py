@@ -12,17 +12,16 @@ cutoff group) that is one task materializing billions of doubles at
 short-circuits) without any unbounded buffer, by classic distributed
 selection:
 
-1. Project to (group, value) pairs, persist DISK_ONLY (the projection
-   of the wide table is computed exactly once — the range partitioner
-   samples it, the shuffle reads the cache).
+1. Project to (group, value) pairs.
 2. Range-repartition on ``(group..., value)`` — a huge group spans
    many ordered slices, each bounded by the shuffle-partition size;
    boundary sampling balances slices even on skewed distributions.
    Sort within each slice; a per-row in-slice ordinal comes from
    ``monotonically_increasing_id`` (slice index in the high bits,
    consecutive in-slice counter in the low bits), so no second full
-   shuffle and no per-group window over the big side. Persisted
-   DISK_ONLY: the big side is read once to count and once to pick.
+   shuffle and no per-group window over the big side. Materialized
+   eagerly (``relational.materialize``): the count and the pick read
+   one set of slices, computed once.
 3. Collect the per-(slice, group) counts — BOUNDED metadata
    (n_slices x |groups| rows, guarded by ``max_meta_rows``), the same
    bounded-collect discipline as the state sinks' touched-bucket
@@ -58,80 +57,18 @@ the aggregate call sites' ``cast("double")``.
 from __future__ import annotations
 
 import math
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from universal_data_connector_spark.operators.relational import (
+    estimated_bytes,
+    materialize,
+)
 from universal_data_connector_spark.session import local_frame
 
 _LOW_BITS = (1 << 33) - 1  # monotonically_increasing_id layout
-
-_CACHED_PART_CONF = \
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-# Refcounted scoped toggle of the session-GLOBAL conf above: the
-# first concurrent helper call on a session saves the original value
-# and sets "true"; the last one restores. The mutex guards only the
-# counter bookkeeping — NOT the Spark jobs — so concurrent
-# exact_group_percentiles calls still run their count/pick jobs in
-# parallel (r10 review: a lock held across the jobs serialized every
-# quantile pipeline), while the read-set-restore can never race one
-# call into restoring another's temporary "true". Keyed per session:
-# tests and the driver may hold several sessions in one process.
-_CACHED_PART_MUTEX = threading.Lock()
-_CACHED_PART_STATE: dict[int, list] = {}  # id(spark) -> [depth, saved]
-
-
-def _cached_part_enter(spark) -> None:
-    with _CACHED_PART_MUTEX:
-        state = _CACHED_PART_STATE.get(id(spark))
-        if state is None:
-            try:
-                saved = spark.conf.get(_CACHED_PART_CONF)
-            except Exception:
-                saved = None  # conf unknown to this Spark version
-            if saved is not None:
-                try:
-                    spark.conf.set(_CACHED_PART_CONF, "true")
-                except Exception:
-                    # session stopped mid-enter: the toggle is inert;
-                    # record saved=None so exit restores nothing. The
-                    # entry must NEVER be inserted before a successful
-                    # set — a raised set would leak a depth-0 entry
-                    # that poisons a future session reusing this id()
-                    # (r10 third review pass)
-                    saved = None
-            state = _CACHED_PART_STATE[id(spark)] = [0, saved]
-        state[0] += 1
-
-
-def _cached_part_exit(spark) -> None:
-    with _CACHED_PART_MUTEX:
-        state = _CACHED_PART_STATE.get(id(spark))
-        if state is None:
-            return
-        state[0] -= 1
-        if state[0] <= 0:
-            del _CACHED_PART_STATE[id(spark)]
-            if state[1] is not None:
-                try:
-                    spark.conf.set(_CACHED_PART_CONF, state[1])
-                except Exception:
-                    pass  # session already stopped
-
-
-def _estimated_bytes(df: DataFrame) -> int | None:
-    """Optimizer size estimate of ``df`` (driver-side, no job). For
-    file scans this is the input file bytes scaled by pruning; for
-    derived plans Spark propagates a coarse upper-ish bound — exactly
-    the right signal for a conservative small-input switch."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return None
-
 
 def _small_input_percentiles(vals: DataFrame, g: list[str],
                              ps: list[float], max_meta_rows: int):
@@ -173,7 +110,6 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
                             value_col, ps: list[float],
                             out_cols: list[str],
                             max_meta_rows: int = 2_000_000,
-                            persist_input: bool = True,
                             small_input_bytes: int | None = None
                             ) -> DataFrame:
     """Per-group exact percentiles of ``value_col`` at each fraction
@@ -185,15 +121,9 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
     ``value_col`` is a name or Column; cast to double internally.
     Raises if the per-(slice, group) metadata exceeds
     ``max_meta_rows`` — that is the many-groups regime where the
-    plain percentile aggregate is the right tool.
-
-    ``persist_input=False`` skips caching the (group, value)
-    projection: right when ``df`` is a cheap scan projection (the
-    range partitioner's sampling pass just re-reads the scan); keep
-    the default when ``df`` embeds real work (an aggregation, a
-    join), which would otherwise execute twice."""
-    from pyspark import StorageLevel
-
+    plain percentile aggregate is the right tool. The range
+    partitioner's sampling pass re-reads ``df``: materialize it first
+    when it embeds real work (an aggregation, a join)."""
     if len(ps) != len(out_cols):
         raise ValueError("ps and out_cols must pair up")
     # bounds up front: an out-of-range p would compute a global rank
@@ -216,7 +146,7 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
     if small_input_bytes is None:
         small_input_bytes = _SMALL_INPUT_BYTES_DEFAULT
     if small_input_bytes > 0:
-        est = _estimated_bytes(vals)
+        est = estimated_bytes(vals)
         if est is not None and est <= small_input_bytes:
             rows = _small_input_percentiles(vals, g, ps, max_meta_rows)
             if rows is not None:
@@ -225,8 +155,6 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
                     [T.StructField(c, T.DoubleType()) for c in out_cols])
                 out = spark.createDataFrame(rows, out_schema)
                 return out.drop("__g") if const else out
-    if persist_input:
-        vals = vals.persist(StorageLevel.DISK_ONLY)
 
     mid = F.monotonically_increasing_id()
     # duplicate-heavy guard: range partitioning alone sends an entire
@@ -257,91 +185,76 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
                      .select(*g, "__v",
                              F.shiftright("__mid", 33).alias("__pid"),
                              F.col("__mid").bitwiseAND(F.lit(_LOW_BITS))
-                              .alias("__pofs"))
-                     .persist(StorageLevel.DISK_ONLY))
+                              .alias("__pofs")))
+    # ONE materialization that both the count and the pick read: a
+    # recomputed range exchange re-samples its boundaries, so the two
+    # jobs disagree on which slice holds a row (measured at sf1: wrong
+    # quartiles or a failed pick). Unlike a cached plan's exchange, the
+    # checkpoint's lets AQE coalesce near-empty slices.
+    indexed = materialize(indexed)
     g_fields = [f for f in df.select(*g).schema.fields]
-    # AQE may only coalesce an exchange that feeds a CACHED plan when
-    # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is on
-    # (off by default); without it the range exchange keeps the conf
-    # default's partition count even when every slice is tiny, and the
-    # count + pick jobs pay per-slice scheduling for nothing (measured
-    # at sf0.1: 32 near-empty slices -> ~1 right-sized one, ~30% off
-    # the helper's wall clock; VERDICT r9 item 5). Scoped to this
-    # eager computation via the refcounted per-session enter/exit
-    # above — concurrent helper calls overlap freely and the last one
-    # out restores the original value. The residual exposure —
-    # unrelated queries planned DURING the window see "true" — only
-    # lets AQE re-balance their cached plans' output partitioning, a
-    # perf knob, not correctness.
-    _cached_part_enter(spark)
-    try:
-        # bounded collect: n_slices x |groups| metadata rows. The
-        # bound is enforced IN the collect — limit(max + 1) caps what
-        # can ever reach the driver (a naked collect of billions of
-        # metadata rows would OOM the driver before any after-the-fact
-        # length check ran), and one extra row is enough to prove the
-        # overflow
-        slice_counts = (indexed.groupBy("__pid", *g)
-                               .agg(F.count("*").alias("__c"),
-                                    F.min("__pofs").alias("__pbase")))
-        sc_rows = slice_counts.limit(max_meta_rows + 1).collect()
-        if len(sc_rows) > max_meta_rows:
-            raise ValueError(
-                f"over {max_meta_rows} (slice, group) metadata rows "
-                f"(max_meta_rows): too many groups for rank-selection "
-                "— use the percentile aggregate for many small "
-                "groups")
-        # driver arithmetic on the metadata: per-group totals, then
-        # the (slice, in-slice ordinal) of each interpolation endpoint
-        by_group: dict[tuple, list] = {}
-        for r in sc_rows:
-            by_group.setdefault(tuple(r[c] for c in g), []).append(r)
-        targets: dict[tuple, dict] = {}   # gkey -> {"n": int, "pos": []}
-        wanted = []                       # rows for the pick join
-        for gkey, slices in by_group.items():
-            slices.sort(key=lambda r: r["__pid"])
-            n = sum(r["__c"] for r in slices)
-            targets[gkey] = {"n": n}
-            ranks = {}                    # global 1-based rank -> sides
-            for pi, p in enumerate(ps):
-                position = float(p) * (n - 1)
-                lo, hi = math.floor(position), math.ceil(position)
-                ranks.setdefault(lo + 1, []).append((pi, "lo"))
-                ranks.setdefault(hi + 1, []).append((pi, "hi"))
-            start = 0
-            it = sorted(ranks.items())
-            ri = 0
-            for r in slices:
-                end = start + r["__c"]
-                while ri < len(it) and it[ri][0] <= end:
-                    rank, sides = it[ri]
-                    wanted.append(
-                        (*gkey, int(r["__pid"]),
-                         int(r["__pbase"] + rank - start - 1),
-                         [f"{pi}:{side}" for pi, side in sides]))
-                    ri += 1
-                start = end
-        if not wanted:
-            out_fields = g_fields + [
-                T.StructField(c, T.DoubleType()) for c in out_cols]
-            empty = local_frame(spark, [], T.StructType(out_fields))
-            return empty.drop("__g") if const else empty
+    # bounded collect: n_slices x |groups| metadata rows. The
+    # bound is enforced IN the collect — limit(max + 1) caps what
+    # can ever reach the driver (a naked collect of billions of
+    # metadata rows would OOM the driver before any after-the-fact
+    # length check ran), and one extra row is enough to prove the
+    # overflow
+    slice_counts = (indexed.groupBy("__pid", *g)
+                           .agg(F.count("*").alias("__c"),
+                                F.min("__pofs").alias("__pbase")))
+    sc_rows = slice_counts.limit(max_meta_rows + 1).collect()
+    if len(sc_rows) > max_meta_rows:
+        raise ValueError(
+            f"over {max_meta_rows} (slice, group) metadata rows "
+            f"(max_meta_rows): too many groups for rank-selection "
+            "— use the percentile aggregate for many small "
+            "groups")
+    # driver arithmetic on the metadata: per-group totals, then
+    # the (slice, in-slice ordinal) of each interpolation endpoint
+    by_group: dict[tuple, list] = {}
+    for r in sc_rows:
+        by_group.setdefault(tuple(r[c] for c in g), []).append(r)
+    targets: dict[tuple, dict] = {}   # gkey -> {"n": int, "pos": []}
+    wanted = []                       # rows for the pick join
+    for gkey, slices in by_group.items():
+        slices.sort(key=lambda r: r["__pid"])
+        n = sum(r["__c"] for r in slices)
+        targets[gkey] = {"n": n}
+        ranks = {}                    # global 1-based rank -> sides
+        for pi, p in enumerate(ps):
+            position = float(p) * (n - 1)
+            lo, hi = math.floor(position), math.ceil(position)
+            ranks.setdefault(lo + 1, []).append((pi, "lo"))
+            ranks.setdefault(hi + 1, []).append((pi, "hi"))
+        start = 0
+        it = sorted(ranks.items())
+        ri = 0
+        for r in slices:
+            end = start + r["__c"]
+            while ri < len(it) and it[ri][0] <= end:
+                rank, sides = it[ri]
+                wanted.append(
+                    (*gkey, int(r["__pid"]),
+                     int(r["__pbase"] + rank - start - 1),
+                     [f"{pi}:{side}" for pi, side in sides]))
+                ri += 1
+            start = end
+    if not wanted:
+        out_fields = g_fields + [
+            T.StructField(c, T.DoubleType()) for c in out_cols]
+        empty = local_frame(spark, [], T.StructType(out_fields))
+        return empty.drop("__g") if const else empty
 
-        loc_schema = T.StructType(g_fields + [
-            T.StructField("__pid", T.LongType()),
-            T.StructField("__pofs", T.LongType()),
-            T.StructField("__sides", T.ArrayType(T.StringType()))])
-        loc = spark.createDataFrame(wanted, loc_schema)
-        # ONE pass over the sorted data picks every endpoint
-        picked = (indexed.join(F.broadcast(loc),
-                               on=[*g, "__pid", "__pofs"])
-                         .select(*g, "__v", "__sides")
-                         .collect())
-    finally:
-        _cached_part_exit(spark)
-        indexed.unpersist(blocking=False)
-        if persist_input:
-            vals.unpersist(blocking=False)
+    loc_schema = T.StructType(g_fields + [
+        T.StructField("__pid", T.LongType()),
+        T.StructField("__pofs", T.LongType()),
+        T.StructField("__sides", T.ArrayType(T.StringType()))])
+    loc = spark.createDataFrame(wanted, loc_schema)
+    # ONE pass over the sorted data picks every endpoint
+    picked = (indexed.join(F.broadcast(loc),
+                           on=[*g, "__pid", "__pofs"])
+                     .select(*g, "__v", "__sides")
+                     .collect())
 
     ends: dict[tuple, dict] = {}
     for r in picked:

@@ -11,17 +11,11 @@ double sum is order-dependent and shuffles reorder partitions).
 
 from __future__ import annotations
 
-import logging
 import os
-import threading
-from collections.abc import Iterator
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-log = logging.getLogger(__name__)
 
 # Exact-aggregation scale: all synthetic money/quantity columns carry
 # <= 2 decimal digits; 6 fractional digits absorbs products of them.
@@ -134,203 +128,64 @@ def exact_avg_scaled(col: Column | str) -> Column:
     return exact_sum_scaled(c) / F.count(c)
 
 
-# materialize_reliable persists frames whose optimizer size estimate is
-# at most this many bytes MEMORY_AND_DISK instead of DISK_ONLY
+# materialize keeps frames whose optimizer size estimate is at most
+# this many bytes MEMORY_AND_DISK instead of DISK_ONLY
 _MAT_MEMORY_MAX_BYTES = 256 << 20
 
 
-def materialize_reliable(df: DataFrame) -> DataFrame:
-    """Eagerly materialize a corpus-scale intermediate, recoverably.
+def estimated_bytes(df: DataFrame) -> int | None:
+    """Optimizer size estimate of ``df`` (driver-side, no job), or None
+    when the plan has none. For file scans this is the input file bytes
+    scaled by pruning; for derived plans Spark propagates a coarse
+    upper-ish bound — the right signal for a conservative switch."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan()
+                   .stats().sizeInBytes())
+    except Exception:
+        return None
 
-    `localCheckpoint(eager=True)` truncates lineage and stores blocks in
-    executor-local, non-replicated storage — on a multi-hour 100 TB run
-    a single lost executor makes the job unrecoverable. For frames whose
-    size is proportional to the corpus (shingle/gram arrays, exploded
-    tokens, normalized embeddings) we instead persist(DISK_ONLY) and
-    force with a count(): every partition is on disk before the
-    consuming join launches (so AQE's concurrent materialization of
-    both join sides reads the cache instead of racing to compute it —
-    the same property the eager checkpoint provided), while lineage is
-    retained so a lost block is recomputed, not fatal. DISK_ONLY (not
-    MEMORY_AND_DESERIALIZED) keeps corpus-scale blocks out of executor
-    heap, where they would evict the working set and thrash GC.
 
-    Tiny frames (banded signatures, edge lists, centroids) keep
-    `localCheckpoint(eager=True)`: recomputation there is trivial and
-    checkpoint avoids the persist bookkeeping.
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df``: the package's one way to compute a
+    frame once for several consumers.
 
-    Every persisted frame is registered — into the innermost active
-    `pin_scope()` on this thread, else the thread's default bucket — so
-    the owning build/job can unpersist exactly its own frames once its
-    consuming action is done. Without that release, corpus-sized cache
-    entries accumulate unboundedly in long-lived sessions (the
-    PipelineManager service, a multi-query correctness sweep), and —
-    because Spark's CacheManager substitutes cached plans by
-    logical-plan equality — a re-execution of the same query silently
-    reads the previous run's cache instead of recomputing. Scoping the
-    registry per build (not one process-global pop-all) means a release
-    on one thread can never unpersist frames a concurrently-running
-    job (PipelineManager worker threads) still depends on.
+    One job computes every partition into the block manager, and the
+    returned frame reads those blocks with its lineage truncated, so
+    every consumer (a self-join's two sides, a count and a pick, a
+    sink and a commit) reads the same rows without recomputing them —
+    and without racing to compute them when AQE launches both sides
+    of a join at once.
+
+    Local checkpoints are safe here because every session is
+    ``local[N]`` (``session.get_spark``): the executor is the driver,
+    so no block can be lost to an executor the driver outlives.
+
+    Lifetime: the blocks live until the returned frame is unreachable.
+    Spark's ContextCleaner then frees them after the next JVM GC —
+    there is no registry to release and no cache entry to clear, and a
+    re-executed plan recomputes instead of reading a stale cache.
+    A pipeline run holds its frames until ``PipelineRun.close()``,
+    which drops them, so a finished job's record keeps no blocks.
+
+    Storage level by estimated size: DISK_ONLY keeps corpus-scale
+    blocks out of executor heap, but at small scale taxes every
+    consumer with a serialize-to-disk round trip. At most
+    ``_MAT_MEMORY_MAX_BYTES`` (optimizer estimate; unknown stays
+    DISK_ONLY) the frame is MEMORY_AND_DISK: small frames live in the
+    bounded storage pool and anything unexpected spills. The estimate
+    grows with the data, so the 100 TB regime always takes DISK_ONLY.
+    The memory level is the JVM's MEMORY_AND_DISK (deserialized, what
+    ``localCheckpoint`` uses by default): PySpark's constant of that
+    name is the serialized variant, which Java-serializes every row
+    (measured 1.2x slower on dedup_ngram_jaccard at sf1).
     """
     from pyspark import StorageLevel
 
-    # Storage level by estimated input size (same conservative switch
-    # as the percentile fast path): DISK_ONLY is the right call for
-    # corpus-scale frames — it keeps 100 TB-proportional blocks out of
-    # executor heap — but at small scale it taxes EVERY consumer with
-    # a serialize-to-disk + read-back round trip. Below the threshold
-    # (optimizer sizeInBytes estimate; unknown or over-threshold stays
-    # DISK_ONLY, so the failure mode of a bad estimate is only the old
-    # behavior) the frame is MEMORY_AND_DISK: small frames live in the
-    # bounded storage pool, anything unexpected spills via LRU. The
-    # estimate grows with the data, so the 100 TB regime always takes
-    # DISK_ONLY.
-    level = StorageLevel.DISK_ONLY
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
-    except Exception:
-        est = None
-    if est is not None and est <= _MAT_MEMORY_MAX_BYTES:
-        level = StorageLevel.MEMORY_AND_DISK
-    df = df.persist(level)
-    df.count()  # force: populate every partition before consumers run
-    _pin_sink().append(df)
-    return df
-
-
-# Pin bookkeeping is thread-local: each build/job registers and releases
-# its own frames; concurrent PipelineManager workers never see (or free)
-# each other's pins. unpersist on a frame from a stopped session is a
-# harmless logged no-op, so no per-session keying is needed.
-_TL = threading.local()
-
-
-def pin_frame(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted frame into this thread's pin
-    bookkeeping, giving it the same release lifecycle as
-    `materialize_reliable`'s intermediates: unpersisted when the
-    owning build's pins are released (for catalog queries, when this
-    thread builds its NEXT query — by which point the prior action has
-    completed). For builders that choose their own storage level /
-    materialization timing but must not retain cache entries for a
-    long-lived session's lifetime (r10 ADVICE on the rfm aggregate).
-
-    Caveat shared by ALL pins (pin_frame and materialize_reliable
-    alike, r11 review): Spark's CacheManager dedupes entries by
-    analyzed-plan EQUALITY, so two threads concurrently building the
-    IDENTICAL query over the identical input share one cache entry,
-    and the first thread's release drops it for both. The consequence
-    is bounded to performance — the other thread's pending action
-    recomputes the plan (lineage is intact); results are unaffected.
-    No current consumer runs the same catalog query concurrently on
-    one session (the manager's workers run engine pipelines, not
-    catalog builds), so this stays a documented property rather than
-    a session-global refcount."""
-    _pin_sink().append(df)
-    return df
-
-
-def _pin_sink() -> list[DataFrame]:
-    """The list `materialize_reliable` registers into: the innermost
-    active `pin_scope` on this thread, else the thread's default
-    bucket (released by `release_materialized`)."""
-    scopes = getattr(_TL, "scopes", None)
-    if scopes:
-        return scopes[-1]
-    bucket = getattr(_TL, "default", None)
-    if bucket is None:
-        bucket = _TL.default = []
-    return bucket
-
-
-@contextmanager
-def pin_scope() -> Iterator[list[DataFrame]]:
-    """Collect the frames `materialize_reliable` pins during the block.
-
-    The caller owns the yielded list and must `release_frames` it once
-    the consuming action has finished — which may be well after the
-    block exits (a catalog build returns an unexecuted DataFrame; the
-    manager executes a build on a worker thread). Scopes nest: an
-    operator composing other operators releases one combined list.
-    """
-    frames: list[DataFrame] = []
-    scopes = getattr(_TL, "scopes", None)
-    if scopes is None:
-        scopes = _TL.scopes = []
-    scopes.append(frames)
-    try:
-        yield frames
-    finally:
-        scopes.pop()
-
-
-def release_frames(frames: list[DataFrame]) -> int:
-    """Unpersist the given pinned frames (drains the list in place).
-
-    Non-blocking: block cleanup proceeds asynchronously while the
-    caller's next work plans. Returns the number of frames popped —
-    attempts, not successes: a frame whose session already stopped has
-    nothing left to free, and any other unpersist failure is logged at
-    debug rather than masking the caller's own outcome.
-
-    Contract observability (ADVICE r12): the BUILD-then-ACT caller
-    contract (`plans/catalog.query`) says a pinned frame's consuming
-    action has run by the time its pins are released; a caller that
-    builds twice before acting silently recomputes the first query.
-    That violation is now LOGGED, not just documented: releasing a
-    frame whose cache buffers were never materialized emits an info
-    line (best-effort — detection reads the CacheManager, and any
-    JVM-API drift degrades to no log, never to a failed release).
-    """
-    n = 0
-    # gate the per-frame JVM CacheManager probe on the log level: when
-    # INFO is disabled the line would be dropped anyway, so skip the
-    # py4j roundtrip entirely (ADVICE r13)
-    probe = log.isEnabledFor(logging.INFO)
-    while frames:
-        d = frames.pop()
-        n += 1
-        try:
-            if probe and _pinned_but_never_materialized(d):
-                log.info(
-                    "release_frames: unpersisting a pinned frame whose "
-                    "consuming action never ran — a build-build-act "
-                    "caller is losing its pinned materialization "
-                    "(BUILD-then-ACT contract, plans/catalog.query)")
-            d.unpersist(blocking=False)
-        except Exception:
-            log.debug("unpersist of pinned frame failed "
-                      "(session stopped?)", exc_info=True)
-    return n
-
-
-def _pinned_but_never_materialized(d: DataFrame) -> bool:
-    """True iff `d` has a live cache entry whose column buffers were
-    never loaded (no action ever populated the persist). Best-effort
-    JVM CacheManager probe — returns False on any API drift (logged at
-    debug rather than discarded, ADVICE r13, so a Spark upgrade that
-    silently disables the contract log is still diagnosable)."""
-    try:
-        cm = d.sparkSession._jsparkSession.sharedState().cacheManager()
-        cd = cm.lookupCachedData(d._jdf)
-        if cd.isEmpty():
-            return False
-        rel = cd.get().cachedRepresentation()
-        return not rel.cacheBuilder().isCachedColumnBuffersLoaded()
-    except Exception:
-        log.debug("never-materialized probe failed (JVM API drift or "
-                  "stopped session) — contract log skipped",
-                  exc_info=True)
-        return False
-
-
-def release_materialized() -> int:
-    """Release this thread's *default-bucket* pins — frames pinned by
-    `materialize_reliable` calls that ran outside any `pin_scope`
-    (ad-hoc operator use in tests / notebooks). Builds that need
-    deferred, per-job release use `pin_scope` + `release_frames`."""
-    return release_frames(getattr(_TL, "default", []))
+    est = estimated_bytes(df)
+    level = (StorageLevel.MEMORY_AND_DISK_DESER
+             if est is not None and est <= _MAT_MEMORY_MAX_BYTES
+             else StorageLevel.DISK_ONLY)
+    return df.localCheckpoint(eager=True, storageLevel=level)
 
 
 def _parse_byte_string(raw: str, default: int = 128 << 20) -> int:

@@ -33,7 +33,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from universal_data_connector_spark.functions.vectors import cosine_similarity
-from universal_data_connector_spark.operators.relational import spread, top_k_per_group
+from universal_data_connector_spark.operators.relational import (
+    materialize,
+    spread,
+    top_k_per_group,
+)
 from universal_data_connector_spark.session import local_frame
 
 
@@ -448,18 +452,14 @@ def lsh_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
         dot_product,
         l2_normalize,
     )
-    from universal_data_connector_spark.operators.relational import (
-        materialize_reliable,
-    )
     # ONE materialization carrying both the normalized vector (JVM
     # expression — exact-equality contract with the oracle's verify
     # stage) and the packed band-code array: the verify sides and the
-    # band self-join all project from the same persisted frame, where
+    # band self-join all project from the same materialized frame, where
     # the previous shape (separate unit persist + band-frame
     # checkpoint) scanned the corpus twice and ran two eager
-    # materialization jobs. Corpus-sized -> recoverable persistence
-    # (persist+count, lineage retained), not localCheckpoint.
-    combined = materialize_reliable(
+    # materialization jobs.
+    combined = materialize(
         spread(df, id_col)
         .select(F.col(id_col),
                 l2_normalize(F.col(vec_col)).alias("__u"),
@@ -482,8 +482,8 @@ def lsh_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
         # self-join sides read the checkpoint, and the drop-count audit
         # below is a scan of the same materialized blocks — one pass,
         # not two (VERDICT r12 item 4 / ADVICE r12)
-        ranked = (bands_df.withColumn("__rn", F.row_number().over(wb))
-                  .localCheckpoint(eager=True))
+        ranked = materialize(
+            bands_df.withColumn("__rn", F.row_number().over(wb)))
         dropped = ranked.filter(F.col("__rn") > bucket_cap).count()
         if dropped:
             import logging

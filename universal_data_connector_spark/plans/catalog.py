@@ -101,50 +101,16 @@ TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
 
 
-# Per-thread handle on the pins of the previous catalog build, released
-# when this thread builds its NEXT query (by which point the prior one's
-# action has completed — driver / bench / oracle-sweep all run
-# build->act->build->act). Thread-local so a concurrent build on another
-# thread (PipelineManager worker, parallel test) can never release pins
-# a still-running job depends on.
-_BUILD_TL = threading.local()
-
-
 def query(name: str, oracle: str | None = None):
     """Register a catalog query; `oracle=None` => rows-only check
-    (genuinely non-SQL-expressible, e.g. LSH signatures).
-
-    Caller contract — BUILD then ACT, per thread (ADVICE r11): frames
-    a query pins during its build (`relational.pin_frame`, e.g. the
-    rfm per-customer aggregate) are released when the SAME thread
-    builds its NEXT catalog query, on the assumption the previous
-    query's action has run by then. Driver, bench, oracle sweep and
-    the tests all follow build->act->build->act. A caller that builds
-    two queries before acting on the first gets CORRECT results but
-    silently loses the first query's materialization (its persisted
-    frame is unpersisted before the action, so the plan recomputes) —
-    build-build-act is a perf bug, not a correctness bug."""
+    (genuinely non-SQL-expressible, e.g. LSH signatures). A query's
+    eager materializations (`relational.materialize`) belong to the
+    frame it returns and free themselves once that frame is dropped,
+    so callers may build and act in any order, on any thread."""
     def deco(fn):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             udc_session.pin(spark)
-            # Release the PREVIOUS query's materialized intermediates —
-            # exactly the frames pinned during that build on this
-            # thread, nothing else. Bounds cache growth over an N-query
-            # session to one query's worth instead of the union of all N.
-            prev = getattr(_BUILD_TL, "prev_pins", None)
-            if prev:
-                orel.release_frames(prev)
-            with orel.pin_scope() as pins:
-                try:
-                    out = fn(spark, sf_dir)
-                except BaseException:
-                    # A failed build leaves nothing to act on: release
-                    # its pins NOW instead of leaking corpus-sized
-                    # DISK_ONLY entries for the rest of the session.
-                    orel.release_frames(pins)
-                    raise
-            _BUILD_TL.prev_pins = pins
-            return out
+            return fn(spark, sf_dir)
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
         wrapped.__wrapped__ = fn  # introspection (e.g. the r22
@@ -2650,9 +2616,8 @@ def text_unigram_logprob(spark, sf_dir):
     (measured)."""
     d = load(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(ft.tokenize(F.col("text"))).alias("token"))
-    # consumed twice (counts + scoring); exploded tokens are
-    # corpus-sized -> recoverable persistence, not localCheckpoint
-    tok = orel.materialize_reliable(tok)
+    # consumed twice (counts + scoring)
+    tok = orel.materialize(tok)
     counts = tok.groupBy("token").agg(F.count("*").alias("n"))
     total = tok.count()
     return (tok.join(orel.broadcast_dim(counts), "token")
@@ -3189,7 +3154,7 @@ def ts_rollup_gapfill(spark, sf_dir):
     spine-minus-rollup by construction, the explode happens AFTER the
     window shuffle (so the LOCF window below reuses the same user_id
     partitioning with no further exchange), and the rollup is consumed
-    exactly once (the materialize_reliable persist is gone with the
+    exactly once (the eager materialization is gone with the
     second consumer). Same row set, same columns, bit-identical
     values."""
     e = load(spark, sf_dir, "events")
@@ -5136,8 +5101,7 @@ def ts_outlier_iqr(spark, sf_dir):
 
     e = load(spark, sf_dir, "events")
     q = exact_group_percentiles(e, ["event_type"], "value",
-                                [0.25, 0.75], ["q1", "q3"],
-                                persist_input=False)  # plain scan proj
+                                [0.25, 0.75], ["q1", "q3"])
     iqr = F.col("q3") - F.col("q1")
     out = ((F.col("value") < F.col("q1") - 1.5 * iqr)
            | (F.col("value") > F.col("q3") + 1.5 * iqr))
@@ -5205,47 +5169,29 @@ def events_rfm_segments(spark, sf_dir):
         exact_group_percentiles,
     )
 
-    from pyspark import StorageLevel
-
     o = load(spark, sf_dir, "orders")
-    # persist the per-customer aggregate ITSELF (VERDICT r9 item 4):
-    # it feeds BOTH the quantile input and the final segment join, and
-    # without the persist the orders groupBy executed twice — once
-    # eagerly inside the rank-selection helper and once when the
-    # returned plan ran. With it, the helper's first job materializes
-    # the cache and the returned plan reads InMemoryTableScan — ONE
+    # materialize the per-customer aggregate ITSELF (VERDICT r9 item
+    # 4): it feeds BOTH the quantile input and the final segment join,
+    # and without it the orders groupBy executes twice — once eagerly
+    # inside the rank-selection helper and once when the returned plan
+    # runs. With it, the returned plan reads the checkpoint — ONE
     # aggregation execution total (plan-asserted in
-    # tests/test_round10_fixes.py). MEMORY_AND_DISK: the frame is
-    # |customers| rows — far smaller than orders, spills if not.
-    # The persist intentionally outlives this builder (the returned
-    # plan needs it), and it does NOT accumulate across invocations:
-    # CacheManager keys by analyzed-plan equality, so re-building this
-    # query re-uses the ONE existing entry per sf_dir (verified: three
-    # builds -> one cached RDD) — bounded, and cleared by the bench's
-    # clearCache()/session teardown. pin_frame gives it the standard
-    # deferred release too (r10 ADVICE): a long-lived session
-    # (PipelineManager, a REPL) unpersists it when this thread builds
-    # its next catalog query, instead of retaining one cached frame
-    # per sf_dir for the session's lifetime.
-    rfm = orel.pin_frame(
+    # tests/test_round10_fixes.py). The frame is |customers| rows, far
+    # smaller than orders; its blocks go with the returned plan.
+    rfm = orel.materialize(
         o.groupBy(F.col("o_custkey").alias("custkey"))
          .agg(F.count("*").cast("bigint").alias("f"),
               orel.exact_sum_scaled(F.col("o_totalprice")).alias("m"),
               F.date_format(F.max("o_orderdate"), "yyyy-MM-dd")
-               .alias("last_order"))
-         .persist(StorageLevel.MEMORY_AND_DISK))
+               .alias("last_order")))
     long = rfm.select(F.explode(F.array(
         F.struct(F.lit("f").alias("metric"),
                  F.col("f").cast("double").alias("value")),
         F.struct(F.lit("m").alias("metric"),
                  F.col("m").alias("value")))).alias("mv")) \
         .select("mv.metric", "mv.value")
-    # persist_input=False: `long` is a cheap explode over the ALREADY
-    # persisted rfm frame — the helper's own projection cache would
-    # just duplicate it on disk
     qs = exact_group_percentiles(long, ["metric"], "value",
-                                 [0.25, 0.5, 0.75], ["q25", "q50", "q75"],
-                                 persist_input=False)
+                                 [0.25, 0.5, 0.75], ["q25", "q50", "q75"])
     cuts = qs.groupBy().agg(*[
         F.max(F.when(F.col("metric") == m, F.col(q)))
          .alias(f"{m}{q[1:]}")

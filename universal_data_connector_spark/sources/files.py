@@ -109,7 +109,7 @@ def decoded_uri_path_col(c: Column) -> Column:
     hands us a path whose stray ``%`` no longer parses — surfaces the
     raw spelling instead of raising mid-pipeline. The encoding
     assumption itself is pinned by a round-trip test against THIS
-    Spark version (tests/test_round13_fixes.py): a file named with a
+    Spark version (tests/test_engine_pipelines.py): a file named with a
     space must appear as ``%20`` in the raw metadata and as a space
     after this decode; a Spark upgrade that changes the spelling fails
     that test loudly rather than silently mangling names here."""

@@ -66,6 +66,7 @@ import json
 
 from pyspark.sql import DataFrame
 
+from universal_data_connector_spark.operators.relational import materialize
 from universal_data_connector_spark.session import local_frame
 from universal_data_connector_spark.streaming.windows import (
     Committed,
@@ -551,7 +552,7 @@ def read_state_s3(spark, target: S3StateTarget, schema: str,
     commit plus ``vacuum_target`` would re-evaluate against deleted
     generations (NoSuchKey) or silently see the NEWER state. Pass
     ``eager=True`` to restore the pinned-snapshot behavior (one
-    distributed materialization via ``localCheckpoint``) when reads
+    distributed materialization, ``relational.materialize``) when reads
     interleave with merges/vacuum."""
     pointers = {b: target.read_pointer(b)
                 for b in range(target.num_buckets)}
@@ -559,7 +560,7 @@ def read_state_s3(spark, target: S3StateTarget, schema: str,
     if not keyed_objects:
         return local_frame(spark, [], schema)
     frame = read_objects(spark, target, keyed_objects, schema)
-    return frame.localCheckpoint(eager=True) if eager else frame
+    return materialize(frame) if eager else frame
 
 
 def vacuum_target(target: S3StateTarget) -> int:
