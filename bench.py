@@ -115,17 +115,6 @@ def read_steal_jiffies() -> int | None:
         return None
 
 
-def read_stat_cpu_lines() -> int | None:
-    """Number of ``cpuN`` lines in /proc/stat: the CPUs whose jiffies
-    the aggregate ``cpu`` line (and so its steal field) sums over."""
-    try:
-        with open("/proc/stat") as fh:
-            return sum(1 for ln in fh
-                       if ln.startswith("cpu") and ln[3].isdigit())
-    except OSError:
-        return None
-
-
 def read_loadavg_1min() -> float | None:
     try:
         with open("/proc/loadavg") as fh:
@@ -148,36 +137,12 @@ MULTI_JOB = {"dedup_cluster_cc", "stream_upsert_latest",
              "stream_agg_state_totals", "ts_outlier_iqr",
              "events_rfm_segments"}
 
-# Steal-aware retry (r21 verdict "Next round #1"): the r21 driver
-# bench ran in a ~19%-steal window and recorded 9 phantom
-# "regressions" on untouched code (events_sessionize_gap 2.6 s vs
-# 0.42 s minutes later). A rep whose steal fraction exceeds
-# STEAL_RETRY_FRAC was measurably contended, so the key earns up to
-# STEAL_RETRY_MAX extra reps hunting for one clean sample. min-of-reps
-# reduction is unchanged; this only adds samples when the existing
-# ones are provably contaminated.
-STEAL_RETRY_FRAC = 0.015
-STEAL_RETRY_MAX = 3
-
-def steal_frac(elapsed: float, steal: int) -> float:
-    """Steal jiffies during a rep over the machine's total jiffy
-    capacity for its duration (CPUs * 100/s). /proc/stat's cpu line
-    aggregates over its cpuN lines, so the capacity basis is the number
-    of those lines, not the (possibly lower) Spark core count."""
-    cap = max(elapsed, 1e-9) * (read_stat_cpu_lines() or 1) * 100.0
-    return steal / cap
-
-
-def run(spark, query, sf_dir: str) -> tuple[float, int]:
-    """One rep of ``query(spark, sf_dir)`` into the noop sink: (wall
-    seconds, steal jiffies during the rep)."""
-    s0 = read_steal_jiffies()
+def run(spark, query, sf_dir: str) -> float:
+    """One rep of ``query(spark, sf_dir)`` into the noop sink: wall
+    seconds."""
     t0 = time.perf_counter()
     query(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    elapsed = time.perf_counter() - t0
-    s1 = read_steal_jiffies()
-    steal = (s1 - s0) if s0 is not None and s1 is not None else 0
-    return elapsed, steal
+    return time.perf_counter() - t0
 
 
 def warm_up(spark, sf_dir: str) -> None:
@@ -202,33 +167,22 @@ def warm_up(spark, sf_dir: str) -> None:
 
 
 def run_best(spark, name: str, sf_dir: str,
-             reps: int = REPS) -> tuple[float, float, float, int]:
-    """(min, median, min-rep steal fraction, extra reps) over reps.
-    The host VM shows transient multi-second CPU starvation spikes
-    that land on random queries; min-of-N measures the engine, not
-    the neighbor, and the median rides along in the artifact so
-    noise is diagnosable from the JSON alone (median >> min across
-    queries = noisy run). Four reps so operators whose first
-    execution materializes an eager checkpoint still get three
-    clean samples; multi-job keys get two more so a single starved
-    rep can't be the median. If even the BEST rep landed in a steal
-    burst, up to STEAL_RETRY_MAX extra reps run until one clean
-    sample exists — the r21 contended-window adjudication, done by
-    the bench itself instead of a human reading canary files."""
+             reps: int = REPS) -> tuple[float, float]:
+    """(min, median) over reps. The host VM shows transient
+    multi-second CPU starvation spikes that land on random queries;
+    min-of-N measures the engine, not the neighbor, and the median
+    rides along in the artifact so noise is diagnosable from the JSON
+    alone (median >> min across queries = noisy run). Four reps so
+    operators whose first execution materializes an eager checkpoint
+    still get three clean samples; multi-job keys get two more so a
+    single starved rep can't be the median."""
     from universal_data_connector_spark.plans.catalog import QUERIES
 
     query = QUERIES[name]
     if name in MULTI_JOB:
         reps += 2
-    samples = [run(spark, query, sf_dir) for _ in range(reps)]
-    extra = 0
-    while (extra < STEAL_RETRY_MAX
-           and steal_frac(*min(samples)) > STEAL_RETRY_FRAC):
-        samples.append(run(spark, query, sf_dir))
-        extra += 1
-    best = min(samples)
-    ts = sorted(t for t, _ in samples)
-    return best[0], statistics.median(ts), steal_frac(*best), extra
+    ts = sorted(run(spark, query, sf_dir) for _ in range(reps))
+    return ts[0], statistics.median(ts)
 
 
 def profile(cases: dict, reps: int, app_name: str) -> dict:
@@ -262,7 +216,7 @@ def profile(cases: dict, reps: int, app_name: str) -> dict:
             for label, (query, sf_dir) in cases.items():
                 for _ in range(reps):
                     t0 = time.time()
-                    wall, _ = run(spark, query, sf_dir)
+                    wall = run(spark, query, sf_dir)
                     windows[label].append((wall, t0 * 1e3, time.time() * 1e3))
                     print(f"{label}: {wall:.3f}s", file=sys.stderr, flush=True)
             app_id = spark.sparkContext.applicationId
@@ -314,15 +268,10 @@ def main(keys: list[str]) -> None:
     times: dict[str, float] = {}
     medians: dict[str, float] = {}
     noise_by_key: dict[str, float] = {}
-    rep_steal: dict[str, float] = {}
-    rep_extra: dict[str, int] = {}
     for name in keys:
-        best, med, bsteal, extra = run_best(spark, name, SF_DIR)
+        best, med = run_best(spark, name, SF_DIR)
         times[name] = round(best, 3)
         medians[name] = round(med, 3)
-        rep_steal[name] = round(bsteal, 4)
-        if extra:
-            rep_extra[name] = extra
         # one canary sample right after each key: the r9/r10 rounds
         # showed multi-second starvation BURSTS landing on random keys
         # mid-run — a per-key noise timeline lets a reader align a
@@ -349,8 +298,6 @@ def main(keys: list[str]) -> None:
                         "median": round(statistics.median(noise), 4),
                         "max": round(max(noise), 4)},
         "noise_by_key": noise_by_key,
-        "best_rep_steal_frac": rep_steal,
-        "steal_retry_extra_reps": rep_extra,
         "reps": REPS,
         "sf": sf,
         "spark_version": spark.version,

@@ -919,3 +919,24 @@ def test_one_materialization_primitive():
                     bad.append(f"{rel}:{n.lineno}: spark.conf.set")
     assert checkpoints == [("operators/relational.py", "materialize")]
     assert not bad, "\n".join(bad)
+
+
+def test_scaled_encoding_lives_in_relational():
+    """Source lint: the scaled exact-sum encoding (floor(v*1e6+0.5)
+    units as decimal(28,0), the /1e6 at the edge, and its runtime
+    guard) is written only in operators/relational.py; every other
+    module composes `to_units` / `from_units` and the helpers built on
+    them."""
+    import pathlib
+    import re
+
+    import universal_data_connector_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    pattern = re.compile(r"\b1000000\b|decimal\(28,\s*0\)|_scaled_guard")
+    bad = [f"{py.relative_to(root)}:{i}: {line.strip()}"
+           for py in sorted(root.rglob("*.py"))
+           if py.relative_to(root).as_posix() != "operators/relational.py"
+           for i, line in enumerate(py.read_text().splitlines(), 1)
+           if pattern.search(line)]
+    assert not bad, "\n".join(bad)

@@ -1,13 +1,12 @@
 """Round-4 fixes: managed-pipeline archiveDir, collision-safe archive
-destinations, source-scoped inputFiles capture, Spark byte-string
-parsing, and S3 key-naming parity between the boto3 and S3A paths."""
+destinations, source-scoped inputFiles capture, maxPartitionBytes as
+Spark parses it, and S3 key-naming parity between the boto3 and S3A
+paths."""
 
 from __future__ import annotations
 
 import os
 import time
-
-import pytest
 
 from universal_data_connector_spark import engine
 from universal_data_connector_spark.config import parse_config
@@ -130,24 +129,7 @@ def test_manager_batch_pipeline_honors_archive_dir(spark, tmp_path):
     assert os.listdir(processed) == ["a.txt"]          # into the archive
 
 
-# -- Spark byte-string parsing (ADVICE relational.py:382) ---------------
-
-@pytest.mark.parametrize("raw,expected", [
-    ("134217728", 134217728),
-    ("134217728b", 134217728),
-    ("128m", 128 << 20),
-    ("128mb", 128 << 20),
-    ("1g", 1 << 30),
-    ("64k", 64 << 10),
-    ("2t", 2 << 40),
-    ("garbage", 128 << 20),        # unparseable -> default
-])
-def test_parse_byte_string_suffixes(raw, expected):
-    from universal_data_connector_spark.operators.relational import (
-        _parse_byte_string,
-    )
-    assert _parse_byte_string(raw) == expected
-
+# -- maxPartitionBytes as Spark parses it --------------------------------
 
 def test_max_partition_bytes_reads_suffixed_conf(spark):
     from universal_data_connector_spark.operators.relational import (

@@ -2,11 +2,16 @@
 
 Everything stays declarative so Catalyst picks the physical strategy
 (broadcast vs sort-merge vs shuffled-hash; partial+final aggregation;
-WholeStageCodegen). Helpers here add the two things Catalyst can't
-infer: explicit strategy *intent* (broadcast hints for dimension
-tables) and numeric determinism (decimal-exact sums, so results are
-bit-identical across engines and across partition orders — a plain
-double sum is order-dependent and shuffles reorder partitions).
+WholeStageCodegen). Helpers here add what Catalyst can't infer:
+
+* numeric determinism — exact sums, so results are bit-identical across
+  engines and across partition orders (a plain double sum is
+  order-dependent and shuffles reorder partitions). The scaled encoding
+  (`to_units` / `from_units`: exact 1e-6 units in decimal(28,0)) is
+  written only here; `exact_sum` is its decimal-cast reference;
+* the fan-out of a narrow scan before per-row work (`spread`);
+* eager materialization of a frame with several consumers
+  (`materialize`).
 """
 
 from __future__ import annotations
@@ -33,6 +38,10 @@ def exact_sum(col: Column | str) -> Column:
     exact (integer arithmetic), hence independent of partition/merge
     order — doubles summed in shuffle order are not reproducible run to
     run at scale. Result is cast back to double for a stable schema.
+
+    The reference the scaled path (`exact_sum_scaled`) is checked
+    against, bit for bit; the catalog sums through the scaled path,
+    which skips this cast's per-row string hop.
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(_DEC)).cast("double")
@@ -42,12 +51,6 @@ def exact_avg(col: Column | str) -> Column:
     """Exact-sum / count — deterministic average of a double column."""
     c = F.col(col) if isinstance(col, str) else col
     return exact_sum(c) / F.count(c)
-
-
-# exact_sum_scaled input contract: |value| must stay far enough below
-# 2^53/1e6 that the scaled double is within 0.5 of the true integer
-# (error <= |v| * 1e6 * ~7e-16, so 5e8 leaves a 350x margin).
-_SCALED_MAX_ABS = 5e8
 
 
 def _scaled_guard(c: Column) -> Column:
@@ -74,7 +77,7 @@ def _scaled_guard(c: Column) -> Column:
         (dec6 * F.lit(1000000).cast("decimal(7,0)")).cast("decimal(38,0)")
         == fast)
     probe = F.assert_true(ok, F.concat(
-        F.lit("exact_sum_scaled contract violation (decimal-cast path "
+        F.lit("to_units contract violation (decimal-cast path "
               "and scaled path disagree on value): "), c.cast("string")))
     # assert_true yields NULL when ok (or raises). coalesce(probe, c)
     # forces the probe per row and then falls through to the value;
@@ -84,9 +87,9 @@ def _scaled_guard(c: Column) -> Column:
     return F.coalesce(probe, c)
 
 
-def exact_sum_scaled(col: Column | str) -> Column:
-    """`exact_sum` for DECIMAL-CLEAN doubles, without the per-row
-    string hop.
+def to_units(col: Column | str) -> Column:
+    """A DECIMAL-CLEAN double as its exact count of 1e-6 units:
+    ``floor(v * 1e6 + 0.5)`` as decimal(28,0).
 
     Spark's Cast(double -> decimal) goes through
     ``BigDecimal(Double.toString(d))`` — a per-row string format +
@@ -98,32 +101,42 @@ def exact_sum_scaled(col: Column | str) -> Column:
     F.round(x, 6)-ed), the cast's result is by construction the true
     6-dp integer at scale 1e6 — and ``floor(v * 1e6 + 0.5)`` computes
     that same integer in three native double ops (the scaled double is
-    within ~3e-4 of the integer for |v| <= 5e8, so the +0.5/floor can
+    within ~3e-4 of the integer for |v| <= 5e8 — error <= |v| * 1e6 *
+    ~7e-16, a 350x margin below 0.5 — so the +0.5/floor can
     never land on the wrong side; negatives round away from zero
     exactly like HALF_UP because clean inputs never sit on a .5).
 
-    The scaled longs accumulate as decimal(28,0) — exact, order-free,
+    Units add exactly and in any order as decimal(28,0) —
     compact-long-backed until ~9.2e18 (then BigDecimal, still exact;
-    headroom 1e28 scaled units = 1e22 absolute, plenty for 100 TB
-    totals) — and ONE decimal division by 1e6 at the edge recovers the
-    identical decimal the old path summed to, hence the identical
-    double. Bit-equality with `exact_sum` on clean inputs is pinned in
-    tests/test_round21_opt.py for every converted call site plus a
-    randomized-2dp property.
+    headroom 1e28 units = 1e22 absolute, plenty for 100 TB totals) —
+    and `from_units` turns a sum of them back into the double the
+    decimal-cast path (`exact_sum`) would give. Bit-equality with
+    `exact_sum` on clean inputs is pinned in tests/test_relational.py.
 
     Do NOT use on computed doubles that are not clean at 6 dp (ratios,
     squared prices, logs): there the two paths legitimately disagree.
-    `exact_sum` remains the general-purpose form.
     """
     c = F.col(col) if isinstance(col, str) else col
-    c = _scaled_guard(c)
-    scaled = F.floor(c * F.lit(1000000.0) + F.lit(0.5)).cast("decimal(28,0)")
-    return (F.sum(scaled) / F.lit(1000000).cast("decimal(7,0)")).cast("double")
+    return F.floor(_scaled_guard(c) * F.lit(1000000.0) + F.lit(0.5)) \
+            .cast("decimal(28,0)")
+
+
+def from_units(units: Column) -> Column:
+    """A decimal count of 1e-6 units (a `to_units` value, or a sum of
+    them) as a double: ONE exact decimal division by 1e6 at the edge,
+    so the double is the correctly rounded value of the exact sum."""
+    return (units / F.lit(1000000).cast("decimal(7,0)")).cast("double")
+
+
+def exact_sum_scaled(col: Column | str) -> Column:
+    """`exact_sum` for decimal-clean doubles (`to_units`' contract),
+    without the per-row string hop; bit-identical to it on such input."""
+    return from_units(F.sum(to_units(col)))
 
 
 def exact_avg_scaled(col: Column | str) -> Column:
-    """`exact_avg` on the scaled fast path (same input contract as
-    `exact_sum_scaled`; bit-identical to `exact_avg` on clean input)."""
+    """`exact_avg` on the scaled path (same input contract as
+    `to_units`; bit-identical to `exact_avg` on clean input)."""
     c = F.col(col) if isinstance(col, str) else col
     return exact_sum_scaled(c) / F.count(c)
 
@@ -188,25 +201,12 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True, storageLevel=level)
 
 
-def _parse_byte_string(raw: str, default: int = 128 << 20) -> int:
-    """Parse a Spark byte-string conf value (JavaUtils.byteStringAs):
-    plain bytes or a k/m/g/t/p suffix with optional trailing 'b'
-    ("128m", "1g", "134217728b")."""
-    import re
-
-    m = re.fullmatch(r"(\d+)\s*([kmgtp]?)b?", str(raw).strip().lower())
-    if not m:
-        return default
-    mult = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}[m.group(2)]
-    return int(m.group(1)) << mult
-
-
 def _max_partition_bytes(spark) -> int:
-    return _parse_byte_string(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    """spark.sql.files.maxPartitionBytes in bytes, as Spark parsed it."""
+    return spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
 
 
-def _split_estimate(df: DataFrame, stop_at: int | None = None) -> int:
+def _split_estimate(df: DataFrame, stop_at: int) -> int:
     """Scan-task estimate of ``df`` from its file listing and the
     maxPartitionBytes split arithmetic — metadata only, never a
     plan->RDD conversion (``df.rdd.getNumPartitions()`` materializes an
@@ -229,7 +229,7 @@ def _split_estimate(df: DataFrame, stop_at: int | None = None) -> int:
                 est += 1
         else:
             est += 1
-        if stop_at is not None and est >= stop_at:
+        if est >= stop_at:
             break
     return est
 
@@ -241,52 +241,17 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     row groups scans as few tasks — downstream per-row work (shingling,
     hashing, vector math) then runs on a handful of cores regardless of
     cluster size, because map-side work fuses into the scan stage. When
-    the input has fewer partitions than the cluster's parallelism, one
-    cheap shuffle of the raw rows unlocks full fan-out; when the input
-    is already wide (the 100 TB case: thousands of files/row groups)
-    this is a no-op.
-
-    The width comes from ``_split_estimate``. Non-scan inputs (no
-    files: in-memory or post-shuffle plans) are returned unchanged:
-    they already carry defaultParallelism or shuffle.partitions width.
+    the scan's split estimate is below defaultParallelism, one cheap
+    shuffle of the raw rows to that count unlocks full fan-out; when
+    the input is already wide (the 100 TB case: thousands of files/row
+    groups) this is a no-op. Non-scan inputs (no files: in-memory or
+    post-shuffle plans) are returned unchanged: they already carry
+    defaultParallelism or shuffle.partitions width.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    est = _split_estimate(df, stop_at=target)
-    if est == 0 or est >= target:
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if not 0 < _split_estimate(df, stop_at=n) < n:
         return df
-    return df.repartition(target, *key_cols) if key_cols else df.repartition(target)
-
-
-def grouped_spread(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Partition for a grouped Python dispatch (``groupBy().
-    applyInPandas`` / ``cogroup``): hash-partition on the group key at
-    ``max(defaultParallelism, input-split estimate)`` partitions.
-
-    Grouped Python evaluation pays a per-GROUP serializer cost
-    (pandas/Arrow batch construction, ~1.7 ms/group measured at r22)
-    that is invisible to AQE: its coalescing sizes post-shuffle
-    partitions by BYTES, so a small-bytes many-groups input collapses
-    to ONE task and every group dispatches serially on one core
-    (measured: 1,500 groups -> 1 task, 3.2 s; 32 tasks, 0.65 s).
-    An explicit keyed repartition with a pinned partition count is
-    exempt from AQE coalescing and satisfies the grouped operator's
-    ClusteredDistribution requirement, so no second exchange appears.
-
-    Scale posture: the count grows with the input (``_split_estimate``,
-    the same arithmetic as ``spread``) and never drops below cluster
-    parallelism — at 100 TB the estimate dominates and the exchange
-    carries exactly the bytes the groupBy shuffle already moved; only
-    the pathological small-bytes/many-groups corner changes. Non-scan
-    inputs fall back to defaultParallelism: callers should apply this
-    directly to the scan-side projection."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(max(target, _split_estimate(df)), *key_cols)
-
-
-def broadcast_dim(df: DataFrame) -> DataFrame:
-    """Mark a dimension table broadcast-able (skips the shuffle on the
-    fact side; the right call whenever the dim fits in executor memory)."""
-    return F.broadcast(df)
+    return df.repartition(n, *key_cols)
 
 
 def top_k_per_group(df: DataFrame, partition_cols: list[str],
@@ -304,22 +269,14 @@ def top_k_per_group(df: DataFrame, partition_cols: list[str],
 
 def running_sum(df: DataFrame, partition_cols: list[str],
                 order_cols: list[Column], value: Column,
-                alias: str, clean6: bool = False) -> DataFrame:
-    """Cumulative sum over a totally-ordered window (decimal-exact).
-
-    ``clean6=True`` switches to the scaled fast path (the
-    `exact_sum_scaled` formulation — same input contract: values
-    exactly representable at <= 6 decimal places, |v| <= ~5e8); every
-    prefix sum is the identical exact decimal, so results are
-    bit-equal while skipping the per-row string-based decimal cast."""
+                alias: str) -> DataFrame:
+    """Cumulative sum over a totally-ordered window (decimal-exact,
+    the `exact_sum` cast). Not the scaled path: a window emits one
+    double per input row, and `from_units`' decimal division per
+    output row cost more than the per-row cast saves (measured on
+    window_running_sum, 4 cores: 1.49 vs 1.01 s at sf1)."""
     w = (Window.partitionBy(*partition_cols).orderBy(*order_cols)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    if clean6:
-        scaled = F.floor(_scaled_guard(value) * F.lit(1000000.0) + F.lit(0.5)) \
-                  .cast("decimal(28,0)")
-        run = (F.sum(scaled).over(w)
-               / F.lit(1000000).cast("decimal(7,0)")).cast("double")
-        return df.withColumn(alias, run)
     return df.withColumn(alias, F.sum(value.cast(_DEC)).over(w).cast("double"))
 
 

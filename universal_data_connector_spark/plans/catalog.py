@@ -10,8 +10,11 @@ Every key is one operator from SURVEY.md §2B. Each entry pairs
 
 Determinism rules (so Spark and DuckDB hash-match bit-for-bit):
 
-* double sums go through ``exact_sum`` (decimal-exact, order-free);
-  the oracle mirrors with CAST(CAST(SUM(CAST(CAST(x AS STRING) AS DECIMAL(27,6))) AS STRING) AS DOUBLE),
+* double sums go through the scaled exact path (``exact_sum_scaled``
+  or ``to_units``/``from_units`` in ``operators/relational.py``: exact
+  1e-6 units, order-free, the same doubles as Spark's double->decimal
+  cast; running sums take that cast, ``running_sum``); the oracle's
+  ``_dsum`` mirrors the cast with CAST(CAST(SUM(CAST(CAST(x AS STRING) AS DECIMAL(27,6))) AS STRING) AS DOUBLE),
 * ranking windows always include a unique key as the final tiebreak,
 * timestamps are emitted as formatted strings (session TZ pinned UTC),
 * count/length-ish integers are cast to bigint on both sides,
@@ -123,7 +126,9 @@ def query(name: str, oracle: str | None = None):
 
 
 def _dsum(sql_expr: str) -> str:
-    """Oracle-side mirror of operators.relational.exact_sum, with a
+    """Oracle-side mirror of Spark's double->decimal cast sum
+    (operators.relational.exact_sum, which the scaled path reproduces
+    bit for bit on its clean inputs), with a
     STRING hop on BOTH conversions (r17, caught by the sf1
     differential on sample_hash_split/agg_weighted_avg):
 
@@ -436,7 +441,7 @@ def join_broadcast(spark, sf_dir):
     the 100 TB-correct plan for fact x dimension."""
     li, p = load(spark, sf_dir, "lineitem"), load(spark, sf_dir, "part")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (li.join(orel.broadcast_dim(p), li.l_partkey == p.p_partkey)
+    return (li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
               .groupBy(F.col("p_brand").alias("brand"))
               .agg(F.count("*").alias("n_items"),
                    orel.exact_sum_scaled(revenue).alias("revenue")))
@@ -508,7 +513,7 @@ def join_range_theta(spark, sf_dir):
     cond = ((li.l_partkey == p.p_partkey)
             & (li.l_quantity >= p.p_size - 2)
             & (li.l_quantity <= p.p_size + 2))
-    return (li.join(orel.broadcast_dim(p), cond)
+    return (li.join(F.broadcast(p), cond)
               .groupBy(F.col("p_brand").alias("brand"))
               .agg(F.count("*").alias("n_matches")))
 
@@ -907,8 +912,7 @@ def window_running_sum(spark, sf_dir):
     o = load(spark, sf_dir, "orders")
     out = orel.running_sum(o, ["o_custkey"],
                            [F.col("o_orderdate").asc(), F.col("o_orderkey").asc()],
-                           F.col("o_totalprice"), "running_total",
-                           clean6=True)  # 2dp money column: scaled fast path
+                           F.col("o_totalprice"), "running_total")
     return out.select("o_custkey", "o_orderkey", "running_total")
 
 
@@ -2429,12 +2433,7 @@ def agg_grouped_mad_pandas(spark, sf_dir):
         })
 
     e = load(spark, sf_dir, "events").select("user_id", "value")
-    # grouped_spread (r22): AQE's byte-based coalescing collapsed this
-    # small-bytes/many-groups exchange to ONE task, serializing 1,500
-    # per-group pandas dispatches (~1.7 ms each) onto one core —
-    # measured 3.2 s -> 0.65 s at 32 partitions, identical results
-    # (per-group function, partitioning-independent).
-    return (orel.grouped_spread(e, "user_id").groupBy("user_id")
+    return (e.groupBy("user_id")
              .applyInPandas(mad, "user_id bigint, n bigint, mad double"))
 
 
@@ -2463,7 +2462,7 @@ def stream_static_enrich_join(spark, sf_dir):
     stream = (spark.readStream.schema(raw_schema)
               .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    enriched = stream.join(orel.broadcast_dim(cust),
+    enriched = stream.join(F.broadcast(cust),
                            stream.user_id == cust.c_custkey)
     agg = (enriched.groupBy(F.col("c_mktsegment").alias("segment"))
            .agg(F.count("*").cast("bigint").alias("n_events"),
@@ -2620,7 +2619,7 @@ def text_unigram_logprob(spark, sf_dir):
     tok = orel.materialize(tok)
     counts = tok.groupBy("token").agg(F.count("*").alias("n"))
     total = tok.count()
-    return (tok.join(orel.broadcast_dim(counts), "token")
+    return (tok.join(F.broadcast(counts), "token")
                .groupBy("doc_id")
                .agg(F.count("*").cast("bigint").alias("n_tokens"),
                     F.round(F.sum(F.log(F.col("n") / F.lit(total))), 4)
@@ -2785,7 +2784,7 @@ def pipeline_clean_corpus(spark, sf_dir):
     """The flagship LLM-data composition: quality-filter -> exact-dedup
     (keep min doc_id per normalized-text fingerprint) -> per-language
     corpus stats. Every stage is the engine's own operator
-    (quality_score, text_fingerprint, top_k_per_group, exact_sum) and
+    (quality_score, text_fingerprint, top_k_per_group, exact_sum_scaled) and
     the whole plan is two shuffles (fingerprint window + final groupBy)
     over a single scan — the shape a 100 TB cleaning job needs."""
     d = load(spark, sf_dir, "documents")
@@ -3969,16 +3968,8 @@ def cogroup_asof_merge(spark, sf_dir):
             "purchase_value": pa.array(vals, from_pandas=True),
         })
 
-    # grouped_spread (r22): same AQE small-bytes coalescing pathology
-    # as agg_grouped_mad_pandas — both cogroup sides collapsed to one
-    # post-shuffle task, serializing the per-group Arrow dispatch on a
-    # single core. Both sides repartition to the same count on the
-    # same key, so the cogroup's co-partitioning requirement is met
-    # without a second exchange; per-group results are
-    # partitioning-independent.
-    return (orel.grouped_spread(clicks, "user_id").groupBy("user_id")
-            .cogroup(orel.grouped_spread(purchases, "user_id")
-                     .groupBy("user_id"))
+    return (clicks.groupBy("user_id")
+            .cogroup(purchases.groupBy("user_id"))
             .applyInArrow(
                 merge,
                 "click_id bigint, user_id bigint, purchase_value double"))
@@ -4138,27 +4129,20 @@ def ts_moving_window_avg(spark, sf_dir):
     Spark's rangeBetween needs a numeric axis: days since epoch via
     datediff, a rank-preserving 1:1 mapping of the date axis."""
     o = load(spark, sf_dir, "orders")
-    # scaled fast path (exact_sum_scaled formulation): daily revenue
-    # accumulates as integer 1e-6 units in decimal(28,0) — the same
-    # exact decimal the (27,6) cast summed to, minus the per-row
-    # string-based cast — and every consumer divides by 1e6 exactly
-    # once at the edge (exact division, correctly-rounded double).
-    scaled = F.floor(orel._scaled_guard(F.col("o_totalprice"))
-                     * F.lit(1000000.0) + F.lit(0.5)) \
-              .cast("decimal(28,0)")
-    unscale = F.lit(1000000).cast("decimal(7,0)")
+    # daily revenue accumulates as exact 1e-6 units (orel.to_units),
+    # and every consumer converts back once at the edge (from_units)
     daily = (o.groupBy(F.to_date("o_orderdate").alias("d"))
-              .agg(F.sum(scaled).alias("rev6")))
+              .agg(F.sum(orel.to_units("o_totalprice")).alias("rev6")))
     daily = daily.withColumn(
         "__day_no", F.datediff(F.col("d"), F.lit("1970-01-01")))
     w = (Window.orderBy("__day_no")
                .rangeBetween(-6, Window.currentRow))
     return daily.select(
         F.date_format("d", "yyyy-MM-dd").alias("day"),
-        (F.col("rev6") / unscale).cast("double").alias("revenue"),
-        (F.sum("rev6").over(w) / unscale).cast("double").alias("sum_7d"),
+        orel.from_units(F.col("rev6")).alias("revenue"),
+        orel.from_units(F.sum("rev6").over(w)).alias("sum_7d"),
         F.count("*").over(w).cast("bigint").alias("n_days_7d"),
-        ((F.sum("rev6").over(w) / unscale).cast("double")
+        (orel.from_units(F.sum("rev6").over(w))
          / F.count("*").over(w)).alias("avg_7d"))
 
 
@@ -4661,20 +4645,15 @@ def window_percent_of_total(spark, sf_dir):
                    .join(F.broadcast(n),
                          F.col("c_nationkey") == F.col("n_nationkey"))
                    .groupBy("n_name")
-                   .agg(F.sum(F.floor(orel._scaled_guard(F.col("o_totalprice"))
-                                      * F.lit(1000000.0) + F.lit(0.5))
-                               .cast("decimal(28,0)")).alias("rev6")))
-    # scaled fast path (exact_sum_scaled formulation): per-nation and
-    # global revenue carry as exact 1e-6 integer units; one exact
-    # division by 1e6 per emitted double — bit-identical to the old
-    # (27,6) casts without the per-row string hop
-    unscale = F.lit(1000000).cast("decimal(7,0)")
+                   .agg(F.sum(orel.to_units("o_totalprice")).alias("rev6")))
+    # per-nation and global revenue carry as exact 1e-6 units; one
+    # from_units per emitted double
     w = Window.partitionBy()
     return per_nation.select(
         "n_name",
-        (F.col("rev6") / unscale).cast("double").alias("revenue"),
-        ((F.col("rev6") / unscale).cast("double")
-         / (F.sum("rev6").over(w) / unscale).cast("double")).alias("share"))
+        orel.from_units(F.col("rev6")).alias("revenue"),
+        (orel.from_units(F.col("rev6"))
+         / orel.from_units(F.sum("rev6").over(w))).alias("share"))
 
 
 @query(
