@@ -610,17 +610,18 @@ def test_upsert_sink_type_streaming_yaml(spark, tmp_path):
 def test_one_pipeline_run_for_both_runners():
     """engine.run and the manager's worker execute the same prepared
     run (engine.PipelineRun): no transform-to-sink state rides on a
-    DataFrame, the batch sink sequence is called from one place, the
-    manager calls none of its steps, and one engine function reads the
-    bookkeeping hooks a source attaches to its frame."""
+    DataFrame, the batch sink sequence is called from one place and
+    the manager calls none of its steps. Post-sink steps travel only
+    through the run: no source hangs bookkeeping on its frame, no sink
+    takes a hidden prop, and engine.py names no source property or
+    sink type that owns a step."""
     import ast
     import pathlib
 
     import universal_data_connector_spark as pkg
 
     class Calls(ast.NodeVisitor):
-        """callee name -> {(file, enclosing function)}; a getattr with
-        a literal ``_udc_*`` name is recorded under that name."""
+        """callee name -> {(file, enclosing function)}."""
 
         def __init__(self, rel, found):
             self.rel, self.scope, self.found = rel, [""], found
@@ -635,37 +636,213 @@ def test_one_pipeline_run_for_both_runners():
         def visit_Call(self, node):
             name = getattr(node.func, "id", None) or \
                 getattr(node.func, "attr", None)
-            if (name == "getattr" and len(node.args) > 1
-                    and isinstance(node.args[1], ast.Constant)
-                    and str(node.args[1].value).startswith("_udc_")):
-                name = node.args[1].value
             self.found.setdefault(name, set()).add(
                 (self.rel, self.scope[-1]))
             self.generic_visit(node)
+
+    def constants_outside_docstrings(tree):
+        docs = {id(body[0].value) for body in
+                (n.body for n in ast.walk(tree)
+                 if isinstance(n, (ast.Module, ast.ClassDef,
+                                   ast.FunctionDef,
+                                   ast.AsyncFunctionDef)))
+                if body and isinstance(body[0], ast.Expr)
+                and isinstance(body[0].value, ast.Constant)}
+        return {n.value for n in ast.walk(tree)
+                if isinstance(n, ast.Constant)
+                and isinstance(n.value, str) and id(n) not in docs}
 
     root = pathlib.Path(pkg.__file__).parent
     found: dict = {}
     for py in root.rglob("*.py"):
         text, rel = py.read_text(), str(py.relative_to(root))
         for side_channel in ("_udc_post_sink_commits", "_udc_store_spans",
-                             "_udc_stream_dedup_state"):
+                             "_udc_stream_dedup_state",
+                             "_udc_input_files", "_udc_input_fingerprint",
+                             "_udc_kafka_commit", "_deferFinalize",
+                             "_inputFingerprint", "_source_hooks",
+                             "batch_archive_plan", "batch_manifest_plan",
+                             "prepare_batch_sink_cfg"):
             assert side_channel not in text, (rel, side_channel)
-        Calls(rel, found).visit(ast.parse(text))
+        tree = ast.parse(text)
+        Calls(rel, found).visit(tree)
+        if rel == "engine.py":
+            named = {c for c in constants_outside_docstrings(tree)
+                     if any(w in c for w in ("archiveDir", "manifestDir",
+                                             "agg_state"))}
+            assert named == set(), named
 
-    assert found["prepare_batch_sink_cfg"] == {("engine.py", "execute")}
     assert found["finalize_batch_sink"] == {("engine.py", "execute")}
-    for step in ("prepare_batch_sink_cfg", "finalize_batch_sink",
-                 "create_sink", "batch_archive_plan",
-                 "batch_manifest_plan"):
+    for step in ("finalize_batch_sink", "create_sink"):
         assert not {fn for rel, fn in found.get(step, ())
                     if rel == "manager.py"}, step
-    hooks = set().union(*(calls for name, calls in found.items()
-                          if str(name).startswith("_udc_")))
-    assert {c for c in hooks if c[0] in ("engine.py", "manager.py")} \
-        == {("engine.py", "_source_hooks")}
-    for attr in ("_udc_input_files", "_udc_input_fingerprint",
-                 "_udc_kafka_commit"):
-        assert found[attr] == {("engine.py", "_source_hooks")}, attr
+
+
+def test_archive_plan_ignores_sql_joined_tables(spark, tmp_path):
+    """A `sql` transformation that scans another file-backed table must
+    not get that table's files archived: the file source archives its
+    own listing, not the transformed plan's."""
+    from universal_data_connector_spark.engine import prepare
+
+    inp, other = tmp_path / "in", tmp_path / "other"
+    arch = tmp_path / "arch"
+    _write(f"{inp}/a.txt", "hello")
+    _write(f"{other}/side.txt", "side table data")
+    spark.read.format("text").option("wholetext", "true") \
+        .load(str(other)).createOrReplaceTempView("side_table")
+    cfg = _pipeline("sql-join",
+                    {"path": str(inp), "pattern": "*.txt",
+                     "archiveDir": str(arch)},
+                    {"path": str(tmp_path / "out"), "extension": ".txt"},
+                    [{"type": "sql", "properties": {
+                        "query": "SELECT source_file, file_type, "
+                                 "content FROM _input "
+                                 "CROSS JOIN side_table"}}])
+    pipeline = prepare(spark, cfg)
+    try:
+        # the transformed plan DOES scan the side table — that's the trap
+        assert any("side.txt" in f for f in pipeline.df.inputFiles())
+        pipeline.execute()
+    finally:
+        pipeline.close()
+    assert os.listdir(arch) == ["a.txt"]
+    assert os.listdir(other) == ["side.txt"]
+
+
+def _manifest_entries(manifest) -> set:
+    return {line.strip() for name in os.listdir(manifest)
+            if name.endswith(".log")
+            for line in open(os.path.join(manifest, name)) if line.strip()}
+
+
+def test_manifest_plan_uses_sink_listing_not_a_relist(spark, tmp_path):
+    """ADVICE r7 medium: the consumed list must come from the SAME
+    listing the sink read. A file that lands after the source frame
+    was built (and before post-run bookkeeping) must NOT be recorded
+    as consumed — recording it would permanently skip rows that were
+    never written."""
+    from universal_data_connector_spark.engine import prepare
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.txt").write_text("alpha")
+    manifest = str(tmp_path / "manifest")
+    cfg = parse_config({"pipelines": [{
+        "name": "m",
+        "source": {"type": "file",
+                   "properties": {"path": str(src), "pattern": "*.txt",
+                                  "manifestDir": manifest}},
+        "transformations": [],
+        "sink": {"type": "memory", "properties": {"queryName": "m_out"}},
+    }]}).pipelines[0]
+    pipeline = prepare(spark, cfg)
+    try:
+        # a late file lands AFTER the listing the sink consumes
+        (src / "late.txt").write_text("late")
+        pipeline.execute()
+    finally:
+        pipeline.close()
+    assert [r.content for r in spark.table("m_out").collect()] == ["alpha"]
+    recorded = _manifest_entries(manifest)
+    assert any(f.endswith("a.txt") for f in recorded)
+    assert not any(f.endswith("late.txt") for f in recorded), (
+        "a file the sink never read was marked consumed — its rows "
+        "would be permanently skipped")
+    # the next run picks the late file up
+    run(spark, cfg)
+    assert [r.content for r in spark.table("m_out").collect()] == ["late"]
+
+
+def test_manifest_plan_excludes_log_files(spark, tmp_path):
+    """The anti-join scans the manifest's own .log files; they must
+    not be recorded as consumed (the log would grow every run)."""
+    from universal_data_connector_spark.sources.files import (
+        manifest_record,
+    )
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.txt").write_text("alpha")
+    manifest = str(tmp_path / "manifest")
+    manifest_record([str(src / "zzz-other.txt")], manifest)
+    cfg = parse_config({"pipelines": [{
+        "name": "m",
+        "source": {"type": "file",
+                   "properties": {"path": str(src), "pattern": "*.txt",
+                                  "manifestDir": manifest}},
+        "transformations": [],
+        "sink": {"type": "memory", "properties": {"queryName": "m_out2"}},
+    }]}).pipelines[0]
+    run(spark, cfg)
+    recorded = _manifest_entries(manifest)
+    assert any(f.endswith("a.txt") for f in recorded), recorded
+    assert all(".log" not in f for f in recorded), recorded
+
+
+def test_post_sink_steps_run_in_crash_order_and_stop_on_cancel(
+        spark, tmp_path, monkeypatch):
+    """A batch file pipeline with archiveDir, manifestDir, a
+    dedup_state and an agg_state sink: after the sink, the seen commit,
+    the archive move, the manifest record and the intent clear run in
+    that order. A cancel that lands after the seen commit skips every
+    later step, so the intent survives for the rerun to resume."""
+    from universal_data_connector_spark.engine import prepare
+    from universal_data_connector_spark.operators import dedup_state
+    from universal_data_connector_spark.sources import files
+    from universal_data_connector_spark.streaming import windows
+
+    calls: list[str] = []
+
+    def spy(owner, name, label):
+        real = getattr(owner, name)
+
+        def wrapped(*a, **k):
+            calls.append(label)
+            return real(*a, **k)
+
+        monkeypatch.setattr(owner, name, wrapped)
+
+    spy(dedup_state.PosixSeenStore, "append", "seen")
+    spy(files, "_archive_consumed", "archive")
+    spy(files, "manifest_record", "manifest")
+    spy(windows, "end_batch_run", "intent")
+
+    inp, state = tmp_path / "in", tmp_path / "state"
+
+    def cfg():
+        return parse_config({"pipelines": [{
+            "name": "post-sink-order",
+            "source": {"type": "file", "properties": {
+                "path": str(inp), "pattern": "*.txt",
+                "archiveDir": str(tmp_path / "arch"),
+                "manifestDir": str(tmp_path / "manifest")}},
+            "transformations": [
+                {"type": "sql", "properties": {
+                    "query": "SELECT content, 1.0 AS v FROM _input"}},
+                {"type": "dedup_state", "properties": {
+                    "stateDir": str(tmp_path / "seen"), "keys": "content",
+                    "numBuckets": "4"}}],
+            "sink": {"type": "agg_state", "properties": {
+                "path": str(state), "keys": "content",
+                "valueColumn": "v", "numBuckets": "4"}},
+        }]}).pipelines[0]
+
+    _write(f"{inp}/a.txt", "alpha")
+    run(spark, cfg())
+    assert calls == ["seen", "archive", "manifest", "intent"]
+    assert os.listdir(inp) == []
+    assert not os.path.exists(state / windows._BATCH_INTENT)
+
+    calls.clear()
+    _write(f"{inp}/b.txt", "beta")
+    pipeline = prepare(spark, cfg())
+    try:
+        pipeline.execute(cancelled=lambda: "seen" in calls)
+    finally:
+        pipeline.close()
+    assert calls == ["seen"]
+    assert os.listdir(inp) == ["b.txt"]          # not archived
+    assert os.path.exists(state / windows._BATCH_INTENT)  # kept
 
 
 def test_manifest_uri_canon_column_matches_python(spark):

@@ -101,27 +101,37 @@ def test_source_reads_values_with_metadata_columns(spark, tmp_path):
         assert sorted(offs) == list(range(len(offs)))
 
 
+def _poll_cfg(props, view):
+    """kafka source -> memory sink named ``view``: one engine run is
+    one poll, with the group commit after the sink."""
+    from universal_data_connector_spark.config import (
+        PipelineConfig,
+        SinkConfig,
+        SourceConfig,
+    )
+
+    return PipelineConfig(name=f"poll-{view}",
+                          source=SourceConfig("kafka", props),
+                          sink=SinkConfig("memory", {"queryName": view}))
+
+
 def test_source_group_offsets_make_runs_incremental(spark, tmp_path):
+    from universal_data_connector_spark import engine
     from universal_data_connector_spark import kafka_loopback as KL
-    from universal_data_connector_spark.sources.kafka import kafka_source
 
     d = str(tmp_path)
     KL.append_records(d, "t", [(None, b"a"), (None, b"b")], 1)
-    props = _props(d, "t", groupId="g")
+    cfg = _poll_cfg(_props(d, "t", groupId="g"), "incr_poll")
 
-    df1 = kafka_source(spark, props, streaming=False)
-    assert sorted(r.content for r in df1.collect()) == ["a", "b"]
-    # engine commits only after the sink succeeds; simulate success
-    df1._udc_kafka_commit()
+    def poll():
+        engine.run(spark, cfg, streaming=False)
+        return sorted(r.content for r in spark.table("incr_poll").collect())
 
+    assert poll() == ["a", "b"]
     KL.append_records(d, "t", [(None, b"c")], 1)
-    df2 = kafka_source(spark, props, streaming=False)
-    assert [r.content for r in df2.collect()] == ["c"]
-    df2._udc_kafka_commit()
-
+    assert poll() == ["c"]
     # nothing new -> empty poll
-    df3 = kafka_source(spark, props, streaming=False)
-    assert df3.collect() == []
+    assert poll() == []
 
 
 def test_source_latest_reset_skips_backlog(spark, tmp_path):
@@ -320,16 +330,16 @@ def test_source_absent_topic_reads_empty(spark, tmp_path):
     """Polling a topic nobody has produced to yields an empty frame
     with the full projection schema — not an error — and a group
     commit on it is a harmless no-op."""
+    from universal_data_connector_spark import engine
     from universal_data_connector_spark import kafka_loopback as KL
-    from universal_data_connector_spark.sources.kafka import kafka_source
 
     d = str(tmp_path)
-    df = kafka_source(spark, _props(d, "ghost", groupId="g"),
-                      streaming=False)
+    engine.run(spark, _poll_cfg(_props(d, "ghost", groupId="g"),
+                                "ghost_poll"), streaming=False)
+    df = spark.table("ghost_poll")
     assert df.columns == ["content", "message_key", "topic",
                           "partition", "offset", "ts", "source_file"]
     assert df.collect() == []
-    df._udc_kafka_commit()
     assert KL.committed_offsets(d, "g") == {}
 
 

@@ -1,17 +1,16 @@
 """Round-4 fixes: managed-pipeline archiveDir, collision-safe archive
-destinations, source-scoped inputFiles capture, maxPartitionBytes as
-Spark parses it, and S3 key-naming parity between the boto3 and S3A
-paths."""
+destinations, maxPartitionBytes as Spark parses it, and S3 key-naming
+parity between the boto3 and S3A paths."""
 
 from __future__ import annotations
 
 import os
 import time
 
-from universal_data_connector_spark import engine
 from universal_data_connector_spark.config import parse_config
-from universal_data_connector_spark.engine import _archive_dest, run
+from universal_data_connector_spark.engine import run
 from universal_data_connector_spark.manager import PipelineManager
+from universal_data_connector_spark.sources.files import _archive_dest
 
 
 def _write(path: str, content: str) -> str:
@@ -75,35 +74,6 @@ def test_archive_same_basename_nested_inputs_both_survive(spark, tmp_path):
     contents = sorted(open(os.path.join(processed, p)).read()
                       for p in archived)
     assert contents == ["first important file", "second important file"]
-
-
-# -- inputFiles captured from the SOURCE frame (ADVICE engine.py:202) ---
-
-def test_archive_plan_ignores_sql_joined_tables(spark, tmp_path):
-    """A `sql` transformation that scans another file-backed table must
-    not get that table's files archived."""
-    inp = str(tmp_path / "in")
-    other = str(tmp_path / "other")
-    _write(f"{inp}/a.txt", "hello")
-    _write(f"{other}/side.txt", "side table data")
-    spark.read.format("text").option("wholetext", "true") \
-        .load(other).createOrReplaceTempView("side_table")
-    cfg = _pipeline("sql-join",
-                    {"path": inp, "pattern": "*.txt",
-                     "archiveDir": str(tmp_path / "arch")},
-                    {"path": str(tmp_path / "out"), "extension": ".txt"},
-                    [{"type": "sql", "properties": {
-                        "query": "SELECT source_file, file_type, "
-                                 "content FROM _input "
-                                 "CROSS JOIN side_table"}}])
-    source_df, df = engine.build_parts(spark, cfg, streaming=False)
-    archive_dir, consumed, _root = engine.batch_archive_plan(
-        cfg, source_df, streaming=False)
-    assert archive_dir is not None
-    assert all("side.txt" not in f for f in consumed)
-    assert any("a.txt" in f for f in consumed)
-    # the transformed plan DOES scan the side table — that's the trap
-    assert any("side.txt" in f for f in df.inputFiles())
 
 
 # -- managed pipelines honor archiveDir (ADVICE manager.py:137) ---------

@@ -122,7 +122,7 @@ def test_s3_sink_no_local_s3a_directory(monkeypatch, tmp_path, spark):
 def test_archive_dest_claims_are_collision_free(tmp_path):
     import threading
 
-    from universal_data_connector_spark.engine import _archive_dest
+    from universal_data_connector_spark.sources.files import _archive_dest
 
     archive = str(tmp_path / "arch")
     results = []
@@ -147,7 +147,7 @@ def test_archive_consumed_concurrent_same_basename(tmp_path):
     shared archiveDir must preserve BOTH file contents."""
     import threading
 
-    from universal_data_connector_spark.engine import _archive_consumed
+    from universal_data_connector_spark.sources.files import _archive_consumed
 
     a_dir = tmp_path / "a"
     b_dir = tmp_path / "b"

@@ -197,73 +197,6 @@ def test_state_sinks_reject_uri_scheme_targets(spark, uri):
     assert not os.path.isdir("s3a:") and not os.path.isdir("gs:")
 
 
-def test_manifest_plan_uses_sink_listing_not_a_relist(spark, tmp_path):
-    """ADVICE r7 medium: the consumed list must come from the SAME
-    listing the sink read. A file that lands after the source frame
-    was built (and before post-run bookkeeping) must NOT be recorded
-    as consumed — recording it would permanently skip rows that were
-    never written."""
-    from universal_data_connector_spark.config import parse_config
-    from universal_data_connector_spark.engine import (
-        batch_manifest_plan,
-        build_parts,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "a.txt").write_text("alpha")
-    manifest = str(tmp_path / "manifest")
-    cfg = parse_config({"pipelines": [{
-        "name": "m",
-        "source": {"type": "file",
-                   "properties": {"path": str(src), "pattern": "*.txt",
-                                  "manifestDir": manifest}},
-        "transformations": [],
-        "sink": {"type": "memory", "properties": {"table": "m_out"}},
-    }]}).pipelines[0]
-    source_df, _ = build_parts(spark, cfg, streaming=False)
-    source_df.count()  # the sink's read happens off this listing
-
-    # a late file lands AFTER the listing the sink consumed
-    (src / "late.txt").write_text("late")
-    mdir, consumed = batch_manifest_plan(cfg, source_df, streaming=False)
-    assert mdir == manifest
-    assert any(f.endswith("a.txt") for f in consumed)
-    assert not any(f.endswith("late.txt") for f in consumed), (
-        "a file the sink never read was marked consumed — its rows "
-        "would be permanently skipped")
-
-
-def test_manifest_plan_excludes_log_files(spark, tmp_path):
-    """The anti-join scans the manifest's own .log files; they must
-    not be recorded as consumed (the log would grow every run)."""
-    from universal_data_connector_spark.config import parse_config
-    from universal_data_connector_spark.engine import (
-        batch_manifest_plan,
-        build_parts,
-    )
-    from universal_data_connector_spark.sources.files import (
-        manifest_record,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "a.txt").write_text("alpha")
-    manifest = str(tmp_path / "manifest")
-    manifest_record([str(src / "zzz-other.txt")], manifest)
-    cfg = parse_config({"pipelines": [{
-        "name": "m",
-        "source": {"type": "file",
-                   "properties": {"path": str(src), "pattern": "*.txt",
-                                  "manifestDir": manifest}},
-        "transformations": [],
-        "sink": {"type": "memory", "properties": {"table": "m_out2"}},
-    }]}).pipelines[0]
-    source_df, _ = build_parts(spark, cfg, streaming=False)
-    _, consumed = batch_manifest_plan(cfg, source_df, streaming=False)
-    assert consumed and all(".log" not in f for f in consumed), consumed
-
-
 def test_manifest_record_distributed_matches_driver_side(spark, tmp_path):
     """manifest_record with a session dedupes via a distributed
     anti-join (driver memory O(this run), ADVICE r7 low); results and

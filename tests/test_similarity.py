@@ -1,5 +1,4 @@
-"""Similarity-search tests: brute-force correctness vs numpy, the
-Pandas-UDF variant's agreement with the JVM expression path, and IVF
+"""Similarity-search tests: brute-force correctness vs numpy and IVF
 recall (referenced from plans/catalog.py `sim_search_ivf`)."""
 
 from __future__ import annotations
@@ -13,7 +12,6 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR, SF_DIR_MED
 from universal_data_connector_spark.operators.similarity import (
     brute_force_topk,
-    cosine_topk_pandas,
     ivf_topk,
 )
 from universal_data_connector_spark.tables import load
@@ -54,16 +52,6 @@ def test_brute_force_matches_numpy(vectors):
             n_np = float(np.dot(mat[q], mat[n]) /
                          (np.linalg.norm(mat[q]) * np.linalg.norm(mat[n])))
             assert math.isclose(c, n_np, rel_tol=1e-9)
-
-
-def test_pandas_variant_agrees_with_jvm_path(vectors):
-    df, _ = vectors
-    queries = df.filter(F.col("vec_id") < 5)
-    jvm = {(r.query_id, r.rank): r.neighbor_id
-           for r in brute_force_topk(queries, df, k=3).collect()}
-    arrow = {(r.query_id, r.rank): r.neighbor_id
-             for r in cosine_topk_pandas(queries, df, k=3).collect()}
-    assert jvm == arrow
 
 
 def test_ivf_recall_on_testdata(spark):
@@ -186,27 +174,6 @@ def test_lsh_topk_recall_on_planted_clusters(spark):
         neighbors = {n for (qq, n) in got if qq == q}
         assert neighbors and all(n // 100 == c for n in neighbors), \
             f"cluster {c}: {neighbors}"
-
-
-def test_cosine_topk_pandas_empty_and_zero_norm(spark):
-    """Empty query sets return empty (no numpy AxisError); zero-norm
-    vectors are excluded instead of ranking NaN first everywhere."""
-    from universal_data_connector_spark.operators.similarity import (
-        cosine_topk_pandas,
-    )
-
-    corpus = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0])],
-        "vec_id bigint, embedding array<double>")
-    empty_q = corpus.filter("vec_id < 0")
-    assert cosine_topk_pandas(empty_q, corpus, k=2).count() == 0
-
-    queries = corpus.filter("vec_id = 1")
-    got = [(r.neighbor_id, r.rank) for r in
-           cosine_topk_pandas(queries, corpus, k=2)
-           .orderBy("rank").collect()]
-    # zero vector 3 must NOT appear (NaN would have ranked first)
-    assert got == [(2, 1)]
 
 
 def test_embedding_cosine_banded_oracle_equals_brute_force():

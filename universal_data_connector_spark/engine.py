@@ -22,6 +22,16 @@ Transformation registry semantics:
   expression language inside the same YAML shape.
 * unknown type — warn and pass through unchanged
   (``PipelineBuilder.java:135-138``).
+
+Post-sink bookkeeping belongs to the module that needs it, as the
+reference keeps its move-to-processed and offset commit inside its
+source contexts: the file and S3 sources own ``archiveDir`` and
+``manifestDir``, the loopback Kafka source its group-offset commit, a
+dedup_state its seen-key commit and an agg_state sink its intent
+clear. Each registers its step on the run being prepared or executed
+(``_PREPARING``), and ``finalize_batch_sink`` runs them after the
+sink in one crash order. The engine reads none of their properties
+and checks no sink type.
 """
 
 from __future__ import annotations
@@ -450,14 +460,7 @@ def effective_streaming(cfg: PipelineConfig, streaming: bool) -> bool:
 
 def build_parts(spark: SparkSession, cfg: PipelineConfig,
                 streaming: bool = False) -> tuple[DataFrame, DataFrame]:
-    """Config -> (source DataFrame, transformed DataFrame) lineage.
-
-    The source frame is exposed separately because post-run bookkeeping
-    (archiveDir) must enumerate the *source's* input files only: the
-    transformed plan may scan other file-backed tables (a ``sql``
-    transformation joining ``parquet.`/path``` or a registered view),
-    and `inputFiles()` on the final plan would return those too —
-    archiving files the pipeline never owned."""
+    """Config -> (source DataFrame, transformed DataFrame) lineage."""
     cfg.validate()
     source_df = create_source(spark, cfg.source, streaming)
     return source_df, apply_transformations(source_df, cfg.transformations)
@@ -469,166 +472,16 @@ def build(spark: SparkSession, cfg: PipelineConfig,
     return build_parts(spark, cfg, streaming)[1]
 
 
-def batch_archive_plan(cfg: PipelineConfig, source_df: DataFrame,
-                       streaming: bool) -> tuple[str | None, list[str], str | None]:
-    """(archive_dir, consumed source files, source root) for a batch
-    file-source pipeline with ``archiveDir`` set; (None, [], None)
-    otherwise. Captured from the SOURCE frame before any
-    transformation — see ``build_parts``."""
-    if streaming or cfg.source.type != "file":
-        return None, [], None
-    archive_dir = cfg.source.properties.get("archiveDir")
-    if not archive_dir:
-        return None, [], None
-    consumed = source_df.inputFiles()
-    manifest_dir = cfg.source.properties.get("manifestDir")
-    if manifest_dir:
-        # with manifestDir ALSO set, the anti-join makes the manifest's
-        # own .log files leaves of source_df's plan — archiving them
-        # would empty the manifest and re-expose every consumed file
-        consumed = [f for f in consumed
-                    if not _under_manifest(f, manifest_dir)]
-    return archive_dir, consumed, cfg.source.properties.get("path")
-
-
-def _under_manifest(path: str, manifest_dir: str) -> bool:
-    """True if ``path`` (any URI spelling) lies under the manifest
-    dir — shared by the archive and manifest consumed-file plans."""
-    import os
-
-    from universal_data_connector_spark.sources.files import (
-        canonical_file_uri,
-    )
-
-    log_root = canonical_file_uri(
-        "file://" + os.path.abspath(manifest_dir)).rstrip("/") + "/"
-    return canonical_file_uri(path).startswith(log_root)
-
-
-def batch_manifest_plan(cfg: PipelineConfig, source_df: DataFrame,
-                        streaming: bool) -> tuple[str | None, list[str]]:
-    """(manifest_dir, consumed source files) for a batch file-source
-    pipeline with ``manifestDir`` set; (None, []) otherwise.
-
-    The consumed list comes from ``source_df.inputFiles()`` — the SAME
-    listing the sink's read used — with the manifest dir's own log
-    files dropped (the anti-join scans them, and recording those would
-    grow the log every run). An earlier version re-listed the source
-    directory with a manifest-free rebuild; a file landing between the
-    sink's listing and the rebuild's was recorded as consumed without
-    its rows ever being written — silent permanent data loss. One
-    listing, one truth. Entries a previous run already recorded are
-    harmless: ``manifest_record`` dedupes.
-
-    The s3 source supports the same contract: its S3A branch exposes
-    inputFiles() like any file scan, and its boto3 fallback (whose
-    mapInPandas plan has no inputFiles) hands over the exact listing
-    its plan embeds via ``_udc_input_files`` — the same
-    one-listing-one-truth property."""
-    if streaming or cfg.source.type not in ("file", "s3"):
-        return None, []
-    manifest_dir = cfg.source.properties.get("manifestDir")
-    if not manifest_dir:
-        return None, []
-    listed = _source_hooks(source_df)[0]
-    if listed is None:
-        listed = source_df.inputFiles()
-    consumed = [f for f in listed
-                if not _under_manifest(f, manifest_dir)]
-    return manifest_dir, consumed
-
-
-def _archive_dest(src: str, archive_dir: str, source_root: str | None) -> str:
-    """Claim an archive destination for one consumed file: the path
-    *relative to the source root* when the file sits under it (two
-    inputs a/x.txt and b/x.txt must not collapse onto one archived
-    x.txt), else the basename. On a collision the destination gets a
-    numeric suffix — never a silent overwrite of an already-archived
-    original.
-
-    The destination is *claimed atomically* (``O_CREAT|O_EXCL``
-    placeholder), not just probed: two pipelines sharing an archiveDir
-    that consume same-named files concurrently would otherwise both see
-    the name free and the second move would overwrite the first's
-    archived original (check-then-move TOCTOU). The caller's
-    ``shutil.move`` replaces the zero-byte placeholder this claim
-    leaves behind."""
-    import os
-
-    rel = os.path.basename(src)
-    if source_root:
-        root = os.path.abspath(source_root).rstrip(os.sep)
-        asrc = os.path.abspath(src)
-        if asrc.startswith(root + os.sep):
-            rel = asrc[len(root) + 1:]
-    dest = os.path.join(archive_dir, rel)
-    os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
-    stem, ext = os.path.splitext(dest)
-    i = 0
-    while True:
-        cand = dest if i == 0 else f"{stem}-{i}{ext}"
-        try:
-            os.close(os.open(cand, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-            return cand
-        except FileExistsError:
-            i += 1
-
-
-def _archive_consumed(files: list[str], archive_dir: str,
-                      source_root: str | None = None) -> None:
-    """Move consumed batch inputs out of the polling directory
-    (reference ``FileSourceContext.java:113-125``: every consumed file
-    goes to the processed dir, so a re-run sees an empty source).
-    Nested inputs keep their path relative to the source root (subdirs
-    are created under the archive dir). Local paths only — the
-    streaming path's ``cleanSource=archive`` handles remote
-    filesystems; the reference's own move is java.nio local-only too."""
-    import os
-    import shutil
-    from urllib.parse import unquote, urlparse
-
-    os.makedirs(archive_dir, exist_ok=True)
-    for uri in files:
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("", "file"):
-            log.warning("archiveDir: skipping non-local input %s", uri)
-            continue
-        src = unquote(parsed.path) if parsed.scheme else uri
-        try:
-            dest = _archive_dest(src, archive_dir, source_root)
-        except OSError as exc:
-            log.warning("archiveDir: could not claim dest for %s: %s",
-                        src, exc)
-            continue
-        try:
-            # replaces the zero-byte placeholder the claim created
-            shutil.move(src, dest)
-        except OSError as exc:
-            log.warning("archiveDir: could not move %s: %s", src, exc)
-            try:
-                os.remove(dest)  # release the unused claim
-            except OSError:
-                pass
-
-
-def _source_hooks(source_df: DataFrame) -> tuple:
-    """(listed input files, input fingerprint, post-sink offset commit)
-    a source attached to its frame, each None when absent — the one
-    reader of those attributes. The s3 boto3 fallback lists its input
-    in ``_udc_input_files`` (its mapInPandas plan has no inputFiles());
-    the loopback kafka source hashes its polled offset slices into
-    ``_udc_input_fingerprint`` and defers its consumer-group commit to
-    ``_udc_kafka_commit``."""
-    return (getattr(source_df, "_udc_input_files", None),
-            getattr(source_df, "_udc_input_fingerprint", None),
-            getattr(source_df, "_udc_kafka_commit", None))
-
-
-#: the run ``prepare`` is building in this context: where a dedup_state
-#: transformation hands over its seen-key commit and writer-mark span
-#: (batch) or its props (streaming). Set and reset by ``prepare`` only;
-#: the transformation chain in between (``build_parts`` ->
-#: ``apply_transformations``) keeps its signatures.
+#: the run being prepared or executed in this context — set by
+#: ``prepare`` around the build and by ``PipelineRun.execute`` around
+#: the sink call, None everywhere else (``build``, a direct
+#: ``create_source``/``create_sink``, a streaming micro-batch). The
+#: modules that own a post-sink step register it here, so the source,
+#: transformation and sink signatures stay as they are: a batch
+#: dedup_state its seen-key commit and writer-mark span (a streaming
+#: one its props), a file-shaped or loopback-kafka source its input
+#: identity and consumed-input bookkeeping, an agg_state sink its
+#: intent clear.
 _PREPARING: contextvars.ContextVar[PipelineRun | None] = \
     contextvars.ContextVar("udc_preparing_run", default=None)
 
@@ -636,28 +489,28 @@ _PREPARING: contextvars.ContextVar[PipelineRun | None] = \
 class PipelineRun:
     """One pipeline run, prepared once and executed the same way by
     both runners — ``run`` below and the manager's worker thread — so
-    the sink-then-commit-then-archive order lives in one place.
+    the sink-then-commit order lives in one place.
 
-    ``prepare`` builds it: the source and transformed frames, the
-    archive and manifest plans, the source's hooks,
-    and what the build leaves for after the sink — a batch
-    dedup_state's seen-key commit plus the writer-mark span covering
-    its read-filter-ship-commit, or a streaming dedup_state's props.
-    ``execute`` runs a batch run to completion, ``start`` starts a
-    streaming one, and ``close`` releases the spans and drops the
-    frames, which frees the build's eager materializations once they
-    are unreachable (``relational.materialize``) — the manager keeps
-    finished runs' ``Job`` records. ``close`` is idempotent and
-    thread-safe; every way out of every runner calls it."""
+    ``prepare`` builds it: the transformed frame and what the build
+    leaves for after the sink — a batch dedup_state's seen-key commits
+    (``store_commits``) plus the writer-mark spans covering their
+    read-filter-ship-commit, or a streaming dedup_state's props; the
+    source's ``input_identity`` (a zero-argument callable returning
+    the consumed input's fingerprint, or None) and its ``post_sink``
+    steps, to which the sink appends its own. ``execute`` runs a batch
+    run to completion, ``start`` starts a streaming one, and ``close``
+    releases the spans and drops the frames, which frees the build's
+    eager materializations once they are unreachable
+    (``relational.materialize``) — the manager keeps finished runs'
+    ``Job`` records. Registered steps hold lists and strings, never a
+    frame. ``close`` is idempotent and thread-safe; every way out of
+    every runner calls it."""
 
-    def __init__(self, spark: SparkSession, cfg: PipelineConfig):
-        self.spark, self.cfg = spark, cfg
-        self.source_df = self.df = None
-        self.archive_plan = (None, [], None)
-        self.manifest_plan = (None, [])
-        self.input_files = self.input_fingerprint = None
-        self.kafka_commit = None
+    def __init__(self, cfg: PipelineConfig):
+        self.cfg = cfg
+        self.df = self.input_identity = None
         self.store_commits: list = []
+        self.post_sink: list = []
         self.stream_dedup: dict | None = None
         self.spans = contextlib.ExitStack()
         self._lock = threading.Lock()
@@ -669,9 +522,12 @@ class PipelineRun:
         call time, the one name a tracer wraps."""
         from universal_data_connector_spark import sinks
 
-        sink_cfg, defer_state = prepare_batch_sink_cfg(self)
-        sinks.create_sink(self.df, sink_cfg, streaming=False)
-        finalize_batch_sink(self, defer_state, cancelled)
+        token = _PREPARING.set(self)
+        try:
+            sinks.create_sink(self.df, self.cfg.sink, streaming=False)
+        finally:
+            _PREPARING.reset(token)
+        finalize_batch_sink(self, cancelled)
 
     def start(self):
         """Start a streaming run's sink; returns the StreamingQuery."""
@@ -679,10 +535,11 @@ class PipelineRun:
                                     self.stream_dedup)
 
     def close(self) -> None:
-        """Release the spans exactly once and drop the run's frames."""
+        """Release the spans exactly once and drop the run's frames
+        and registered steps."""
         with self._lock:
-            self.source_df = self.df = None
-            self.store_commits = []
+            self.df = self.input_identity = None
+            self.store_commits, self.post_sink = [], []
             with contextlib.suppress(Exception):
                 self.spans.close()  # ExitStack.close empties the stack
 
@@ -692,16 +549,10 @@ def prepare(spark: SparkSession, cfg: PipelineConfig,
     """Build one pipeline run without executing it. A build error
     closes the run before it propagates, so a failed build holds no
     frames or spans."""
-    run = PipelineRun(spark, cfg)
+    run = PipelineRun(cfg)
     token = _PREPARING.set(run)
     try:
-        run.source_df, run.df = build_parts(spark, cfg, streaming)
-        run.archive_plan = batch_archive_plan(cfg, run.source_df,
-                                              streaming)
-        run.manifest_plan = batch_manifest_plan(cfg, run.source_df,
-                                                streaming)
-        run.input_files, run.input_fingerprint, run.kafka_commit = \
-            _source_hooks(run.source_df)
+        run.df = build_parts(spark, cfg, streaming)[1]
     except BaseException:
         run.close()
         raise
@@ -714,16 +565,17 @@ def run(spark: SparkSession, cfg: PipelineConfig, streaming: bool = False):
     """Build and execute one pipeline. Batch: runs to completion and
     returns None. Streaming: returns the started StreamingQuery.
 
-    Batch runs honor the file source's ``archiveDir``: after the sink
-    write succeeds, consumed inputs move to the archive directory — the
-    batch twin of the streaming path's checkpointed
-    ``cleanSource=archive``, and the reference's always-on
-    move-to-processed (``FileSourceContext.java:113-125``). The move
-    happens strictly after the sink returns, so a failed write leaves
-    the inputs in place for a clean re-run. The run is closed on the
-    way out, success or failure; a streaming build materializes
-    nothing and opens no span (its dedup_state does both per
-    micro-batch)."""
+    A batch run's post-sink steps happen strictly after the sink
+    returns (``finalize_batch_sink``), so a failed write leaves the
+    inputs, the manifest, the group offsets and the seen store as they
+    were, for a clean re-run. The sources own their steps: the file
+    source's ``archiveDir`` move (the batch twin of the streaming
+    path's checkpointed ``cleanSource=archive``, and the reference's
+    always-on move-to-processed, ``FileSourceContext.java:113-125``)
+    and the file and S3 sources' ``manifestDir`` record. The run is
+    closed on the way out, success or failure; a streaming build
+    materializes nothing and opens no span (its dedup_state does both
+    per micro-batch)."""
     pipeline = prepare(spark, cfg, streaming)
     try:
         return pipeline.start() if streaming else pipeline.execute()
@@ -816,102 +668,42 @@ def start_streaming_sink(df: DataFrame, sink_cfg, props: dict | None):
             .option("checkpointLocation", checkpoint).start())
 
 
-def prepare_batch_sink_cfg(run: PipelineRun):
-    """(effective sink cfg, defer_state) for one batch run. For an
-    ``agg_state`` sink the additive run intent must outlive the
-    consumed-input bookkeeping in ``finalize_batch_sink``: if archive/
-    manifest/offset recording fails, the rerun re-reads the SAME input
-    and must RESUME the same run id (skip), not claim a fresh one
-    (double-apply) — so finalization is deferred and the input
-    FINGERPRINT travels with the intent, turning a crash AFTER the
-    recording (which changes the next run's input) into a fresh
-    reclaim instead of a blind resume that drops increments (ADVICE
-    r8; ``begin_batch_run``'s input-identity guard)."""
-    sink_cfg = run.cfg.sink
-    if sink_cfg.type != "agg_state":
-        return sink_cfg, False
-    from dataclasses import replace
-
-    props = {**sink_cfg.properties, "_deferFinalize": "true"}
-    fp = batch_input_fingerprint(run)
-    if fp is not None:
-        props["_inputFingerprint"] = fp
-    return replace(sink_cfg, properties=props), True
-
-
-def finalize_batch_sink(run: PipelineRun, defer_state: bool,
-                        cancelled=lambda: False) -> None:
+def finalize_batch_sink(run: PipelineRun, cancelled=lambda: False) -> None:
     """Post-sink bookkeeping for one successful batch run, in the
     run's crash ordering:
 
-    0. commit dedup_state seen keys — strictly after the sink (a
+    0. commit the dedup_state seen keys — strictly after the sink (a
        failed sink never reaches here: store untouched, clean rerun)
-       and strictly BEFORE archive/manifest: if the commit lands and
+       and strictly BEFORE the source's steps: if the commit lands and
        a later step crash-misses, the rerun re-filters the survivors
        as seen, which is correct (they already reached the sink); the
        reverse order would archive/record inputs whose keys never
        landed, leaking future duplicates — the one outcome the
-       operator exists to prevent. The commits are the last users of
-       the build's frames and spans, so the run closes right after;
-    1. archive consumed inputs (a failed sink never reaches here, so
-       inputs stay in place for a clean rerun);
-    2. record consumed files in the manifest;
-    3. commit loopback-kafka group offsets — strictly AFTER the sink
-       (failed write leaves offsets unmoved: the rerun re-polls the
-       same records, at-least-once) and strictly BEFORE the agg_state
-       intent clears (a crash in between pairs the old run id with a
-       CHANGED next poll, which the input fingerprint turns into a
-       reclaim instead of a blind resume that would skip every marked
-       bucket);
-    4. clear the agg_state intent.
+       operator exists to prevent;
+    1. close the run: the commits were the last users of the build's
+       frames and spans;
+    2. run the registered ``post_sink`` steps in registration order.
+       The source registers at build and the sink at its call, so the
+       order is: archive consumed inputs, record them in the manifest,
+       or commit the loopback-kafka group offsets; then clear the
+       agg_state intent. The intent outlives the source's steps: if
+       one of them fails, the rerun re-reads the SAME input and
+       resumes the same run id (skip) instead of claiming a fresh one
+       (double-apply); a crash AFTER them changes the next run's input
+       identity, which turns the stale intent into a fresh reclaim
+       (``claim_batch_run``'s input-identity guard).
 
-    ``cancelled`` is re-checked before every step: a stop() that lands
-    mid-sequence must keep the intent (clearing it would let the rerun
-    of the same unrecorded input claim a fresh id and double-apply)."""
-    for commit in run.store_commits:
+    ``cancelled`` is re-checked before every step, and once it is
+    true no later step runs: a stop() that lands mid-sequence must
+    keep the intent (clearing it would let the rerun of the same
+    unrecorded input claim a fresh id and double-apply)."""
+    commits, steps = run.store_commits, run.post_sink
+    for commit in commits:
         if cancelled():
             break
         commit()
     run.close()
-    archive_dir, consumed, source_root = run.archive_plan
-    if archive_dir and consumed and not cancelled():
-        _archive_consumed(consumed, archive_dir, source_root)
-    manifest_dir, manifest_files = run.manifest_plan
-    if manifest_dir and manifest_files and not cancelled():
-        from universal_data_connector_spark.sources.files import (
-            manifest_record,
-        )
-        manifest_record(manifest_files, manifest_dir, run.spark)
-    if run.kafka_commit is not None and not cancelled():
-        run.kafka_commit()
-    if defer_state and not cancelled():
-        from universal_data_connector_spark.sinks.upsert import state_target
-        state_target(run.cfg.sink.properties).intent_clear()
-
-
-def batch_input_fingerprint(run: PipelineRun) -> str | None:
-    """Identity of a batch source's consumed input, for the agg_state
-    intent's changed-input crash guard (``begin_batch_run``).
-
-    Resolution order: an explicit input fingerprint the source
-    attached (the loopback kafka source hashes its polled offset
-    slices — no file list exists); the input listing a
-    mapInPandas-backed source embeds (the s3 boto3 fallback);
-    ``inputFiles()`` on a file-backed plan. None when no identity is
-    derivable — the guard is then inert (legacy resume semantics),
-    which is why sources without inputFiles() should attach one of
-    the two (``_source_hooks``)."""
-    import hashlib
-
-    if run.input_fingerprint is not None:
-        return str(run.input_fingerprint)
-    if run.input_files is not None:
-        in_files = sorted(run.input_files)
-    else:
-        try:
-            in_files = sorted(run.source_df.inputFiles())
-        except Exception:
-            in_files = []
-    if not in_files:
-        return None
-    return hashlib.sha256("\n".join(in_files).encode()).hexdigest()
+    for step in steps:
+        if cancelled():
+            break
+        step()

@@ -19,10 +19,7 @@ Three tiers:
   packed per band by `_band_vals_udf`; candidates are verified with
   exact cosine.
 
-Vector math is `zip_with`/`aggregate` (JVM, sequential, deterministic);
-for very wide vectors swap in the numpy Pandas-UDF variant
-(`cosine_topk_pandas`) — same rankings, Arrow-batched (one documented
-divergence: zero-norm vectors are excluded there, NULL-cosine here).
+Vector math is `zip_with`/`aggregate` (JVM, sequential, deterministic).
 """
 
 from __future__ import annotations
@@ -146,72 +143,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
                              [F.col("cosine").desc(), F.col("neighbor_id").asc()],
                              k, rank_alias="rank")
     return ranked.select("query_id", "neighbor_id", "cosine", "rank")
-
-
-def cosine_topk_pandas(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                       id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """numpy/Arrow variant of brute-force top-k (mapInPandas).
-
-    The query matrix rides along as a plan-time literal broadcast;
-    each corpus partition is scored as one dense matmul. Preferable
-    when vectors are wide (>= 512 dims) and the JVM expression path's
-    per-element overhead dominates.
-    """
-    import numpy as np
-    import pandas as pd
-
-    out_schema = "query_id bigint, neighbor_id bigint, cosine double"
-    qrows = queries.select(id_col, vec_col).collect()  # query set is small by contract
-    if not qrows:
-        # np.linalg.norm on a 0-row matrix raises AxisError; an empty
-        # query set is simply an empty result, like brute_force_topk
-        empty = local_frame(queries.sparkSession, [], out_schema)
-        return top_k_per_group(
-            empty, ["query_id"],
-            [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-            k, rank_alias="rank")
-    qids = np.array([r[0] for r in qrows])
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-    # zero-norm vectors have no cosine: EXCLUDED on both sides (a NaN
-    # row would otherwise rank FIRST under Spark's NaN-largest double
-    # ordering and poison every query's top-1; the JVM path emits NULL
-    # cosine for them, ranked last — documented divergence: this
-    # variant drops them entirely)
-    live = (qn > 0).reshape(-1)
-    qids, qmat, qn = qids[live], qmat[live], qn[live]
-    if not len(qids):
-        empty = local_frame(queries.sparkSession, [], out_schema)
-        return top_k_per_group(
-            empty, ["query_id"],
-            [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-            k, rank_alias="rank")
-    qnorm = qmat / qn
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-            keep = (nrm > 0).reshape(-1)
-            ids, mat, nrm = ids[keep], mat[keep], nrm[keep]
-            if not len(ids):
-                continue
-            mat = mat / nrm
-            sims = mat @ qnorm.T  # (batch, n_queries)
-            out = pd.DataFrame({
-                "query_id": np.repeat(qids, len(ids)),
-                "neighbor_id": np.tile(ids, len(qids)),
-                "cosine": sims.T.reshape(-1),
-            })
-            yield out[out.query_id != out.neighbor_id]
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, schema=out_schema)
-    return top_k_per_group(scored, ["query_id"],
-                           [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-                           k, rank_alias="rank")
 
 
 def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,

@@ -28,6 +28,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from universal_data_connector_spark.config import avro_schema_to_struct
+from universal_data_connector_spark.sources.files import (
+    s3_client_kwargs,
+    set_s3a_conf,
+)
 
 
 def content_type_for(file_type: str | None) -> str:
@@ -240,8 +244,10 @@ def _s3_default_checkpoint(props: dict) -> str:
 
 def s3_sink(df: DataFrame, props: dict, streaming: bool = False):
     """Reference K5 (``factory/sink/S3SinkContext.java``): object per
-    file under ``bucket/prefix``; credentials go to Hadoop conf like
-    the S3 source.
+    file under ``bucket/prefix``. Credentials go where the S3 source's
+    go: ``accessKey``/``secretKey``/``endpoint`` to Hadoop conf
+    (``set_s3a_conf``), and the same props plus ``region`` to the
+    boto3 client (``s3_client_kwargs``).
 
     Content-Type (`:105-115`): when boto3 is importable and the config
     is a raw passthrough (no parquet format / no schema binding — those
@@ -253,14 +259,7 @@ def s3_sink(df: DataFrame, props: dict, streaming: bool = False):
     identical either way because both paths write raw content under
     the raw source filename (the reference's S3 sink does NO extension
     swap and no trailing newline, ``S3SinkContext.java:79,85-97``)."""
-    spark = df.sparkSession
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    if props.get("accessKey"):
-        hconf.set("fs.s3a.access.key", props["accessKey"])
-    if props.get("secretKey"):
-        hconf.set("fs.s3a.secret.key", props["secretKey"])
-    if props.get("endpoint"):
-        hconf.set("fs.s3a.endpoint", props["endpoint"])
+    set_s3a_conf(df.sparkSession, props)
     path = f"s3a://{props['bucketName']}/{props.get('prefix') or ''}"
     raw_passthrough = (str(props.get("format", "")).lower() != "parquet"
                        and not props.get("schema")
@@ -315,17 +314,12 @@ def s3_sink(df: DataFrame, props: dict, streaming: bool = False):
 def _s3_put_objects_boto3(df: DataFrame, props: dict) -> None:
     """Executor-side per-object PUT with reference metadata: one object
     per file-mode row, Content-Type from ``content_type_for``,
-    ContentLength implicit (``S3SinkContext.java:85-97``). Credentials/
-    endpoint come from props or the default provider chain."""
+    ContentLength implicit (``S3SinkContext.java:85-97``). Credentials,
+    endpoint and region come from props (``s3_client_kwargs``) or the
+    default provider chain."""
     bucket = props["bucketName"]
     prefix = (props.get("prefix") or "").strip("/")
-    client_kwargs = {}
-    if props.get("accessKey"):
-        client_kwargs["aws_access_key_id"] = props["accessKey"]
-    if props.get("secretKey"):
-        client_kwargs["aws_secret_access_key"] = props["secretKey"]
-    if props.get("endpoint"):
-        client_kwargs["endpoint_url"] = props["endpoint"]
+    client_kwargs = s3_client_kwargs(props)
     rows = df.select("source_file", "file_type", "content")
 
     def put_partition(it):

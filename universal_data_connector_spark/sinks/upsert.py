@@ -44,26 +44,19 @@ from pyspark.sql import DataFrame
 
 def s3_state_target(props: dict):
     """Build the object-store state target from S3-sink-style props
-    (``bucketName``/``prefix``/``endpoint``/``accessKey``/``secretKey``
-    — the same shape the S3 source and sink consume); the dedup_state
-    operator and the maintenance endpoints build theirs here too."""
+    (``bucketName``/``prefix``, and ``s3_client_kwargs``' ``endpoint``/
+    ``accessKey``/``secretKey``/``region`` — the same shape the S3
+    source and sink consume); the dedup_state operator and the
+    maintenance endpoints build theirs here too."""
+    from universal_data_connector_spark.sources.files import s3_client_kwargs
     from universal_data_connector_spark.streaming.object_state import (
         S3StateTarget,
     )
 
-    kw = {}
-    if props.get("accessKey"):
-        kw["aws_access_key_id"] = props["accessKey"]
-    if props.get("secretKey"):
-        kw["aws_secret_access_key"] = props["secretKey"]
-    if props.get("endpoint"):
-        kw["endpoint_url"] = props["endpoint"]
-    if props.get("region"):
-        kw["region_name"] = props["region"]
     return S3StateTarget(props["bucketName"],
                          props.get("prefix") or "",
                          num_buckets=int(props.get("numBuckets", 32)),
-                         **kw)
+                         **s3_client_kwargs(props))
 
 
 def _keys(props: dict) -> list[str]:
@@ -126,18 +119,24 @@ def agg_state_sink(df: DataFrame, props: dict, streaming: bool = False):
     if streaming:
         return foreachbatch_merge(df, merge, props["checkpointLocation"])
     # batch: monotonic run id so every run's increments apply exactly
-    # once (and a crashed run resumes, not double-applies). The engine
-    # passes an input fingerprint so a resume onto DIFFERENT input
-    # (manifest advanced, intent not yet cleared) reclaims fresh
-    # instead of skipping the new files' increments (ADVICE r8).
-    merge(df, claim_batch_run(target,
-                              fingerprint=props.get("_inputFingerprint")))
-    # The engine's pipeline runner sets _deferFinalize and clears the
-    # intent itself AFTER its consumed-file bookkeeping (archiveDir /
-    # manifestDir): clearing here would let a crash between the merge
-    # and the bookkeeping rerun the SAME unrecorded files under a
-    # fresh run id — double-applying every increment. Direct callers
+    # once (and a crashed run resumes, not double-applies). Inside a
+    # prepared pipeline run the source's input identity travels with
+    # the intent, so a resume onto DIFFERENT input (manifest advanced,
+    # intent not yet cleared) reclaims fresh instead of skipping the
+    # new files' increments (ADVICE r8), and the intent clear is the
+    # run's last post-sink step (engine.finalize_batch_sink): clearing
+    # here would let a crash between the merge and the source's
+    # consumed-input bookkeeping rerun the SAME unrecorded input under
+    # a fresh run id — double-applying every increment. Direct callers
     # (no bookkeeping to wait for) finalize immediately.
-    if not props.get("_deferFinalize"):
+    from universal_data_connector_spark.engine import _PREPARING
+
+    run = _PREPARING.get()
+    identity = run.input_identity if run is not None else None
+    merge(df, claim_batch_run(target,
+                              fingerprint=identity() if identity else None))
+    if run is None:
         target.intent_clear()
+    else:
+        run.post_sink.append(target.intent_clear)
     return None

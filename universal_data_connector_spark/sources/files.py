@@ -19,10 +19,14 @@ record-mode (``records.py``) takes over for anything relational.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from universal_data_connector_spark.session import local_frame
+
+log = logging.getLogger(__name__)
 
 
 def sniff_file_type(path: Column, first_line: Column | None = None) -> Column:
@@ -207,14 +211,19 @@ def manifest_record(files: list[str], manifest_dir: str,
 def file_source(spark: SparkSession, props: dict, streaming: bool = False) -> DataFrame:
     """Reference S1: poll a directory for text/CSV files, one item per
     whole file (``factory/SourceFactory.java:69-81``). Batch re-runs
-    can skip already-consumed files without moving them: set
-    ``manifestDir`` and the source anti-joins the processed log
-    (``manifest_filter``); the engine appends to the log after the
-    sink succeeds."""
+    can skip already-consumed files: ``archiveDir`` moves them out of
+    the polling directory after the sink succeeds (the reference's
+    move-to-processed), and ``manifestDir`` leaves them in place, the
+    source anti-joining the processed log (``manifest_filter``) and
+    appending to it after the sink succeeds (``_register_post_sink``)."""
     df = _text_file_frame(spark, props["path"], props.get("pattern"),
                           streaming, archive_dir=props.get("archiveDir"))
-    if not streaming and props.get("manifestDir"):
-        df = manifest_filter(df, spark, props["manifestDir"])
+    if not streaming:
+        if props.get("manifestDir"):
+            df = manifest_filter(df, spark, props["manifestDir"])
+        _register_post_sink(df, archive_dir=props.get("archiveDir"),
+                            manifest_dir=props.get("manifestDir"),
+                            source_root=props["path"])
     return df
 
 
@@ -250,20 +259,27 @@ def directory_source(spark: SparkSession, props: dict, streaming: bool = False) 
            .otherwise(F.element_at(F.split(F.col("path"), "/"), -1))
     name = (rel if str(props.get("preserveStructure", "false")).lower() == "true"
             else F.element_at(F.split(F.col("path"), "/"), -1))
-    return df.select(
+    df = df.select(
         name.alias("source_file"),
         sniff_file_type(F.col("path")).alias("file_type"),
         F.col("content"),
         F.col("length").alias("byte_length"),
         F.col("modificationTime").alias("modification_time"),
     )
+    if not streaming:
+        _register_post_sink(df)
+    return df
 
 
 def s3_source(spark: SparkSession, props: dict, streaming: bool = False) -> DataFrame:
     """Reference S5: S3 object listing + whole-object read
     (``factory/SourceFactory.java:116-134``). Spark + Hadoop S3A does
-    listing/pagination natively; credentials go to Hadoop conf (never
-    in-band — SURVEY.md §7.4.8 deliberately diverges from YAML secrets).
+    listing/pagination natively; ``accessKey``/``secretKey``/``endpoint``
+    go to Hadoop conf (``set_s3a_conf``; never in-band — SURVEY.md
+    §7.4.8 deliberately diverges from YAML secrets). The boto3 fallback
+    maps the same props plus ``region`` to its client
+    (``s3_client_kwargs``, shared with the S3 sink and the S3 state
+    targets).
 
     When the S3A filesystem is NOT on the classpath (pyspark ships
     without hadoop-aws) and boto3 is importable, BATCH reads fall back
@@ -282,7 +298,9 @@ def s3_source(spark: SparkSession, props: dict, streaming: bool = False) -> Data
     per-JVM ``processedFiles`` set (``S3SourceContext.java:29-30``)
     DURABLE — a rerun skips objects a previous successful run already
     consumed, without deleting anything from the bucket (the
-    reference's S3 source never deletes either)."""
+    reference's S3 source never deletes either). The log is appended
+    after the sink succeeds, a step the source registers on the run
+    (``_register_post_sink``)."""
     bucket, prefix = props["bucketName"], props.get("prefix", "")
     if not _s3a_on_classpath(spark):
         if streaming:
@@ -297,13 +315,7 @@ def s3_source(spark: SparkSession, props: dict, streaming: bool = False) -> Data
                 "s3 source: neither Hadoop S3A (hadoop-aws jar) nor "
                 "boto3 is available in this environment") from None
         return _s3_source_boto3(spark, props)
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    if props.get("accessKey"):
-        hconf.set("fs.s3a.access.key", props["accessKey"])
-    if props.get("secretKey"):
-        hconf.set("fs.s3a.secret.key", props["secretKey"])
-    if props.get("endpoint"):
-        hconf.set("fs.s3a.endpoint", props["endpoint"])
+    set_s3a_conf(spark, props)
     path = f"s3a://{bucket}/{prefix}"
     # recursive: the reference lists EVERY key under the prefix
     # (ListObjectsV2 has no directory notion); without this the S3A
@@ -315,8 +327,10 @@ def s3_source(spark: SparkSession, props: dict, streaming: bool = False) -> Data
     # reference-faithful behavior needs the boto3 path.
     df = _text_file_frame(spark, path, props.get("pattern"), streaming,
                           recursive=True)
-    if not streaming and props.get("manifestDir"):
-        df = manifest_filter(df, spark, props["manifestDir"])
+    if not streaming:
+        if props.get("manifestDir"):
+            df = manifest_filter(df, spark, props["manifestDir"])
+        _register_post_sink(df, manifest_dir=props.get("manifestDir"))
     return df
 
 
@@ -330,15 +344,27 @@ def _s3a_on_classpath(spark: SparkSession) -> bool:
         return False
 
 
-def _s3_client_kwargs(props: dict) -> dict:
-    kwargs = {}
-    if props.get("accessKey"):
-        kwargs["aws_access_key_id"] = props["accessKey"]
-    if props.get("secretKey"):
-        kwargs["aws_secret_access_key"] = props["secretKey"]
-    if props.get("endpoint"):
-        kwargs["endpoint_url"] = props["endpoint"]
-    return kwargs
+def s3_client_kwargs(props: dict) -> dict:
+    """boto3 client kwargs from the S3 props every S3 connector shares
+    (source, sink, state targets, seen stores): ``accessKey``,
+    ``secretKey``, ``endpoint`` and ``region``; absent props fall back
+    to boto3's default provider chain."""
+    return {kw: props[prop] for prop, kw in (
+        ("accessKey", "aws_access_key_id"),
+        ("secretKey", "aws_secret_access_key"),
+        ("endpoint", "endpoint_url"),
+        ("region", "region_name")) if props.get(prop)}
+
+
+def set_s3a_conf(spark: SparkSession, props: dict) -> None:
+    """Hand the S3 props to Hadoop's S3A filesystem conf (never
+    in-band): ``accessKey``, ``secretKey`` and ``endpoint``."""
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    for prop, key in (("accessKey", "fs.s3a.access.key"),
+                      ("secretKey", "fs.s3a.secret.key"),
+                      ("endpoint", "fs.s3a.endpoint")):
+        if props.get(prop):
+            hconf.set(key, props[prop])
 
 
 def _s3_source_boto3(spark: SparkSession, props: dict) -> DataFrame:
@@ -373,7 +399,7 @@ def _s3_source_boto3(spark: SparkSession, props: dict) -> DataFrame:
     bucket = props["bucketName"]
     prefix = (props.get("prefix") or "").lstrip("/")
     pattern = props.get("pattern")
-    client_kwargs = _s3_client_kwargs(props)
+    client_kwargs = s3_client_kwargs(props)
 
     import boto3
     client = boto3.client("s3", **client_kwargs)
@@ -439,9 +465,158 @@ def _s3_source_boto3(spark: SparkSession, props: dict) -> DataFrame:
         sniff_file_type(F.col("source_file"), first_line)
             .alias("file_type"),
         "content")
-    # a mapInPandas plan has no inputFiles(); hand the engine's
-    # consumed-file bookkeeping the listing this plan was built from
-    # (one listing, one truth — the keys are literals in the plan, so
-    # nothing can land between "what was read" and "what is recorded")
-    df._udc_input_files = [f"s3a://{bucket}/{k}" for k in keys]
+    # a mapInPandas plan has no inputFiles(); the bookkeeping takes
+    # the listing this plan was built from (one listing, one truth —
+    # the keys are literals in the plan, so nothing can land between
+    # "what was read" and "what is recorded")
+    _register_post_sink(df, listed=[f"s3a://{bucket}/{k}" for k in keys],
+                        manifest_dir=props.get("manifestDir"))
     return df
+
+
+def _register_post_sink(df: DataFrame, *, listed: list[str] | None = None,
+                        archive_dir: str | None = None,
+                        manifest_dir: str | None = None,
+                        source_root: str | None = None) -> None:
+    """Register a batch file-shaped source's input identity and
+    post-sink steps on the pipeline run being prepared
+    (``engine._PREPARING``); outside one, nothing registers.
+
+    The listing is ``listed`` when the plan embeds one (the boto3
+    fallback), else the frame's ``inputFiles()`` — the SAME listing
+    the sink reads, so a file landing between that read and the
+    bookkeeping is never recorded as consumed (a re-listing would
+    mark its never-written rows consumed: silent permanent loss). It
+    is the source's own frame, before any transformation: a ``sql``
+    transformation may scan other file-backed tables, which the
+    pipeline does not own.
+
+    * identity: sha256 of the sorted, unfiltered listing, computed
+      only when an agg_state sink asks for it (its intent's
+      changed-input guard, ``claim_batch_run``); None when empty.
+    * ``archiveDir`` (the file source): move the consumed files out
+      of the polling directory (``_archive_consumed``).
+    * ``manifestDir``: append the consumed files to the processed log
+      (``manifest_record``; entries a previous run recorded are
+      skipped there).
+
+    The consumed list drops the manifest dir's own .log files, which
+    the anti-join makes leaves of the plan: archiving them would empty
+    the manifest, and recording them would grow it every run. The
+    steps hold only that list and strings, never the frame."""
+    import hashlib
+
+    from universal_data_connector_spark.engine import _PREPARING
+
+    run = _PREPARING.get()
+    if run is None:
+        return
+
+    def identity():
+        files = listed
+        if files is None:
+            try:
+                files = df.inputFiles()
+            except Exception:
+                files = []
+        if not files:
+            return None
+        return hashlib.sha256("\n".join(sorted(files)).encode()).hexdigest()
+
+    run.input_identity = identity
+    if not (archive_dir or manifest_dir):
+        return
+    consumed = [f for f in (df.inputFiles() if listed is None else listed)
+                if not (manifest_dir and _under_manifest(f, manifest_dir))]
+    if not consumed:
+        return
+    if archive_dir:
+        run.post_sink.append(
+            lambda: _archive_consumed(consumed, archive_dir, source_root))
+    if manifest_dir:
+        spark = df.sparkSession
+        run.post_sink.append(
+            lambda: manifest_record(consumed, manifest_dir, spark))
+
+
+def _under_manifest(path: str, manifest_dir: str) -> bool:
+    """True if ``path`` (any URI spelling) lies under the manifest
+    dir."""
+    import os
+
+    log_root = canonical_file_uri(
+        "file://" + os.path.abspath(manifest_dir)).rstrip("/") + "/"
+    return canonical_file_uri(path).startswith(log_root)
+
+
+def _archive_dest(src: str, archive_dir: str, source_root: str | None) -> str:
+    """Claim an archive destination for one consumed file: the path
+    *relative to the source root* when the file sits under it (two
+    inputs a/x.txt and b/x.txt must not collapse onto one archived
+    x.txt), else the basename. On a collision the destination gets a
+    numeric suffix — never a silent overwrite of an already-archived
+    original.
+
+    The destination is *claimed atomically* (``O_CREAT|O_EXCL``
+    placeholder), not just probed: two pipelines sharing an archiveDir
+    that consume same-named files concurrently would otherwise both see
+    the name free and the second move would overwrite the first's
+    archived original (check-then-move TOCTOU). The caller's
+    ``shutil.move`` replaces the zero-byte placeholder this claim
+    leaves behind."""
+    import os
+
+    rel = os.path.basename(src)
+    if source_root:
+        root = os.path.abspath(source_root).rstrip(os.sep)
+        asrc = os.path.abspath(src)
+        if asrc.startswith(root + os.sep):
+            rel = asrc[len(root) + 1:]
+    dest = os.path.join(archive_dir, rel)
+    os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
+    stem, ext = os.path.splitext(dest)
+    i = 0
+    while True:
+        cand = dest if i == 0 else f"{stem}-{i}{ext}"
+        try:
+            os.close(os.open(cand, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+            return cand
+        except FileExistsError:
+            i += 1
+
+
+def _archive_consumed(files: list[str], archive_dir: str,
+                      source_root: str | None = None) -> None:
+    """Move consumed batch inputs out of the polling directory
+    (reference ``FileSourceContext.java:113-125``: every consumed file
+    goes to the processed dir, so a re-run sees an empty source).
+    Nested inputs keep their path relative to the source root (subdirs
+    are created under the archive dir). Local paths only — the
+    streaming path's ``cleanSource=archive`` handles remote
+    filesystems; the reference's own move is java.nio local-only too."""
+    import os
+    import shutil
+    from urllib.parse import unquote, urlparse
+
+    os.makedirs(archive_dir, exist_ok=True)
+    for uri in files:
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("", "file"):
+            log.warning("archiveDir: skipping non-local input %s", uri)
+            continue
+        src = unquote(parsed.path) if parsed.scheme else uri
+        try:
+            dest = _archive_dest(src, archive_dir, source_root)
+        except OSError as exc:
+            log.warning("archiveDir: could not claim dest for %s: %s",
+                        src, exc)
+            continue
+        try:
+            # replaces the zero-byte placeholder the claim created
+            shutil.move(src, dest)
+        except OSError as exc:
+            log.warning("archiveDir: could not move %s: %s", src, exc)
+            try:
+                os.remove(dest)  # release the unused claim
+            except OSError:
+                pass

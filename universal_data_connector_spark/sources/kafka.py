@@ -69,14 +69,17 @@ def _kafka_source_loopback(spark: SparkSession, props: dict) -> DataFrame:
     Offset semantics mirror a consumer group: a ``groupId``'s
     committed offsets win; otherwise ``autoOffsetReset`` decides
     (earliest -> 0, latest -> current end, i.e. an empty first poll).
-    The commit itself is deferred — the source attaches a
-    ``_udc_kafka_commit`` closure that the engine invokes only AFTER
+    Inside a prepared pipeline run (``engine._PREPARING``) the
+    commit is registered as a post-sink step, so it happens only AFTER
     the sink succeeds (the manifest-record discipline), giving
     at-least-once delivery across runs rather than the reference's
-    auto-commit at-most-once."""
+    auto-commit at-most-once; outside one nothing is committed."""
+    import hashlib
+
     import pandas as pd
 
     from universal_data_connector_spark import kafka_loopback as KL
+    from universal_data_connector_spark.engine import _PREPARING
 
     if str(props.get("autoOffsetReset", "")) not in (
             "", "earliest", "latest", "smallest", "largest"):
@@ -122,22 +125,21 @@ def _kafka_source_loopback(spark: SparkSession, props: dict) -> DataFrame:
                        "timestamp"]]
 
     df = project_kafka(sdf.mapInPandas(fetch, _WIRE_SCHEMA))
-    # input identity for the agg_state intent's changed-input crash
-    # guard (engine.batch_input_fingerprint): the polled offset slices
-    # ARE this batch's input — after a successful commit the next poll
-    # has different slices, so a crash between offset commit and
-    # intent-clear reads as changed input and reclaims instead of
-    # blind-resuming onto data the old run id never saw (r10 review)
-    import hashlib
-    df._udc_input_fingerprint = hashlib.sha256("\n".join(
-        f"{t}/{p}:{s}-{e}" for t, p, s, e in slices).encode()).hexdigest()
-    if group:
-        new_offsets = {f"{t}/{p}": e for t, p, _s, e in slices}
-
-        def commit() -> None:
-            KL.commit_offsets(dir_, group, new_offsets)
-
-        df._udc_kafka_commit = commit
+    run = _PREPARING.get()
+    if run is not None:
+        # input identity for the agg_state intent's changed-input crash
+        # guard (claim_batch_run): the polled offset slices ARE this
+        # batch's input — after a successful commit the next poll has
+        # different slices, so a crash between offset commit and
+        # intent-clear reads as changed input and reclaims instead of
+        # blind-resuming onto data the old run id never saw (r10 review)
+        fp = hashlib.sha256("\n".join(
+            f"{t}/{p}:{s}-{e}" for t, p, s, e in slices).encode()).hexdigest()
+        run.input_identity = lambda: fp
+        if group:
+            new_offsets = {f"{t}/{p}": e for t, p, _s, e in slices}
+            run.post_sink.append(
+                lambda: KL.commit_offsets(dir_, group, new_offsets))
     return df
 
 
