@@ -101,6 +101,25 @@ def test_batch_archive_moves_consumed_files(spark, io_dirs, tmp_path):
     assert os.listdir(out2) == []
 
 
+def test_batch_memory_sink_reads_input_before_archive(spark, tmp_path):
+    """A batch memory sink computes its input before the post-sink
+    steps run: after the archive moved the consumed file, the sink's
+    view still returns its rows."""
+    inp, arch = tmp_path / "in", tmp_path / "arch"
+    _write(f"{inp}/a.txt", "alpha")
+    cfg = parse_config({"pipelines": [{
+        "name": "memory-archive",
+        "source": {"type": "file",
+                   "properties": {"path": str(inp), "pattern": "*.txt",
+                                  "archiveDir": str(arch)}},
+        "transformations": [],
+        "sink": {"type": "memory", "properties": {"queryName": "mem_arch"}},
+    }]}).pipelines[0]
+    run(spark, cfg)
+    assert os.listdir(arch) == ["a.txt"]
+    assert [r.content for r in spark.table("mem_arch").collect()] == ["alpha"]
+
+
 def test_filter_contains_no_column_drops_files(spark, io_dirs):
     """T1 without a column: whole-item substring match
     (PipelineBuilder.java:83)."""

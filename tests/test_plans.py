@@ -541,6 +541,30 @@ def test_python_daemon_module_is_set_in_session_only():
     assert naming == {"universal_data_connector_spark/session.py"}
 
 
+def test_driver_memory_is_set_in_session_and_differential_only():
+    """Source lint over the package, ``tools/``, ``tests/`` and the root
+    scripts: no hard-coded 48 GiB driver heap outside ``session.py``,
+    and sessions are built and their driver heap set only in
+    ``session.py`` and ``tools/differential.py`` (which sizes it from
+    ``session.DEFAULT_DRIVER_MEM``)."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [*(root / "universal_data_connector_spark").rglob("*.py"),
+             *(root / "tools").rglob("*.py"),
+             *(root / "tests").rglob("*.py"), *root.glob("*.py")]
+
+    def naming(needle: str) -> set[str]:
+        return {str(py.relative_to(root)) for py in files
+                if needle in py.read_text()}
+
+    # each needle is spelled in two parts so this file does not match
+    session = "universal_data_connector_spark/session.py"
+    assert naming("48" + "g") == {session}
+    for needle in ("spark.driver" + ".memory", "SparkSession" + ".builder"):
+        assert naming(needle) == {session, "tools/differential.py"}, needle
+
+
 def test_seen_store_backend_is_picked_in_one_place():
     """Source lint: the dedup_state seen store is written once over a
     per-backend store object. ``operators/dedup_state.py`` defines no

@@ -1,5 +1,6 @@
 """``session``: Python workers import pyspark from its installed
-directory, with the stock daemon kept when a check fails; and
+directory, with the stock daemon kept when a check fails;
+``DEFAULT_DRIVER_MEM`` comes from the host's memory; and
 ``local_frame``'s Arrow-built frame equals the list form of
 ``createDataFrame``, schema and rows, and its scan splits the way the
 callers that drop their repartition rely on."""
@@ -86,6 +87,28 @@ def test_stock_daemon_when_daemon_module_unimportable(monkeypatch,
                                                       tmp_path):
     monkeypatch.setattr(session, "_PACKAGE_PARENT", str(tmp_path))
     assert _DAEMON_KEY not in session._builder("t", "1")._options
+
+
+def test_driver_mem_is_half_the_host_memory_and_env_overrides(
+        monkeypatch):
+    """Half of MemTotal, or of a lower numeric cgroup memory.max, in
+    whole GiB and at least 1g; $SPARK_DRIVER_MEM wins."""
+    assert session.DEFAULT_DRIVER_MEM == session._driver_mem()
+    files = {"/proc/meminfo": "MemTotal:       16456384 kB\n"
+                              "MemFree:         1000000 kB\n",
+             "/sys/fs/cgroup/memory.max": "max\n"}
+    monkeypatch.setattr(session, "_read_text",
+                        lambda path: files.get(path, ""))
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    assert session._driver_mem() == "7g"
+    files["/sys/fs/cgroup/memory.max"] = f"{6 * 2**30}\n"
+    assert session._driver_mem() == "3g"
+    files["/sys/fs/cgroup/memory.max"] = f"{2**30}\n"
+    assert session._driver_mem() == "1g"
+    files.clear()
+    assert session._driver_mem() == "1g"
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "5g")
+    assert session._driver_mem() == "5g"
 
 
 def test_daemon_drops_only_spark_archives(monkeypatch):

@@ -16,6 +16,8 @@ oracled on the driver's own parquet. Output goes under
 scale_probe/ (gitignored).
 
 Usage: python tools/gen_scale_probe_data.py [sf ...]   (default: 0.1 1.0)
+Check the catalog against its oracles on the output (scale_probe/sf{X}):
+       python tools/differential.py --sf 1
 
 Generator v2 (round 12): document text now draws from a 10^4-word
 zipf(1.1) pseudo-language instead of the original 26-word vocabulary

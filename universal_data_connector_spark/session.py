@@ -38,6 +38,37 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
                    or len(os.sched_getaffinity(0)))
 
 
+def _read_text(path: str) -> str:
+    """The file's text, or "" when it cannot be read."""
+    try:
+        with open(path) as fh:
+            return fh.read()
+    except OSError:
+        return ""
+
+
+def _driver_mem() -> str:
+    """``spark.driver.memory`` sized from the host: $SPARK_DRIVER_MEM,
+    else half of the memory this process may use, in whole GiB (at
+    least 1g). That memory is ``MemTotal`` of ``/proc/meminfo``, or the
+    cgroup v2 ``memory.max`` when that is a number and lower. Half
+    leaves the rest to what runs beside the JVM: Python workers,
+    DuckDB, the page cache."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    m = re.search(r"^MemTotal:\s+(\d+) kB", _read_text("/proc/meminfo"),
+                  re.M)
+    limits = [int(m.group(1)) * 1024] if m else []
+    cgroup_max = _read_text("/sys/fs/cgroup/memory.max").strip()
+    if cgroup_max.isdigit():
+        limits.append(int(cgroup_max))
+    gib = min(limits) // 2 // 2**30 if limits else 0
+    return f"{max(gib, 1)}g"
+
+
+DEFAULT_DRIVER_MEM = _driver_mem()
+
+
 # the Python-worker daemon (module docstring), found under this
 # package's parent directory
 _WORKER_DAEMON = "universal_data_connector_spark.pyworker_daemon"

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from universal_data_connector_spark.operators.relational import materialize
+
 
 def memory_sink(df: DataFrame, props: dict, streaming: bool = False):
     name = props.get("queryName", "udc_memory")
@@ -13,7 +15,9 @@ def memory_sink(df: DataFrame, props: dict, streaming: bool = False):
         return (df.writeStream.format("memory").queryName(name)
                 .outputMode(props.get("outputMode", "append"))
                 .start())
-    df.createOrReplaceTempView(name)
+    # compute the input now, before the run's post-sink steps archive
+    # or record it: a view over the lazy frame would read it later
+    materialize(df).createOrReplaceTempView(name)
     return None
 
 
