@@ -58,10 +58,10 @@ def _crash_append_at(monkeypatch, store, crash_sub):
     cls = type(ds.seen_store(store))
     real_append = cls.append
 
-    def append(self, frame, sub, touched):
+    def append(self, frame, sub):
         if sub == crash_sub:
             raise RuntimeError("fuzz crash between appends")
-        return real_append(self, frame, sub, touched)
+        return real_append(self, frame, sub)
 
     monkeypatch.setattr(cls, "append", append)
     return lambda: monkeypatch.setattr(cls, "append", real_append)

@@ -175,6 +175,70 @@ def test_filter_column_row_granularity(spark, io_dirs):
     assert [ln.split(",")[0] for ln in lines[1:]] == ["1", "3"]
 
 
+def _union_form(df, props):
+    """The file-mode column filter as a union of its CSV and non-CSV
+    halves, each filtered separately: the shape that scanned the
+    source twice, kept here as the reference the one projection must
+    equal."""
+    from pyspark.sql import functions as F
+
+    from universal_data_connector_spark.engine import _filter_transform
+
+    is_csv = F.col("file_type") == "CSV"
+    return (_filter_transform(df.filter(is_csv), props)
+            .unionByName(_filter_transform(df.filter(~is_csv), props)))
+
+
+def _rows(df):
+    return sorted(tuple(bytes(v) if isinstance(v, bytearray) else v
+                        for v in r) for r in df.collect())
+
+
+@pytest.mark.parametrize("granularity", ["file", "row"])
+def test_file_mode_column_filter_is_one_projection(spark, io_dirs,
+                                                   granularity):
+    """The file-mode column filter over mixed CSV and TXT files is one
+    projection over one scan (no Union, one text file scan), and its
+    rows equal the two-branch union's: a CSV file by its column (whole
+    file, or rebuilt from its matching rows), any other file by a
+    whole-content match. The binary directory source keeps its binary
+    content type."""
+    from universal_data_connector_spark.engine import _filter_transform
+    from universal_data_connector_spark.sources.files import (
+        directory_source,
+        file_source,
+    )
+
+    inp, _ = io_dirs
+    _write(f"{inp}/projects.csv", PROJECTS_CSV)
+    _write(f"{inp}/tasks.csv", TASKS_CSV)
+    _write(f"{inp}/a.txt", TEXT_IMPORTANT)
+    _write(f"{inp}/b.txt", TEXT_PLAIN)
+    props = {"column": "status", "condition": "important",
+             "granularity": granularity}
+
+    text = file_source(spark, {"path": inp})
+    out = _filter_transform(text, props)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in out._jdf.queryExecution().optimizedPlan() \
+        .toString()
+    assert plan.count("FileScan text") == 1, plan
+    got = {(os.path.basename(r.source_file), r.content)
+           for r in out.collect()}
+    csv_kept = (PROJECTS_CSV if granularity == "file" else
+                "id,project,status,assignee,deadline\n"
+                "1,Apollo,important,alice,2026-01-01\n"
+                "3,Cascade,important and urgent,carol,2026-03-01")
+    assert got == {("projects.csv", csv_kept), ("a.txt", TEXT_IMPORTANT)}
+    assert _rows(out) == _rows(_union_form(text, props))
+
+    binary = directory_source(spark, {"path": inp})
+    out = _filter_transform(binary, props)
+    assert dict(out.dtypes)["content"] == "binary"
+    assert _rows(out) == _rows(_union_form(binary, props))
+    assert len(_rows(out)) == 2
+
+
 def test_map_prefix_suffix(spark, io_dirs):
     inp, out = io_dirs
     _write(f"{inp}/a.txt", "hello")

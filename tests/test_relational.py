@@ -249,3 +249,64 @@ def test_repetition_ratio_spreads_narrow_scan(spark):
     # Pin the repartition node itself (Project nodes above the scan
     # always reference doc_id, so a doc_id substring check is vacuous).
     assert "RepartitionByExpression" in p, f"spread repartition missing:\n{p}"
+
+
+# ---------------------------------------------------------------------------
+# observed_materialize: a checkpoint and its metrics from one job
+# ---------------------------------------------------------------------------
+
+def test_observed_materialize_is_one_job(spark):
+    """A frame with no shuffle materializes, and its count and bucket
+    set arrive, in exactly one Spark job: the checkpoint's own."""
+    from tests.conftest import jobs_of
+
+    df = spark.range(1000).withColumn("b", (F.col("id") % 4).cast("int"))
+    (frame, m), jobs = jobs_of(spark, lambda: orel.observed_materialize(
+        df, F.count(F.lit(1)).alias("n"),
+        F.collect_set("b").alias("touched")))
+    assert jobs == 1
+    assert m["n"] == 1000 and sorted(m["touched"]) == [0, 1, 2, 3]
+    # the returned frame reads the checkpoint: no further recompute
+    assert frame.count() == 1000
+
+
+def test_observed_materialize_empty_frame_does_not_block(spark):
+    """A zero-partition frame runs no task; its metrics are the
+    aggregates' empty values, returned at once."""
+    import concurrent.futures
+
+    empty = spark.range(0)
+    assert empty.rdd.getNumPartitions() == 0
+    with concurrent.futures.ThreadPoolExecutor(1) as pool:
+        fut = pool.submit(orel.observed_materialize, empty,
+                          F.collect_set("id").alias("touched"),
+                          F.count(F.lit(1)).alias("n"))
+        frame, m = fut.result(timeout=60)
+    assert m == {"touched": [], "n": 0}
+    assert frame.count() == 0
+
+
+def test_observed_materialize_failing_action_raises(spark):
+    """A failed checkpoint raises; no metrics are returned or awaited."""
+    bad = spark.range(10).select(
+        F.assert_true(F.col("id") < 5).alias("ok"))
+    with pytest.raises(Exception, match="is not true"):
+        orel.observed_materialize(bad, F.count(F.lit(1)).alias("n"))
+
+
+def test_materialize_sizes_storage_from_measured_rows(spark):
+    """A measured row count, where given, picks the storage level in
+    place of the optimizer estimate: memory for a thousand rows, disk
+    only for a trillion."""
+    from tests.conftest import stored_rdd_ids
+
+    def stored_in_memory(rows) -> bool:
+        before = stored_rdd_ids(spark)
+        frame = orel.materialize(spark.range(10), rows=rows)
+        [info] = [i for i in spark.sparkContext._jsc.sc()
+                  .getRDDStorageInfo() if i.id() not in before]
+        del frame
+        return info.storageLevel().useMemory()
+
+    assert stored_in_memory(1000)
+    assert not stored_in_memory(10**12)

@@ -635,10 +635,9 @@ def test_seen_filter_s3_partial_commit_is_safe(spark, target,
 
     real_append = ds.S3SeenStore.append
 
-    def crashing_append(self, frame, sub, touched):
-        part = list(touched)[:1]
-        real_append(self, frame.filter(F.col("udc_kb").isin(part)), sub,
-                    part)
+    def crashing_append(self, frame, sub):
+        one = frame.agg(F.min("udc_kb")).first()[0]
+        real_append(self, frame.filter(F.col("udc_kb") == one), sub)
         raise RuntimeError("injected crash mid-append")
 
     monkeypatch.setattr(ds.S3SeenStore, "append", crashing_append)
@@ -905,10 +904,10 @@ def test_seen_near_filter_s3_crash_between_appends_converges(
 
     real_append = ds.S3SeenStore.append
 
-    def crashing_append(self, frame, sub, touched):
+    def crashing_append(self, frame, sub):
         if sub == "sigs":
             raise RuntimeError("injected crash before sig append")
-        return real_append(self, frame, sub, touched)
+        return real_append(self, frame, sub)
 
     monkeypatch.setattr(ds.S3SeenStore, "append", crashing_append)
     with pytest.raises(RuntimeError, match="before sig append"):
@@ -1060,10 +1059,10 @@ def test_seen_embedding_filter_s3_crash_between_appends_converges(
 
     real_append = ds.S3SeenStore.append
 
-    def crashing_append(self, frame, sub, touched):
+    def crashing_append(self, frame, sub):
         if sub == "vecs":
             raise RuntimeError("injected crash before vec append")
-        return real_append(self, frame, sub, touched)
+        return real_append(self, frame, sub)
 
     monkeypatch.setattr(ds.S3SeenStore, "append", crashing_append)
     with pytest.raises(RuntimeError, match="before vec append"):

@@ -142,3 +142,27 @@ def test_by_bucket_is_the_only_state_store_repartition(spark):
     assert repartitions(inspect.getsource(windows.by_bucket)) == 1
     assert repartitions(inspect.getsource(dedup_state)) == 0
     assert repartitions(inspect.getsource(object_state)) == 0
+
+
+def test_seen_filter_batch_job_count(spark, tmp_path):
+    """One exact seen_filter batch against a store with history runs at
+    most 4 Spark jobs (8 when the touched buckets were a distinct
+    collect of their own): two for the keyed batch's checkpoint (its
+    window's shuffle, then the checkpoint job, which also observes the
+    touched buckets) and two for the survivors' checkpoint after the
+    anti-join (the join's exchange, then the checkpoint). The store
+    read declares its schema, so no job infers it from the parquet
+    footers."""
+    from tests.conftest import jobs_of
+
+    store = str(tmp_path / "seen")
+    first, commit = dedup_state.seen_filter(
+        _batch(spark, 0, 50).select("k"), store, ["k"],
+        num_buckets=N_BUCKETS)
+    commit()
+    df = _batch(spark, 25, 75).select("k")
+    (survivors, _), jobs = jobs_of(spark, lambda: dedup_state.seen_filter(
+        df, store, ["k"], num_buckets=N_BUCKETS))
+    assert jobs <= 4, jobs
+    assert sorted(r.k for r in survivors.collect()) == sorted(
+        f"k{i}" for i in range(50, 75))

@@ -18,7 +18,10 @@ Per key, both engines reduce their OWN result to a one-row checksum
 
 A result of at most ``EXACT_ROWS_MAX`` rows is then also compared row
 for row by ``tests/oracle_harness.compare`` (row count, column names,
-order-insensitive canonical values). Above it only the checksum runs,
+order-insensitive canonical values). The Spark result is materialized
+once (``relational.materialize``), so its checksum and the exact
+compare read the same computed rows instead of running the query
+twice. Above it only the checksum runs,
 which keeps what the harness collects to the driver bounded at any
 scale. An oracle running past ``ORACLE_TIMEOUT_S`` is interrupted and
 recorded as ORACLE-TIMEOUT: an oracle cost (all-pairs oracles grow
@@ -175,11 +178,17 @@ def check_key(spark, con, query, oracle: str | None, sf_dir: str) -> dict:
     detail of a FAIL or ORACLE-TIMEOUT."""
     from oracle_harness import compare
 
+    from universal_data_connector_spark.operators.relational import (
+        materialize,
+    )
     from universal_data_connector_spark.session import temp_view
 
     df = query(spark, sf_dir)
     if oracle is None:
         return {"verdict": "rows-only", "n": df.count()}
+    # computed once: the checksum job and the exact compare both read
+    # these blocks
+    df = materialize(df)
     fields = [(f.name, f.dataType.simpleString().split("(")[0])
               for f in df.schema.fields]
     with temp_view(df, "__cksum") as view:

@@ -96,12 +96,15 @@ def _filter_transform(df: DataFrame, props: dict) -> DataFrame:
     # ... not supported' the moment a streaming pipeline used a column
     # filter). Duplicate header names bind to their FIRST occurrence
     # (array_position), where a map build would throw DUPLICATED_MAP_KEY.
+    # CSV and non-CSV rows take their branch of ONE conditional
+    # expression, so the source (and any manifest anti-join under it)
+    # is scanned once; a union of a CSV and a non-CSV filter over the
+    # same frame would scan it twice.
     from universal_data_connector_spark.functions.text import bind_once
     from universal_data_connector_spark.sources.records import csv_fields
 
     is_csv = F.col("file_type") == "CSV"
-    non_csv_kept = df.filter(~is_csv).filter(
-        F.col("content").cast("string").contains(condition))
+    contains = F.col("content").cast("string").contains(condition)
     target_lit = column.strip().lower()
     row_gran = str(props.get("granularity", "file")).lower() == "row"
 
@@ -148,17 +151,22 @@ def _filter_transform(df: DataFrame, props: dict) -> DataFrame:
                       with_lines)
     if not row_gran:
         # whole-file keep/drop: reference-faithful default in file-mode
-        return df.filter(is_csv).filter(bound).unionByName(non_csv_kept)
+        return df.filter(F.when(is_csv, bound).otherwise(contains))
     # granularity: row — keep only matching data rows, rebuilding each
     # file's content as header + matching lines in original order
-    # (SURVEY.md §7.4.1), all inside one projection.
-    rebuilt = (df.filter(is_csv)
-                 .withColumn("__kept", bound)
-                 .filter(F.col("__kept.nk") > 0)
-                 .select("source_file", "file_type",
-                         F.col("__kept.content").alias("content")))
-    return rebuilt.unionByName(
-        non_csv_kept.select("source_file", "file_type", "content"))
+    # (SURVEY.md §7.4.1), all inside one projection. A non-CSV row
+    # keeps its content whole (nk 1) or is dropped (nk 0); a rebuilt
+    # CSV content takes the source's content type (binary for a
+    # directory source).
+    kept = F.when(is_csv, bound).otherwise(F.struct(
+        F.lit(None).cast("string").alias("content"),
+        F.when(contains, 1).otherwise(0).alias("nk")))
+    return (df.withColumn("__kept", kept)
+              .filter(F.col("__kept.nk") > 0)
+              .select("source_file", "file_type",
+                      F.when(is_csv, F.col("__kept.content")
+                             .cast(df.schema["content"].dataType))
+                       .otherwise(F.col("content")).alias("content")))
 
 
 def _map_transform(df: DataFrame, props: dict) -> DataFrame:

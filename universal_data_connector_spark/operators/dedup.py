@@ -54,6 +54,7 @@ def gram_hashes(text: Column, shingle_n: int) -> Column:
                                  lambda g: F.xxhash64(g)))
 from universal_data_connector_spark.operators.relational import (
     materialize,
+    observed_materialize,
     spread,
 )
 from universal_data_connector_spark.session import local_frame
@@ -653,16 +654,22 @@ def connected_components(edges: DataFrame, src: str = "id_1",
                       F.least("u", "v").alias("v")))
     if not edges_unique:
         e = e.distinct()
-    e = materialize(e)
 
-    def _signature(df: DataFrame) -> tuple[int, int]:
-        # xor-fold (overflow-free under ANSI mode) of the edge hashes:
-        # equal sets -> equal signature; distinct edges make a hash
-        # collision across iterations vanishingly unlikely.
-        row = (df.agg(F.count("*").alias("n"),
-                      F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"))
-                 .collect()[0])
-        return int(row.n), int(row.h)
+    def _checkpoint(df: DataFrame, rows: int | None = None
+                    ) -> tuple[DataFrame, tuple[int, int]]:
+        # the edge set materialized, with its convergence signature
+        # observed by the same job: the count and an xor-fold
+        # (overflow-free under ANSI mode) of the edge hashes. Equal
+        # sets -> equal signature; distinct edges make a hash
+        # collision across iterations vanishingly unlikely. ``rows``,
+        # the previous round's measured count, sizes the storage
+        # level (the optimizer's estimate compounds per round).
+        frame, m = observed_materialize(
+            df, F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.bit_xor(F.xxhash64("u", "v")),
+                       F.lit(0)).alias("h"),
+            rows=rows)
+        return frame, (int(m["n"]), int(m["h"]))
 
     def large_star(df: DataFrame) -> DataFrame:
         # For each node u: connect every strictly-larger neighbor to
@@ -697,14 +704,14 @@ def connected_components(edges: DataFrame, src: str = "id_1",
     import logging
     import os
 
-    sig = _signature(e)
+    e, sig = _checkpoint(e)
     # Size-guarded LOCAL fast path (same posture as the percentile
-    # aggregate fast path): the star rounds cost 2 actions + 3
-    # shuffles + a checkpoint PER ROUND regardless of graph size —
-    # ~1.3 s of fixed overhead on a few-hundred-edge dup graph at
-    # local sf0.1. Below the edge cap the exact same components come
-    # from one driver union-find over the edges just counted by the
-    # signature action (the collect is bounded by that count, so this
+    # aggregate fast path): the star rounds cost 3 shuffles + a
+    # checkpoint PER ROUND regardless of graph size — ~1.3 s of fixed
+    # overhead on a few-hundred-edge dup graph at local sf0.1. Below
+    # the edge cap the exact same components come from one driver
+    # union-find over the edges just counted by the checkpoint's
+    # signature (the collect is bounded by that count, so this
     # is a KNOWN-bounded materialization; min-id-as-root makes every
     # final root the component minimum, identical to the converged
     # star output). The cap is scale-adaptive by construction: edge
@@ -740,8 +747,7 @@ def connected_components(edges: DataFrame, src: str = "id_1",
 
     converged = False
     for _ in range(max_iterations):
-        e = materialize(small_star(large_star(e)))
-        new_sig = _signature(e)
+        e, new_sig = _checkpoint(small_star(large_star(e)), rows=sig[0])
         if new_sig == sig:
             converged = True
             break

@@ -76,8 +76,8 @@ from universal_data_connector_spark.streaming.windows import (
     _UPSERT_OLD_PREFIX,
     _contains_map,
     _reject_remote_target,
-    _touched,
     by_bucket,
+    materialize_touched,
     repair_swaps,
     swap_bucket,
 )
@@ -221,18 +221,22 @@ class PosixSeenStore:
 
     def read(self, spark, sub: str, buckets: list[int]):
         """Frame over the existing bucket dirs among ``buckets`` of
-        sub-store ``sub`` (explicit paths), or None."""
+        sub-store ``sub`` (explicit paths), or None. The schema is
+        declared (``_SUB_SCHEMAS``), so no job infers it from the
+        parquet footers."""
         paths = [d for d in (self._dir(sub, b) for b in buckets)
                  if os.path.isdir(d)]
-        return spark.read.parquet(*paths) if paths else None
+        return (spark.read.schema(_SUB_SCHEMAS[sub]).parquet(*paths)
+                if paths else None)
 
-    def append(self, frame: DataFrame, sub: str, touched: list[int]) -> int:
+    def append(self, frame: DataFrame, sub: str) -> int:
         """Append ``frame`` (carrying ``udc_kb``) to sub-store ``sub``:
         a staged Spark write, then atomic renames of each part file
         into its live bucket dir, all under a writer mark on the store
         root (maintenance holding the lease refuses this append BEFORE
         anything is staged, and a compaction from any process refuses
-        while the mark lives). Returns files appended."""
+        while the mark lives). The buckets are the staged write's own
+        ``udc_kb=<K>`` dirs. Returns files appended."""
         from universal_data_connector_spark.store_lease import (
             posix_writer_mark,
         )
@@ -244,11 +248,12 @@ class PosixSeenStore:
         with posix_writer_mark(self.root):
             (by_bucket(frame).write.mode("overwrite")
              .partitionBy(_KB).parquet(staged))
-            for b in touched:
-                part_dir = os.path.join(staged, f"{_KB}={b}")
-                if not os.path.isdir(part_dir):
+            written = os.listdir(staged) if os.path.isdir(staged) else []
+            for bucket_dir in sorted(written):
+                if not bucket_dir.startswith(f"{_KB}="):
                     continue
-                live_dir = self._dir(sub, b)
+                part_dir = os.path.join(staged, bucket_dir)
+                live_dir = os.path.join(root, bucket_dir)
                 os.makedirs(live_dir, exist_ok=True)
                 for i, name in enumerate(sorted(
                         f for f in os.listdir(part_dir)
@@ -385,10 +390,11 @@ class S3SeenStore:
         return materialize(read_objects(spark, self.target,
                                         keyed_objects, _SUB_SCHEMAS[sub]))
 
-    def append(self, frame: DataFrame, sub: str, touched: list[int]) -> int:
+    def append(self, frame: DataFrame, sub: str) -> int:
         """Append a ``udc_kb``-carrying frame as one atomic PUT per
-        rolled object, issued from the upload tasks themselves. Returns
-        objects uploaded.
+        rolled object, issued from the upload tasks themselves; the
+        buckets are those the upload tasks report. Returns objects
+        uploaded.
 
         Deliberately NO writer mark (r16): the append is safe against
         BOTH maintenance ops by construction — ``compact`` deletes only
@@ -406,7 +412,7 @@ class S3SeenStore:
         )
 
         objects = write_objects(
-            frame, self.target, touched,
+            frame, self.target, [],
             key_format(self.target,
                        *_parts(sub, "kb={b}", "seen-{nonce}-{i}.parquet")))
         return sum(len(ks) for ks in objects.values())
@@ -540,22 +546,24 @@ def seen_filter(df: DataFrame, store, cols: list[str],
     rows). ``commit()`` appends the survivors' keys to the store —
     call it only after the survivors have durably reached their sink.
 
-    The keyed survivor frame is materialized eagerly so the sink's
-    consumption and the commit's key extraction share ONE computation
-    — without it the commit would re-run the source scan and
-    anti-join a second time."""
+    The keyed batch (source scan, key hash, within-batch winner) is
+    computed ONCE, by the job that materializes it; that job also
+    observes the batch's touched buckets, which the store read needs
+    before the anti-join. When history exists the survivors are
+    materialized again after the anti-join (a read of those blocks and
+    of the touched buckets' keys), so the sink's consumption and the
+    commit's key extraction share one computation of it."""
     store = seen_store(store, num_buckets)
-    keyed = _batch_keyed(df, cols, store.open())
-    # touched-bucket set: bounded by num_buckets -> driver-safe
-    touched = _touched(keyed, F.col(_KB))
+    keyed, touched = materialize_touched(
+        _batch_keyed(df, cols, store.open()))
     seen = store.read(df.sparkSession, "", touched)
     if seen is not None:
-        keyed = keyed.join(seen.select(_KEY).distinct(), on=_KEY,
-                           how="left_anti")
-    keyed = materialize(keyed)
+        # no distinct on the seen keys: the anti-join ignores their
+        # duplicates
+        keyed = materialize(keyed.join(seen, on=_KEY, how="left_anti"))
 
     def commit() -> None:
-        moved = store.append(keyed.select(_KEY, _KB), "", touched)
+        moved = store.append(keyed.select(_KEY, _KB), "")
         log.info("dedup_state: appended %d file(s) across %d touched "
                  "bucket(s) in %s", moved, len(touched), store.label)
 
@@ -618,17 +626,25 @@ def _flag_history(store, spark, scored: DataFrame, new_bands: DataFrame,
     self-exclusion on doc_key: the store never holds the CURRENT batch
     (the commit runs post-sink), and a replay after a
     committed-then-crashed run SHOULD match its own stored copy (those
-    rows already shipped)."""
-    stored_bands = store.read(spark, "bands",
-                              _touched(new_bands, F.col(_KB)))
+    rows already shipped).
+
+    The band rows and the candidates are each materialized once, by
+    the job that also observes the buckets the next store read needs;
+    the joins after it read those blocks instead of recomputing
+    them."""
+    new_bands, band_buckets = materialize_touched(new_bands)
+    stored_bands = store.read(spark, "bands", band_buckets)
     if stored_bands is None:
         return None
-    cands = (new_bands.join(stored_bands, on=["band_idx", "band_hash"])
-             .select(id_col, "doc_key").distinct())
-    stored = store.read(spark, sub, _touched(cands, _bucket(n, "doc_key")))
+    cands, sig_buckets = materialize_touched(
+        new_bands.join(stored_bands, on=["band_idx", "band_hash"])
+        .select(id_col, "doc_key").distinct()
+        .withColumn(_KB, _bucket(n, "doc_key")))
+    stored = store.read(spark, sub, sig_buckets)
     if stored is None:
         return None
-    return (cands.join(scored, on=id_col).join(stored, on="doc_key")
+    return (cands.drop(_KB).join(scored, on=id_col)
+            .join(stored, on="doc_key")
             .filter(match).select(id_col).distinct())
 
 
@@ -651,10 +667,9 @@ def _append_commit(store, mode: str, parts: list):
     rerun re-ships those docs (at-least-once, the same contract as
     every finalize step) and this commit re-runs to completion
     (duplicate band rows are harmless as everywhere in the append-only
-    stores)."""
+    stores). Each append takes its buckets from its own write."""
     def commit() -> None:
-        moved = sum(store.append(rows, sub, _touched(rows, F.col(_KB)))
-                    for sub, rows in parts)
+        moved = sum(store.append(rows, sub) for sub, rows in parts)
         log.info("dedup_%s_state: appended %d file(s) in %s", mode,
                  moved, store.label)
 

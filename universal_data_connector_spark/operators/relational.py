@@ -11,7 +11,8 @@ WholeStageCodegen). Helpers here add what Catalyst can't infer:
   written only here; `exact_sum` is its decimal-cast reference;
 * the fan-out of a narrow scan before per-row work (`spread`);
 * eager materialization of a frame with several consumers
-  (`materialize`).
+  (`materialize`), and metrics counted by that same job
+  (`observed_materialize`).
 """
 
 from __future__ import annotations
@@ -158,7 +159,7 @@ def estimated_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def materialize(df: DataFrame) -> DataFrame:
+def materialize(df: DataFrame, rows: int | None = None) -> DataFrame:
     """Eagerly materialize ``df``: the package's one way to compute a
     frame once for several consumers.
 
@@ -183,22 +184,50 @@ def materialize(df: DataFrame) -> DataFrame:
     Storage level by estimated size: DISK_ONLY keeps corpus-scale
     blocks out of executor heap, but at small scale taxes every
     consumer with a serialize-to-disk round trip. At most
-    ``_MAT_MEMORY_MAX_BYTES`` (optimizer estimate; unknown stays
-    DISK_ONLY) the frame is MEMORY_AND_DISK: small frames live in the
-    bounded storage pool and anything unexpected spills. The estimate
-    grows with the data, so the 100 TB regime always takes DISK_ONLY.
-    The memory level is the JVM's MEMORY_AND_DISK (deserialized, what
-    ``localCheckpoint`` uses by default): PySpark's constant of that
-    name is the serialized variant, which Java-serializes every row
-    (measured 1.2x slower on dedup_ngram_jaccard at sf1).
+    ``_MAT_MEMORY_MAX_BYTES`` the frame is MEMORY_AND_DISK: small
+    frames live in the bounded storage pool and anything unexpected
+    spills. The size is ``rows`` times the schema's default row width
+    when the caller has measured a row count (an iteration's previous
+    round, say: `observed_materialize`), else the optimizer estimate
+    (unknown stays DISK_ONLY). Both grow with the data, so the 100 TB
+    regime always takes DISK_ONLY. The memory level is the JVM's
+    MEMORY_AND_DISK (deserialized, what ``localCheckpoint`` uses by
+    default): PySpark's constant of that name is the serialized
+    variant, which Java-serializes every row (measured 1.2x slower on
+    dedup_ngram_jaccard at sf1).
     """
     from pyspark import StorageLevel
 
-    est = estimated_bytes(df)
+    # 8 bytes of row header, as Spark's own row-size estimate counts
+    est = (estimated_bytes(df) if rows is None
+           else rows * (8 + df._jdf.schema().defaultSize()))
     level = (StorageLevel.MEMORY_AND_DISK_DESER
              if est is not None and est <= _MAT_MEMORY_MAX_BYTES
              else StorageLevel.DISK_ONLY)
     return df.localCheckpoint(eager=True, storageLevel=level)
+
+
+def observed_materialize(df: DataFrame, *metrics: Column,
+                         rows: int | None = None
+                         ) -> tuple[DataFrame, dict]:
+    """`materialize` ``df`` and return, with the materialized frame,
+    the aggregate ``metrics`` (aliased columns: a count, a
+    ``collect_set`` of bucket ids, a ``bit_xor`` signature) computed
+    by the same job — what a second job over the frame would have
+    counted, without the second job.
+
+    The ``Observation`` is unnamed (a fresh UUID), so concurrent
+    pipeline runs in one session never share a metric name, and its
+    metrics are read only after the checkpoint action returned: a
+    failed action raises from the checkpoint and nothing waits on
+    metrics that will never arrive. A frame with no partitions runs
+    no task, and its metrics are the aggregates' empty values (0 for
+    a count, [] for a ``collect_set``)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    frame = materialize(df.observe(obs, *metrics), rows)
+    return frame, obs.get
 
 
 def _max_partition_bytes(spark) -> int:

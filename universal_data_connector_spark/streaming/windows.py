@@ -26,6 +26,9 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from universal_data_connector_spark.operators.relational import (
+    observed_materialize,
+)
 from universal_data_connector_spark.session import local_frame
 
 
@@ -286,14 +289,20 @@ def read_state(spark, path: str, empty_schema: str) -> DataFrame:
         raise
 
 
-def _read_touched(spark, path: str, buckets: list[int]) -> DataFrame:
+def _read_touched(spark, path: str, buckets: list[int],
+                  schema=None) -> DataFrame:
     """Read ONLY the touched bucket directories of a bucketed state
     target: the ``udc_kb`` equality/isin predicate is a partition
     filter, so untouched bucket directories are never opened — the
     invariant that keeps per-batch cost O(touched), not O(target),
-    pinned by the plan lint in tests/test_plans.py."""
-    return (spark.read.parquet(path)
-            .filter(F.col(_UPSERT_BUCKET_COL).isin(list(buckets))))
+    pinned by the plan lint in tests/test_plans.py. A declared
+    ``schema`` (data columns, then ``udc_kb``) spares the read the
+    Spark job that infers one from the parquet footers."""
+    if schema is None:
+        frame = spark.read.parquet(path)
+    else:
+        frame = spark.read.schema(schema).parquet(path)
+    return frame.filter(F.col(_UPSERT_BUCKET_COL).isin(list(buckets)))
 
 
 def by_bucket(frame: DataFrame) -> DataFrame:
@@ -390,11 +399,13 @@ class PosixStateTarget:
                 for b in buckets}
 
     def read(self, spark, snap: dict, schema) -> DataFrame | None:
-        """The committed rows of ``snap``'s buckets, None when none is
-        live. Parquet carries its own schema, so ``schema`` is unused."""
+        """The committed rows of ``snap``'s buckets as a frame of
+        ``schema`` (the batch's own, ``udc_kb`` last: state and batch
+        share one by the unionByName contract), None when none is
+        live."""
         if not any(os.path.isdir(self._dir(b)) for b in snap):
             return None
-        return _read_touched(spark, self.path, list(snap))
+        return _read_touched(spark, self.path, list(snap), schema)
 
     def commit(self, frame: DataFrame, snap: dict, batch_id: int,
                marker: bool) -> None:
@@ -462,24 +473,25 @@ def _intent(run_id: int, fingerprint: str | None,
             "touched": touched}
 
 
-def _touched(batch_df: DataFrame, kb) -> list[int]:
-    """The sorted bucket ids a batch's keys hash to. Bounded by the
-    bucket count, so the collect is driver-safe at any scale. Taken
-    from the RAW batch keys: the keep-latest rank and the additive
-    aggregate both keep >= 1 row per key, so the bucket sets are
-    identical, and the raw form is one partial-aggregated distinct
-    where listing the reduced frame would re-run its rank window or
-    group-by shuffle just to list buckets."""
-    return sorted(r[0] for r in
-                  batch_df.select(kb.alias(_UPSERT_BUCKET_COL))
-                          .distinct().collect())
+def materialize_touched(frame: DataFrame) -> tuple[DataFrame, list[int]]:
+    """(``frame`` materialized, the sorted ``udc_kb`` ids it holds):
+    the touched-bucket set is a ``collect_set`` observed by the one
+    job that computes the frame the merge needs anyway, so listing the
+    buckets costs no job of its own and the frame is computed once.
+    Bounded by the bucket count, so the set is driver-safe at any
+    scale."""
+    frame, m = observed_materialize(
+        frame, F.collect_set(_UPSERT_BUCKET_COL).alias("touched"))
+    return frame, sorted(m["touched"])
 
 
 def keep_latest_merge(batch_df: DataFrame, batch_id: int, *, target,
                       keys: list[str], order_col: str) -> None:
     """One keep-latest merge of ``batch_df`` into a state target: the
-    batch is reduced to its newest row per key, the touched buckets'
-    committed rows are read, re-ranked against it and committed.
+    batch is reduced to its newest row per key (materialized once,
+    its touched buckets observed by that same job), the touched
+    buckets' committed rows are read, re-ranked against it and
+    committed.
 
     Idempotent, so there is no applied-id gate: a replay (or a batch
     call with a constant id) re-ranks against the committed state and
@@ -488,13 +500,13 @@ def keep_latest_merge(batch_df: DataFrame, batch_id: int, *, target,
     it in the commit itself (the S3 pointer), as information."""
     spark = batch_df.sparkSession
     kb = F.pmod(F.xxhash64(*keys), F.lit(target.open())).cast("int")
-    touched = _touched(batch_df, kb)
+    rank = _latest_rank(batch_df.schema, keys, order_col)
+    latest, touched = materialize_touched(
+        batch_df.withColumn("__rn", rank)
+                .filter(F.col("__rn") == 1).drop("__rn")
+                .withColumn(_UPSERT_BUCKET_COL, kb))
     if not touched:
         return
-    rank = _latest_rank(batch_df.schema, keys, order_col)
-    latest = (batch_df.withColumn("__rn", rank)
-                      .filter(F.col("__rn") == 1).drop("__rn")
-                      .withColumn(_UPSERT_BUCKET_COL, kb))
     snap = target.snapshot(touched)
     with target.writer_mark():
         merged = latest
@@ -515,17 +527,20 @@ def additive_merge(batch_df: DataFrame, batch_id: int, *, target,
     a bucket whose applied id reached ``batch_id`` is skipped, so a
     replay after a crash anywhere in the commit loop applies the batch
     to exactly the buckets that had not committed it. The batch is
-    partial-aggregated per key BEFORE touching state, and sums
-    accumulate in DECIMAL(27,6) so merge order never changes them."""
+    partial-aggregated per key BEFORE touching state (materialized
+    once, its touched buckets observed by that same job, so the gate
+    below still knows them before any state is read or committed),
+    and sums accumulate in DECIMAL(27,6) so merge order never changes
+    them."""
     spark = batch_df.sparkSession
     kb = F.pmod(F.xxhash64(*keys), F.lit(target.open())).cast("int")
-    part = (batch_df
-            .groupBy(*keys)
-            .agg(F.count("*").cast("bigint").alias("n"),
-                 F.sum(F.col(value_col).cast(_DEC)).cast(_DEC)
-                  .alias("total"))
-            .withColumn(_UPSERT_BUCKET_COL, kb))
-    touched = _touched(batch_df, kb)
+    part, touched = materialize_touched(
+        batch_df
+        .groupBy(*keys)
+        .agg(F.count("*").cast("bigint").alias("n"),
+             F.sum(F.col(value_col).cast(_DEC)).cast(_DEC)
+              .alias("total"))
+        .withColumn(_UPSERT_BUCKET_COL, kb))
     pending = {b: c for b, c in target.snapshot(touched).items()
                if c.applied < batch_id}
     # record BEFORE the early return and the first commit: an empty
